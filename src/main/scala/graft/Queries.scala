@@ -78,7 +78,7 @@ object Queries {
     // → classify → assemble). Because the template is simple, the
     // expected output is SQL-expressible: nav/footer are boilerplate
     // (dropped), the heading survives iff the body block is kept, and
-    // the body is kept iff its word count reaches the MinContentWords
+    // the body is kept iff its word count reaches the minContentWords
     // floor (single-bin histogram ⇒ Otsu declines ⇒ threshold 15).
     // This turns the extraction core from golden-attested into
     // DuckDB-oracle-attested.

@@ -14,8 +14,8 @@ import org.apache.spark.sql.types._
   * group's ids while the group stays ≤ `cap` rows, and collapses to
   * NULL ("poisoned") the moment it exceeds the cap — state is freed
   * immediately, so per-group memory is bounded by `cap` ids no matter
-  * how hot the key is. The result array is sorted ascending
-  * (deterministic at any parallelism).
+  * how hot the key is. The result array holds the distinct ids sorted
+  * ascending (deterministic at any parallelism); the cap counts rows.
   *
   * This is the single-pass replacement for the df-cap discipline in
   * inverted-index pair generation (d2 / t4): the old shape needed one
@@ -124,10 +124,18 @@ object CappedIdsAgg {
       while (j < n) { f(ids(j)); j += 1 }
     }
 
+    /** The distinct ids, ascending: duplicate input rows count toward
+      * the cap but appear once, so no caller can pair an id with itself. */
     def sortedIds: Array[Long] = {
       val out = java.util.Arrays.copyOf(ids, n)
       java.util.Arrays.sort(out)
-      out
+      var m = 0
+      var j = 0
+      while (j < n) {
+        if (m == 0 || out(j) != out(m - 1)) { out(m) = out(j); m += 1 }
+        j += 1
+      }
+      if (m == n) out else java.util.Arrays.copyOf(out, m)
     }
   }
 }

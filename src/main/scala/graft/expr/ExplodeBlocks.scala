@@ -6,8 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.extract.Extractor
-import graft.html.{Boilerplate, FusedSegmenter}
+import graft.extract.{Engine, Extractor}
 
 /** `graft_explode_blocks(html BINARY) -> rows(part INT, block_idx INT,
   * kind STRING, text STRING, words INT, link_words INT, kept BOOLEAN)`
@@ -15,20 +14,16 @@ import graft.html.{Boilerplate, FusedSegmenter}
   * Catalyst `Generator` (UDTF analogue — SURVEY.md §2.10): the
   * document→pages/blocks expansion of the reference
   * (main_window.py:331-340 explode to pages; ocr_logic.py:73-77
-  * multi-frame) as a queryable block-level view. Emits ALL segmented
-  * blocks with their classifier features and the keep decision, so the
-  * region-extract stage is inspectable/aggregable in SQL.
-  *
-  * PDF payloads (`%PDF` magic) explode to one content block per page
-  * (mirroring Extractor.extractPdf: page lines joined "\n", blank
-  * pages skipped, every page kept — PDFs have no classifier stage),
-  * and plain-text payloads (valid UTF-8, no markup) explode to one
-  * content block per blank-line paragraph (mirroring
-  * Extractor.extractPlain, part 1, every paragraph kept) — so the
-  * block view covers every payload type the extractor does.
-  * Malformed payloads yield zero rows (the row-level error policy
-  * lives in graft_extract; a generator cannot carry an error column
-  * per input row without emitting phantom rows).
+  * multi-frame) as a queryable block-level view. Emits ALL blocks of
+  * `Extractor.recognize` (Default engine) with their classifier
+  * features and keep decision, so the region-extract stage is
+  * inspectable/aggregable in SQL and covers every payload type the
+  * extractor does: HTML blocks as segmented, one always-kept content
+  * block per non-blank PDF page, one per plain-text paragraph.
+  * `block_idx` is the block's position in that sequence. Malformed
+  * payloads yield zero rows (the row-level error policy lives in
+  * graft_extract; a generator cannot carry an error column per input
+  * row without emitting phantom rows).
   */
 case class ExplodeBlocks(child: Expression)
     extends UnaryExpression with CollectionGenerator with CodegenFallback {
@@ -51,50 +46,13 @@ case class ExplodeBlocks(child: Expression)
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val payload = child.eval(input)
     if (payload == null) return Nil
-    val bytes = payload.asInstanceOf[Array[Byte]]
-    if (bytes.length >= 4 && bytes(0) == '%' && bytes(1) == 'P' &&
-        bytes(2) == 'D' && bytes(3) == 'F') {
-      val pages =
-        try graft.pdf.PdfSpans.parsePages(bytes)
-        catch { case _: Exception => return Nil } // error rows live in graft_extract
-      return pages.zipWithIndex.collect {
-        case (lines, i) if lines.exists(_.nonEmpty) =>
-          val txt = lines.map(graft.html.BlockSegmenter.normalize).mkString("\n")
-          (i + 1, txt)
-      }.zipWithIndex.map { case ((part, txt), idx) =>
-        InternalRow(part, idx, UTF8String.fromString("content"),
-          UTF8String.fromString(txt),
-          graft.html.BlockSegmenter.countWords(txt), 0, true)
-      }
-    }
-    Extractor.decodeUtf8(bytes) match {
-      case Some(s) if Extractor.looksHtml(s) =>
-        val blocks = FusedSegmenter.segment(s)
-        val kept = Boilerplate.classify(blocks)
-        val keptSet = scala.collection.mutable.HashSet.empty[Int]
-        var ki = 0
-        var bi = 0
-        // kept preserves order — mark indices by scanning in lockstep
-        while (bi < blocks.length && ki < kept.length) {
-          if (blocks(bi) eq kept(ki)) { keptSet += bi; ki += 1 }
-          bi += 1
-        }
-        blocks.iterator.zipWithIndex.map { case (b, i) =>
-          InternalRow(b.part, i, UTF8String.fromString(b.kind),
-            UTF8String.fromString(b.text), b.words, b.linkWords,
-            keptSet.contains(i))
-        }.toSeq
-      case Some(s) =>
-        // plain text: one content block per paragraph, part 1, every
-        // paragraph kept (Extractor.extractPlain — no boilerplate stage)
-        s.split("\n[ \t\r]*\n", -1).toSeq
-          .map(graft.html.BlockSegmenter.normalize).filter(_.nonEmpty)
-          .zipWithIndex.map { case (p, idx) =>
-            InternalRow(1, idx, UTF8String.fromString("content"),
-              UTF8String.fromString(p),
-              graft.html.BlockSegmenter.countWords(p), 0, true)
-          }
-      case None => Nil
+    val r =
+      try Extractor.recognize(payload.asInstanceOf[Array[Byte]], Engine.Default)
+      catch { case _: Exception => return Nil } // error rows live in graft_extract
+    val rb = r.blocks
+    (0 until rb.n).map { i =>
+      InternalRow(rb.parts(i), i, UTF8String.fromString(rb.kindName(i)),
+        UTF8String.fromString(rb.text(i)), rb.words(i), rb.linkWords(i), r.keep(i))
     }
   }
 

@@ -128,7 +128,7 @@ case class MinHashSig(child: Expression, k: Int)
   * [[TokenWindowHashes]]: one definition of "a token" (whitespace =
   * `BlockSegmenter.isWs`, Java whitespace + NBSP) for similarity
   * shingles and exact-substring windows alike — the same
-  * one-implementation discipline as FusedSegmenter/classifyCore. */
+  * one-implementation discipline as FusedSegmenter/classifyRaw. */
 private[expr] object WordBounds {
   /** (starts, ends) index pairs of each token in `s`, single pass. */
   def scan(s: String): (Array[Int], Array[Int]) = {

@@ -1,6 +1,7 @@
 package graft.extract
 
 import graft.html.BlockSegmenter
+import graft.html.FusedSegmenter.RawBlocks
 
 /** Span offsets into the assembled extracted text.
   * kind ∈ content | heading | list. */
@@ -10,51 +11,76 @@ final case class Span(start: Int, end: Int, kind: String)
   *
   * Reproduces the reference's exact assembly format
   * (reference: main_window.py:382 `"--- صفحة {idx} ---\n{text}"` per
-  * page; :385 `"\n\n".join(...).strip()`): every part gets the Arabic
-  * page header with its 1-based ordinal, parts are joined with a blank
-  * line, and the final string is Unicode-trimmed (Python str.strip
-  * semantics — SURVEY.md §2.8 F8).
+  * page; :385 `"\n\n".join(...).strip()`): every part with a kept
+  * block gets the Arabic page header with its 1-based ordinal, parts
+  * are joined with a blank line, and the final string is
+  * Unicode-trimmed (Python str.strip semantics — SURVEY.md §2.8 F8).
   *
   * Within a part, blocks are joined with a single "\n" (the reference's
   * psm-6 output is line-oriented within a page).
   *
-  * Shared by the extractor AND the golden generator so the format has a
-  * single source of truth; the *selection* of blocks is what the
-  * pipeline must independently get right.
+  * Input is the one segmentation representation (`RawBlocks`, blocks
+  * in document order with non-decreasing part ids) plus keep flags;
+  * block text is copied buffer→buffer with no per-block String. Shared
+  * by the extractor AND the page generator's ground truth so the
+  * format has a single source of truth; the *selection* of blocks is
+  * what the pipeline must independently get right.
   */
 object Assemble {
 
-  final case class Part(idx: Int, blocks: Seq[(String, String)]) // (kind, text)
-
   def header(idx: Int): String = s"--- صفحة $idx ---"
 
-  /** Assemble parts (already filtered to kept blocks, ordered) into the
-    * final text plus spans addressing each block inside that text. */
-  def assemble(parts: Seq[Part]): (String, Seq[Span]) = {
+  /** Assemble the kept blocks into the final text plus spans
+    * addressing each block inside that text. */
+  def fromRaw(rb: RawBlocks, keep: Array[Boolean]): (String, Seq[Span]) =
+    fromRawDual(rb, keep, null)
+
+  /** Dual-engine assembly ("كلاهما" = both): per part, engine A's kept
+    * blocks then engine B's, where B's first block follows A's last
+    * with NO separator — the reference concatenates the two engines'
+    * page text directly (`text_block += tess.strip(); text_block +=
+    * easy.strip()`, main_window.py:363-374) — while blocks WITHIN one
+    * engine's output stay "\n"-joined. A part appears iff either
+    * engine kept a block in it. `keepB == null` assembles engine A
+    * alone (`fromRaw`). One pass per part: the header opens at the
+    * part's first kept block. */
+  def fromRawDual(rb: RawBlocks, keepA: Array[Boolean],
+                  keepB: Array[Boolean]): (String, Seq[Span]) = {
     val sb = new java.lang.StringBuilder(512)
     val spans = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, String)]
-    var first = true
-    parts.foreach { p =>
-      if (p.blocks.nonEmpty) {
-        if (!first) sb.append("\n\n")
-        first = false
-        sb.append(header(p.idx)).append('\n')
+    var from = 0
+    while (from < rb.n) {
+      val part = rb.parts(from)
+      var until = from + 1
+      while (until < rb.n && rb.parts(until) == part) until += 1
+      var open = false // this part's header is written
+      var engine = 0
+      while (engine < 2) {
+        val keep = if (engine == 0) keepA else keepB
         var firstBlock = true
-        p.blocks.foreach { case (kind, text) =>
-          if (!firstBlock) sb.append('\n')
-          firstBlock = false
-          val start = sb.length
-          sb.append(text)
-          spans += ((start, sb.length, kind))
+        var i = from
+        while (keep != null && i < until) {
+          if (keep(i)) {
+            if (!open) {
+              if (sb.length > 0) sb.append("\n\n")
+              sb.append(header(part)).append('\n')
+              open = true
+            } else if (!firstBlock) sb.append('\n')
+            firstBlock = false
+            val start = sb.length
+            sb.append(rb.buf, rb.starts(i), rb.ends(i))
+            spans += ((start, sb.length, rb.kindName(i)))
+          }
+          i += 1
         }
+        engine += 1
       }
+      from = until
     }
     finish(sb.toString, spans)
   }
 
-  /** Final-trim + span-shift step shared by single- and dual-engine
-    * assembly (byte-identical to the inline round-1 code — frozen by
-    * the golden digest). */
+  /** Final Unicode trim, with the spans shifted and clipped to it. */
   private def finish(
       raw: String,
       spans: scala.collection.mutable.ArrayBuffer[(Int, Int, String)]): (String, Seq[Span]) = {
@@ -66,96 +92,5 @@ object Assemble {
         Span(math.max(0, s - shift), math.min(trimmed.length, e - shift), k)
     }
     (trimmed, adjusted)
-  }
-
-  /** Dual-engine assembly ("كلاهما" = both): per part, engine A's
-    * blocks then engine B's blocks, where B's first block follows A's
-    * last with NO separator — the reference concatenates the two
-    * engines' page text directly (`text_block += tess.strip();
-    * text_block += easy.strip()`, main_window.py:363-374) — while
-    * blocks WITHIN one engine's output stay "\n"-joined as in A1. A
-    * part appears iff either engine produced text for it; header and
-    * "\n\n" part join are identical to `assemble`. */
-  def assembleDual(parts: Seq[(Int, Seq[(String, String)], Seq[(String, String)])])
-      : (String, Seq[Span]) = {
-    val sb = new java.lang.StringBuilder(512)
-    val spans = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, String)]
-    var first = true
-    parts.foreach { case (idx, ba, bb) =>
-      if (ba.nonEmpty || bb.nonEmpty) {
-        if (!first) sb.append("\n\n")
-        first = false
-        sb.append(header(idx)).append('\n')
-        var firstBlock = true
-        ba.foreach { case (kind, text) =>
-          if (!firstBlock) sb.append('\n')
-          firstBlock = false
-          val start = sb.length
-          sb.append(text)
-          spans += ((start, sb.length, kind))
-        }
-        var firstB = true // no separator between the engines' outputs
-        bb.foreach { case (kind, text) =>
-          if (!firstB) sb.append('\n')
-          firstB = false
-          val start = sb.length
-          sb.append(text)
-          spans += ((start, sb.length, kind))
-        }
-      }
-    }
-    finish(sb.toString, spans)
-  }
-
-  /** Assemble straight from the range-based segmentation (hot path):
-    * block text is copied buffer→buffer (`append(CharSequence,from,to)`)
-    * with no per-block String materialization. Byte-identical to
-    * `fromBlocks(classify(...))` — blocks arrive in document order
-    * with non-decreasing part ids, so the groupBy+sort of the Block
-    * path is a plain linear scan here. */
-  def fromRaw(rb: graft.html.FusedSegmenter.RawBlocks,
-              keep: Array[Boolean]): (String, Seq[Span]) = {
-    val sb = new java.lang.StringBuilder(512)
-    val spans = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, String)]
-    var curPart = -1
-    var i = 0
-    while (i < rb.n) {
-      if (keep(i)) {
-        if (rb.parts(i) != curPart) {
-          if (curPart != -1) sb.append("\n\n")
-          curPart = rb.parts(i)
-          sb.append(header(curPart)).append('\n')
-        } else sb.append('\n')
-        val start = sb.length
-        sb.append(rb.buf, rb.starts(i), rb.ends(i))
-        spans += ((start, sb.length, rb.kindName(i)))
-      }
-      i += 1
-    }
-    finish(sb.toString, spans)
-  }
-
-  /** Group classified blocks by part and assemble. */
-  def fromBlocks(blocks: Seq[BlockSegmenter.Block]): (String, Seq[Span]) = {
-    val parts = blocks.groupBy(_.part).toSeq.sortBy(_._1).map { case (idx, bs) =>
-      Part(idx, bs.map(b => (b.kind, b.text)))
-    }
-    assemble(parts)
-  }
-
-  /** Group two engines' kept blocks by part (union of part indices)
-    * and assemble with the dual-engine concat format. */
-  def fromBlocksDual(
-      a: Seq[BlockSegmenter.Block],
-      b: Seq[BlockSegmenter.Block]): (String, Seq[Span]) = {
-    val byA = a.groupBy(_.part)
-    val byB = b.groupBy(_.part)
-    val idxs = (byA.keySet ++ byB.keySet).toSeq.sorted
-    val parts = idxs.map { idx =>
-      (idx,
-        byA.getOrElse(idx, Nil).map(x => (x.kind, x.text)),
-        byB.getOrElse(idx, Nil).map(x => (x.kind, x.text)))
-    }
-    assembleDual(parts)
   }
 }

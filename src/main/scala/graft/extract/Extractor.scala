@@ -4,7 +4,8 @@ import java.nio.charset.{CharacterCodingException, StandardCharsets}
 import java.nio.charset.CodingErrorAction
 import java.nio.ByteBuffer
 
-import graft.html.{BlockSegmenter, Boilerplate, HtmlTokenizer}
+import graft.html.{BlockSegmenter, Boilerplate, FusedSegmenter}
+import graft.html.FusedSegmenter.RawBlocks
 import graft.pdf.PdfSpans
 
 /** Result of extracting one document. `error == null` on success;
@@ -13,16 +14,6 @@ import graft.pdf.PdfSpans
   * errors become rows `(path, "حدث خطأ: {exc}")`, never exceptions). */
 final case class ExtractResult(text: String, spans: Seq[Span], error: String)
 
-/** The recognize stage — preprocess → region-extract → recognize →
-  * export for a single document payload, the Spark-side analogue of the
-  * reference's per-page OCR loop (main_window.py:347-385).
-  *
-  * Payload dispatch mirrors the reference's extension routing
-  * (main_window.py:331-340: .pdf → poppler, .tiff → multi-frame,
-  * else single image) but keys on magic bytes since our payloads are
-  * opaque binary: `%PDF` → PDF span parse; markup → HTML extraction;
-  * plain UTF-8 text → paragraph blocks; undecodable bytes → error row.
-  */
 /** Extraction engine selection — the reference's engine combo
   * ("Tesseract" / "EasyOCR" / "كلاهما", main_window.py:450). Engines
   * share one interface and differ in classifier strategy
@@ -49,9 +40,74 @@ object Engine {
   }
 }
 
+/** The recognize stage — preprocess → region-extract → recognize →
+  * export for a single document payload, the Spark-side analogue of the
+  * reference's per-page OCR loop (main_window.py:347-385).
+  *
+  * Payload dispatch mirrors the reference's extension routing
+  * (main_window.py:331-340: .pdf → poppler, .tiff → multi-frame,
+  * else single image) but keys on magic bytes since our payloads are
+  * opaque binary: `%PDF` → PDF span parse; markup → HTML extraction;
+  * plain UTF-8 text → paragraph blocks; undecodable bytes → error row.
+  * That dispatch lives in `recognize` alone, which every consumer
+  * (`extract`, the `graft_explode_blocks` block view) goes through.
+  */
 object Extractor {
 
   val ErrorPrefix = "حدث خطأ: " // exact reference format, ocr_parallel_ui.py:34
+
+  /** A payload's segmented blocks and keep decision(s): `keep` is the
+    * engine's (Default's for Both), `keepAlt` is Both's Alt decision
+    * for HTML and null otherwise — PDF and plain-text blocks are
+    * always kept, so Both gives the single-engine text for them. */
+  final class Recognized(val blocks: RawBlocks, val keep: Array[Boolean],
+                         val keepAlt: Array[Boolean])
+
+  /** Thrown by `recognize` for a payload that is not valid UTF-8. */
+  object InvalidUtf8 extends Exception("invalid utf-8 payload", null, false, false)
+
+  private val ParagraphBreak = java.util.regex.Pattern.compile("\n[ \t\r]*\n")
+
+  /** The one payload step. `%PDF` → one content block per page with
+    * any non-empty line (lines normalized and "\n"-joined, part = page
+    * number); valid UTF-8 with markup → `segmentRaw` classified with
+    * the engine's `Params`; other valid UTF-8 → one content block per
+    * non-empty blank-line-separated paragraph, all in part 1. PDF and
+    * paragraph blocks carry `countWords` words and no link words.
+    * Throws `InvalidUtf8` or `PdfSpans.PdfParseException` on a
+    * malformed payload. */
+  def recognize(payload: Array[Byte], engine: Engine): Recognized = {
+    if (isPdf(payload)) return keepAll(pdfBlocks(payload))
+    val s = decodeUtf8(payload).getOrElse(throw InvalidUtf8)
+    if (looksHtml(s)) {
+      val rb = FusedSegmenter.segmentRaw(s)
+      val keep = Boilerplate.classifyRaw(rb,
+        if (engine == Engine.Alt) Boilerplate.Alt else Boilerplate.Default)
+      new Recognized(rb, keep,
+        if (engine == Engine.Both) Boilerplate.classifyRaw(rb, Boilerplate.Alt) else null)
+    } else {
+      val rb = new RawBlocks
+      ParagraphBreak.split(s, -1).foreach { para =>
+        val txt = BlockSegmenter.normalize(para)
+        if (txt.nonEmpty) rb.addText(1, 0, txt, BlockSegmenter.countWords(txt))
+      }
+      keepAll(rb)
+    }
+  }
+
+  private def pdfBlocks(bytes: Array[Byte]): RawBlocks = {
+    val rb = new RawBlocks
+    PdfSpans.parsePages(bytes).zipWithIndex.foreach { case (lines, i) =>
+      if (lines.exists(_.nonEmpty)) {
+        val txt = lines.map(BlockSegmenter.normalize).mkString("\n")
+        rb.addText(i + 1, 0, txt, BlockSegmenter.countWords(txt))
+      }
+    }
+    rb
+  }
+
+  private def keepAll(rb: RawBlocks): Recognized =
+    new Recognized(rb, Array.fill(rb.n)(true), null)
 
   def extract(payload: Array[Byte], lang: String): ExtractResult =
     extract(payload, lang, Engine.Default)
@@ -60,14 +116,12 @@ object Extractor {
     if (payload == null || payload.isEmpty)
       return ExtractResult("", Nil, null) // blank input contract (FIXTURES.md §3)
     try {
-      if (isPdf(payload)) extractPdf(payload)
-      else decodeUtf8(payload) match {
-        case None => ExtractResult(null, Nil, ErrorPrefix + "invalid utf-8 payload")
-        case Some(s) =>
-          if (looksHtml(s)) extractHtml(s, engine)
-          else extractPlain(s)
-      }
+      val r = recognize(payload, engine)
+      val (text, spans) = Assemble.fromRawDual(r.blocks, r.keep, r.keepAlt)
+      ExtractResult(text, spans, null)
     } catch {
+      case InvalidUtf8 =>
+        ExtractResult(null, Nil, ErrorPrefix + InvalidUtf8.getMessage)
       case e: PdfSpans.PdfParseException =>
         ExtractResult(null, Nil, ErrorPrefix + "pdf: " + e.getMessage)
       case e: Exception =>
@@ -76,14 +130,19 @@ object Extractor {
     }
   }
 
+  /** The PDF path alone (no error-row policy: a malformed PDF throws). */
+  def extractPdf(bytes: Array[Byte]): ExtractResult = {
+    val r = keepAll(pdfBlocks(bytes))
+    val (text, spans) = Assemble.fromRaw(r.blocks, r.keep)
+    ExtractResult(text, spans, null)
+  }
+
   @inline private def isPdf(b: Array[Byte]): Boolean =
     b.length >= 4 && b(0) == '%' && b(1) == 'P' && b(2) == 'D' && b(3) == 'F'
 
-  /** Markup-dispatch predicate — single source of truth shared with
-    * ExplodeBlocks so the block-level view and graft_extract classify
-    * every payload identically (both '<' and '>' must appear, else the
-    * payload routes to the plain-text path). */
-  @inline def looksHtml(s: String): Boolean =
+  /** Markup-dispatch predicate: both '<' and '>' must appear, else the
+    * payload routes to the plain-text path. */
+  @inline private def looksHtml(s: String): Boolean =
     s.indexOf('<') >= 0 && s.indexOf('>') >= 0
 
   /** Strict UTF-8 decode — malformed bytes are a detectable error, not
@@ -103,59 +162,5 @@ object Extractor {
       .onUnmappableCharacter(CodingErrorAction.REPORT)
     try Some(dec.decode(ByteBuffer.wrap(b)).toString)
     catch { case _: CharacterCodingException => None }
-  }
-
-  def extractHtml(html: String): ExtractResult = extractHtml(html, Engine.Default)
-
-  def extractHtml(html: String, engine: Engine): ExtractResult = {
-    // fused single-pass segmentation (hot path); semantically identical
-    // to BlockSegmenter.segment(HtmlTokenizer.tokenize(html)) — see
-    // FusedEquivalenceSpec + frozen golden digest. Segmentation runs
-    // ONCE for any engine choice; only classification differs (the
-    // reference re-OCRs per engine because its engines are external
-    // binaries — ours share the token stream).
-    engine match {
-      case Engine.Default =>
-        // allocation-light raw path (shared doc buffer, range blocks)
-        val rb = graft.html.FusedSegmenter.segmentRaw(html)
-        val keep = Boilerplate.classifyRaw(rb, Boilerplate.Default)
-        val (text, spans) = Assemble.fromRaw(rb, keep)
-        ExtractResult(text, spans, null)
-      case Engine.Alt =>
-        val rb = graft.html.FusedSegmenter.segmentRaw(html)
-        val keep = Boilerplate.classifyRaw(rb, Boilerplate.Alt)
-        val (text, spans) = Assemble.fromRaw(rb, keep)
-        ExtractResult(text, spans, null)
-      case Engine.Both =>
-        val blocks = graft.html.FusedSegmenter.segment(html)
-        val keptA = Boilerplate.classify(blocks, Boilerplate.Default)
-        val keptB = Boilerplate.classify(blocks, Boilerplate.Alt)
-        val (text, spans) = Assemble.fromBlocksDual(keptA, keptB)
-        ExtractResult(text, spans, null)
-    }
-  }
-
-  def extractPdf(bytes: Array[Byte]): ExtractResult = {
-    val pages = PdfSpans.parsePages(bytes)
-    val parts = pages.zipWithIndex.collect {
-      case (lines, i) if lines.exists(_.nonEmpty) =>
-        // each page is one content block: lines joined with "\n",
-        // per-line whitespace normalized like HTML blocks
-        val txt = lines.map(BlockSegmenter.normalize).mkString("\n")
-        Assemble.Part(i + 1, Seq(("content", txt)))
-    }
-    val (text, spans) = Assemble.assemble(parts)
-    ExtractResult(text, spans, null)
-  }
-
-  /** Plain text payload: paragraphs split on blank lines, every
-    * paragraph kept (no boilerplate exists in plain text). */
-  def extractPlain(s: String): ExtractResult = {
-    val paras = s.split("\n[ \t\r]*\n", -1).toSeq
-      .map(BlockSegmenter.normalize).filter(_.nonEmpty)
-    if (paras.isEmpty) return ExtractResult("", Nil, null)
-    val (text, spans) = Assemble.assemble(
-      Seq(Assemble.Part(1, paras.map(p => ("content", p)))))
-    ExtractResult(text, spans, null)
   }
 }

@@ -3,6 +3,7 @@ package graft.gen
 import java.util.zip.Deflater
 
 import graft.extract.Assemble
+import graft.html.FusedSegmenter.RawBlocks
 
 /** Drop-in reimplementation of java.util.Random's SPECIFIED algorithm
   * (the 48-bit LCG with documented scramble, next(bits), nextInt-bound
@@ -252,20 +253,19 @@ object PageGen {
 
     // articles = parts (multi-part with p≈15%)
     val nParts = if (r.nextInt(100) < 15) 2 + r.nextInt(2) else 1
-    val gtParts = scala.collection.mutable.ArrayBuffer.empty[Assemble.Part]
+    val gt = new RawBlocks // ground truth: every planted block, kept
     for (p <- 1 to nParts) {
       sb.append("<article class=\"page\">\n")
-      val blocks = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
 
       val (hEnc, hDec) = wordRun(r, lang, 2 + r.nextInt(4))
       sb.append(s"<h1>$hEnc</h1>\n")
-      blocks += (("heading", hDec))
+      gt.addText(p, 1, hDec, 0)
 
       val nParas = 2 + r.nextInt(4)
       for (_ <- 0 until nParas) {
         val (enc, dec) = wordRun(r, lang, 25 + r.nextInt(56))
         sb.append(s"<p>\n  $enc\n</p>\n")
-        blocks += (("content", dec))
+        gt.addText(p, 0, dec, 0)
       }
 
       if (r.nextInt(2) == 0) { // list section
@@ -273,7 +273,7 @@ object PageGen {
         for (_ <- 0 until 2 + r.nextInt(3)) {
           val (enc, dec) = wordRun(r, lang, 25 + r.nextInt(13))
           sb.append(s"<li>$enc</li>\n")
-          blocks += (("list", dec))
+          gt.addText(p, 2, dec, 0)
         }
         sb.append("</ul>\n")
       }
@@ -281,14 +281,13 @@ object PageGen {
       if (r.nextInt(3) == 0) { // secondary section with h2
         val (h2Enc, h2Dec) = wordRun(r, lang, 2 + r.nextInt(3))
         sb.append(s"<h2>$h2Enc</h2>\n")
-        blocks += (("heading", h2Dec))
+        gt.addText(p, 1, h2Dec, 0)
         val (enc, dec) = wordRun(r, lang, 25 + r.nextInt(40))
         sb.append(s"<p>$enc</p>\n")
-        blocks += (("content", dec))
+        gt.addText(p, 0, dec, 0)
       }
 
       sb.append("</article>\n")
-      gtParts += Assemble.Part(p, blocks.toSeq)
     }
 
     // footer boilerplate
@@ -297,7 +296,7 @@ object PageGen {
       sb.append(s"""<a href="/f">${word(r, "en")}</a> """)
     sb.append("</p>\n</footer>\n</body>\n</html>\n")
 
-    val (text, _) = Assemble.assemble(gtParts.toSeq)
+    val (text, _) = Assemble.fromRaw(gt, Array.fill(gt.n)(true))
     (sb.toString.getBytes("UTF-8"), text)
   }
 
@@ -315,10 +314,9 @@ object PageGen {
       }
     }
     val bytes = pdfBytes(pages, r)
-    val parts = pages.zipWithIndex.map { case (lines, i) =>
-      Assemble.Part(i + 1, Seq(("content", lines.mkString("\n"))))
-    }
-    val (text, _) = Assemble.assemble(parts)
+    val gt = new RawBlocks
+    pages.zipWithIndex.foreach { case (lines, i) => gt.addText(i + 1, 0, lines.mkString("\n"), 0) }
+    val (text, _) = Assemble.fromRaw(gt, Array.fill(gt.n)(true))
     (bytes, text)
   }
 

@@ -15,6 +15,10 @@ import scala.collection.mutable.ArrayBuffer
   * whether the block sits inside a structural boilerplate container
   * (nav/header/footer/aside), the analogue of the reference's ROI
   * crop (main_window.py:355-359: only the selected region is OCR'd).
+  *
+  * With `HtmlTokenizer.tokenize` this is the readable reference
+  * implementation that `FusedSegmenter.segmentRaw` (the path extraction
+  * runs on) must match block for block — `FusedEquivalenceSpec`.
   */
 object BlockSegmenter {
 

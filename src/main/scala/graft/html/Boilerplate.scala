@@ -1,9 +1,5 @@
 package graft.html
 
-import scala.collection.mutable.ArrayBuffer
-
-import BlockSegmenter.Block
-
 /** Block-level boilerplate classifier — text-density / link-density
   * heuristics with an Otsu-style auto threshold.
   *
@@ -47,59 +43,19 @@ object Boilerplate {
     * content floor, tighter Otsu clamp, laxer link-density gate. */
   val Alt: Params = Params(8, 16, 8, 1, 2)
 
-  @inline private def linkDense(b: Block, p: Params): Boolean =
-    b.linkWords * p.linkShareDen > b.words * p.linkShareNum
-
-  /** Absolute word-count floor for body (non-heading) content. */
-  val MinContentWords = Default.minContentWords
-
-  /** See Params.maxAutoThreshold. */
-  val MaxAutoThreshold = Default.maxAutoThreshold
-
-  /** See Params.maxNoiseMean. */
-  val MaxNoiseMean = Default.maxNoiseMean
-
   val HistBins = 64
 
-  /** Default-engine classification (frozen golden-digest behavior). */
-  def classify(blocks: IndexedSeq[Block]): IndexedSeq[Block] =
-    classify(blocks, Default)
-
-  /** Keep decision over a whole document's blocks (all parts jointly).
-    * Returns kept blocks in original order. Thin adapter over
-    * `classifyCore` (ONE decision implementation for both the Block
-    * view and the allocation-light raw hot path). */
-  def classify(blocks: IndexedSeq[Block], p: Params): IndexedSeq[Block] = {
-    val n = blocks.length
-    val parts = new Array[Int](n)
-    val kindIds = new Array[Int](n)
-    val words = new Array[Int](n)
-    val linkWords = new Array[Int](n)
-    val boiler = new Array[Boolean](n)
-    var i = 0
-    while (i < n) {
-      val b = blocks(i)
-      parts(i) = b.part
-      kindIds(i) = if (b.kind == "heading") 1 else if (b.kind == "list") 2 else 0
-      words(i) = b.words; linkWords(i) = b.linkWords; boiler(i) = b.boiler
-      i += 1
-    }
-    val keep = classifyCore(n, parts, kindIds, words, linkWords, boiler, p)
-    val out = ArrayBuffer.empty[Block]
-    i = 0
-    while (i < n) { if (keep(i)) out += blocks(i); i += 1 }
-    out.toIndexedSeq
-  }
-
-  /** Keep decision on the raw range-based representation (hot path). */
-  def classifyRaw(rb: FusedSegmenter.RawBlocks, p: Params): Array[Boolean] =
-    classifyCore(rb.n, rb.parts, rb.kindIds, rb.words, rb.linkWords, rb.boiler, p)
-
-  /** The classifier proper. kindId: 0=content 1=heading 2=list.
-    * Index-based single pass (hot loop: no intermediate collections). */
-  def classifyCore(n: Int, parts: Array[Int], kindIds: Array[Int],
-                   words: Array[Int], linkWords: Array[Int],
-                   boiler: Array[Boolean], p: Params): Array[Boolean] = {
+  /** Keep decision over a whole document's segmented blocks (all
+    * parts jointly), one flag per block in document order. Index-based
+    * single pass over the block arrays (hot loop: no intermediate
+    * collections). kindId: 0=content 1=heading 2=list. */
+  def classifyRaw(rb: FusedSegmenter.RawBlocks, p: Params): Array[Boolean] = {
+    val n = rb.n
+    val parts = rb.parts
+    val kindIds = rb.kindIds
+    val words = rb.words
+    val linkWords = rb.linkWords
+    val boiler = rb.boiler
     @inline def dense(i: Int): Boolean =
       linkWords(i) * p.linkShareDen > words(i) * p.linkShareNum
     // Stage 1 — hard rules (ROI analogue): structural boilerplate
@@ -155,7 +111,7 @@ object Boilerplate {
     * floats, so bit-identical on every JVM/arch. Tie-break: lowest t.
     * Returns the chosen threshold (first bin of the upper class) only
     * when the split is meaningful: both classes non-empty and the low
-    * class mean ≤ MaxNoiseMean.
+    * class mean ≤ `maxNoiseMean`.
     */
   def otsu(hist: Array[Long]): Option[Int] = otsu(hist, Default.maxNoiseMean)
 

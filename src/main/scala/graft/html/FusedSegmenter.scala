@@ -1,20 +1,18 @@
 package graft.html
 
-import scala.collection.mutable.ArrayBuffer
-
-import BlockSegmenter.{Block, isWs}
+import BlockSegmenter.isWs
 
 /** Fused tokenizer+segmenter: one pass over the decoded HTML string,
-  * zero intermediate token objects, text appended straight into the
-  * current block's buffer with entities decoded inline.
+  * zero intermediate token objects, text appended straight into one
+  * shared per-document buffer with entities decoded inline.
   *
-  * Semantically identical to
-  * `BlockSegmenter.segment(HtmlTokenizer.tokenize(s))` — asserted by
-  * `FusedEquivalenceSpec` over generated corpora and by the frozen
-  * golden digest. Exists because the extraction hot loop is
-  * allocation-bound at high core counts (SURVEY.md §4.2: "hot loop
-  * must avoid overhead"); the unfused pair remains the readable
-  * reference implementation.
+  * Its `RawBlocks` are the one in-memory segmentation representation
+  * between a payload and its output: `Boilerplate.classifyRaw` decides
+  * keep per block, `Assemble.fromRaw` builds the text, and
+  * `graft_explode_blocks` emits the blocks as rows. Block-for-block
+  * identical to `BlockSegmenter.segment(HtmlTokenizer.tokenize(s))`,
+  * the readable reference pair — asserted by `FusedEquivalenceSpec`
+  * over generated corpora and by the frozen golden digests.
   */
 object FusedSegmenter {
 
@@ -52,6 +50,14 @@ object FusedSegmenter {
       parts(n) = part; kindIds(n) = kindId; starts(n) = start; ends(n) = end
       words(n) = w; linkWords(n) = lw; boiler(n) = b
       n += 1
+    }
+
+    /** Append `text` verbatim as one non-boilerplate block with no link
+      * words (PDF pages, plain-text paragraphs, generator ground truth). */
+    def addText(part: Int, kindId: Int, text: String, w: Int): Unit = {
+      val start = buf.length
+      buf.append(text)
+      add(part, kindId, start, buf.length, w, 0, false)
     }
 
     def kindName(i: Int): String = RawBlocks.KindNames(kindIds(i))
@@ -129,21 +135,6 @@ object FusedSegmenter {
   @inline private def isBlockBoundary(id: Int): Boolean =
     id == T_BLOCK || id == T_HEADING || id == T_LI || id == T_BOILER ||
       id == T_DROP || id == T_ARTICLE
-
-  /** Block-object view (specs, ExplodeBlocks) — materialized from the
-    * range-based hot path so there is exactly ONE segmentation
-    * implementation. */
-  def segment(html: String): IndexedSeq[Block] = {
-    val rb = segmentRaw(html)
-    val out = new ArrayBuffer[Block](rb.n)
-    var i = 0
-    while (i < rb.n) {
-      out += Block(rb.parts(i), rb.kindName(i), rb.text(i),
-        rb.words(i), rb.linkWords(i), rb.boiler(i))
-      i += 1
-    }
-    out.toIndexedSeq
-  }
 
   def segmentRaw(html: String): RawBlocks = new Seg(html).run()
 

@@ -39,8 +39,7 @@ object ExtractJob {
       groups: Int = 8,
       salts: Int = 8,
       commitId: String = "c0",
-      abortAfterGroup: Int = -1,
-      cache: String = "ser"): Result = {
+      abortAfterGroup: Int = -1): Result = {
     GraftSession.register(spark)
     val pages = ExtractPipeline.pages(spark, nDocs).toDF()
     // hot-host detection over the URL-only projection (r6, guide §2.3):
@@ -61,23 +60,18 @@ object ExtractJob {
       ExtractPipeline.extracted(pages), buckets, hot, salts)
       .drop("salt")
     // With >1 resume group, each group is its own Spark job over the
-    // shared upstream — persist the extracted rows (spill-friendly) so
-    // extraction runs once, not `groups` times. On a real cluster with
-    // a bucketed source table the group filter prunes the SCAN instead
-    // and no persist is needed; groups=1 is the pure single-pass path
-    // (Spark task retry already covers executor loss within a job).
-    // cache mode for the multi-group re-reads: "ser" (serialized,
-    // memory-lean), "mem" (deserialized), "none" (recompute per
-    // group). Measured at 480k docs / 4 groups / 32 cores
-    // (XCommitProbe medians): ser 12.6 s, mem 16.5 s, none 25.0 s —
-    // serialized wins (deserialized rows blow the young gen; recompute
-    // pays 4× generation+extract), so "ser" stays the default.
-    val staged = cache match {
-      case _ if groups <= 1 => out
-      case "mem"  => out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      case "none" => out
-      case _      => out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    }
+    // shared upstream — persist the extracted rows so extraction runs
+    // once, not `groups` times. On a real cluster with a bucketed source
+    // table the group filter prunes the SCAN instead and no persist is
+    // needed; groups=1 is the pure single-pass path (Spark task retry
+    // already covers executor loss within a job). Serialized storage,
+    // measured at 480k docs / 4 groups / 32 cores (medians): serialized
+    // 12.6 s, deserialized 16.5 s, no persist (recompute per group)
+    // 25.0 s — deserialized rows blow the young gen, recompute pays 4×
+    // generation+extract.
+    val staged =
+      if (groups > 1) out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      else out
     val table = new IceTable(root, spark)
     val metrics = new JobMetrics(spark, s"extract-$commitId")
     metrics.logEvent(root, s"job_start docs=$nDocs buckets=$buckets groups=$groups hot_hosts=${hot.size}")
@@ -95,7 +89,7 @@ object ExtractJob {
           throw e
       } finally {
         spark.sparkContext.clearJobGroup()
-        if (groups > 1 && cache != "none") staged.unpersist()
+        if (groups > 1) staged.unpersist()
       }
     val lin = table.lineage(Some(snap))
       .agg(sum("rows").as("rows"), sum("error_rows").as("errs")).collect()(0)

@@ -30,6 +30,19 @@ class CappedIdsSpec extends AnyFunSuite {
     assert(kept(19).size == 20 && poisoned.contains(20))
   }
 
+  test("duplicate (key, id) rows give distinct ids; the cap counts rows") {
+    import spark.implicits._
+    // key 1: ids 5,3 each twice (4 rows ≤ cap 4); key 2: id 9 five times
+    // (5 rows > cap 4, poisoned although it holds one distinct id)
+    val rows = Seq((1, 5L), (1, 3L), (1, 5L), (1, 3L)) ++ Seq.fill(5)((2, 9L))
+    val got = rows.toDF("key", "id").repartition(3)
+      .groupBy("key")
+      .agg(call_function("graft_capped_ids", col("id"), lit(4)).as("ids"))
+      .as[(Int, Option[Seq[Long]])].collect().toMap
+    assert(got(1).contains(Seq(3L, 5L)), s"key 1: ${got(1)}")
+    assert(got(2).isEmpty, s"key 2 must be poisoned: ${got(2)}")
+  }
+
   test("cap is a plan-time literal with clear validation") {
     import spark.implicits._
     val df = Seq((1, 1L)).toDF("key", "id")

@@ -17,16 +17,19 @@ class DualEngineSpec extends AnyFunSuite {
   private def page(text: String): String =
     s"<html><body><h1>Head Line</h1><p>$text</p></body></html>"
 
+  private def extractHtml(html: String, engine: Engine) =
+    Extractor.extract(html.getBytes("UTF-8"), "en", engine)
+
   test("default vs alt engines: alt keeps shorter content blocks") {
-    val d = Extractor.extractHtml(page(body12), Engine.Default)
-    val a = Extractor.extractHtml(page(body12), Engine.Alt)
+    val d = extractHtml(page(body12), Engine.Default)
+    val a = extractHtml(page(body12), Engine.Alt)
     assert(d.text == "") // 12 words < default floor 15
     assert(a.text == s"--- صفحة 1 ---\nHead Line\n$body12") // ≥ alt floor 8
     assert(a.spans.map(_.kind) == Seq("heading", "content"))
   }
 
   test("both: engine outputs concatenated with NO separator (reference format)") {
-    val b = Extractor.extractHtml(page(body20), Engine.Both)
+    val b = extractHtml(page(body20), Engine.Both)
     // default keeps heading+body, alt keeps heading+body; alt's first
     // block follows default's last directly (no separator), blocks
     // within one engine joined "\n"
@@ -41,7 +44,7 @@ class DualEngineSpec extends AnyFunSuite {
   test("both: alt-only part still gets its صفحة header; parts joined \\n\\n") {
     val html = s"<html><body><article><p>$body20</p></article>" +
       s"<article><p>$body12</p></article></body></html>"
-    val b = Extractor.extractHtml(html, Engine.Both)
+    val b = extractHtml(html, Engine.Both)
     // part 1: both engines keep (no-sep concat); part 2: alt only
     assert(b.text ==
       s"--- صفحة 1 ---\n$body20$body20\n\n--- صفحة 2 ---\n$body12")

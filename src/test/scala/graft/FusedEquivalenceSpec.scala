@@ -6,6 +6,7 @@ import org.scalacheck.rng.Seed
 
 import graft.gen.PageGen
 import graft.html.{BlockSegmenter, FusedSegmenter, HtmlTokenizer}
+import graft.html.BlockSegmenter.Block
 
 /** The fused hot-path segmenter must be block-for-block identical to
   * the readable reference pair (tokenize → segment). */
@@ -13,11 +14,20 @@ class FusedEquivalenceSpec extends AnyFunSuite {
 
   private def unfused(s: String) = BlockSegmenter.segment(HtmlTokenizer.tokenize(s))
 
+  /** Block-object view of the fused segmenter's range-based output. */
+  private def segment(html: String): IndexedSeq[Block] = {
+    val rb = FusedSegmenter.segmentRaw(html)
+    (0 until rb.n).map { i =>
+      Block(rb.parts(i), rb.kindName(i), rb.text(i),
+        rb.words(i), rb.linkWords(i), rb.boiler(i))
+    }
+  }
+
   test("equivalent on 3000 generated HTML documents") {
     (0L until 3000L).foreach { id =>
       if (PageGen.kindOf(id) == PageGen.Html || PageGen.kindOf(id) == PageGen.Blank) {
         val html = new String(PageGen.row(id).html, "UTF-8")
-        assert(FusedSegmenter.segment(html) == unfused(html), s"id=$id diverged")
+        assert(segment(html) == unfused(html), s"id=$id diverged")
       }
     }
   }
@@ -34,7 +44,7 @@ class FusedEquivalenceSpec extends AnyFunSuite {
       "<p>&#1605;&#1585;&#1581;&#1576;&#1575;</p>", "a<br/>b<br />c",
       "text &hellip", "&;x", "<div class='q\">'>z</div>")
     nasty.foreach { s =>
-      assert(FusedSegmenter.segment(s) == unfused(s), s"input: $s")
+      assert(segment(s) == unfused(s), s"input: $s")
     }
   }
 
@@ -50,7 +60,7 @@ class FusedEquivalenceSpec extends AnyFunSuite {
     // scalatestplus bridge; fixed seed keeps the corpus stable)
     (0 until 500).foreach { i =>
       val s = doc.pureApply(Gen.Parameters.default, Seed(42L + i))
-      assert(FusedSegmenter.segment(s) == unfused(s), s"seed=$i input: $s")
+      assert(segment(s) == unfused(s), s"seed=$i input: $s")
     }
   }
 }

@@ -129,12 +129,49 @@ class RobustnessSpec extends AnyFunSuite {
     val rows = Seq(plain).toDF("s")
       .select(expr("graft_explode_blocks(encode(s, 'UTF-8'))"))
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getString(2), r.getString(3), r.getBoolean(6)))
-    val oracle = Extractor.extractPlain(plain)
-    // same paragraph blocks, all kept, part 1 (extractPlain contract)
+    val oracle = Extractor.extract(plain.getBytes("UTF-8"), "en")
+    // same paragraph blocks, all kept, part 1 (plain-text contract)
     val oracleBlocks = oracle.spans.map(s => oracle.text.substring(s.start, s.end))
     assert(rows.map(_._4).toSeq == oracleBlocks, s"blocks: ${rows.toSeq}")
     assert(rows.forall(r => r._1 == 1 && r._3 == "content" && r._5))
     assert(rows.map(_._2).toSeq == rows.indices.toSeq)
+  }
+
+  test("PDF and plain payloads: engine-invariant, block view matches the spans") {
+    import graft.extract.Engine
+    import graft.expr.ExplodeBlocks
+    import graft.html.BlockSegmenter.countWords
+    import graft.pdf.PdfGen
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.types.BinaryType
+    val explode = ExplodeBlocks(BoundReference(0, BinaryType, nullable = true))
+    // page 1 has a line that normalizes to empty: its header still shows
+    val pdf = PdfGen.makePdf(Seq(
+      PdfGen.Page(Seq(PdfGen.Line(" \t ")), flate = false),
+      PdfGen.Page(Seq(PdfGen.Line("alpha  beta"), PdfGen.Line("gamma")), flate = true)))
+    val plain = "one two\n\n three \n\t\nfour five six".getBytes("UTF-8")
+    Seq(pdf, plain).foreach { payload =>
+      val d = Extractor.extract(payload, "en", Engine.Default)
+      assert(d.error == null && d.text.nonEmpty)
+      Seq(Engine.Alt, Engine.Both).foreach(e =>
+        assert(Extractor.extract(payload, "en", e) == d, s"engine $e"))
+      val rows = explode.eval(InternalRow(payload)).iterator.toSeq
+      assert(rows.map(_.getInt(1)) == rows.indices)
+      assert(rows.forall(r => r.getUTF8String(2).toString == "content" &&
+        r.getInt(4) == countWords(r.getUTF8String(3).toString) &&
+        r.getInt(5) == 0 && r.getBoolean(6)))
+      val nonEmpty = rows.map(_.getUTF8String(3).toString).filter(_.nonEmpty)
+      assert(nonEmpty == d.spans.map(s => d.text.substring(s.start, s.end)).filter(_.nonEmpty))
+    }
+    val d = Extractor.extract(pdf, "en")
+    assert(d.text == "--- صفحة 1 ---\n\n\n--- صفحة 2 ---\nalpha beta\ngamma", d.text)
+    assert(explode.eval(InternalRow(pdf)).iterator.map(_.getInt(0)).toSeq == Seq(1, 2))
+    assert(Extractor.extract(plain, "en").text == "--- صفحة 1 ---\none two\nthree\nfour five six")
+    // malformed payloads: zero block rows
+    Seq(PageGen.badPdf(PageGen.rngFor(3)), Array[Byte]('x', 0xFF.toByte)).foreach { b =>
+      assert(explode.eval(InternalRow(b)).iterator.isEmpty)
+    }
   }
 
   test("unicode trim handles NBSP like Python str.strip") {
