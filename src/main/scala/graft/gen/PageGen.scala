@@ -253,7 +253,8 @@ object PageGen {
 
     // articles = parts (multi-part with p≈15%)
     val nParts = if (r.nextInt(100) < 15) 2 + r.nextInt(2) else 1
-    val gt = new RawBlocks // ground truth: every planted block, kept
+    // ground truth: every planted block, kept (kindId 0=content 1=heading 2=list)
+    val gt = new RawBlocks
     for (p <- 1 to nParts) {
       sb.append("<article class=\"page\">\n")
 

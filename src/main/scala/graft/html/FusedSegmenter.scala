@@ -12,7 +12,9 @@ import BlockSegmenter.isWs
   * `graft_explode_blocks` emits the blocks as rows. Block-for-block
   * identical to `BlockSegmenter.segment(HtmlTokenizer.tokenize(s))`,
   * the readable reference pair — asserted by `FusedEquivalenceSpec`
-  * over generated corpora and by the frozen golden digests.
+  * over generated corpora and by the frozen golden digests. Fused
+  * because the extraction hot loop is allocation-bound at high core
+  * counts (SURVEY.md §4.2: "hot loop must avoid overhead").
   */
 object FusedSegmenter {
 
