@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.gen.{PageGen, PageRow}
@@ -85,19 +85,21 @@ object ExtractPipeline {
     extracted(pages).as[ExtractedRow]
   }
 
-  /** Physical partitioning for the export stage (north rule:
-    * "hash-bucketed by url with salting for skewed hosts").
-    *
-    * bucket = pmod(xxhash64(url), B) — the layout key; deterministic,
-    * so re-runs and resumes address the same bucket set.
-    * salt — nonzero only for rows whose host is in the hot set,
-    * spreading a skewed host across `salts` sub-splits. Extraction is
-    * row-local, so salting can never change results (SURVEY.md §7.4);
-    * lineage still aggregates by logical bucket, not salted split.
+  /** bucket = pmod(xxhash64(url), B) — the export stage's layout key;
+    * deterministic, so re-runs and resumes address the same bucket set.
+    * URLs are unique, so a hot host cannot skew a bucket. */
+  def bucketOf(buckets: Int): Column =
+    pmod(xxhash64(col("url")), lit(buckets)).cast("int")
+
+  /** `bucketOf` plus a salt column (north rule: "hash-bucketed by url
+    * with salting for skewed hosts"): nonzero only for rows whose host
+    * is in the hot set, spreading a skewed host across `salts`
+    * sub-splits of a host-keyed exchange. Extraction is row-local, so
+    * salting can never change results (SURVEY.md §7.4).
     */
   def withBucket(df: DataFrame, buckets: Int, hotHosts: Seq[String], salts: Int): DataFrame = {
     val host = regexp_extract(col("url"), "^https?://([^/]+)/", 1)
-    df.withColumn("bucket", pmod(xxhash64(col("url")), lit(buckets)).cast("int"))
+    df.withColumn("bucket", bucketOf(buckets))
       .withColumn(
         "salt",
         when(host.isin(hotHosts: _*), pmod(xxhash64(col("url"), lit(1)), lit(salts)).cast("int"))

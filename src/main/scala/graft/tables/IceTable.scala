@@ -202,11 +202,12 @@ final class IceTable(val root: String, spark: SparkSession) {
   /** Atomic overwrite-commit of `df` (already carrying a `bucket`
     * column), processed in `groups` resumable bucket-groups.
     *
-    * Each group is one Spark job writing `data/commit-<id>/group=G/`
-    * partitioned by bucket, plus that group's lineage rows, plus a
-    * `.done` marker. A re-run with the same `commitId` skips finished
-    * groups — "resumable from checkpoint after any executor loss"
-    * (north rule). The snapshot flips only after every group landed.
+    * Lineage is aggregated once over the whole input. Each group is
+    * then one Spark job writing `data/commit-<id>/grp=G/` partitioned
+    * by bucket, plus that group's lineage rows, plus a `.done` marker.
+    * A re-run with the same `commitId` skips finished groups —
+    * "resumable from checkpoint after any executor loss" (north rule).
+    * The snapshot flips only after every group landed.
     */
   def commit(df: DataFrame, commitId: String, groups: Int = 8,
              abortAfterGroup: Int = -1,
@@ -271,6 +272,25 @@ final class IceTable(val root: String, spark: SparkSession) {
     fs.mkdirs(progressDir)
 
     val grouped = df.withColumn("grp", pmod(col("bucket"), lit(groups)))
+    // lineage: one row per logical bucket (SURVEY.md §7.7), aggregated
+    // ONCE up front — at most `buckets` rows, collected to the driver.
+    // Column-pruned, so an unpersisted input pays one cheap pass instead
+    // of one per group; a persisted input fills its cache with this same
+    // action before the concurrent group jobs race for it.
+    val lineage = grouped.groupBy(col("bucket"), col("grp"))
+      .agg(
+        count(lit(1)).as("rows"),
+        sum(when(col("error").isNotNull, 1L).otherwise(0L)).as("error_rows"),
+        // P6 analogue: blank extractions counted at the sink
+        // (main_window.py:784-786 refuses empty saves; we record)
+        sum(when(col("error").isNull && length(coalesce(col("text"), lit(""))) === 0, 1L)
+          .otherwise(0L)).as("empty_rows"),
+        // O4 analogue: >20-part documents warn-counted, not dropped
+        // (main_window.py:342-344)
+        sum(when(size(split(coalesce(col("text"), lit("")), "--- صفحة ", -1)) - 1 > 20, 1L)
+          .otherwise(0L)).as("oversize_docs"),
+        sum(length(coalesce(col("text"), lit("")))).as("text_chars"))
+    val lineageRows = lineage.collect()
 
     def doGroup(g: Int): Unit = {
       val marker = new Path(progressDir, s"group-$g.done")
@@ -284,7 +304,8 @@ final class IceTable(val root: String, spark: SparkSession) {
         // writer setup and per-file commit moves. One task per
         // (grp,bucket) writes one right-sized file; `buckets` is the
         // deployment-side knob that sizes those files (corpus/buckets
-        // ≈ target file size).
+        // ≈ target file size). "none" keeps the caller's layout:
+        // ExtractJob already exchanged by bucket, appends keep theirs.
         val base = grouped.filter(col("grp") === g)
         val slice =
           if (distribution == "hash") base.repartition(col("grp"), col("bucket"))
@@ -299,25 +320,11 @@ final class IceTable(val root: String, spark: SparkSession) {
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy("grp", "bucket").parquet(dataDir.toString)
         val elapsedMs = (System.nanoTime() - t0) / 1000000
-        // lineage: one row per logical bucket (never per salted split —
-        // SURVEY.md §7.7), written alongside the group's data; it
-        // aggregates the UN-redistributed slice (map-side combine from
-        // the cached input — no need to pay the write's exchange again)
-        grouped.filter(col("grp") === g).groupBy(col("bucket"))
-          .agg(
-            count(lit(1)).as("rows"),
-            sum(when(col("error").isNotNull, 1L).otherwise(0L)).as("error_rows"),
-            // P6 analogue: blank extractions counted at the sink
-            // (main_window.py:784-786 refuses empty saves; we record)
-            sum(when(col("error").isNull && length(coalesce(col("text"), lit(""))) === 0, 1L)
-              .otherwise(0L)).as("empty_rows"),
-            // O4 analogue: >20-part documents warn-counted, not dropped
-            // (main_window.py:342-344)
-            sum(when(size(split(coalesce(col("text"), lit("")), "--- صفحة ", -1)) - 1 > 20, 1L)
-              .otherwise(0L)).as("oversize_docs"),
-            sum(length(coalesce(col("text"), lit("")))).as("text_chars"))
-          .withColumn("grp", lit(g))
+        // the group's lineage rows, as one file, before its marker
+        val mine = lineageRows.filter(_.get(1) == g)
+        spark.createDataFrame(java.util.Arrays.asList(mine: _*), lineage.schema)
           .withColumn("elapsed_ms", lit(elapsedMs))
+          .coalesce(1)
           .write.mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy("grp").parquet(lineageDir)
@@ -346,12 +353,6 @@ final class IceTable(val root: String, spark: SparkSession) {
       // cleanly re-written by the dynamic overwrite on re-run, and the
       // pool threads inherit the caller's cancellable job group
       // (thread-locals are inheritable at thread creation).
-      if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE) {
-        // fill the shared cache ONCE before concurrent jobs: a cold
-        // cache raced by several group jobs would compute the same
-        // upstream (extraction) partitions more than once
-        grouped.count()
-      }
       val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(groups, 3))
       try {
         val futs = (0 until groups).map { g =>
@@ -370,10 +371,7 @@ final class IceTable(val root: String, spark: SparkSession) {
       } finally pool.shutdownNow()
     }
 
-    // collect this commit's file list and its row count
-    val files = listParquet(dataDir)
-    val rows = spark.read.parquet(lineageDir).agg(sum("rows")).collect()(0).getLong(0)
-    (files, rows)
+    (listParquet(dataDir), lineageRows.map(_.getAs[Long]("rows")).sum)
   }
 
   /** Atomic snapshot flip: write the manifest to a committer-unique

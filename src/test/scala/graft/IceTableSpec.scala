@@ -43,6 +43,73 @@ class IceTableSpec extends AnyFunSuite {
     assert(events.exists(_.contains("job_start")), events.mkString("\n"))
     assert(events.exists(_.contains("commit_complete snapshot=0")), events.mkString("\n"))
     assert(events.forall(_.matches("^\\d{4}-\\d{2}-\\d{2}T.*")), "ISO-timestamped lines")
+    // the completion line's live counters equal the committed lineage
+    val done = events.find(_.contains("commit_complete")).get
+    def counter(k: String): Long = s" $k=(\\d+)".r.findFirstMatchIn(done).get.group(1).toLong
+    def linSum(c: String): Long = lin.map(_.getAs[Long](c)).sum
+    assert(counter("rows") == linSum("rows"), done)
+    assert(counter("errors") == linSum("error_rows"), done)
+    assert(counter("oversize") == linSum("oversize_docs"), done)
+  }
+
+  /** Lineage/layout guard: every lineage row equals the five aggregates
+    * recomputed on the driver over the committed data, and each
+    * non-empty bucket has one lineage row and exactly one data file.
+    * Returns the table's (error_rows, empty_rows, oversize_docs). */
+  private def assertLineageGuard(table: IceTable, snap: Long): (Long, Long, Long) = {
+    val pageMark = java.util.regex.Pattern.quote("--- صفحة ")
+    val data = table.read(Some(snap)).select("bucket", "text", "error").collect()
+    val want: Map[Int, Seq[Long]] = data.groupBy(_.getInt(0)).map { case (b, rs) =>
+      val texts = rs.map(r => Option(r.getString(1)).getOrElse(""))
+      b -> Seq(
+        rs.length.toLong,
+        rs.count(!_.isNullAt(2)).toLong,
+        rs.count(r => r.isNullAt(2) && Option(r.getString(1)).forall(_.isEmpty)).toLong,
+        texts.count(_.split(pageMark, -1).length - 1 > 20).toLong,
+        texts.map(t => t.codePointCount(0, t.length).toLong).sum)
+    }
+    val cols = Seq("rows", "error_rows", "empty_rows", "oversize_docs", "text_chars")
+    val lin = table.lineage(Some(snap)).collect()
+    val got = lin.map(r => r.getAs[Int]("bucket") -> cols.map(r.getAs[Long])).toMap
+    assert(lin.length == got.size, "one lineage row per bucket")
+    assert(got == want)
+    val filesPerBucket = table.readSnapshot(snap).files
+      .groupBy(f => "/bucket=(\\d+)/".r.findFirstMatchIn(f.path).get.group(1).toInt)
+      .map { case (b, fs) => b -> fs.length }
+    assert(filesPerBucket == want.map { case (b, _) => b -> 1 },
+      s"one data file per non-empty bucket: $filesPerBucket")
+    def total(i: Int): Long = want.values.map(_(i)).sum
+    (total(1), total(2), total(3))
+  }
+
+  test("lineage guard: fresh and resumed commits match their data, one file per bucket") {
+    val fresh = tmpRoot("guard-fresh")
+    val r = ExtractJob.run(spark, fresh, N, buckets = 16, groups = 4, commitId = "c0")
+    assertLineageGuard(new IceTable(fresh, spark), r.snapshotId)
+    val resumed = tmpRoot("guard-resume")
+    intercept[IllegalStateException] {
+      ExtractJob.run(spark, resumed, N, buckets = 16, groups = 4,
+        commitId = "c0", abortAfterGroup = 1)
+    }
+    val r2 = ExtractJob.run(spark, resumed, N, buckets = 16, groups = 4, commitId = "c0")
+    assertLineageGuard(new IceTable(resumed, spark), r2.snapshotId)
+  }
+
+  test("lineage guard: error, empty and oversize rows are counted per bucket") {
+    val root = tmpRoot("guard-hand")
+    val table = new IceTable(root, spark)
+    def page(i: Int): String = s"--- صفحة $i ---\nbody $i"
+    // PageGen never emits more than 20 parts, so the oversize count
+    // needs a hand-built 21-part text
+    val df = spark.createDataFrame(Seq[(String, Int, String, String)](
+      ("u0", 0, null, "InvalidUtf8"),
+      ("u1", 1, "", null),
+      ("u2", 2, (1 to 21).map(page).mkString("\n\n"), null),
+      ("u3", 2, page(1), null),
+      ("u4", 3, "", null),
+      ("u5", 3, null, "TruncatedPdf"))).toDF("url", "bucket", "text", "error")
+    val snap = table.commit(df, "hand", groups = 2)
+    assert(assertLineageGuard(table, snap) == ((2L, 2L, 1L)))
   }
 
   test("bucket predicate prunes data files at the scan (the 100×-scale read path)") {
