@@ -63,13 +63,12 @@ object Dedup {
     // executed plan recomputed the corpus shingle explode for every
     // consumer (~6 passes, zero ReusedExchange). Pair counts and
     // per-doc set sizes now both derive ROW-LOCALLY from the one
-    // MATERIALIZED (localCheckpoint) grouped table: a sorted id list
+    // MATERIALIZED (Barrier) grouped table: a sorted id list
     // emits exactly the (a<b) pairs the self-join produced,
     // dfCap²/2-bounded per shingle either way.
-    val grouped = inv.groupBy("shingle")
+    val grouped = Barrier(inv.groupBy("shingle")
       .agg(call_function("graft_capped_ids", col("id"), lit(dfCap)).as("ids"))
-      .filter(col("ids").isNotNull)
-      .localCheckpoint()
+      .filter(col("ids").isNotNull))
     val rn = grouped.select(explode(col("ids")).as("id"))
       .groupBy("id").agg(count(lit(1)).as("n"))
     val shared = grouped
@@ -108,16 +107,15 @@ object Dedup {
     * this op needs no stop-gram cap). */
   def substringDupStats(docs: DataFrame, idCol: String, textCol: String,
                         k: Int = 8): DataFrame = {
-    // materialized once (localCheckpoint): the window table feeds both
+    // materialized once (Barrier): the window table feeds both
     // the min-occurrence aggregate and the join-back probe — without
     // the barrier each side re-runs the tokenize+hash generate over
     // the corpus (r6 plan audit: the broadcast build defeated the
     // documented Exchange reuse). 8-byte hashes per window, the same
     // rows the whash exchanges already carry.
-    val wins = docs.select(col(idCol).cast("long").as("doc_id"),
+    val wins = Barrier(docs.select(col(idCol).cast("long").as("doc_id"),
         posexplode(call_function("graft_token_windows", col(textCol), lit(k))))
-      .toDF("doc_id", "pos", "whash")
-      .localCheckpoint()
+      .toDF("doc_id", "pos", "whash"))
     val firsts = wins.groupBy("whash")
       .agg(min(struct(col("doc_id"), col("pos"))).as("first"))
     wins.join(firsts, "whash")
@@ -156,15 +154,14 @@ object Dedup {
     * rejoined by `sep` ("" when nothing survives). */
   def paragraphDedup(docs: DataFrame, idCol: String, textCol: String,
                      sep: String = "\n"): DataFrame = {
-    // materialized once (localCheckpoint), same rationale as
+    // materialized once (Barrier), same rationale as
     // substringDupStats: the paragraph table feeds both the keeper
     // aggregate and the join-back probe, and without the barrier each
     // side re-splits and re-hashes the corpus.
-    val paras = docs.select(col(idCol).cast("long").as("doc_id"),
+    val paras = Barrier(docs.select(col(idCol).cast("long").as("doc_id"),
         posexplode(split(col(textCol), java.util.regex.Pattern.quote(sep))))
       .toDF("doc_id", "idx", "para")
-      .withColumn("ph", call_function("graft_fnv64", col("para")))
-      .localCheckpoint()
+      .withColumn("ph", call_function("graft_fnv64", col("para"))))
     val firsts = paras.groupBy("ph")
       .agg(min(struct(col("doc_id"), col("idx"))).as("first"))
     paras.join(firsts, "ph")
@@ -215,7 +212,7 @@ object Dedup {
                     maxEvalShingles: Long = 5000000L,
                     bloomFpp: Double = 0.01,
                     maxBloomItems: Long = 2000000000L): DataFrame = {
-    // MATERIALIZED once (localCheckpoint — r6): the eval shingle set is
+    // MATERIALIZED once (Barrier — r6): the eval shingle set is
     // read up to three times (the guard count, the Bloom build, the
     // join build side), and each read re-exploded the eval corpus. It
     // is bounded by construction (benchmark suites), so caching it is
@@ -225,9 +222,8 @@ object Dedup {
     // stats-based auto-broadcast from resurrecting the driver-side
     // collect the guard just ruled out (AQE may still build a runtime
     // broadcast if the ACTUAL size proves tiny — that is safe)
-    val evalSh = evalSet
-      .select(explode(shingles(col(textCol))).as("shingle")).distinct()
-      .localCheckpoint()
+    val evalSh = Barrier(evalSet
+      .select(explode(shingles(col(textCol))).as("shingle")).distinct())
     val nEval = evalSh.count()
     val inv = corpus.select(col(idCol), explode(shingles(col(textCol))).as("shingle"))
     val probe =
@@ -263,7 +259,7 @@ object Dedup {
     // them: array_min(sig) == MaxValue ⇔ every element is the sentinel
     // (a real shingle minimum below MaxValue in all k permutations).
     //
-    // The signature table is MATERIALIZED (localCheckpoint) before the
+    // The signature table is MATERIALIZED (Barrier) before the
     // sentinel filter and the band self-join: without the barrier the
     // pushed-down sentinel filter re-evaluates graft_minhash per row
     // (once in the Filter, once in the Project) and the self-join
@@ -274,10 +270,9 @@ object Dedup {
     // already ships through its exchanges (each banded row carries the
     // full sig), so the guide-§8 "decide on small rows" trade holds at
     // any corpus size; MEMORY_AND_DISK spills rather than OOMs.
-    val sig = docs.select(
+    val sig = Barrier(docs.select(
         col(idCol).as("id"),
-        call_function("graft_minhash", col(textCol)).as("sig"))
-      .localCheckpoint()
+        call_function("graft_minhash", col(textCol)).as("sig")))
       .filter(array_min(col("sig")) =!= lit(Long.MaxValue))
     val banded = sig.select(
       col("id"), col("sig"),
@@ -367,13 +362,12 @@ object Dedup {
       "need 64 % chunks == 0 and chunks > maxHamming (pigeonhole guarantee)")
     val width = 64 / chunks
     val mask = if (width == 64) -1L else (1L << width) - 1
-    // materialized once (localCheckpoint — r6): both sides of the
+    // materialized once (Barrier — r6): both sides of the
     // chunk self-join otherwise recompute the corpus simhash pass
     // (zero ReusedExchange under the broadcast build). One id + one
     // long per doc — the minimal proxy table of guide §8.
-    val fp = docs.select(col(idCol).as("id"),
-      call_function("graft_simhash", col(textCol)).as("fp"))
-      .localCheckpoint()
+    val fp = Barrier(docs.select(col(idCol).as("id"),
+      call_function("graft_simhash", col(textCol)).as("fp")))
     val chunked = fp.select(col("id"), col("fp"),
       explode(array((0 until chunks).map { ci =>
         struct(lit(ci).as("chunk"),
@@ -414,59 +408,51 @@ object Dedup {
     * ⇔ no label changed; decimal accumulator so 10^12 ids cannot
     * overflow), and the fixpoint is iteration-order-independent
     * (deterministic output at any parallelism). Each round's result
-    * is checkpointed to truncate the growing lineage (the standard
-    * iterative-Spark discipline): pass `checkpointDir` to use a
-    * RELIABLE `checkpoint` there — the multi-executor deployment
-    * choice, since `localCheckpoint` blocks die with a lost executor
-    * and kill the job — or leave it None for the faster
-    * `localCheckpoint` on single-JVM/local runs. For adversarial
+    * passes a [[Barrier]] to truncate the growing lineage (the standard
+    * iterative-Spark discipline) — a RELIABLE checkpoint when the
+    * context has a checkpoint dir (the multi-executor deployment
+    * choice: local checkpoint blocks die with a lost executor and
+    * fail the job), executor-local blocks otherwise. For adversarial
     * long-chain graphs — not a shape near-dup corpora produce — swap
     * in star-contraction (O(log n) rounds) behind the same signature.
     *
     * Output covers only ids that appear in `pairs` (docs with no
     * duplicates are their own cluster by definition). */
   def connectedComponents(pairs: DataFrame, aCol: String = "id_a",
-                          bCol: String = "id_b", maxRounds: Int = 50,
-                          checkpointDir: Option[String] = None): DataFrame = {
-    checkpointDir.foreach(pairs.sparkSession.sparkContext.setCheckpointDir)
-    def cp(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint() else df.localCheckpoint()
-    // convergence sums ride each round's checkpoint job as OBSERVED
-    // metrics (r6): the eager cp already executes the round, so a
+                          bCol: String = "id_b", maxRounds: Int = 50): DataFrame = {
+    // convergence sums ride each round's barrier job as OBSERVED
+    // metrics (r6): the eager barrier already executes the round, so a
     // separate aggregate action per round was one redundant job each —
     // observe() folds it into the same pass (observed metrics fire on
-    // the checkpoint's materializing action; OpsSpec's checkpointDir
-    // equivalence test covers the reliable-checkpoint path too).
+    // the barrier's materializing action; OpsSpec's reliable-checkpoint
+    // equivalence test covers that path too).
     // Decimal accumulator as before: 10^12 ids cannot overflow.
-    def cpSum(df: DataFrame, c: String): (DataFrame, java.math.BigDecimal) = {
-      val obs = org.apache.spark.sql.Observation()
-      val out = cp(df.observe(obs, sum(col(c).cast("decimal(38,0)")).as("s")))
-      val d = obs.get("s").asInstanceOf[java.math.BigDecimal]
-      (out, if (d == null) java.math.BigDecimal.ZERO else d)
+    def labelSum(df: DataFrame, round: Int): (DataFrame, java.math.BigDecimal) = {
+      val (out, m) = Barrier.observed(df, s"connectedComponents round $round",
+        sum(col("component").cast("decimal(38,0)")))
+      (out, if (m.isNullAt(0)) java.math.BigDecimal.ZERO else m.getDecimal(0))
     }
     val sym = pairs
       .select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
       .union(pairs.select(col(bCol).cast("long").as("src"), col(aCol).cast("long").as("dst")))
-    // the edge count rides the edges checkpoint the same way (the old
+    // the edge count rides the edges barrier the same way (the old
     // `edges.isEmpty` was one more action)
-    val obsE = org.apache.spark.sql.Observation()
-    val edges = cp(sym
+    val (edges, nEdges) = Barrier.observed(sym
       .union(sym.select(col("src"), col("src").as("dst"))) // self-loops
-      .distinct()
-      .observe(obsE, count(lit(1)).as("n")))
-    var (labels, prevSum) = cpSum(
+      .distinct(), "connectedComponents edges", count(lit(1)))
+    var (labels, prevSum) = labelSum(
       edges.select(col("src").as("id")).distinct()
-        .withColumn("component", col("id")), "component")
-    var done = obsE.get("n").asInstanceOf[java.lang.Long] == 0L
+        .withColumn("component", col("id")), 0)
+    var done = nEdges.getLong(0) == 0L
     var round = 0
     // maxRounds bounds PROPAGATION rounds (≥ the largest component's
     // diameter); detecting the fixpoint costs one extra round that
     // observes an unchanged label sum, hence `<= maxRounds`: a graph
     // whose diameter equals maxRounds exactly must be accepted
     while (!done && round <= maxRounds) {
-      val (next, nextSum) = cpSum(edges
+      val (next, nextSum) = labelSum(edges
         .join(labels.select(col("id").as("dst"), col("component").as("dst_comp")), "dst")
-        .groupBy(col("src").as("id")).agg(min("dst_comp").as("component")), "component")
+        .groupBy(col("src").as("id")).agg(min("dst_comp").as("component")), round + 1)
       done = nextSum.compareTo(prevSum) == 0
       prevSum = nextSum
       labels.unpersist()
@@ -492,9 +478,8 @@ object Dedup {
     * in pairs — a sliver of the corpus), and the corpus streams
     * through a single LEFT ANTI equi-join against it; no corpus text
     * is shuffled. */
-  def dedupedCorpus(docs: DataFrame, idCol: String, pairs: DataFrame,
-                    checkpointDir: Option[String] = None): DataFrame = {
-    val cc = connectedComponents(pairs, checkpointDir = checkpointDir)
+  def dedupedCorpus(docs: DataFrame, idCol: String, pairs: DataFrame): DataFrame = {
+    val cc = connectedComponents(pairs)
     val losers = cc.filter(col("component") =!= col("id"))
       .select(col("id").as(idCol))
     docs.join(losers, Seq(idCol), "left_anti")
@@ -527,12 +512,11 @@ object Dedup {
                         idCol: String, textCol: String,
                         bloomFpp: Double = 0.01,
                         maxBloomItems: Long = 2000000000L): DataFrame = {
-    // batch shas materialized once (localCheckpoint — r6): the batch
+    // batch shas materialized once (Barrier — r6): the batch
     // side is read four times (guard count, Bloom build, semi probe,
     // anti probe + first-id agg) and re-hashed each time without the
     // barrier. Bounded by the increment, 32 bytes + id per row.
-    val bsha = batch.select(col(idCol), sha2(col(textCol), 256).as("sha"))
-      .localCheckpoint()
+    val bsha = Barrier(batch.select(col(idCol), sha2(col(textCol), 256).as("sha")))
     val cshaAll = corpus.select(sha2(col(textCol), 256).as("sha"))
     val nBatch = bsha.count() // bounded: the increment, not the corpus
     val csha =
@@ -590,11 +574,11 @@ object Dedup {
                k: Int, iters: Int, minCosine: Double): DataFrame = {
     val e = emb.select(col(idCol).as("vec_id"), col(vecCol).as("embedding"))
     val cents = IvfIndex.train(e, k, iters)
-    // assignment materialized once (localCheckpoint — r6): it feeds
+    // assignment materialized once (Barrier — r6): it feeds
     // both sides of the cluster-keyed self-join AND the output
     // projection — three scan+argmin passes without the barrier
     // (assign itself stays the shuffle-free literal argmin).
-    val asg = IvfIndex.assign(e, cents).localCheckpoint()
+    val asg = Barrier(IvfIndex.assign(e, cents))
     val dominated = asg.as("a").join(asg.as("b"),
         col("a.cluster") === col("b.cluster") &&
           col("b.vec_id") < col("a.vec_id"))

@@ -1,11 +1,14 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Link-graph analytics over crawl-derived edges (outlink extraction →
   * host graph → rank). */
 object Graph {
+
+  /** pageRank's lineage-truncation cadence (rounds per [[Barrier]]). */
+  val RoundsPerBarrier = 5
 
   /** INTEGER-EXACT PageRank, damping 0.85, `iters` rounds.
     *
@@ -28,12 +31,11 @@ object Graph {
     * deterministic tie-break for which nodes get the extra units).
     *
     * Iteration hygiene mirrors [[Dedup.connectedComponents]] (VERDICT
-    * r4 #4): `checkpointDir` switches the per-`checkpointInterval`
-    * lineage truncation from `localCheckpoint` (single-JVM) to
-    * RELIABLE `checkpoint` (multi-executor deployments — local
-    * checkpoint blocks die with a lost executor), the result is
-    * checkpointed once at exit so the loop-invariant frames can be
-    * unpersisted immediately, and nothing cached leaks past the call.
+    * r4 #4): a [[Barrier]] every [[RoundsPerBarrier]] rounds truncates
+    * the lineage (reliable when the context has a checkpoint dir), the
+    * result passes one more barrier at exit so the loop-invariant
+    * frames can be unpersisted immediately, and nothing cached leaks
+    * past the call.
     *
     * Scale shape per iteration: ONE equi-join of edges against the
     * (nodes-sized) rank table on src + a combiner-friendly sum keyed
@@ -42,13 +44,8 @@ object Graph {
     * semantics: parallel edges each contribute. */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                iters: Int = 3, scale: Long = 1L << 20,
-               checkpointDir: Option[String] = None,
-               checkpointInterval: Int = 5,
                redistributeDangling: Boolean = false): DataFrame = {
-    require(iters >= 1 && scale > 0 && checkpointInterval >= 1)
-    checkpointDir.foreach(edges.sparkSession.sparkContext.setCheckpointDir)
-    def cp(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint() else df.localCheckpoint()
+    require(iters >= 1 && scale > 0)
     // persist the loop-invariant frames: every iteration's plan would
     // otherwise re-embed (and re-execute) the edge scan, the
     // union+distinct node shuffle, and the outdeg aggregate
@@ -66,7 +63,7 @@ object Graph {
     require(n > 0, "pageRank: empty graph")
     val base = (15L * scale) / (100L * n)
     var ranks = nodes.withColumn("rank", lit(scale / n))
-    // previous round's checkpoint — released as soon as the next one
+    // previous round's barrier — released as soon as the next one
     // is materialized (the connectedComponents discipline)
     var prevCp: Option[DataFrame] = None
     (1 to iters).foreach { i =>
@@ -95,22 +92,22 @@ object Graph {
             col("rank") + expr(s"(85 * dmass__) div (100 * ${n}L)"))
           .drop("dmass__")
       }
-      // lineage truncation: per `checkpointInterval` rounds — and every
+      // lineage truncation: every RoundsPerBarrier rounds — and every
       // round when redistributing, because the lazy dangling aggregate
       // references `ranks` a second time and an unbroken chain would
       // double the plan per round (same discipline as
       // connectedComponents: materialize, then drop the previous cp)
-      val mustCp = (dangling.isDefined || i % checkpointInterval == 0) && i < iters
+      val mustCp = (dangling.isDefined || i % RoundsPerBarrier == 0) && i < iters
       ranks = if (mustCp) {
-        val nxt = cp(next)
+        val nxt = Barrier(next)
         prevCp.foreach(_.unpersist())
         prevCp = Some(nxt)
         nxt
       } else next
     }
-    // checkpoint the result so the loop-invariant frames can be
+    // materialize the result so the loop-invariant frames can be
     // unpersisted NOW instead of leaking into session LRU (VERDICT r4)
-    val out = cp(ranks)
+    val out = Barrier(ranks)
     prevCp.foreach(_.unpersist())
     dangling.foreach(_.unpersist())
     outdeg.unpersist()
@@ -120,10 +117,12 @@ object Graph {
   }
 
   /** Redirect-chain resolution via POINTER DOUBLING (path doubling):
-    * given a redirect map (src → dst, AT MOST ONE out-edge per src —
-    * the caller's contract; duplicate srcs would multiply pointer rows
-    * at every composition), return for every node (any id appearing as
-    * src or dst) its terminal target and exact hop count.
+    * given a redirect map (src → dst, AT MOST ONE out-edge per src),
+    * return for every node (any id appearing as src or dst) its
+    * terminal target and exact hop count. A src with two out-edges
+    * would multiply pointer rows at every composition, so it fails
+    * with an IllegalArgumentException naming the smallest such id; the
+    * check rides the first round's barrier (an unchanged job count).
     *
     * Why doubling: a naive chase resolves a length-L chain in L
     * join rounds; composing the pointer table with ITSELF
@@ -146,43 +145,54 @@ object Graph {
     * deterministic, but round-count-dependent; callers that expose
     * them across engines should mask them (the u3 query does).
     *
-    * Iteration hygiene mirrors [[pageRank]]: reliable-or-local
-    * checkpoint per round truncates lineage, nothing cached leaks.
+    * Iteration hygiene mirrors [[pageRank]]: a [[Barrier]] per round
+    * truncates lineage, nothing cached leaks.
     * Returns (id, final_id, hops, resolved). */
   def resolveChains(edges: DataFrame, srcCol: String = "src",
-                    dstCol: String = "dst", maxRounds: Int = 40,
-                    checkpointDir: Option[String] = None): DataFrame = {
+                    dstCol: String = "dst", maxRounds: Int = 40): DataFrame = {
     require(maxRounds >= 1 && maxRounds <= 62, "2^maxRounds must fit a long")
-    checkpointDir.foreach(edges.sparkSession.sparkContext.setCheckpointDir)
-    def cp(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint() else df.localCheckpoint()
-    // hop sums ride each round's checkpoint job as OBSERVED metrics
-    // (r6, the connectedComponents discipline): the eager cp already
+    // hop sums ride each round's barrier job as OBSERVED metrics (r6,
+    // the connectedComponents discipline): the eager barrier already
     // executes the round, so a separate aggregate action per round was
     // one redundant job each
-    def cpHopSum(df: DataFrame): (DataFrame, java.math.BigDecimal) = {
-      val obs = org.apache.spark.sql.Observation()
-      val out = cp(df.observe(obs, sum(col("hops").cast("decimal(38,0)")).as("s")))
-      val d = obs.get("s").asInstanceOf[java.math.BigDecimal]
-      (out, if (d == null) java.math.BigDecimal.ZERO else d)
-    }
-    val e = cp(edges.select(col(srcCol).cast("long").as("id"),
+    val hopSum = sum(col("hops").cast("decimal(38,0)"))
+    def decimal(m: Row, i: Int): java.math.BigDecimal =
+      if (m.isNullAt(i)) java.math.BigDecimal.ZERO else m.getDecimal(i)
+    val e = Barrier(edges.select(col(srcCol).cast("long").as("id"),
       col(dstCol).cast("long").as("nxt")))
-    val nodes = e.select(col("id"))
-      .union(e.select(col("nxt").as("id"))).distinct()
-    // f₀: redirecting nodes point one hop ahead, terminals at self
-    var (f, prevSum) = cpHopSum(nodes.join(e, Seq("id"), "left_outer")
+    val (counted, nodeCount) = Barrier.observe(
+      e.select(col("id")).union(e.select(col("nxt").as("id"))).distinct(),
+      "resolveChains nodes", count(lit(1)))
+    // the second distinct costs no exchange (its input is partitioned by
+    // id already); it restores the key uniqueness an observed frame
+    // hides from the planner, whose f₀ size estimate would otherwise
+    // turn every later round's broadcast join into a shuffle join
+    val nodes = counted.distinct()
+    // f₀: redirecting nodes point one hop ahead, terminals at self. It
+    // has one row per node iff every src has one out-edge; both counts
+    // come from f₀'s own barrier job.
+    var (f, m0) = Barrier.observed(nodes.join(e, Seq("id"), "left_outer")
       .select(col("id"), coalesce(col("nxt"), col("id")).as("ptr"),
-        when(col("nxt").isNull, 0L).otherwise(1L).as("hops")))
+        when(col("nxt").isNull, 0L).otherwise(1L).as("hops")),
+      "resolveChains round 0", hopSum, count(lit(1)))
+    if (m0.getLong(1) != nodeCount().getLong(0)) {
+      val dup = e.groupBy("id").count().filter(col("count") > 1).agg(min("id")).head().getLong(0)
+      throw new IllegalArgumentException(
+        s"resolveChains: src $dup has more than one out-edge " +
+          "(the redirect map must hold at most one per src)")
+    }
+    var prevSum = decimal(m0, 0)
     var done = prevSum.signum == 0 // no redirects at all
     var round = 0
     while (!done && round < maxRounds) {
       // f' = f∘f: every ptr is a node, so the self-join is total
-      val (next, nextSum) = cpHopSum(f
+      val (next, m) = Barrier.observed(f
         .join(f.select(col("id").as("ptr"), col("ptr").as("ptr2"),
           col("hops").as("hops2")), "ptr")
         .select(col("id"), col("ptr2").as("ptr"),
-          (col("hops") + col("hops2")).as("hops")))
+          (col("hops") + col("hops2")).as("hops")),
+        s"resolveChains round ${round + 1}", hopSum)
+      val nextSum = decimal(m, 0)
       done = nextSum.compareTo(prevSum) == 0
       prevSum = nextSum
       f.unpersist()
@@ -194,7 +204,7 @@ object Graph {
         .withColumn("still_src", lit(true)), Seq("ptr"), "left_outer")
       .select(col("id"), col("ptr").as("final_id"), col("hops"),
         coalesce(!col("still_src"), lit(true)).as("resolved"))
-    val res = cp(out)
+    val res = Barrier(out)
     f.unpersist() // the final pointer table fed `res`; drop its blocks
     e.unpersist()
     res
@@ -223,22 +233,17 @@ object Graph {
     *
     * Scale shape per round: two equi-joins of edges against the
     * nodes-sized score table + combiner sums — edges never self-join.
-    * Iteration hygiene mirrors [[pageRank]] (reliable-or-local
-    * checkpoint cadence, loop frames unpersisted on exit). Returns
+    * Iteration hygiene mirrors [[pageRank]]: every half-step passes a
+    * [[Barrier]], loop frames are unpersisted on exit. Returns
     * (host, hub, auth). */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
-           iters: Int = 2, scale: Long = 1L << 20,
-           checkpointDir: Option[String] = None,
-           checkpointInterval: Int = 5): DataFrame = {
-    require(iters >= 1 && scale > 0 && checkpointInterval >= 1)
-    checkpointDir.foreach(edges.sparkSession.sparkContext.setCheckpointDir)
-    def cp(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint() else df.localCheckpoint()
+           iters: Int = 2, scale: Long = 1L << 20): DataFrame = {
+    require(iters >= 1 && scale > 0)
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).persist()
     val nodes = e.select(col("src").as("host"))
       .union(e.select(col("dst").as("host"))).distinct().persist()
     require(!e.isEmpty, "hits: empty graph")
-    // one job per half-step: the raw frame is CHECKPOINTED with its
+    // one job per half-step: the raw frame passes a BARRIER with its
     // max riding the same materializing action as an OBSERVED metric
     // (r6 — the connectedComponents/resolveChains discipline; the old
     // persist+agg pair cost the same job but left the full round
@@ -246,10 +251,9 @@ object Graph {
     // per step); all frames release on exit.
     val loopFrames = scala.collection.mutable.ArrayBuffer[DataFrame]()
     def rescale(full: DataFrame, c: String): DataFrame = {
-      val obs = org.apache.spark.sql.Observation()
-      val f = cp(full.observe(obs, max(col(c)).as("mx")))
+      val (f, m) = Barrier.observed(full, s"hits $c rescale", max(col(c)))
       loopFrames += f
-      val mx = obs.get("mx").asInstanceOf[java.lang.Long].longValue()
+      val mx = m.getLong(0)
       // mx > 0 always: every edge endpoint is a node, so some node
       // received a positive sum from the scale-initialized other side
       f.select(col("host"), expr(s"($c * $scale) div $mx").as(c))
@@ -269,10 +273,10 @@ object Graph {
           Seq("host"), "left_outer")
         .select(col("host"), coalesce(col("hub"), lit(0L)).as("hub"))
       hubs = rescale(hraw, "hub")
-      // no separate interval checkpoint needed: every half-step is
+      // no separate interval barrier needed: every half-step is
       // already materialized with truncated lineage by rescale (r6)
     }
-    val out = cp(hubs.join(auths, "host").select("host", "hub", "auth"))
+    val out = Barrier(hubs.join(auths, "host").select("host", "hub", "auth"))
     loopFrames.foreach(_.unpersist())
     nodes.unpersist()
     e.unpersist()

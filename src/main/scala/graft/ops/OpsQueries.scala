@@ -310,10 +310,9 @@ object OpsQueries {
       // row-locally from the one MATERIALIZED grouped table — the old
       // fp-keyed self-join recomputed the corpus fingerprint pass per
       // side and the hot aggregate four times (zero ReusedExchange)
-      val grouped = fp.groupBy("fp")
+      val grouped = Barrier(fp.groupBy("fp")
         .agg(call_function("graft_capped_ids", col("doc_id"), lit(50)).as("ids"))
-        .filter(col("ids").isNotNull)
-        .localCheckpoint()
+        .filter(col("ids").isNotNull))
       grouped.select(col("ids"), posexplode(col("ids")).as(Seq("i", "id_a")))
         .select(col("id_a"),
           explode(slice(col("ids"), col("i") + 2, size(col("ids")))).as("id_b"))
@@ -512,16 +511,15 @@ object OpsQueries {
     // docs per host. The oracle replays all four stages in SQL.
     "p1_training_corpus" -> ((s, dir) => {
       GraftSession.register(s)
-      // planted base materialized once (localCheckpoint — r6): the
+      // planted base materialized once (Barrier — r6): the
       // composition references it ~5x (corpus twice, keepers, eval
       // set, C4 stage) and each reference re-read and re-planted the
       // corpus; one small table, much smaller plan
-      val base = t(s, dir, "documents").select(col("doc_id"), col("source"),
+      val base = Barrier(t(s, dir, "documents").select(col("doc_id"), col("source"),
         concat(col("text"),
           when(col("doc_id") % 10 === 0, lit(" lorem ipsum")).otherwise(lit("")),
           when(col("doc_id") % 9 === 0, lit(" brace { here }")).otherwise(lit("")),
-          lit(" end of document.")).as("text"))
-        .localCheckpoint()
+          lit(" end of document.")).as("text")))
       val corpus = base.unionAll(base.filter(col("doc_id") % 6 === 0)
         .select((col("doc_id") + 400000).as("doc_id"), col("source"), col("text")))
       val keepers = corpus.groupBy(sha2(col("text"), 256).as("sha"))
@@ -927,12 +925,11 @@ object OpsQueries {
           concat(lit(" bmq"), col("doc_id") % 7)).otherwise(lit("")))
       val toks = t(s, dir, "documents").select(col("doc_id"),
         explode(split(trim(planted), "[ \\t\\n\\f\\r\\u000B]+")).as("tok"))
-      // tf materialized once (localCheckpoint — r6): doclen, the global
+      // tf materialized once (Barrier — r6): doclen, the global
       // stats, the query-term prune and the scoring join all derive
       // from it, and each consumer otherwise re-ran the corpus
       // explode+aggregate (~4 passes, zero ReusedExchange)
-      val tf = toks.groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
-        .localCheckpoint()
+      val tf = Barrier(toks.groupBy("doc_id", "tok").agg(count(lit(1)).as("tf")))
       val dl = tf.groupBy("doc_id").agg(sum("tf").as("dl"))
       val glob = dl.agg(count(lit(1)).as("n"), sum("dl").as("tt"))
         .select(col("n"), expr("tt DIV n").as("avgdl"))
@@ -1030,10 +1027,9 @@ object OpsQueries {
       // synthesized+canonicalized url table materialized once (r6):
       // the keeper aggregate and the join-back probe each re-ran the
       // url synthesis and the full canonicalization expression chain
-      val docs = t(s, dir, "documents")
+      val docs = Barrier(t(s, dir, "documents")
         .select(col("doc_id"), url.as("url"))
-        .withColumn("canon_url", UrlCanon.canon(col("url")))
-        .localCheckpoint()
+        .withColumn("canon_url", UrlCanon.canon(col("url"))))
       val groups = docs.groupBy("canon_url")
         .agg(min("doc_id").as("keeper_id"), count(lit(1)).as("n_copies"))
       docs.join(groups, "canon_url")

@@ -351,10 +351,9 @@ class OpsSpec extends AnyFunSuite {
     // reliable-checkpoint mode (the multi-executor deployment choice:
     // localCheckpoint blocks die with a lost executor) produces
     // identical clusters
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-cc-ckpt").toString
-    val gotCkpt = Dedup.connectedComponents(rnd.toDF("id_a", "id_b"),
-        checkpointDir = Some(ckpt)).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val gotCkpt = BarrierSpec.withCheckpointDir(spark) {
+      Dedup.connectedComponents(rnd.toDF("id_a", "id_b")).collect()
+    }.map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(gotCkpt == want, "checkpointDir run must match localCheckpoint run")
   }
 
@@ -419,11 +418,10 @@ class OpsSpec extends AnyFunSuite {
     import graft.ops.Graph
     val es = Seq(("a", "c"), ("b", "c"), ("c", "a"), ("a", "b"))
     val edges = es.toDF("src", "dst")
-    val dir = java.nio.file.Files.createTempDirectory("graft-pr-cp").toString
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val got = Graph.pageRank(edges, "src", "dst", iters = 20,
-        checkpointDir = Some(dir), checkpointInterval = 5)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val got = BarrierSpec.withCheckpointDir(spark) {
+      Graph.pageRank(edges, "src", "dst", iters = 20).collect()
+    }.map(r => r.getString(0) -> r.getLong(1)).toMap
     // VERDICT r4 #4: loop frames must not leak into session LRU —
     // with a reliable dir the checkpoints hold no block-manager RDDs,
     // so no NEW persistent RDD may survive the call (set difference,
@@ -473,11 +471,11 @@ class OpsSpec extends AnyFunSuite {
     assert(got.values.map(_._1).max == scale && got.values.map(_._2).max == scale)
     assert(got.values.toSet.size > 1)
     // deep run with a reliable checkpoint dir: cadence path + no leaks
-    val dir = java.nio.file.Files.createTempDirectory("graft-hits-cp").toString
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val deep = Graph.hits(edges, "src", "dst", iters = 7,
-      checkpointDir = Some(dir), checkpointInterval = 3)
-    assert(deep.count() == nodes.size.toLong)
+    val deepCount = BarrierSpec.withCheckpointDir(spark) {
+      Graph.hits(edges, "src", "dst", iters = 7).count()
+    }
+    assert(deepCount == nodes.size.toLong)
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(leaked.isEmpty, s"hits leaked persisted frames: $leaked")
   }
@@ -1271,6 +1269,17 @@ class OpsSpec extends AnyFunSuite {
         r.getAs[Boolean]("resolved")).toMap
     assert(!few(0L), "200 hops cannot resolve in 3 doubling rounds")
     assert(few(195L), "5 hops must resolve within 2^3")
+  }
+
+  test("redirect chains: a src with two out-edges fails by name") {
+    import graft.ops.Graph
+    import spark.implicits._
+    // 7 → 8 and 7 → 9 break the one-out-edge contract; 3 → 4 → 5 is fine
+    val edges = Seq((3L, 4L), (4L, 5L), (7L, 8L), (7L, 9L)).toDF("src", "dst")
+    val err = intercept[IllegalArgumentException] {
+      Graph.resolveChains(edges, "src", "dst").collect()
+    }
+    assert(err.getMessage.contains("src 7 has more than one out-edge"), err.getMessage)
   }
 
   test("media decode: arbitrary payloads are error-as-row, never a crash") {

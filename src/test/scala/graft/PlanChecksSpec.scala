@@ -44,7 +44,7 @@ class PlanChecksSpec extends AnyFunSuite {
   }
 
   test("no accidental cartesian products in candidate-join ops") {
-    // (d6 is deliberately absent: its localCheckpoints truncate lineage,
+    // (d6 is deliberately absent: its barriers truncate lineage,
     // so its executedPlan no longer contains the candidate join — d3
     // pins the shared minhashPairs plan)
     Seq("d2_ngram_jaccard", "d3_minhash_lsh", "d4_simhash", "t4_fingerprint",
