@@ -5,28 +5,16 @@ import scala.concurrent.duration._
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 
-/** The one materialization barrier of the ops layer: every op that
-  * truncates an iteration's lineage or pins a multiply-read table goes
-  * through `Barrier(df)`, and every observed metric is read here.
-  *
-  * Reliable or local is a deployment setting, not an op parameter: with
-  * a checkpoint dir on the context (`SparkContext.setCheckpointDir`) a
-  * barrier writes a RELIABLE checkpoint, which survives a lost executor;
-  * without one it keeps executor-local blocks (`localCheckpoint`), and a
-  * lost executor or a dropped block fails the next read through the
-  * barrier with Spark's CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND error — a named
-  * failure, never a wrong answer (BarrierSpec).
-  *
-  * Observed metrics ride the barrier's own materializing action and reach
-  * the driver through the listener bus after that action has returned.
-  * The wait for them is bounded by [[MetricTimeout]]: a metric that never
-  * arrives ends in an IllegalStateException naming the barrier and the
-  * metric instead of a hang. */
+/** The ops layer's one materialization barrier. With a checkpoint dir on
+  * the context it is a RELIABLE checkpoint (survives a lost executor);
+  * without one it keeps executor-local blocks, whose loss fails the next
+  * read with Spark's CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND, never a wrong
+  * answer. An observed metric that never arrives fails by name after
+  * [[MetricTimeout]] instead of hanging. */
 object Barrier {
 
-  /** Bound on the wait for an observed metric. The wait starts after the
-    * action that fires the metric has finished, so it only covers
-    * listener-bus delivery, which normally takes milliseconds. */
+  /** The wait starts after the firing action has returned, so it only
+    * covers listener-bus delivery (normally milliseconds). */
   val MetricTimeout: FiniteDuration = 30.seconds
 
   def apply(df: DataFrame): DataFrame =
@@ -34,24 +22,20 @@ object Barrier {
     else df.localCheckpoint()
 
   /** `df` with `metrics` attached, and a reader that returns them (one
-    * column each, in order) once an action has run the frame. */
+    * column each) once an action has run the frame. */
   def observe(df: DataFrame, barrier: String, metrics: Column*): (DataFrame, () => Row) = {
     val obs = Observation()
-    val read = () =>
-      try Await.result(obs.future, MetricTimeout)
-      catch {
-        case _: java.util.concurrent.TimeoutException =>
-          throw new IllegalStateException(
-            s"barrier '$barrier': observed metric ${metrics.mkString(", ")} " +
-              s"did not arrive within $MetricTimeout")
-      }
+    val read = () => try Await.result(obs.future, MetricTimeout) catch {
+      case _: java.util.concurrent.TimeoutException => throw new IllegalStateException(
+        s"barrier '$barrier': observed metric ${metrics.mkString(", ")} " +
+          s"did not arrive within $MetricTimeout")
+    }
     (df.observe(obs, metrics.head, metrics.tail: _*), read)
   }
 
   /** `Barrier(df)` with `metrics` computed by the same action. */
   def observed(df: DataFrame, barrier: String, metrics: Column*): (DataFrame, Row) = {
     val (watched, read) = observe(df, barrier, metrics: _*)
-    val out = apply(watched)
-    (out, read())
+    (apply(watched), read()) // left to right: the barrier's action fires the metrics
   }
 }

@@ -421,28 +421,19 @@ object Dedup {
   def connectedComponents(pairs: DataFrame, aCol: String = "id_a",
                           bCol: String = "id_b", maxRounds: Int = 50): DataFrame = {
     // convergence sums ride each round's barrier job as OBSERVED
-    // metrics (r6): the eager barrier already executes the round, so a
-    // separate aggregate action per round was one redundant job each —
-    // observe() folds it into the same pass (observed metrics fire on
-    // the barrier's materializing action; OpsSpec's reliable-checkpoint
-    // equivalence test covers that path too).
-    // Decimal accumulator as before: 10^12 ids cannot overflow.
-    def labelSum(df: DataFrame, round: Int): (DataFrame, java.math.BigDecimal) = {
-      val (out, m) = Barrier.observed(df, s"connectedComponents round $round",
-        sum(col("component").cast("decimal(38,0)")))
-      (out, if (m.isNullAt(0)) java.math.BigDecimal.ZERO else m.getDecimal(0))
-    }
+    // metrics (no aggregate action per round); a decimal accumulator,
+    // so 10^12 ids cannot overflow
+    val labelSum = coalesce(sum(col("component").cast("decimal(38,0)")), lit(0))
     val sym = pairs
       .select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
       .union(pairs.select(col(bCol).cast("long").as("src"), col(aCol).cast("long").as("dst")))
-    // the edge count rides the edges barrier the same way (the old
-    // `edges.isEmpty` was one more action)
+    // the edge count rides the edges barrier the same way
     val (edges, nEdges) = Barrier.observed(sym
       .union(sym.select(col("src"), col("src").as("dst"))) // self-loops
       .distinct(), "connectedComponents edges", count(lit(1)))
-    var (labels, prevSum) = labelSum(
-      edges.select(col("src").as("id")).distinct()
-        .withColumn("component", col("id")), 0)
+    var (labels, m0) = Barrier.observed(edges.select(col("src").as("id")).distinct()
+      .withColumn("component", col("id")), "connectedComponents round 0", labelSum)
+    var prevSum = m0.getDecimal(0)
     var done = nEdges.getLong(0) == 0L
     var round = 0
     // maxRounds bounds PROPAGATION rounds (≥ the largest component's
@@ -450,9 +441,11 @@ object Dedup {
     // observes an unchanged label sum, hence `<= maxRounds`: a graph
     // whose diameter equals maxRounds exactly must be accepted
     while (!done && round <= maxRounds) {
-      val (next, nextSum) = labelSum(edges
+      val (next, m) = Barrier.observed(edges
         .join(labels.select(col("id").as("dst"), col("component").as("dst_comp")), "dst")
-        .groupBy(col("src").as("id")).agg(min("dst_comp").as("component")), round + 1)
+        .groupBy(col("src").as("id")).agg(min("dst_comp").as("component")),
+        s"connectedComponents round ${round + 1}", labelSum)
+      val nextSum = m.getDecimal(0)
       done = nextSum.compareTo(prevSum) == 0
       prevSum = nextSum
       labels.unpersist()

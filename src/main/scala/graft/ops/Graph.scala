@@ -1,14 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Link-graph analytics over crawl-derived edges (outlink extraction →
   * host graph → rank). */
 object Graph {
-
-  /** pageRank's lineage-truncation cadence (rounds per [[Barrier]]). */
-  val RoundsPerBarrier = 5
 
   /** INTEGER-EXACT PageRank, damping 0.85, `iters` rounds.
     *
@@ -31,7 +28,7 @@ object Graph {
     * deterministic tie-break for which nodes get the extra units).
     *
     * Iteration hygiene mirrors [[Dedup.connectedComponents]] (VERDICT
-    * r4 #4): a [[Barrier]] every [[RoundsPerBarrier]] rounds truncates
+    * r4 #4): a [[Barrier]] every 5 rounds truncates
     * the lineage (reliable when the context has a checkpoint dir), the
     * result passes one more barrier at exit so the loop-invariant
     * frames can be unpersisted immediately, and nothing cached leaks
@@ -92,12 +89,12 @@ object Graph {
             col("rank") + expr(s"(85 * dmass__) div (100 * ${n}L)"))
           .drop("dmass__")
       }
-      // lineage truncation: every RoundsPerBarrier rounds — and every
+      // lineage truncation: every 5 rounds — and every
       // round when redistributing, because the lazy dangling aggregate
       // references `ranks` a second time and an unbroken chain would
       // double the plan per round (same discipline as
       // connectedComponents: materialize, then drop the previous cp)
-      val mustCp = (dangling.isDefined || i % RoundsPerBarrier == 0) && i < iters
+      val mustCp = (dangling.isDefined || i % 5 == 0) && i < iters
       ranks = if (mustCp) {
         val nxt = Barrier(next)
         prevCp.foreach(_.unpersist())
@@ -120,9 +117,7 @@ object Graph {
     * given a redirect map (src → dst, AT MOST ONE out-edge per src),
     * return for every node (any id appearing as src or dst) its
     * terminal target and exact hop count. A src with two out-edges
-    * would multiply pointer rows at every composition, so it fails
-    * with an IllegalArgumentException naming the smallest such id; the
-    * check rides the first round's barrier (an unchanged job count).
+    * (it would multiply pointer rows every round) fails by name.
     *
     * Why doubling: a naive chase resolves a length-L chain in L
     * join rounds; composing the pointer table with ITSELF
@@ -151,37 +146,26 @@ object Graph {
   def resolveChains(edges: DataFrame, srcCol: String = "src",
                     dstCol: String = "dst", maxRounds: Int = 40): DataFrame = {
     require(maxRounds >= 1 && maxRounds <= 62, "2^maxRounds must fit a long")
-    // hop sums ride each round's barrier job as OBSERVED metrics (r6,
-    // the connectedComponents discipline): the eager barrier already
-    // executes the round, so a separate aggregate action per round was
-    // one redundant job each
-    val hopSum = sum(col("hops").cast("decimal(38,0)"))
-    def decimal(m: Row, i: Int): java.math.BigDecimal =
-      if (m.isNullAt(i)) java.math.BigDecimal.ZERO else m.getDecimal(i)
+    // hop sums ride each round's barrier job as OBSERVED metrics (the
+    // connectedComponents discipline: no aggregate action per round)
+    val hopSum = coalesce(sum(col("hops").cast("decimal(38,0)")), lit(0))
     val e = Barrier(edges.select(col(srcCol).cast("long").as("id"),
       col(dstCol).cast("long").as("nxt")))
-    val (counted, nodeCount) = Barrier.observe(
+    val (nodes, nodeCount) = Barrier.observe(
       e.select(col("id")).union(e.select(col("nxt").as("id"))).distinct(),
       "resolveChains nodes", count(lit(1)))
-    // the second distinct costs no exchange (its input is partitioned by
-    // id already); it restores the key uniqueness an observed frame
-    // hides from the planner, whose f₀ size estimate would otherwise
-    // turn every later round's broadcast join into a shuffle join
-    val nodes = counted.distinct()
-    // f₀: redirecting nodes point one hop ahead, terminals at self. It
-    // has one row per node iff every src has one out-edge; both counts
-    // come from f₀'s own barrier job.
-    var (f, m0) = Barrier.observed(nodes.join(e, Seq("id"), "left_outer")
+    // f₀: redirecting nodes point one hop ahead, terminals at self; one
+    // row per node iff no src has two out-edges. The second distinct (no
+    // exchange) restores the key uniqueness the observed frame hides from
+    // f₀'s size estimate, which sets every later round's join strategy.
+    var (f, m0) = Barrier.observed(nodes.distinct().join(e, Seq("id"), "left_outer")
       .select(col("id"), coalesce(col("nxt"), col("id")).as("ptr"),
         when(col("nxt").isNull, 0L).otherwise(1L).as("hops")),
       "resolveChains round 0", hopSum, count(lit(1)))
-    if (m0.getLong(1) != nodeCount().getLong(0)) {
-      val dup = e.groupBy("id").count().filter(col("count") > 1).agg(min("id")).head().getLong(0)
-      throw new IllegalArgumentException(
-        s"resolveChains: src $dup has more than one out-edge " +
-          "(the redirect map must hold at most one per src)")
-    }
-    var prevSum = decimal(m0, 0)
+    require(m0.getLong(1) == nodeCount().getLong(0), "resolveChains: src " +
+      e.groupBy("id").count().filter(col("count") > 1).agg(min("id")).head().getLong(0) +
+      " has more than one out-edge (the redirect map allows one per src)")
+    var prevSum = m0.getDecimal(0)
     var done = prevSum.signum == 0 // no redirects at all
     var round = 0
     while (!done && round < maxRounds) {
@@ -192,7 +176,7 @@ object Graph {
         .select(col("id"), col("ptr2").as("ptr"),
           (col("hops") + col("hops2")).as("hops")),
         s"resolveChains round ${round + 1}", hopSum)
-      val nextSum = decimal(m, 0)
+      val nextSum = m.getDecimal(0)
       done = nextSum.compareTo(prevSum) == 0
       prevSum = nextSum
       f.unpersist()
@@ -244,11 +228,8 @@ object Graph {
       .union(e.select(col("dst").as("host"))).distinct().persist()
     require(!e.isEmpty, "hits: empty graph")
     // one job per half-step: the raw frame passes a BARRIER with its
-    // max riding the same materializing action as an OBSERVED metric
-    // (r6 — the connectedComponents/resolveChains discipline; the old
-    // persist+agg pair cost the same job but left the full round
-    // chain in every later half-step's plan, growing planning time
-    // per step); all frames release on exit.
+    // max as an OBSERVED metric of the same action, so no later
+    // half-step plans over the round chain; all frames release on exit
     val loopFrames = scala.collection.mutable.ArrayBuffer[DataFrame]()
     def rescale(full: DataFrame, c: String): DataFrame = {
       val (f, m) = Barrier.observed(full, s"hits $c rescale", max(col(c)))
