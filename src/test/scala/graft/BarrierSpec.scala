@@ -82,7 +82,7 @@ class BarrierSpec extends AnyFunSuite {
     def files(d: java.io.File): Seq[java.io.File] =
       d.listFiles().toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
     val offenders = for {
-      f <- files(root) if f.getName.endsWith(".scala") && f.getName != "Barrier.scala"
+      f <- files(root) if f.getName.endsWith(".scala") && !f.getPath.endsWith("graft/ops/Barrier.scala")
       src = scala.io.Source.fromFile(f, "UTF-8")
       (line, i) <- try src.getLines().toList.zipWithIndex finally src.close()
       b <- banned if line.contains(b)

@@ -470,7 +470,7 @@ class OpsSpec extends AnyFunSuite {
     // the max node of each score lands exactly on scale; ranks differ
     assert(got.values.map(_._1).max == scale && got.values.map(_._2).max == scale)
     assert(got.values.toSet.size > 1)
-    // deep run with a reliable checkpoint dir: cadence path + no leaks
+    // deep run with a reliable checkpoint dir: 14 half-step barriers + no leaks
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val deepCount = BarrierSpec.withCheckpointDir(spark) {
       Graph.hits(edges, "src", "dst", iters = 7).count()
