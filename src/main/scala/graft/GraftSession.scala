@@ -27,6 +27,19 @@ object GraftSession {
     v
   }
 
+  /** `foldableArg` coerced to Int: any integer literal in Int range.
+    * Fractional (3.7) or out-of-Int-range values error, never silently
+    * truncate/wrap; `name` is the slot's name in the message. */
+  private def intArg(fn: String, pos: Int, name: String, e: Expression): Int =
+    foldableArg(fn, pos, e) match {
+      case n: java.lang.Byte => n.intValue()
+      case n: java.lang.Short => n.intValue()
+      case n: java.lang.Integer => n.intValue()
+      case n: java.lang.Long if n.longValue == n.intValue.toLong => n.intValue()
+      case other => throw new IllegalArgumentException(
+        s"$fn: $name must be an Int-range integer literal, got $other")
+    }
+
   /** Name → expression builder for every graft function — the single
     * source of truth shared by `register` (temp functions) and
     * `GraftExtensions` (spark.sql.extensions), so the two registration
@@ -76,14 +89,7 @@ object GraftSession {
     // positional k-token window hashes (exact-substring dedup): k is a
     // plan-time literal, coerced like graft_topk's k
     "graft_token_windows" -> { exprs =>
-      val k = foldableArg("graft_token_windows", 1, exprs(1)) match {
-        case n: java.lang.Byte => n.intValue()
-        case n: java.lang.Short => n.intValue()
-        case n: java.lang.Integer => n.intValue()
-        case n: java.lang.Long if n.longValue == n.intValue.toLong => n.intValue()
-        case other => throw new IllegalArgumentException(
-          s"graft_token_windows: k must be an Int-range integer literal, got $other")
-      }
+      val k = intArg("graft_token_windows", 1, "k", exprs(1))
       if (k < 1)
         throw new IllegalArgumentException(
           s"graft_token_windows: k must be >= 1, got $k")
@@ -95,16 +101,7 @@ object GraftSession {
     // plan-time literal k; the analyzer wraps the returned
     // AggregateFunction like any built-in aggregate
     "graft_topk" -> { exprs =>
-      val k = foldableArg("graft_topk", 2, exprs(2)) match {
-        case n: java.lang.Byte => n.intValue()
-        case n: java.lang.Short => n.intValue()
-        case n: java.lang.Integer => n.intValue()
-        case n: java.lang.Long if n.longValue == n.intValue.toLong => n.intValue()
-        // fractional (3.7) or out-of-int-range k must error, never
-        // silently truncate/wrap
-        case other => throw new IllegalArgumentException(
-          s"graft_topk: k must be an Int-range integer literal, got $other")
-      }
+      val k = intArg("graft_topk", 2, "k", exprs(2))
       if (k < 0)
         throw new IllegalArgumentException(s"graft_topk: k must be >= 0, got $k")
       // analysis-time coercion: a float score / int id column casts
@@ -116,14 +113,7 @@ object GraftSession {
     // bounded id-set aggregate (single-pass df-cap for inverted-index
     // pair generation): 2nd arg is the plan-time literal cap
     "graft_capped_ids" -> { exprs =>
-      val cap = foldableArg("graft_capped_ids", 1, exprs(1)) match {
-        case n: java.lang.Byte => n.intValue()
-        case n: java.lang.Short => n.intValue()
-        case n: java.lang.Integer => n.intValue()
-        case n: java.lang.Long if n.longValue == n.intValue.toLong => n.intValue()
-        case other => throw new IllegalArgumentException(
-          s"graft_capped_ids: cap must be an Int-range integer literal, got $other")
-      }
+      val cap = intArg("graft_capped_ids", 1, "cap", exprs(1))
       if (cap < 1)
         throw new IllegalArgumentException(
           s"graft_capped_ids: cap must be >= 1, got $cap")
@@ -133,14 +123,7 @@ object GraftSession {
     // HyperLogLog register aggregate (scale-safe distinct sketch):
     // 2nd arg is the plan-time literal precision p
     "graft_hll" -> { exprs =>
-      val p = foldableArg("graft_hll", 1, exprs(1)) match {
-        case n: java.lang.Byte => n.intValue()
-        case n: java.lang.Short => n.intValue()
-        case n: java.lang.Integer => n.intValue()
-        case n: java.lang.Long if n.longValue == n.intValue.toLong => n.intValue()
-        case other => throw new IllegalArgumentException(
-          s"graft_hll: p must be an Int-range integer literal, got $other")
-      }
+      val p = intArg("graft_hll", 1, "p", exprs(1))
       graft.expr.HllAgg(
         Cast(exprs.head, org.apache.spark.sql.types.LongType), p)
     })

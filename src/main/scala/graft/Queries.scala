@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -18,6 +18,17 @@ object Queries {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
+
+  /** The x6 template over a documents row: nav + `Title <doc_id>`
+    * heading + `<p>text</p>` body + link-dense footer. x6, x8, x9, x11,
+    * x12 and x13 all build their HTML here. */
+  private def x6Html: Column = concat(
+    lit("<html><head><title>t</title></head><body>" +
+      "<nav><a href=\"/\">Home</a> <a href=\"/a\">About</a></nav><h1>Title "),
+    col("doc_id"),
+    lit("</h1><p>"), col("text"),
+    lit("</p><footer>Copyright <a href=\"#\">here</a> <a href=\"#\">there</a></footer>" +
+      "</body></html>"))
 
   // ----- extraction queries (non-SQL-expressible → golden scalatests) -----
 
@@ -84,16 +95,9 @@ object Queries {
     // DuckDB-oracle-attested.
     "x6_extract_roundtrip" -> ((s, dir) => {
       GraftSession.register(s)
-      val html = concat(
-        lit("<html><head><title>t</title></head><body>" +
-          "<nav><a href=\"/\">Home</a> <a href=\"/a\">About</a></nav><h1>Title "),
-        col("doc_id"),
-        lit("</h1><p>"), col("text"),
-        lit("</p><footer>Copyright <a href=\"#\">here</a> <a href=\"#\">there</a></footer>" +
-          "</body></html>"))
       t(s, dir, "documents")
         .select(col("doc_id"),
-          call_function("graft_extract", encode(html, "UTF-8"), col("lang")).as("r"))
+          call_function("graft_extract", encode(x6Html, "UTF-8"), col("lang")).as("r"))
         .select(col("doc_id"), col("r.text").as("text"),
           size(col("r.spans")).as("n_spans"), col("r.error").as("error"))
         .orderBy("doc_id")
@@ -125,16 +129,9 @@ object Queries {
     // golden-attested (x2 covers generated pages rows-only)
     "x9_spans_roundtrip" -> ((s, dir) => {
       GraftSession.register(s)
-      val html = concat(
-        lit("<html><head><title>t</title></head><body>" +
-          "<nav><a href=\"/\">Home</a> <a href=\"/a\">About</a></nav><h1>Title "),
-        col("doc_id"),
-        lit("</h1><p>"), col("text"),
-        lit("</p><footer>Copyright <a href=\"#\">here</a> <a href=\"#\">there</a></footer>" +
-          "</body></html>"))
       t(s, dir, "documents")
         .select(col("doc_id"),
-          call_function("graft_extract", encode(html, "UTF-8"), col("lang")).as("r"))
+          call_function("graft_extract", encode(x6Html, "UTF-8"), col("lang")).as("r"))
         .select(col("doc_id"), posexplode(col("r.spans")).as(Seq("span_idx", "span")))
         .select(col("doc_id"), col("span_idx"),
           col("span.start").as("start"), col("span.end").as("end"),
@@ -148,16 +145,9 @@ object Queries {
     // alt-only — both branches of the dual path are driver-attested.
     "x8_dual_engine" -> ((s, dir) => {
       GraftSession.register(s)
-      val html = concat(
-        lit("<html><head><title>t</title></head><body>" +
-          "<nav><a href=\"/\">Home</a> <a href=\"/a\">About</a></nav><h1>Title "),
-        col("doc_id"),
-        lit("</h1><p>"), col("text"),
-        lit("</p><footer>Copyright <a href=\"#\">here</a> <a href=\"#\">there</a></footer>" +
-          "</body></html>"))
       t(s, dir, "documents")
         .select(col("doc_id"),
-          call_function("graft_extract", encode(html, "UTF-8"), col("lang"),
+          call_function("graft_extract", encode(x6Html, "UTF-8"), col("lang"),
             lit("both")).as("r"))
         .select(col("doc_id"), col("r.text").as("text"),
           size(col("r.spans")).as("n_spans"), col("r.error").as("error"))
@@ -172,15 +162,8 @@ object Queries {
     // reaches the 15-word content floor
     "x11_blocks_roundtrip" -> ((s, dir) => {
       GraftSession.register(s)
-      val html = concat(
-        lit("<html><head><title>t</title></head><body>" +
-          "<nav><a href=\"/\">Home</a> <a href=\"/a\">About</a></nav><h1>Title "),
-        col("doc_id"),
-        lit("</h1><p>"), col("text"),
-        lit("</p><footer>Copyright <a href=\"#\">here</a> <a href=\"#\">there</a></footer>" +
-          "</body></html>"))
       t(s, dir, "documents")
-        .withColumn("payload", encode(html, "UTF-8"))
+        .withColumn("payload", encode(x6Html, "UTF-8"))
         .select(col("doc_id"), expr("graft_explode_blocks(payload)"))
         .orderBy("doc_id", "block_idx")
     }),
@@ -221,16 +204,9 @@ object Queries {
     // the oracle predicts every (doc, idx, href) row
     "x13_outlinks" -> ((s, dir) => {
       GraftSession.register(s)
-      val html = concat(
-        lit("<html><head><title>t</title></head><body>" +
-          "<nav><a href=\"/\">Home</a> <a href=\"/a\">About</a></nav><h1>Title "),
-        col("doc_id"),
-        lit("</h1><p>"), col("text"),
-        lit("</p><footer>Copyright <a href=\"#\">here</a> <a href=\"#\">there</a></footer>" +
-          "</body></html>"))
       t(s, dir, "documents")
         .select(col("doc_id"),
-          posexplode(call_function("graft_outlinks", html)).as(Seq("link_idx", "href")))
+          posexplode(call_function("graft_outlinks", x6Html)).as(Seq("link_idx", "href")))
         .orderBy("doc_id", "link_idx")
     }),
     // head-metadata extraction: title / meta-description /
@@ -283,19 +259,12 @@ object Queries {
           docsFile.lastModified()))
       val stage = new java.io.File(s"/tmp/graft-warc-$key")
       if (!new java.io.File(stage, "_SUCCESS").exists()) {
-        val html = concat(
-          lit("<html><head><title>t</title></head><body>" +
-            "<nav><a href=\"/\">Home</a> <a href=\"/a\">About</a></nav><h1>Title "),
-          col("doc_id"),
-          lit("</h1><p>"), col("text"),
-          lit("</p><footer>Copyright <a href=\"#\">here</a> <a href=\"#\">there</a></footer>" +
-            "</body></html>"))
         // Hadoop-FS staging (file: URI on local[N], shared FS on a
         // cluster): attempt-unique tmp, rename-or-fail, _SUCCESS only
         // after all shards verified — Warc.stageShards
         graft.warc.Warc.stageShards(
           t(s, dir, "documents")
-            .select(col("doc_id"), encode(html, "UTF-8").as("html"), col("lang")),
+            .select(col("doc_id"), encode(x6Html, "UTF-8").as("html"), col("lang")),
           stage.toURI.toString, nShards = 8,
           urlPrefix = "http://example.com/doc/", isoTs = "2024-01-01T00:00:00Z")
       }

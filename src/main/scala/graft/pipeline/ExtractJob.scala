@@ -2,14 +2,13 @@ package graft.pipeline
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.GraftSession
 import graft.tables.IceTable
 
 /** The flagship end-to-end job: synthesize/scan pages →
-  * preprocess/region-extract/recognize (graft_extract) → bucket → one
-  * exchange by bucket → IceTable commit with per-bucket lineage
+  * preprocess/region-extract/recognize (graft_extract) → bucket →
+  * IceTable commit (one exchange by bucket, per-bucket lineage)
   * (SURVEY.md §3.1 Spark shape).
   *
   * At cluster scale the same plan holds: `pages` becomes an Iceberg
@@ -44,21 +43,10 @@ object ExtractJob {
       abortAfterGroup: Int = -1): Result = {
     GraftSession.register(spark)
     val pages = ExtractPipeline.pages(spark, nDocs).toDF()
-    // ONE exchange, before the persist: the staged rows are already
-    // hash-distributed by bucket, so every group write is a filtered
-    // scan of the cache with no exchange of its own (distribution
-    // "none" below) and still writes one file per bucket. No salt: the
-    // key is the unique url, so a hot host cannot skew a bucket.
-    // IceTable reads its input twice (lineage aggregate, then the group
-    // writes), so extraction is persisted to run once. Serialized
-    // storage, measured at 480k docs / 4 groups / 32 cores (medians):
-    // serialized 12.6 s, deserialized 16.5 s, no persist (recompute
-    // per group) 25.0 s — deserialized rows blow the young gen,
-    // recompute pays 4× generation+extract.
-    val staged = ExtractPipeline.extracted(pages)
+    // IceTable.commit exchanges by bucket once and persists. No salt:
+    // the key is the unique url, so a hot host cannot skew a bucket.
+    val bucketed = ExtractPipeline.extracted(pages)
       .withColumn("bucket", ExtractPipeline.bucketOf(buckets))
-      .repartition(col("bucket"))
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
     val table = new IceTable(root, spark)
     val metrics = new JobMetrics(spark, s"extract-$commitId")
     metrics.logEvent(root, s"job_start docs=$nDocs buckets=$buckets groups=$groups")
@@ -68,16 +56,13 @@ object ExtractJob {
     spark.sparkContext.setJobGroup(jobGroup(commitId),
       s"graft commit $commitId", interruptOnCancel = true)
     val snap =
-      try table.commit(staged, commitId, groups, abortAfterGroup, distribution = "none")
+      try table.commit(bucketed, commitId, groups, abortAfterGroup)
       catch {
         case e: Throwable =>
           metrics.logEvent(root, s"job_failed error=${e.getClass.getSimpleName}")
           metrics.close()
           throw e
-      } finally {
-        spark.sparkContext.clearJobGroup()
-        staged.unpersist()
-      }
+      } finally spark.sparkContext.clearJobGroup()
     val lin = table.lineage(Some(snap))
       .agg(sum("rows"), sum("error_rows"), sum("oversize_docs")).collect()(0)
     metrics.rowsProcessed.add(lin.getLong(0))

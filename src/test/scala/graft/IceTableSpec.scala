@@ -112,6 +112,19 @@ class IceTableSpec extends AnyFunSuite {
     assert(assertLineageGuard(table, snap) == ((2L, 2L, 1L)))
   }
 
+  test("commit evaluates its input once: the lineage pass fills the group writes' cache") {
+    import org.apache.spark.sql.functions._
+    val table = new IceTable(tmpRoot("once"), spark)
+    val evals = spark.sparkContext.longAccumulator("commit-input-evals")
+    val text = udf { (id: Long) => evals.add(1L); s"row $id" }
+    val df = spark.range(0, 2000, 1, 8).select(col("id"),
+      pmod(col("id"), lit(16)).cast("int").as("bucket"),
+      text(col("id")).as("text"), lit(null).cast("string").as("error"))
+    val snap = table.commit(df, "once", groups = 4)
+    assert(table.read(Some(snap)).count() == 2000L)
+    assert(evals.value == 2000L, s"${evals.value} text evaluations for 2000 rows")
+  }
+
   test("bucket predicate prunes data files at the scan (the 100×-scale read path)") {
     import org.apache.spark.sql.functions.{col, input_file_name}
     val root = tmpRoot("prune")
