@@ -1,15 +1,14 @@
 package graft.pipeline
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 import graft.GraftSession
 import graft.tables.IceTable
 
 /** The flagship end-to-end job: synthesize/scan pages →
   * preprocess/region-extract/recognize (graft_extract) → bucket →
-  * IceTable commit (one exchange by bucket, per-bucket lineage)
-  * (SURVEY.md §3.1 Spark shape).
+  * IceTable commit (one exchange by bucket, per-bucket lineage kept in
+  * the manifest; SURVEY.md §3.1 Spark shape).
   *
   * At cluster scale the same plan holds: `pages` becomes an Iceberg
   * scan instead of a generator, everything else is unchanged — no
@@ -63,13 +62,14 @@ object ExtractJob {
           metrics.close()
           throw e
       } finally spark.sparkContext.clearJobGroup()
-    val lin = table.lineage(Some(snap))
-      .agg(sum("rows"), sum("error_rows"), sum("oversize_docs")).collect()(0)
-    metrics.rowsProcessed.add(lin.getLong(0))
-    metrics.errorRows.add(lin.getLong(1))
-    metrics.oversizeDocs.add(lin.getLong(2))
+    // the counts come from the committed manifest: no Spark job
+    val lineage = table.readSnapshot(snap).lineage
+    def total(c: String): Long = IceTable.lineageSum(lineage, c)
+    metrics.rowsProcessed.add(total("rows"))
+    metrics.errorRows.add(total("error_rows"))
+    metrics.oversizeDocs.add(total("oversize_docs"))
     metrics.logEvent(root, s"commit_complete snapshot=$snap")
     metrics.close()
-    Result(snap, lin.getLong(0), lin.getLong(1))
+    Result(snap, total("rows"), total("error_rows"))
   }
 }

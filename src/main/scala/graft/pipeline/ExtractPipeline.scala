@@ -5,15 +5,6 @@ import org.apache.spark.sql.functions._
 
 import graft.gen.{PageGen, PageRow}
 
-/** Typed output row (FIXTURES.md §2 schema). */
-final case class SpanRow(start: Int, end: Int, kind: String)
-final case class ExtractedRow(
-    url: String,
-    text: String,
-    spans: Seq[SpanRow],
-    lang: String,
-    error: String)
-
 /** preprocess → region-extract → recognize → export as declarative
   * Dataset stages (SURVEY.md §7.3). The per-page loop of the reference
   * (main_window.py:347-385) is per-row expression evaluation inside
@@ -75,14 +66,6 @@ object ExtractPipeline {
       .select(col("url"), col("warc_ts"),
         col("r.text").as("text"), col("r.spans").as("spans"), col("lang"),
         coalesce(col("error"), col("r.error")).as("error"))
-  }
-
-  /** Typed view of the extraction stage — compile-time field checks
-    * for downstream stages (north star: "typed Dataset pipeline");
-    * same plan as `extracted` (the encoder maps the identical schema). */
-  def extractedTyped(pages: DataFrame): Dataset[ExtractedRow] = {
-    import pages.sparkSession.implicits._
-    extracted(pages).as[ExtractedRow]
   }
 
   /** bucket = pmod(xxhash64(url), B) — the export stage's layout key;

@@ -20,10 +20,10 @@ import scala.collection.mutable.ArrayBuffer
   * Layout:
   * {{{
   *   root/data/commit-<id>/grp=G/bucket=B/part-*.parquet
-  *   root/metadata/snap-<n>.json           — file list + lineage + metrics
+  *   root/metadata/snap-<n>.json           — file list + lineage rows + metrics
   *   root/metadata/version-hint.text       — latest snapshot number
-  *   root/metadata/progress/<id>/group-G.done — resume checkpoint markers
-  *   root/metadata/lineage/<id>/           — per-bucket lineage parquet
+  *   root/metadata/progress/<id>/group-G.done — resume checkpoint marker
+  *                                            carrying group G's lineage rows
   * }}}
   *
   * Commit protocol: data files land under a commit-unique directory
@@ -42,7 +42,7 @@ final class IceTable(val root: String, spark: SparkSession) {
   private def snapPath(n: Long) = new Path(metaDir, s"snap-$n.json")
   private def hintPath = new Path(metaDir, "version-hint.text")
 
-  import IceTable.{DataFileEntry, Snapshot}
+  import IceTable.{DataFileEntry, LineageCols, Snapshot, lineageSum}
 
   // ---- snapshot log ---------------------------------------------------
 
@@ -58,11 +58,7 @@ final class IceTable(val root: String, spark: SparkSession) {
       }.sorted
   }
 
-  def readSnapshot(n: Long): Snapshot = {
-    val in = fs.open(snapPath(n))
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    parseSnapshot(txt)
-  }
+  def readSnapshot(n: Long): Snapshot = parseSnapshot(readUtf8(snapPath(n)))
 
   /** Read the table at a snapshot (time travel) or latest. Each
     * snapshot records the schema it was committed with (schema
@@ -139,8 +135,7 @@ final class IceTable(val root: String, spark: SparkSession) {
     // re-reference the target's lineage too: lineage(asOf=new) must
     // describe the data the new snapshot actually reads
     flipSnapshot(s"rollback-to-$toSnapshot", target.files, target.rows,
-      target.schemaFields.getOrElse(Nil), parent,
-      lineageOverride = Some(target.lineagePath))
+      target.schemaFields.getOrElse(Nil), parent, target.lineage)
   }
 
   private def assemble(snap: Snapshot, files: Seq[DataFileEntry]): DataFrame = {
@@ -178,9 +173,13 @@ final class IceTable(val root: String, spark: SparkSession) {
   def schemaOf(snapshotId: Long): Option[Seq[String]] =
     readSnapshot(snapshotId).schemaFields
 
-  /** Per-bucket lineage + metrics rows of a snapshot. */
+  /** Per-bucket lineage + metrics rows of a snapshot, built from its
+    * manifest (a local relation: collecting it runs no Spark job). */
   def lineage(asOf: Option[Long] = None): DataFrame =
-    spark.read.parquet(readSnapshot(resolve(asOf)).lineagePath)
+    spark.createDataFrame(readSnapshot(resolve(asOf)).lineage.map {
+      case Seq(bucket, rows, err, empty, oversize, chars, ms, grp) =>
+        (bucket.toInt, rows, err, empty, oversize, chars, ms, grp.toInt)
+    }).toDF(LineageCols: _*)
 
   /** `asOf`, else the latest snapshot; fails if the table has none. */
   private def resolve(asOf: Option[Long]): Long =
@@ -196,10 +195,11 @@ final class IceTable(val root: String, spark: SparkSession) {
     * aggregated once over it (the action that fills the cache). Each
     * group is then one Spark job writing `data/commit-<id>/grp=G/`
     * partitioned by bucket — a filtered scan of the cache, one file per
-    * bucket — plus that group's lineage rows, plus a `.done` marker.
-    * A re-run with the same `commitId` skips finished groups —
-    * "resumable from checkpoint after any executor loss" (north rule).
-    * The snapshot flips only after every group landed.
+    * bucket — followed by a `.done` marker that carries the group's
+    * lineage rows. A re-run with the same `commitId` skips finished
+    * groups — "resumable from checkpoint after any executor loss"
+    * (north rule). The snapshot flips only after every group landed,
+    * and its manifest carries every group's lineage rows.
     */
   def commit(df: DataFrame, commitId: String, groups: Int = 8,
              abortAfterGroup: Int = -1,
@@ -218,12 +218,12 @@ final class IceTable(val root: String, spark: SparkSession) {
     // rows blow the young gen, recompute pays 4× generation+extract.
     val staged = df.repartition(col("bucket")).persist(StorageLevel.MEMORY_AND_DISK_SER)
     try {
-      val (files, rows) = writeGroups(staged, commitId, groups, abortAfterGroup)
+      val (files, lineage) = writeGroups(staged, commitId, groups, abortAfterGroup)
       // an overwrite manifest is parent-independent, so the freshest
       // parent read is correct; a racing flip still collides on the
       // snapshot id and raises ConcurrentCommitException
-      flipSnapshot(commitId, withStats(files, statsCol), rows, df.columns.toSeq,
-        currentSnapshotId.getOrElse(-1L))
+      flipSnapshot(commitId, withStats(files, statsCol), lineageSum(lineage, "rows"),
+        df.columns.toSeq, currentSnapshotId.getOrElse(-1L), lineage)
     } finally staged.unpersist()
   }
 
@@ -254,9 +254,9 @@ final class IceTable(val root: String, spark: SparkSession) {
     // per-file stats pruning readRange depends on. Small-file growth is
     // the compact() job's concern (Iceberg's same split of duties).
     requireBucket(df)
-    val (files, rows) = writeGroups(df, commitId, groups, -1)
+    val (files, lineage) = writeGroups(df, commitId, groups, -1)
     val mergedRows = parent.map(_.rows).getOrElse(0L) +
-      (if (parentHadThis) 0L else rows)
+      (if (parentHadThis) 0L else lineageSum(lineage, "rows"))
     // CAS against the parent this manifest was BUILT from: a racing
     // commit that landed after our parent read must make THIS flip
     // fail (the merged file list would silently drop its files if we
@@ -264,18 +264,22 @@ final class IceTable(val root: String, spark: SparkSession) {
     // the new parent. Parent files keep the stats they already carry;
     // only THIS commit's fresh files are scanned for theirs.
     flipSnapshot(commitId, (parentFiles ++ withStats(files, statsCol)).sortBy(_.path),
-      mergedRows, df.columns.toSeq, parentId.getOrElse(-1L))
+      mergedRows, df.columns.toSeq, parentId.getOrElse(-1L), lineage)
   }
 
   private def requireBucket(df: DataFrame): Unit =
     require(df.columns.contains("bucket"), "df must carry a bucket column")
 
-  /** Lineage aggregate, then the group writes, of `df` in its own layout. */
+  /** Lineage aggregate, then the group writes, of `df` in its own
+    * layout. Returns the data files and every group's lineage rows,
+    * read from the markers: a group finished by an earlier run keeps
+    * the lineage of the data it wrote. */
   private def writeGroups(df: DataFrame, commitId: String, groups: Int,
-                          abortAfterGroup: Int): (Seq[DataFileEntry], Long) = {
+                          abortAfterGroup: Int): (Seq[DataFileEntry], Seq[Seq[Long]]) = {
+    require(groups >= 1, s"groups must be >= 1, got $groups")
     val dataDir = new Path(root, s"data/commit-$commitId")
     val progressDir = new Path(metaDir, s"progress/$commitId")
-    val lineageDir = s"$root/metadata/lineage/$commitId"
+    def marker(g: Int) = new Path(progressDir, s"group-$g.done")
     fs.mkdirs(progressDir)
 
     val grouped = df.withColumn("grp", pmod(col("bucket"), lit(groups)))
@@ -299,9 +303,8 @@ final class IceTable(val root: String, spark: SparkSession) {
         sum(length(coalesce(col("text"), lit("")))).as("text_chars"))
     val lineageRows = lineage.collect()
 
-    def doGroup(g: Int): Unit = {
-      val marker = new Path(progressDir, s"group-$g.done")
-      if (!fs.exists(marker)) {
+    def doGroup(g: Int): Unit =
+      if (!fs.exists(marker(g))) {
         val t0 = System.nanoTime()
         // grp/bucket as real partition dirs: a consistent two-level
         // layout for partition discovery AND bucket-level pruning.
@@ -312,18 +315,18 @@ final class IceTable(val root: String, spark: SparkSession) {
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy("grp", "bucket").parquet(dataDir.toString)
         val elapsedMs = (System.nanoTime() - t0) / 1000000
-        // the group's lineage rows, as one file, before its marker
-        val mine = lineageRows.filter(_.get(1) == g)
-        spark.createDataFrame(java.util.Arrays.asList(mine: _*), lineage.schema)
-          .withColumn("elapsed_ms", lit(elapsedMs))
-          .coalesce(1)
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("grp").parquet(lineageDir)
-        val out = fs.create(marker, true)
-        out.write(s"group $g done".getBytes("UTF-8")); out.close()
+        // the group's lineage rows, in LineageCols order
+        val mine = lineageRows.filter(_.getInt(1) == g)
+          .map(r => r.getInt(0).toLong +: (2 to 6).map(r.getLong) :+ elapsedMs :+ g.toLong)
+        // one file certifies data + lineage: written under a temp name
+        // and renamed, so it is complete or absent, and a group that
+        // died before the rename re-runs
+        val tmp = new Path(progressDir, s".group-$g.done.tmp")
+        val out = fs.create(tmp, true)
+        out.write(renderRows(mine.toSeq).getBytes("UTF-8")); out.close()
+        if (!fs.rename(tmp, marker(g)))
+          throw new java.io.IOException(s"could not publish ${marker(g)}")
       }
-    }
 
     if (abortAfterGroup >= 0 || groups <= 1) {
       // sequential path: the abort test hook needs a deterministic
@@ -335,13 +338,13 @@ final class IceTable(val root: String, spark: SparkSession) {
       }
     } else {
       // OVERLAPPED group jobs (r6, guide §2.6): group writes are
-      // independent (disjoint grp= partition dirs, disjoint lineage
-      // partitions, per-job staging dirs), and running them from a
+      // independent (disjoint grp= partition dirs, one marker each,
+      // per-job staging dirs), and running them from a
       // small pool lets the next group's tasks back-fill executors
       // freed by the current group's write tail — actions were only
       // sequential because this loop called them sequentially. Resume
-      // and cancel semantics are unchanged: markers still flip only
-      // after a group's data+lineage landed, unfinished groups are
+      // and cancel semantics are unchanged: markers still land only
+      // after a group's data landed, unfinished groups are
       // cleanly re-written by the dynamic overwrite on re-run, and the
       // pool threads inherit the caller's cancellable job group
       // (thread-locals are inheritable at thread creation).
@@ -363,7 +366,8 @@ final class IceTable(val root: String, spark: SparkSession) {
       } finally pool.shutdownNow()
     }
 
-    (listParquet(dataDir), lineageRows.map(_.getAs[Long]("rows")).sum)
+    (listParquet(dataDir),
+      (0 until groups).flatMap(g => parseRows(readUtf8(marker(g)))).sortBy(_.head))
   }
 
   /** Atomic snapshot flip: write the manifest to a committer-unique
@@ -374,18 +378,16 @@ final class IceTable(val root: String, spark: SparkSession) {
     * Concurrency: two committers that both observed parent `n-1` race
     * for the same `snap-<n>.json`; exactly one publish succeeds and the
     * loser gets [[IceTable.ConcurrentCommitException]]. The loser's
-    * data/lineage dirs are unreferenced by any snapshot (safe to
-    * delete), and a retry of the same commit is cheap: finished-group
-    * markers skip the data rewrite, so only the manifest flip re-runs
-    * against the new parent. */
+    * data dir is unreferenced by any snapshot (safe to delete), and a
+    * retry of the same commit is cheap: finished-group markers skip
+    * the data rewrite and carry its lineage, so only the manifest flip
+    * re-runs against the new parent. */
   private[tables] def flipSnapshot(commitId: String, files: Seq[DataFileEntry],
                                    rows: Long, schemaFields: Seq[String],
                                    parent: Long,
-                                   lineageOverride: Option[String] = None): Long = {
-    val lineageDir =
-      lineageOverride.getOrElse(s"$root/metadata/lineage/$commitId")
+                                   lineage: Seq[Seq[Long]] = Nil): Long = {
     val next = parent + 1
-    val json = renderSnapshot(Snapshot(next, parent, commitId, files, rows, lineageDir,
+    val json = renderSnapshot(Snapshot(next, parent, commitId, files, rows, lineage,
       Some(schemaFields)))
     fs.mkdirs(metaDir)
     val tmp = new Path(metaDir, s".snap-$next.json.$commitId.tmp")
@@ -470,7 +472,6 @@ final class IceTable(val root: String, spark: SparkSession) {
       val dirs = (snap.files.flatMap(f => commitDirOf(f.path)) :+ snap.commitId).distinct
       dirs.filterNot(referenced.contains).foreach { c =>
         fs.delete(new Path(root, s"data/commit-$c"), true)
-        fs.delete(new Path(root, s"metadata/lineage/$c"), true)
         fs.delete(new Path(metaDir, s"progress/$c"), true)
       }
       true
@@ -488,12 +489,6 @@ final class IceTable(val root: String, spark: SparkSession) {
       }.toSet
   }
 
-  /** Attach per-file min/max of `statsCol` (cast to long) to fresh
-    * commit entries — ONE column-pruned scan of just-written files,
-    * the write-side statistics collection Iceberg performs inline.
-    * Files where the column is entirely null keep no stats (and are
-    * therefore never pruned — correct, since they hold no matching
-    * rows but pruning must stay a superset). */
   /** The long image of a stats column: timestamps map through
     * unix_micros (Spark refuses a direct timestamp→long cast),
     * integer types cast. Shared by stats collection and readRange so
@@ -504,6 +499,11 @@ final class IceTable(val root: String, spark: SparkSession) {
       case _ => col(c).cast("long")
     }
 
+  /** Attach per-file min/max of `statsCol` to fresh commit entries —
+    * the write-side statistics collection Iceberg performs inline.
+    * Files where the column is entirely null keep no stats (and are
+    * therefore never pruned — correct, since they hold no matching
+    * rows but pruning must stay a superset). */
   private def withStats(files: Seq[DataFileEntry],
                         statsCol: Option[String]): Seq[DataFileEntry] = {
     val c = statsCol.getOrElse(return files)
@@ -541,6 +541,20 @@ final class IceTable(val root: String, spark: SparkSession) {
 
   // ---- tiny dependency-free JSON (driver-side metadata only) ----------
 
+  private def readUtf8(p: Path): String = {
+    val in = fs.open(p)
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+  }
+
+  /** Lineage rows as positional arrays of longs in `LineageCols` order:
+    * no keys, so a bucket's `rows` can never shadow the snapshot's. */
+  private def renderRows(rows: Seq[Seq[Long]]): String =
+    rows.map(_.mkString("[", ",", "]")).mkString("[", ",", "]")
+
+  private def parseRows(txt: String): Seq[Seq[Long]] =
+    """\[(-?\d+(?:,-?\d+)*)\]""".r.findAllMatchIn(txt)
+      .map(_.group(1).split(',').map(_.toLong).toSeq).toSeq
+
   private def q(s: String): String =
     "\"" + s.flatMap {
       case '"' => "\\\""; case '\\' => "\\\\"
@@ -559,15 +573,15 @@ final class IceTable(val root: String, spark: SparkSession) {
     val schema = s.schemaFields
       .map(fs => s""","schema":${fs.map(q).mkString("[", ",", "]")}""")
       .getOrElse("")
-    s"""{"format_version":1,"snapshot_id":${s.id},"parent_id":${s.parentId},"commit_id":${q(s.commitId)},
-       |"rows":${s.rows},"lineage":${q(s.lineagePath)}$schema,"files":$files}""".stripMargin
+    s"""{"format_version":2,"snapshot_id":${s.id},"parent_id":${s.parentId},"commit_id":${q(s.commitId)},
+       |"rows":${s.rows},"lineage":${renderRows(s.lineage)}$schema,"files":$files}""".stripMargin
   }
 
   private def parseSnapshot(txt: String): Snapshot = {
     // purpose-built parser for renderSnapshot's fixed shape; unknown
     // keys are ignored (forward-tolerant), known keys are extracted by
     // name so field ORDER never matters; format_version gates reads of
-    // manifests newer than this reader understands
+    // manifests this reader does not understand
     def longFieldOpt(k: String): Option[Long] =
       (s""""$k":(-?\\d+)""").r.findFirstMatchIn(txt).map(_.group(1).toLong)
     def longField(k: String): Long = longFieldOpt(k)
@@ -578,9 +592,9 @@ final class IceTable(val root: String, spark: SparkSession) {
       m.group(1).replace("\\\"", "\"").replace("\\\\", "\\")
     }
     val version = longFieldOpt("format_version").getOrElse(0L)
-    if (version > 1L)
-      throw new IllegalStateException(
-        s"snapshot format_version $version is newer than this reader (supports ≤1)")
+    if (version != 2L)
+      throw new IllegalStateException(s"snapshot format_version $version is unreadable: " +
+        "this reader supports only 2 (format 1 and older store lineage as a path)")
     val files = ("""\{"path":"((?:[^"\\]|\\.)*)","bytes":(\d+)(?:,"min":(-?\d+),"max":(-?\d+))?\}""").r
       .findAllMatchIn(txt)
       .map(m => DataFileEntry(
@@ -592,9 +606,11 @@ final class IceTable(val root: String, spark: SparkSession) {
         ("""\"((?:[^"\\]|\\.)*)\"""").r.findAllMatchIn(m.group(1))
           .map(_.group(1).replace("\\\"", "\"").replace("\\\\", "\\")).toSeq
       }
+    val lineage = """"lineage":(\[(?:\[[-\d,]*\],?)*\])""".r.findFirstMatchIn(txt)
+      .map(m => parseRows(m.group(1)))
+      .getOrElse(throw new IllegalStateException("bad snapshot json: lineage"))
     Snapshot(longField("snapshot_id"), longField("parent_id"),
-      strField("commit_id"), files, longField("rows"), strField("lineage"),
-      schemaFields)
+      strField("commit_id"), files, longField("rows"), lineage, schemaFields)
   }
 }
 
@@ -615,12 +631,22 @@ object IceTable {
   final case class DataFileEntry(path: String, bytes: Long,
                                  statsMin: Option[Long] = None,
                                  statsMax: Option[Long] = None)
+  /** Lineage columns, in the one positional order that `.done`
+    * markers and manifests store each lineage row in. */
+  val LineageCols: Seq[String] = Seq("bucket", "rows", "error_rows", "empty_rows",
+    "oversize_docs", "text_chars", "elapsed_ms", "grp")
+
+  /** Sum of one lineage column over all rows. */
+  def lineageSum(lineage: Seq[Seq[Long]], c: String): Long =
+    lineage.map(_(LineageCols.indexOf(c))).sum
+
+  /** `lineage` holds one row per bucket, in `LineageCols` order. */
   final case class Snapshot(
       id: Long,
       parentId: Long,
       commitId: String,
       files: Seq[DataFileEntry],
       rows: Long,
-      lineagePath: String,
+      lineage: Seq[Seq[Long]],
       schemaFields: Option[Seq[String]] = None)
 }

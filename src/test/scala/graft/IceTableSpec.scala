@@ -33,6 +33,13 @@ class IceTableSpec extends AnyFunSuite {
     assert(lin.length <= 16 && lin.length > 0) // one row per logical bucket
     val snap = table.readSnapshot(0L)
     assert(snap.files.nonEmpty && snap.rows == N)
+    // lineage lives in the manifest, in today's column order and types
+    assert(IceTable.lineageSum(snap.lineage, "rows") == N)
+    assert(!new java.io.File(root, "metadata/lineage").exists())
+    assert(table.lineage().schema.map(f => f.name -> f.dataType.simpleString) == Seq(
+      "bucket" -> "int", "rows" -> "bigint", "error_rows" -> "bigint", "empty_rows" -> "bigint",
+      "oversize_docs" -> "bigint", "text_chars" -> "bigint", "elapsed_ms" -> "bigint",
+      "grp" -> "int"))
     // lineage guard metrics present (P6/O4 analogues)
     assert(lin.head.schema.fieldNames.contains("empty_rows"))
     assert(lin.head.schema.fieldNames.contains("oversize_docs"))
@@ -93,6 +100,45 @@ class IceTableSpec extends AnyFunSuite {
     }
     val r2 = ExtractJob.run(spark, resumed, N, buckets = 16, groups = 4, commitId = "c0")
     assertLineageGuard(new IceTable(resumed, spark), r2.snapshotId)
+  }
+
+  test("resumed commit with a changed input keeps the finished groups' marker lineage") {
+    import org.apache.spark.sql.functions._
+    val table = new IceTable(tmpRoot("resume-changed"), spark)
+    def input(n: Long) = spark.range(0, n).select(col("id"),
+      pmod(col("id"), lit(4)).cast("int").as("bucket"),
+      concat(lit("row "), col("id")).as("text"), lit(null).cast("string").as("error"))
+    // A writes group 0 (buckets 0 and 2: its 50 even ids), then crashes
+    intercept[IllegalStateException] {
+      table.commit(input(100), "rc", groups = 2, abortAfterGroup = 0)
+    }
+    // B has 70 rows in each group; the resume skips group 0, so the
+    // table holds A's 50 rows there and B's 70 odd ids in group 1
+    val snap = table.commit(input(140), "rc", groups = 2)
+    assertLineageGuard(table, snap)
+    assert(table.readSnapshot(snap).rows == 120L)
+  }
+
+  test("groups < 1 is refused before anything is written") {
+    import org.apache.spark.sql.functions._
+    val table = new IceTable(tmpRoot("groups"), spark)
+    val df = spark.range(0, 10).select(col("id"),
+      pmod(col("id"), lit(2)).cast("int").as("bucket"),
+      lit("t").as("text"), lit(null).cast("string").as("error"))
+    val e = intercept[IllegalArgumentException] { table.commit(df, "neg", groups = -1) }
+    assert(e.getMessage.contains("groups must be >= 1"), e.getMessage)
+    assert(table.currentSnapshotId.isEmpty)
+  }
+
+  test("a format-1 manifest (lineage stored as a path) fails by name") {
+    val root = tmpRoot("v1")
+    val meta = new java.io.File(root, "metadata")
+    meta.mkdirs()
+    java.nio.file.Files.writeString(new java.io.File(meta, "snap-0.json").toPath,
+      s"""{"format_version":1,"snapshot_id":0,"parent_id":-1,"commit_id":"c0",
+         |"rows":0,"lineage":"$root/metadata/lineage/c0","files":[]}""".stripMargin)
+    val e = intercept[IllegalStateException] { new IceTable(root, spark).read() }
+    assert(e.getMessage.contains("format_version 1 is unreadable"), e.getMessage)
   }
 
   test("lineage guard: error, empty and oversize rows are counted per bucket") {
