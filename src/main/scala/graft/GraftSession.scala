@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression}
 
 import graft.expr.{ExtractMainText, LangId, LshBucket, MinHashSig, NfcNormalize, SimHash64, SplitMix64, Winnow}
@@ -128,10 +129,14 @@ object GraftSession {
         Cast(exprs.head, org.apache.spark.sql.types.LongType), p)
     })
 
+  /** Register the graft functions in `spark`'s registry, once: a name
+    * the registry already holds (an earlier call, or GraftExtensions)
+    * is left as it is. */
   def register(spark: SparkSession): SparkSession = {
     val reg = spark.sessionState.functionRegistry
     builders.foreach { case (name, b) =>
-      reg.createOrReplaceTempFunction(name, b, "scala_udf")
+      if (!reg.functionExists(FunctionIdentifier(name)))
+        reg.createOrReplaceTempFunction(name, b, "scala_udf")
     }
     spark
   }

@@ -38,7 +38,6 @@ object Queries {
     // pandas-side sort can't hash array cells (CORRECTNESS_r01 x1 err);
     // spans themselves are fully checked flattened in x2.
     "x1_extract_pages" -> ((s, _) => {
-      GraftSession.register(s)
       ExtractPipeline.extracted(ExtractPipeline.pages(s, 2000).toDF())
         .select(col("url"), col("text"), size(col("spans")).as("n_spans"),
           col("lang"), col("error"))
@@ -46,7 +45,6 @@ object Queries {
     }),
     // spans view (region-extract stage output)
     "x2_extract_spans" -> ((s, _) => {
-      GraftSession.register(s)
       ExtractPipeline.extracted(ExtractPipeline.pages(s, 1000).toDF())
         .filter(col("error").isNull)
         .select(col("url"), posexplode(col("spans")).as(Seq("span_idx", "span")))
@@ -56,7 +54,6 @@ object Queries {
     }),
     // error-as-row policy (ocr_parallel_ui.py:33-34)
     "x3_extract_errors" -> ((s, _) => {
-      GraftSession.register(s)
       ExtractPipeline.extracted(ExtractPipeline.pages(s, 2000).toDF())
         .filter(col("error").isNotNull)
         .select(col("url"), col("error"))
@@ -67,7 +64,6 @@ object Queries {
     // array_join — SURVEY §2.4 A1); equality with graft_extract's
     // in-expression assembly is asserted in SparkExtractionSpec
     "x5_block_assembly" -> ((s, _) => {
-      GraftSession.register(s)
       val pages = ExtractPipeline.pages(s, 500).toDF()
       val blocks = pages
         .select(col("url"), expr("graft_explode_blocks(html)")) // generator: yields block columns
@@ -94,7 +90,6 @@ object Queries {
     // This turns the extraction core from golden-attested into
     // DuckDB-oracle-attested.
     "x6_extract_roundtrip" -> ((s, dir) => {
-      GraftSession.register(s)
       t(s, dir, "documents")
         .select(col("doc_id"),
           call_function("graft_extract", encode(x6Html, "UTF-8"), col("lang")).as("r"))
@@ -107,7 +102,6 @@ object Queries {
     // payload (0xFF prefix) and must surface as an error row with the
     // reference's exact message format — all DuckDB-oracled.
     "x7_extract_parts" -> ((s, dir) => {
-      GraftSession.register(s)
       val html = concat(
         lit("<html><body><article><p>"), col("text"),
         lit("</p></article><article><h2>Part two</h2><p>"), col("text"),
@@ -128,7 +122,6 @@ object Queries {
     // the span-offset contract is driver-attested, not just
     // golden-attested (x2 covers generated pages rows-only)
     "x9_spans_roundtrip" -> ((s, dir) => {
-      GraftSession.register(s)
       t(s, dir, "documents")
         .select(col("doc_id"),
           call_function("graft_extract", encode(x6Html, "UTF-8"), col("lang")).as("r"))
@@ -144,7 +137,6 @@ object Queries {
     // lower content floor (8 vs 15 words) makes 10-14-word docs
     // alt-only — both branches of the dual path are driver-attested.
     "x8_dual_engine" -> ((s, dir) => {
-      GraftSession.register(s)
       t(s, dir, "documents")
         .select(col("doc_id"),
           call_function("graft_extract", encode(x6Html, "UTF-8"), col("lang"),
@@ -161,7 +153,6 @@ object Queries {
     // counts and kept=false, the heading survives iff the body block
     // reaches the 15-word content floor
     "x11_blocks_roundtrip" -> ((s, dir) => {
-      GraftSession.register(s)
       t(s, dir, "documents")
         .withColumn("payload", encode(x6Html, "UTF-8"))
         .select(col("doc_id"), expr("graft_explode_blocks(payload)"))
@@ -176,7 +167,6 @@ object Queries {
     // error-as-row branch. The oracle predicts text, span count, and
     // the exact error message from the same input columns.
     "x10_pdf_roundtrip" -> ((s, dir) => {
-      GraftSession.register(s)
       // the PDF body is pre-normalized IN-QUERY (whitespace runs → one
       // space, trimmed) with the oracle applying the same regex, so
       // the roundtrip prediction no longer leans on the probed "testdata
@@ -203,7 +193,6 @@ object Queries {
     // x6 template's four anchors, in document order with duplicates —
     // the oracle predicts every (doc, idx, href) row
     "x13_outlinks" -> ((s, dir) => {
-      GraftSession.register(s)
       t(s, dir, "documents")
         .select(col("doc_id"),
           posexplode(call_function("graft_outlinks", x6Html)).as(Seq("link_idx", "href")))
@@ -218,7 +207,6 @@ object Queries {
     // ONE evaluation of the struct per row — a plain 4-field select
     // would re-run the parse per field after projection collapse.
     "x14_meta" -> ((s, dir) => {
-      GraftSession.register(s)
       val html = concat(
         lit("<html><head><title> Doc "), col("doc_id"),
         lit("  of h"), pmod(col("doc_id"), lit(60)),
@@ -246,7 +234,6 @@ object Queries {
     // x6 template — so the oracle is x6's, reached through the real
     // container format. lang rides the HTTP Content-Language header.
     "x12_warc_roundtrip" -> ((s, dir) => {
-      GraftSession.register(s)
       // stage dir keyed by the INPUT's content fingerprint (path +
       // size + mtime), not the path alone: a regenerated fixture at
       // the same path gets fresh shards instead of silently reusing
@@ -279,7 +266,6 @@ object Queries {
     }),
     // north rule: bucket+salt layout columns
     "x4_extract_bucketed" -> ((s, _) => {
-      GraftSession.register(s)
       val pages = ExtractPipeline.pages(s, 2000).toDF()
       // URL-only hot-host sampling (r6, guide §2.3) — identical hot set
       // (same ids, partitioning and sample seed), none of the full-row

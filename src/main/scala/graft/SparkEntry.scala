@@ -29,8 +29,12 @@ object SparkEntry {
       .filter(col("error").isNull && length(col("text")) > 0)
   }
 
+  /** Every query registers the graft functions in the session it is
+    * given (a no-op after the first), so a bare session works. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Queries.all
+    Queries.all.map { case (k, f) =>
+      k -> ((s: SparkSession, d: String) => f(GraftSession.register(s), d))
+    }
 
   def oracleSql: Map[String, String] =
     Queries.oracles

@@ -3,7 +3,6 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.GraftSession
 import graft.pipeline.ExtractPipeline
 
 /** Training-data pipeline operators as driver-checkable queries.
@@ -64,14 +63,12 @@ object OpsQueries {
     // on stop shingles (dfCap=50 mirrors t4's winnowing discipline and
     // is mirrored shingle-for-shingle in the DuckDB oracle)
     "d2_ngram_jaccard" -> ((s, dir) => {
-      GraftSession.register(s)
       Dedup.ngramJaccardPairs(docsWithNearDups(s, dir), "doc_id", "text", 0.6, dfCap = 50)
         .withColumn("jaccard", round(col("jaccard"), 6))
         .orderBy("id_a", "id_b")
     }),
     // MinHash+LSH banding (estimated jaccard)
     "d3_minhash_lsh" -> ((s, dir) => {
-      GraftSession.register(s)
       Dedup.minhashPairs(docsWithNearDups(s, dir), "doc_id", "text",
           k = 64, bands = 16, minEstJaccard = 0.5)
         .orderBy("id_a", "id_b")
@@ -81,7 +78,6 @@ object OpsQueries {
     // doc = least id in the cluster; oracle recomputes the closure
     // over the same bit-exact pair list with a recursive CTE
     "d6_dup_clusters" -> ((s, dir) => {
-      GraftSession.register(s)
       val pairs = Dedup.minhashPairs(docsWithNearDups(s, dir), "doc_id", "text",
         k = 64, bands = 16, minEstJaccard = 0.5)
       val cc = Dedup.connectedComponents(pairs)
@@ -96,7 +92,6 @@ object OpsQueries {
     // through one equi-join). Contamination is planted (eval docs
     // re-appear padded under doc_id+200000).
     "d7_decontaminate" -> ((s, dir) => {
-      GraftSession.register(s)
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val evalSet = docs.filter(col("doc_id") % 13 === 0)
       val corpus = docs.filter(col("doc_id") % 13 =!= 0)
@@ -113,7 +108,6 @@ object OpsQueries {
     // a hash relation. Bloom FPs die in the join, so the answer (and
     // the oracle) is IDENTICAL to d7's.
     "d7b_decon_bloom" -> ((s, dir) => {
-      GraftSession.register(s)
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val evalSet = docs.filter(col("doc_id") % 13 === 0)
       val corpus = docs.filter(col("doc_id") % 13 =!= 0)
@@ -133,7 +127,6 @@ object OpsQueries {
     // map-side against the GUARDED broadcast of the bounded eval
     // side's bands — the corpus never band-joins itself (contrast d3).
     "d12_fuzzy_decon" -> ((s, dir) => {
-      GraftSession.register(s)
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val evalSet = docs.filter(col("doc_id") % 13 === 0)
         .select((col("doc_id") + 900000).as("eval_id"),
@@ -162,7 +155,6 @@ object OpsQueries {
     // RE2 divergence, CLAUDE.md) so TokenWindowHashes' isWs tokenizer
     // and the oracle's space split agree by construction.
     "d8_substring_dup" -> ((s, dir) => {
-      GraftSession.register(s)
       val docs = t(s, dir, "documents").select(col("doc_id"),
         trim(regexp_replace(col("text"), "[ \\t\\n\\f\\r\\u000B\\u00A0]+", " "))
           .as("text"))
@@ -176,7 +168,6 @@ object OpsQueries {
     // deduped-corpus materialization: pair generation → cluster
     // resolution → keep canonical docs only, end to end
     "d9_dedup_corpus" -> ((s, dir) => {
-      GraftSession.register(s)
       val corpus = docsWithNearDups(s, dir)
       val pairs = Dedup.minhashPairs(corpus, "doc_id", "text",
         k = 64, bands = 16, minEstJaccard = 0.5)
@@ -193,7 +184,6 @@ object OpsQueries {
     // Keys shuffle as graft_fnv64 hashes; the oracle recomputes the
     // identical FNV-1a per paragraph, collisions included.
     "d10_para_dedup" -> ((s, dir) => {
-      GraftSession.register(s)
       val withTail = when(col("doc_id") % 3 === 0,
         concat(col("text"), lit("\nunique tail "), col("doc_id")))
         .otherwise(col("text"))
@@ -206,14 +196,12 @@ object OpsQueries {
     }),
     // SimHash hamming-band dedup
     "d4_simhash" -> ((s, dir) => {
-      GraftSession.register(s)
       Dedup.simhashPairs(docsWithNearDups(s, dir), "doc_id", "text", maxHamming = 3)
         .orderBy("id_a", "id_b")
     }),
     // embedding-cosine near-dup via LSH buckets (planted exact copies
     // ⇒ cosine == 1.0 bit-exactly; oracle checks the full pair set)
     "d5_embed_neardup" -> ((s, dir) => {
-      GraftSession.register(s)
       Dedup.embeddingNearDupPairs(embWithDups(s, dir), "vec_id", "embedding",
           minCosine = 0.999999, planes = 8)
         .select(col("id_a"), col("id_b"))
@@ -229,7 +217,6 @@ object OpsQueries {
     }),
     // LSH-bucketed ANN (scale path; recall vs s1 asserted in tests)
     "s2_ann_lsh" -> ((s, dir) => {
-      GraftSession.register(s)
       val emb = t(s, dir, "embeddings")
       val queries = emb.filter(col("vec_id") < 5)
       Similarity.lshTopK(emb, queries, 10, planes = 8)
@@ -238,7 +225,6 @@ object OpsQueries {
     }),
     // language-ID heuristic over extracted web pages (planted langs)
     "t1_langid" -> ((s, _) => {
-      GraftSession.register(s)
       val ex = ExtractPipeline.extracted(ExtractPipeline.pages(s, 1000).toDF())
         .filter(col("error").isNull && length(col("text")) > 0)
       ex.select(col("url"),
@@ -253,7 +239,6 @@ object OpsQueries {
     // independently recomputes the script-ratio heuristic — t1 (over
     // generated pages) stays rows-only, this twin is hash-attested
     "t1b_langid_docs" -> ((s, dir) => {
-      GraftSession.register(s)
       val arabic = translate(col("text"),
         "abcdefghijklmnopqrstuvwxyz", "ابتثجحخدذرزسشصضطظعغفقكلمنه")
       val input = when(col("doc_id") % 3 === 0, col("text"))
@@ -297,7 +282,6 @@ object OpsQueries {
     // signal but quadratic join cost — standard winnowing practice,
     // and the only viable shape at 10^12 docs.
     "t4_fingerprint" -> ((s, dir) => {
-      GraftSession.register(s)
       val fp = docsWithNearDups(s, dir).select(col("doc_id"),
         explode(call_function("graft_fingerprint", col("text"))).as("fp"))
       // broadcast the HOT side (small by construction) and anti-join:
@@ -344,7 +328,6 @@ object OpsQueries {
     // top-K per cell, never a hot-cell window sort); output is
     // cells×K rows, no join-back.
     "s4_cluster_sample" -> ((s, dir) => {
-      GraftSession.register(s)
       val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       val cents = IvfIndex.train(emb, k = 16, iters = 2)
       IvfIndex.assign(emb, cents)
@@ -362,7 +345,6 @@ object OpsQueries {
     }),
     // repetition filter: distinct-trigram ratio (training-data quality)
     "t5_repetition" -> ((s, dir) => {
-      GraftSession.register(s)
       val sh = Dedup.shingles(col("text"))
       // explicit class == Java \s expansion (never \s itself; CLAUDE.md)
       val words = split(trim(col("text")), "[ \\t\\n\\f\\r\\u000B]+")
@@ -416,7 +398,6 @@ object OpsQueries {
     // differently). Non-NFC sequences are planted deterministically;
     // the oracle mirrors with DuckDB's nfc_normalize.
     "t7_nfc" -> ((s, dir) => {
-      GraftSession.register(s)
       val norm = call_function("graft_nfc", col("x"))
       t(s, dir, "documents").select(col("doc_id"),
           concat(col("text"),
@@ -436,7 +417,6 @@ object OpsQueries {
     // size — the property a training-data split must have. Oracle
     // recomputes the full 64-bit mix in SQL (same machinery as d3).
     "t8_split" -> ((s, dir) => {
-      GraftSession.register(s)
       val bucket = pmod(call_function("graft_mix64", col("doc_id")), lit(100L))
       t(s, dir, "documents").select(col("doc_id"), bucket.as("bucket"),
           when(bucket < 90, "train").when(bucket < 95, "val")
@@ -484,7 +464,6 @@ object OpsQueries {
     // arrives twice (+600000 and +700000 — the later one is the batch
     // dup), nothing else arrives.
     "d11_incremental_ingest" -> ((s, dir) => {
-      GraftSession.register(s)
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val batch =
         docs.filter(col("doc_id") % 3 === 0)
@@ -510,7 +489,6 @@ object OpsQueries {
     // slice (decon kills overlapping survivors), and the cap keeps 10
     // docs per host. The oracle replays all four stages in SQL.
     "p1_training_corpus" -> ((s, dir) => {
-      GraftSession.register(s)
       // planted base materialized once (Barrier — r6): the
       // composition references it ~5x (corpus twice, keepers, eval
       // set, C4 stage) and each reference re-read and re-planted the
@@ -730,7 +708,6 @@ object OpsQueries {
     // float ESTIMATE stays out of the dual-engine contract (IEEE sum
     // order) and is accuracy-checked in OpsSpec instead.
     "t18_host_vocab" -> ((s, dir) => {
-      GraftSession.register(s)
       val toks = t(s, dir, "documents").select(col("source"),
         explode(split(trim(col("text")), "[ \\t\\n\\f\\r\\u000B]+")).as("tok"))
       toks.select(col("source"),
@@ -826,7 +803,6 @@ object OpsQueries {
     // eval residue); docs with doc_id%7==0 carry the same marker in
     // the corpus, so selection (imp_bits > 0) has planted signal.
     "t22_dsir_select" -> ((s, dir) => {
-      GraftSession.register(s)
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val corpus = docs.select(col("doc_id"),
         when(col("doc_id") % 7 === 0,
@@ -876,7 +852,6 @@ object OpsQueries {
     // score (>>> 11) is exactly double-representable, ties broken by
     // doc_id inside the heap — bit-reproducible at any parallelism.
     "t9_host_cap" -> ((s, dir) => {
-      GraftSession.register(s)
       val scored = t(s, dir, "documents")
         .select(col("doc_id"), col("source"),
           shiftrightunsigned(call_function("graft_mix64", col("doc_id")), 11)
@@ -915,7 +890,6 @@ object OpsQueries {
     // the ranking is non-degenerate; the oracle appends the identical
     // tail.
     "b1_bm25" -> ((s, dir) => {
-      GraftSession.register(s)
       import s.implicits._
       val qterms = Seq((0L, "spark"), (0L, "bmq1"),
         (1L, "bmq2"), (1L, "bmq3"), (1L, "merge"),
@@ -1215,7 +1189,6 @@ object OpsQueries {
     // 10^12-doc side streams through ONE broadcast hash join, no
     // shuffle (plan-asserted).
     "t16_lang_sample" -> ((s, dir) => {
-      GraftSession.register(s)
       val docs = t(s, dir, "documents").select(col("doc_id"), col("lang"))
       val counts = docs.groupBy("lang").agg(count(lit(1)).as("n_docs"))
       val maxN = counts.agg(max("n_docs").as("max_docs"))
@@ -1263,7 +1236,6 @@ object OpsQueries {
     // (h(doc_id%60) / h((doc_id+7)%60)) so the rollup is non-trivial
     // and the oracle predicts it from the same arithmetic.
     "g4_anchor_stats" -> ((s, dir) => {
-      GraftSession.register(s)
       val html = concat(
         lit("<html><body><p>Intro text.</p><a href=\"https://h"),
         pmod(col("doc_id"), lit(60)),

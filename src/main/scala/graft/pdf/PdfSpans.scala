@@ -116,6 +116,10 @@ object PdfSpans {
       val chunk = new Array[Byte](8192)
       while (!inf.finished()) {
         val k = inf.inflate(chunk)
+        // a preset dictionary (zlib FDICT) is never supplied in a PDF:
+        // inflate would return 0 forever without needing input
+        if (inf.needsDictionary())
+          throw new PdfParseException("flate stream needs a preset dictionary")
         if (k == 0 && inf.needsInput())
           throw new PdfParseException("truncated flate stream")
         buf.write(chunk, 0, k)

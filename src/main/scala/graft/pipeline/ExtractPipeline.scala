@@ -18,8 +18,7 @@ object ExtractPipeline {
     * range — at 10^12 rows this is a parallel scan, not a driver loop. */
   def pages(spark: SparkSession, n: Long): Dataset[PageRow] = {
     import spark.implicits._
-    spark.range(0L, n, 1L, math.min(n, spark.sparkContext.defaultParallelism.toLong * 4L).toInt)
-      .mapPartitions(_.map(id => PageGen.row(id.longValue())))
+    ids(spark, n).mapPartitions(_.map(id => PageGen.row(id.longValue())))
   }
 
   /** URL-only projection of the synthesized pages table (guide §2.3:
@@ -30,9 +29,12 @@ object ExtractPipeline {
     * Bernoulli sample selects the identical rows. */
   def pageUrls(spark: SparkSession, n: Long): DataFrame = {
     import spark.implicits._
-    spark.range(0L, n, 1L, math.min(n, spark.sparkContext.defaultParallelism.toLong * 4L).toInt)
-      .mapPartitions(_.map(id => PageGen.urlOf(id.longValue()))).toDF("url")
+    ids(spark, n).mapPartitions(_.map(id => PageGen.urlOf(id.longValue()))).toDF("url")
   }
+
+  /** The id range, and its partitioning, that `pages` and `pageUrls` share. */
+  private def ids(spark: SparkSession, n: Long): Dataset[java.lang.Long] =
+    spark.range(0L, n, 1L, math.min(n, spark.sparkContext.defaultParallelism.toLong * 4L).toInt)
 
   /** The recognize stage: one single-pass expression evaluation per
     * row → (url, [passthrough…], text, spans, lang, error). No

@@ -1,11 +1,13 @@
 package graft.tables
 
+import com.fasterxml.jackson.databind.JsonNode
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 
 /** Iceberg-style table: partitioned parquet + a JSON snapshot/manifest
   * log with atomic commits, per-partition lineage + metrics rows, and
@@ -21,17 +23,16 @@ import scala.collection.mutable.ArrayBuffer
   * {{{
   *   root/data/commit-<id>/grp=G/bucket=B/part-*.parquet
   *   root/metadata/snap-<n>.json           — file list + lineage rows + metrics
-  *   root/metadata/version-hint.text       — latest snapshot number
   *   root/metadata/progress/<id>/group-G.done — resume checkpoint marker
   *                                            carrying group G's lineage rows
   * }}}
   *
   * Commit protocol: data files land under a commit-unique directory
-  * (never mutated), the snapshot JSON is written to a temp name and
-  * renamed into place, and the version hint flips last — a crash at any
-  * point leaves the previous snapshot intact and readable ("crash
-  * before pointer flip = invisible"). Readers never read the hint:
-  * the latest snapshot is the max n listed under `snap-*.json`.
+  * (never mutated), and the snapshot JSON is written to a temp name and
+  * published as `snap-<n>.json` last — a crash at any point leaves the
+  * previous snapshot intact and readable ("crash before pointer flip =
+  * invisible"). The latest snapshot is the max n listed under
+  * `snap-*.json`.
   */
 final class IceTable(val root: String, spark: SparkSession) {
 
@@ -40,14 +41,12 @@ final class IceTable(val root: String, spark: SparkSession) {
 
   private def metaDir = new Path(root, "metadata")
   private def snapPath(n: Long) = new Path(metaDir, s"snap-$n.json")
-  private def hintPath = new Path(metaDir, "version-hint.text")
 
-  import IceTable.{DataFileEntry, LineageCols, Snapshot, lineageSum}
+  import IceTable.{DataFileEntry, Json, LineageCols, Snapshot, lineageSum}
 
   // ---- snapshot log ---------------------------------------------------
 
-  /** Latest snapshot id, from the `snap-*.json` listing (crash-safe).
-    * The version hint is written on every flip but never read here. */
+  /** Latest snapshot id, from the `snap-*.json` listing (crash-safe). */
   def currentSnapshotId: Option[Long] = snapshots.lastOption
 
   def snapshots: Seq[Long] = {
@@ -58,7 +57,7 @@ final class IceTable(val root: String, spark: SparkSession) {
       }.sorted
   }
 
-  def readSnapshot(n: Long): Snapshot = parseSnapshot(readUtf8(snapPath(n)))
+  def readSnapshot(n: Long): Snapshot = parseSnapshot(readJson(snapPath(n)))
 
   /** Read the table at a snapshot (time travel) or latest. Each
     * snapshot records the schema it was committed with (schema
@@ -200,10 +199,11 @@ final class IceTable(val root: String, spark: SparkSession) {
     * groups — "resumable from checkpoint after any executor loss"
     * (north rule). The snapshot flips only after every group landed,
     * and its manifest carries every group's lineage rows.
+    * `abortAfterGroup` = g ≥ 0 is a test hook: groups 0..g land, then
+    * the commit throws as a simulated crash before the flip.
     */
   def commit(df: DataFrame, commitId: String, groups: Int = 8,
-             abortAfterGroup: Int = -1,
-             statsCol: Option[String] = None): Long = {
+             abortAfterGroup: Int = -1): Long = {
     requireBucket(df)
     // ONE exchange, before the persist: every task holds whole buckets,
     // so each group write is a filtered scan of the cache with no
@@ -222,7 +222,7 @@ final class IceTable(val root: String, spark: SparkSession) {
       // an overwrite manifest is parent-independent, so the freshest
       // parent read is correct; a racing flip still collides on the
       // snapshot id and raises ConcurrentCommitException
-      flipSnapshot(commitId, withStats(files, statsCol), lineageSum(lineage, "rows"),
+      flipSnapshot(commitId, files, lineageSum(lineage, "rows"),
         df.columns.toSeq, currentSnapshotId.getOrElse(-1L), lineage)
     } finally staged.unpersist()
   }
@@ -235,8 +235,10 @@ final class IceTable(val root: String, spark: SparkSession) {
     * replay of the same commitId (finished group markers skip the
     * write; a commitId's files are filtered from the parent list
     * before re-adding, so they are never double-counted). The
-    * snapshot's `lineage` stays per-commit (the DELTA's lineage). */
-  def commitAppend(df: DataFrame, commitId: String, groups: Int = 1,
+    * snapshot's `lineage` stays per-commit (the DELTA's lineage). The
+    * delta is written as one group; `statsCol` names the column whose
+    * per-file min/max the manifest records for `readRange`. */
+  def commitAppend(df: DataFrame, commitId: String,
                    statsCol: Option[String] = None): Long = {
     val parentId = currentSnapshotId
     val parent = parentId.map(readSnapshot)
@@ -254,7 +256,7 @@ final class IceTable(val root: String, spark: SparkSession) {
     // per-file stats pruning readRange depends on. Small-file growth is
     // the compact() job's concern (Iceberg's same split of duties).
     requireBucket(df)
-    val (files, lineage) = writeGroups(df, commitId, groups, -1)
+    val (files, lineage) = writeGroups(df, commitId, 1, -1)
     val mergedRows = parent.map(_.rows).getOrElse(0L) +
       (if (parentHadThis) 0L else lineageSum(lineage, "rows"))
     // CAS against the parent this manifest was BUILT from: a racing
@@ -271,9 +273,11 @@ final class IceTable(val root: String, spark: SparkSession) {
     require(df.columns.contains("bucket"), "df must carry a bucket column")
 
   /** Lineage aggregate, then the group writes, of `df` in its own
-    * layout. Returns the data files and every group's lineage rows,
-    * read from the markers: a group finished by an earlier run keeps
-    * the lineage of the data it wrote. */
+    * layout, as overlapped jobs from a pool of up to 3 threads. Returns
+    * the data files and every group's lineage rows, read from the
+    * markers: a group finished by an earlier run keeps the lineage of
+    * the data it wrote. With `abortAfterGroup` = g ≥ 0 only groups
+    * 0..g run, then it throws (the simulated crash of the test hook). */
   private def writeGroups(df: DataFrame, commitId: String, groups: Int,
                           abortAfterGroup: Int): (Seq[DataFileEntry], Seq[Seq[Long]]) = {
     require(groups >= 1, s"groups must be >= 1, got $groups")
@@ -323,57 +327,38 @@ final class IceTable(val root: String, spark: SparkSession) {
         // died before the rename re-runs
         val tmp = new Path(progressDir, s".group-$g.done.tmp")
         val out = fs.create(tmp, true)
-        out.write(renderRows(mine.toSeq).getBytes("UTF-8")); out.close()
+        out.write(Json.writeValueAsBytes(mine.map(_.toArray))); out.close()
         if (!fs.rename(tmp, marker(g)))
           throw new java.io.IOException(s"could not publish ${marker(g)}")
       }
 
-    if (abortAfterGroup >= 0 || groups <= 1) {
-      // sequential path: the abort test hook needs a deterministic
-      // "after group g" point (simulated executor/driver loss)
-      (0 until groups).foreach { g =>
-        doGroup(g)
-        if (g == abortAfterGroup)
-          throw new IllegalStateException(s"simulated crash after group $g")
-      }
-    } else {
-      // OVERLAPPED group jobs (r6, guide §2.6): group writes are
-      // independent (disjoint grp= partition dirs, one marker each,
-      // per-job staging dirs), and running them from a
-      // small pool lets the next group's tasks back-fill executors
-      // freed by the current group's write tail — actions were only
-      // sequential because this loop called them sequentially. Resume
-      // and cancel semantics are unchanged: markers still land only
-      // after a group's data landed, unfinished groups are
-      // cleanly re-written by the dynamic overwrite on re-run, and the
-      // pool threads inherit the caller's cancellable job group
-      // (thread-locals are inheritable at thread creation).
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(groups, 3))
-      try {
-        val futs = (0 until groups).map { g =>
-          pool.submit(new java.util.concurrent.Callable[Unit] {
-            def call(): Unit = doGroup(g)
-          })
-        }
-        // propagate the first real failure (unwrap the pool's wrapper)
-        futs.foreach { fut =>
-          try fut.get()
-          catch {
-            case e: java.util.concurrent.ExecutionException =>
-              throw if (e.getCause != null) e.getCause else e
-          }
-        }
-      } finally pool.shutdownNow()
-    }
+    // OVERLAPPED group jobs (r6, guide §2.6): group writes are
+    // independent (disjoint grp= partition dirs, one marker each,
+    // per-job staging dirs), and running them from a small pool lets
+    // the next group's tasks back-fill executors freed by the current
+    // group's write tail. Resume and cancel semantics hold: markers
+    // land only after a group's data landed, unfinished groups are
+    // cleanly re-written by the dynamic overwrite on re-run, and the
+    // pool threads inherit the caller's cancellable job group
+    // (thread-locals are inheritable at thread creation).
+    val todo =
+      if (abortAfterGroup >= 0) 0 to math.min(abortAfterGroup, groups - 1) else 0 until groups
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(todo.size, 3))
+    // propagate the first failure in group order, unwrapped
+    try todo.map(g => pool.submit[Unit](() => doGroup(g))).foreach { f =>
+      try f.get() catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+    } finally pool.shutdownNow()
+    if (abortAfterGroup >= 0)
+      throw new IllegalStateException(s"simulated crash after group ${todo.last}")
 
     (listParquet(dataDir),
-      (0 until groups).flatMap(g => parseRows(readUtf8(marker(g)))).sortBy(_.head))
+      (0 until groups).flatMap(g => rowsOf(readJson(marker(g)))).sortBy(_.head))
   }
 
   /** Atomic snapshot flip: write the manifest to a committer-unique
-    * temp name, publish it to `snap-<n>.json` with create-if-absent
-    * semantics, then advance the version hint — a crash at any point
-    * leaves the previous snapshot intact and readable.
+    * temp name, then publish it to `snap-<n>.json` with create-if-absent
+    * semantics — a crash at any point leaves the previous snapshot
+    * intact and readable.
     *
     * Concurrency: two committers that both observed parent `n-1` race
     * for the same `snap-<n>.json`; exactly one publish succeeds and the
@@ -391,10 +376,9 @@ final class IceTable(val root: String, spark: SparkSession) {
       Some(schemaFields)))
     fs.mkdirs(metaDir)
     val tmp = new Path(metaDir, s".snap-$next.json.$commitId.tmp")
-    val o = fs.create(tmp, true); o.write(json.getBytes("UTF-8")); o.close()
+    val o = fs.create(tmp, true); o.write(json); o.close()
     if (!publishNew(tmp, snapPath(next)))
       throw new IceTable.ConcurrentCommitException(next, commitId)
-    val h = fs.create(hintPath, true); h.write(next.toString.getBytes("UTF-8")); h.close()
     next
   }
 
@@ -440,11 +424,11 @@ final class IceTable(val root: String, spark: SparkSession) {
   /** Compact the current snapshot: rewrite every live file into one
     * fresh overwrite-commit (Iceberg rewrite_data_files analogue) —
     * counters the small-file accumulation of per-micro-batch streaming
-    * appends with the commit's one exchange: one file per bucket. Old
-    * commit dirs become unreferenced once pre-compaction snapshots
-    * expire. */
-  def compact(commitId: String, groups: Int = 1): Long =
-    commit(read(), commitId, groups)
+    * appends with the commit's one exchange, in one group: one file per
+    * bucket. Old commit dirs become unreferenced once pre-compaction
+    * snapshots expire. */
+  def compact(commitId: String): Long =
+    commit(read(), commitId, 1)
 
   /** Commit-directory name referenced by a data file path. */
   private def commitDirOf(path: String): Option[String] =
@@ -539,82 +523,53 @@ final class IceTable(val root: String, spark: SparkSession) {
     out.sortBy(_.path).toSeq
   }
 
-  // ---- tiny dependency-free JSON (driver-side metadata only) ----------
+  // ---- JSON metadata (driver-side; Jackson tree API) -------------------
 
-  private def readUtf8(p: Path): String = {
+  private def readJson(p: Path): JsonNode = {
     val in = fs.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+    try Json.readTree(in) finally in.close()
   }
 
-  /** Lineage rows as positional arrays of longs in `LineageCols` order:
-    * no keys, so a bucket's `rows` can never shadow the snapshot's. */
-  private def renderRows(rows: Seq[Seq[Long]]): String =
-    rows.map(_.mkString("[", ",", "]")).mkString("[", ",", "]")
+  /** Lineage rows, stored as positional arrays of longs in
+    * `LineageCols` order. */
+  private def rowsOf(n: JsonNode): Seq[Seq[Long]] =
+    n.asScala.map(_.asScala.map(_.asLong).toSeq).toSeq
 
-  private def parseRows(txt: String): Seq[Seq[Long]] =
-    """\[(-?\d+(?:,-?\d+)*)\]""".r.findAllMatchIn(txt)
-      .map(_.group(1).split(',').map(_.toLong).toSeq).toSeq
-
-  private def q(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
-  private def renderSnapshot(s: Snapshot): String = {
-    val files = s.files.map { f =>
-      val stats = (f.statsMin, f.statsMax) match {
-        case (Some(lo), Some(hi)) => s""","min":$lo,"max":$hi"""
-        case _ => ""
-      }
-      s"""{"path":${q(f.path)},"bytes":${f.bytes}$stats}"""
-    }.mkString("[", ",", "]")
-    val schema = s.schemaFields
-      .map(fs => s""","schema":${fs.map(q).mkString("[", ",", "]")}""")
-      .getOrElse("")
-    s"""{"format_version":2,"snapshot_id":${s.id},"parent_id":${s.parentId},"commit_id":${q(s.commitId)},
-       |"rows":${s.rows},"lineage":${renderRows(s.lineage)}$schema,"files":$files}""".stripMargin
-  }
-
-  private def parseSnapshot(txt: String): Snapshot = {
-    // purpose-built parser for renderSnapshot's fixed shape; unknown
-    // keys are ignored (forward-tolerant), known keys are extracted by
-    // name so field ORDER never matters; format_version gates reads of
-    // manifests this reader does not understand
-    def longFieldOpt(k: String): Option[Long] =
-      (s""""$k":(-?\\d+)""").r.findFirstMatchIn(txt).map(_.group(1).toLong)
-    def longField(k: String): Long = longFieldOpt(k)
-      .getOrElse(throw new IllegalStateException(s"bad snapshot json: $k"))
-    def strField(k: String): String = {
-      val m = (s""""$k":"((?:[^"\\\\]|\\\\.)*)"""").r.findFirstMatchIn(txt)
-        .getOrElse(throw new IllegalStateException(s"bad snapshot json: $k"))
-      m.group(1).replace("\\\"", "\"").replace("\\\\", "\\")
+  private def renderSnapshot(s: Snapshot): Array[Byte] = {
+    val o = Json.createObjectNode().put("format_version", 2)
+      .put("snapshot_id", s.id).put("parent_id", s.parentId)
+      .put("commit_id", s.commitId).put("rows", s.rows)
+    o.set[JsonNode]("lineage", Json.valueToTree[JsonNode](s.lineage.map(_.toArray).toArray))
+    s.schemaFields.foreach(_.foldLeft(o.putArray("schema"))(_.add(_)))
+    val files = o.putArray("files")
+    s.files.foreach { f =>
+      val e = files.addObject().put("path", f.path).put("bytes", f.bytes)
+      for (lo <- f.statsMin; hi <- f.statsMax) e.put("min", lo).put("max", hi)
     }
-    val version = longFieldOpt("format_version").getOrElse(0L)
+    Json.writeValueAsBytes(o)
+  }
+
+  private def parseSnapshot(j: JsonNode): Snapshot = {
+    // unknown keys are ignored (forward-tolerant); format_version gates
+    // reads of manifests this reader does not understand
+    val version = j.path("format_version").asLong(0L)
     if (version != 2L)
       throw new IllegalStateException(s"snapshot format_version $version is unreadable: " +
         "this reader supports only 2 (format 1 and older store lineage as a path)")
-    val files = ("""\{"path":"((?:[^"\\]|\\.)*)","bytes":(\d+)(?:,"min":(-?\d+),"max":(-?\d+))?\}""").r
-      .findAllMatchIn(txt)
-      .map(m => DataFileEntry(
-        m.group(1).replace("\\\"", "\"").replace("\\\\", "\\"), m.group(2).toLong,
-        Option(m.group(3)).map(_.toLong), Option(m.group(4)).map(_.toLong)))
-      .toSeq
-    val schemaFields = (""""schema":\[((?:"(?:[^"\\]|\\.)*",?)*)\]""").r
-      .findFirstMatchIn(txt).map { m =>
-        ("""\"((?:[^"\\]|\\.)*)\"""").r.findAllMatchIn(m.group(1))
-          .map(_.group(1).replace("\\\"", "\"").replace("\\\\", "\\")).toSeq
-      }
-    val lineage = """"lineage":(\[(?:\[[-\d,]*\],?)*\])""".r.findFirstMatchIn(txt)
-      .map(m => parseRows(m.group(1)))
-      .getOrElse(throw new IllegalStateException("bad snapshot json: lineage"))
-    Snapshot(longField("snapshot_id"), longField("parent_id"),
-      strField("commit_id"), files, longField("rows"), lineage, schemaFields)
+    def field(k: String): JsonNode =
+      Option(j.get(k)).getOrElse(throw new IllegalStateException(s"bad snapshot json: $k"))
+    val files = j.path("files").asScala.map(f => DataFileEntry(
+      f.get("path").asText, f.get("bytes").asLong,
+      Option(f.get("min")).map(_.asLong), Option(f.get("max")).map(_.asLong))).toSeq
+    Snapshot(field("snapshot_id").asLong, field("parent_id").asLong,
+      field("commit_id").asText, files, field("rows").asLong, rowsOf(field("lineage")),
+      Option(j.get("schema")).map(_.asScala.map(_.asText).toSeq))
   }
 }
 
 object IceTable {
+  private val Json = new com.fasterxml.jackson.databind.ObjectMapper()
+
   /** A racing committer published this snapshot id first. The failed
     * commit's data dirs are unreferenced (expirable); retrying the
     * commit is cheap — finished-group markers skip the data rewrite. */

@@ -15,6 +15,14 @@ class EntrySmokeSpec extends AnyFunSuite {
     assert(df.columns.toSeq == Seq("url", "text", "spans", "lang", "error"))
   }
 
+  test("a second register leaves the registered functions as they are") {
+    val reg = spark.sessionState.functionRegistry
+    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("graft_extract")
+    val first = reg.lookupFunction(id).get
+    GraftSession.register(spark)
+    assert(reg.lookupFunction(id).get eq first)
+  }
+
   test("every queries key runs at sf0.001 and oracleSql keys are a subset") {
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet),
       "every oracle must have a query")

@@ -250,6 +250,30 @@ class IceTableSpec extends AnyFunSuite {
     }
   }
 
+  test("manifest codec: quote, backslash, control and Arabic characters round-trip") {
+    import org.apache.spark.sql.functions._
+    // the commit id lands in the data path, which cannot hold a
+    // backslash (a glob escape on Spark's read path) or non-ASCII (the
+    // JVM's file-name encoding follows the locale), so those two ride
+    // in a column name, which the manifest records in its schema and
+    // the read validates
+    val id = "q\"c\u0001"
+    val name = "n\"b\\s\u0001ع"
+    val table = new IceTable(tmpRoot("codec\"\u0001"), spark)
+    val df = spark.range(0, 20).select(col("id").as(name),
+      pmod(col("id"), lit(2)).cast("int").as("bucket"),
+      lit("نص").as("text"), lit(null).cast("string").as("error"))
+    val snap = table.readSnapshot(table.commitAppend(df, id))
+    assert(snap.commitId == id && snap.rows == 20L)
+    assert(snap.schemaFields.contains(Seq(name, "bucket", "text", "error")))
+    assert(snap.files.nonEmpty && snap.files.forall(_.path.contains("codec\"\u0001")),
+      snap.files.map(_.path))
+    assert(snap.files.forall(_.path.contains(s"/commit-$id/")), snap.files.map(_.path))
+    val back = table.read().select(col(s"`$name`"), col("text")).collect()
+    assert(back.map(_.getLong(0)).sorted.toSeq == (0L until 20L))
+    assert(back.forall(_.getString(1) == "نص"))
+  }
+
   test("commitAppend replay of the same commitId is idempotent") {
     import org.apache.spark.sql.functions._
     val root = tmpRoot("append-replay")

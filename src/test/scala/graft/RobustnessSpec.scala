@@ -97,6 +97,31 @@ class RobustnessSpec extends AnyFunSuite {
     assert(bad.error == "حدث خطأ: pdf: no content streams")
   }
 
+  test("pdf: a flate stream with a preset dictionary is an error row, not a hang") {
+    import org.scalatest.concurrent.{Signaler, ThreadSignaler}
+    import org.scalatest.concurrent.TimeLimits.failAfter
+    import org.scalatest.time.SpanSugar._
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
+    val content = "BT /F1 12 Tf 72 720 Td (needs a dictionary) Tj ET".getBytes("UTF-8")
+    val d = new java.util.zip.Deflater()
+    d.setDictionary("BT ET Tj Td Tf".getBytes("UTF-8"))
+    d.setInput(content); d.finish()
+    val buf = new Array[Byte](1024)
+    val body = java.util.Arrays.copyOf(buf, d.deflate(buf))
+    d.end()
+    val pdf = ("%PDF-1.4\n1 0 obj\n<< /Length " + body.length +
+      " /Filter /FlateDecode >>\nstream\n").getBytes("UTF-8") ++ body ++
+      "\nendstream\nendobj\ntrailer\n%%EOF\n".getBytes("UTF-8")
+    // extract on a daemon thread: a spinning inflate loop ignores
+    // interrupts, so the timeout interrupts the wait instead
+    implicit val signaler: Signaler = ThreadSignaler
+    val run = Future(Extractor.extract(pdf, "en"))(ExecutionContext.global)
+    val r = failAfter(10.seconds)(Await.result(run, Duration.Inf))
+    assert(r.text == null, r)
+    assert(r.error == Extractor.ErrorPrefix + "pdf: flate stream needs a preset dictionary")
+  }
+
   test("property: PdfGen roundtrip holds for arbitrary body strings") {
     import graft.pdf.PdfGen
     // printable ASCII (heavy on PDF syntax chars) and mixed unicode
