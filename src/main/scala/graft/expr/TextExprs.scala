@@ -7,6 +7,8 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.html.HtmlText
+
 /** Deterministic 64-bit hashing primitives shared by the text-analysis
   * expressions. FNV-1a and splitmix64 are fixed public algorithms —
   * results are bit-identical on every JVM (byte-identity discipline,
@@ -126,7 +128,7 @@ case class MinHashSig(child: Expression, k: Int)
 
 /** The SINGLE word-boundary scan shared by [[Shingles]] and
   * [[TokenWindowHashes]]: one definition of "a token" (whitespace =
-  * `BlockSegmenter.isWs`, Java whitespace + NBSP) for similarity
+  * `HtmlText.isWs`, Java whitespace + NBSP) for similarity
   * shingles and exact-substring windows alike — the same
   * one-implementation discipline as FusedSegmenter/classifyRaw. */
 private[expr] object WordBounds {
@@ -137,10 +139,10 @@ private[expr] object WordBounds {
     val ends = new scala.collection.mutable.ArrayBuffer[Int](64)
     var i = 0
     while (i < n) {
-      while (i < n && graft.html.BlockSegmenter.isWs(s.charAt(i))) i += 1
+      while (i < n && HtmlText.isWs(s.charAt(i))) i += 1
       if (i < n) {
         starts += i
-        while (i < n && !graft.html.BlockSegmenter.isWs(s.charAt(i))) i += 1
+        while (i < n && !HtmlText.isWs(s.charAt(i))) i += 1
         ends += i
       }
     }
@@ -345,17 +347,73 @@ case class LangId(child: Expression)
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
 
+/** The ONE `<a` start-tag scan, shared by [[Outlinks]] and [[Anchors]].
+  * x13's oracle freezes this scan and g4's the anchor-text rules built
+  * on it: change either only in lockstep with its oracle. Whitespace is
+  * `Character.isWhitespace` (no NBSP), as both oracles mirror. */
+private[expr] object AnchorTag {
+  @inline private def isWs(c: Char) = Character.isWhitespace(c)
+
+  /** Is s(i) the start of an `<a …>` tag? */
+  def isOpen(s: String, i: Int): Boolean = {
+    val n = s.length
+    s.charAt(i) == '<' && i + 1 < n &&
+      (s.charAt(i + 1) == 'a' || s.charAt(i + 1) == 'A') &&
+      (i + 2 >= n || isWs(s.charAt(i + 2)) || s.charAt(i + 2) == '>' ||
+        s.charAt(i + 2) == '/')
+  }
+
+  /** Quote-aware scan from the char after the tag name to the closing
+    * '>' (a '>' inside a quoted attribute value does not end the tag).
+    * `href` must be preceded by whitespace (so `data-href` never
+    * matches); its value may be quoted or bare and is returned raw.
+    * Returns (first href or null, index after '>' or the length). */
+  def scan(s: String, from: Int): (String, Int) = {
+    val n = s.length
+    var k = from
+    var href: String = null
+    while (k < n && s.charAt(k) != '>') {
+      val c = s.charAt(k)
+      if (c == '"' || c == '\'') { // quoted value of some attribute
+        k += 1
+        while (k < n && s.charAt(k) != c) k += 1
+        if (k < n) k += 1
+      } else if (href == null && isWs(c) && k + 4 < n &&
+          s.regionMatches(true, k + 1, "href", 0, 4)) {
+        var p = k + 5
+        while (p < n && isWs(s.charAt(p))) p += 1
+        if (p < n && s.charAt(p) == '=') {
+          p += 1
+          while (p < n && isWs(s.charAt(p))) p += 1
+          if (p < n && (s.charAt(p) == '"' || s.charAt(p) == '\'')) {
+            val q = s.charAt(p)
+            val st = p + 1
+            var e = st
+            while (e < n && s.charAt(e) != q) e += 1
+            href = s.substring(st, e)
+            k = math.min(e + 1, n)
+          } else { // bare value: up to whitespace or '>'
+            val st = p
+            var e = st
+            while (e < n && !isWs(s.charAt(e)) && s.charAt(e) != '>') e += 1
+            href = s.substring(st, e)
+            k = e
+          }
+        } else k += 1
+      } else k += 1
+    }
+    (href, if (k < n) k + 1 else n)
+  }
+}
+
 /** `graft_outlinks(html) -> ARRAY<STRING>` — href targets of `<a>`
   * tags in document order, duplicates preserved: the web-graph edge
   * primitive (outlink extraction feeds link-graph construction and
-  * u1-style URL canonicalization downstream). The scan is quote-aware
-  * exactly like [[graft.html.HtmlTokenizer]] (a '>' inside a quoted
-  * attribute value does not end the tag) but deliberately SEPARATE
-  * from it: the tokenizer's token stream is frozen by the
-  * FusedSegmenter equivalence + golden digests and carries no
-  * attributes, so link extraction must not touch it. `href` must be
-  * preceded by whitespace (so `data-href` never matches); values may
-  * be quoted or bare; hrefs are returned raw — canonicalize later. */
+  * u1-style URL canonicalization downstream). Each `<a` start tag is
+  * read by [[AnchorTag]]; the scan then resumes right after its '>',
+  * so an `<a` inside a nested tag's quoted attribute still counts
+  * (unlike [[Anchors]], which strips nested tags whole). Hrefs are
+  * returned raw — canonicalize later. */
 case class Outlinks(child: Expression)
     extends UnaryExpression with CodegenFallback {
   override def prettyName: String = "graft_outlinks"
@@ -364,47 +422,12 @@ case class Outlinks(child: Expression)
     val s = v.asInstanceOf[UTF8String].toString
     val n = s.length
     val out = new scala.collection.mutable.ArrayBuffer[Any](8)
-    @inline def isWs(c: Char) = Character.isWhitespace(c)
     var i = 0
     while (i < n) {
-      if (s.charAt(i) == '<' && i + 1 < n &&
-          (s.charAt(i + 1) == 'a' || s.charAt(i + 1) == 'A') &&
-          (i + 2 >= n || isWs(s.charAt(i + 2)) || s.charAt(i + 2) == '>' ||
-            s.charAt(i + 2) == '/')) {
-        var k = i + 2
-        var href: String = null
-        while (k < n && s.charAt(k) != '>') {
-          val c = s.charAt(k)
-          if (c == '"' || c == '\'') { // quoted value of some attribute
-            k += 1
-            while (k < n && s.charAt(k) != c) k += 1
-            if (k < n) k += 1
-          } else if (href == null && isWs(c) && k + 4 < n &&
-              s.regionMatches(true, k + 1, "href", 0, 4)) {
-            var p = k + 5
-            while (p < n && isWs(s.charAt(p))) p += 1
-            if (p < n && s.charAt(p) == '=') {
-              p += 1
-              while (p < n && isWs(s.charAt(p))) p += 1
-              if (p < n && (s.charAt(p) == '"' || s.charAt(p) == '\'')) {
-                val q = s.charAt(p)
-                val st = p + 1
-                var e = st
-                while (e < n && s.charAt(e) != q) e += 1
-                href = s.substring(st, e)
-                k = math.min(e + 1, n)
-              } else { // bare value: up to whitespace or '>'
-                val st = p
-                var e = st
-                while (e < n && !isWs(s.charAt(e)) && s.charAt(e) != '>') e += 1
-                href = s.substring(st, e)
-                k = e
-              }
-            } else k += 1
-          } else k += 1
-        }
+      if (AnchorTag.isOpen(s, i)) {
+        val (href, after) = AnchorTag.scan(s, i + 2)
         if (href != null) out += UTF8String.fromString(href)
-        i = k
+        i = after
       } else i += 1
     }
     new GenericArrayData(out.toArray)
@@ -416,10 +439,8 @@ case class Outlinks(child: Expression)
   * `<a>` tags with their visible anchor text, in document order: the
   * anchor-text primitive (inbound-anchor aggregation is a classic
   * web-corpus signal — target-page titling/description at link-graph
-  * scale). Tag scanning is quote-aware like [[Outlinks]] (deliberately
-  * re-implemented, not shared: Outlinks' exact scan is frozen by x13's
-  * oracle and must not move under a refactor). Anchor text rules,
-  * fixed and oracle-mirrorable:
+  * scale). The `<a` start tag is read by [[AnchorTag]], shared with
+  * [[Outlinks]]. Anchor text rules, fixed and oracle-mirrorable:
   *   - nested tags inside the anchor are stripped (`<b>`, `<img …>`);
   *   - a new `<a` start tag implicitly closes the open anchor (the
   *     HTML5 rule) and is re-scanned as the next anchor;
@@ -441,53 +462,10 @@ case class Anchors(child: Expression)
     val n = s.length
     val out = new scala.collection.mutable.ArrayBuffer[Any](8)
     @inline def isWs(c: Char) = Character.isWhitespace(c)
-    // is position i the start of an `<a ...>` tag?
-    @inline def isAnchorOpen(i: Int): Boolean =
-      s.charAt(i) == '<' && i + 1 < n &&
-        (s.charAt(i + 1) == 'a' || s.charAt(i + 1) == 'A') &&
-        (i + 2 >= n || isWs(s.charAt(i + 2)) || s.charAt(i + 2) == '>' ||
-          s.charAt(i + 2) == '/')
-    // quote-aware scan from the char after the tag name to the closing
-    // '>'; returns (hrefOrNull, index after '>')
-    def scanTag(from: Int): (String, Int) = {
-      var k = from
-      var href: String = null
-      while (k < n && s.charAt(k) != '>') {
-        val c = s.charAt(k)
-        if (c == '"' || c == '\'') {
-          k += 1
-          while (k < n && s.charAt(k) != c) k += 1
-          if (k < n) k += 1
-        } else if (href == null && isWs(c) && k + 4 < n &&
-            s.regionMatches(true, k + 1, "href", 0, 4)) {
-          var p = k + 5
-          while (p < n && isWs(s.charAt(p))) p += 1
-          if (p < n && s.charAt(p) == '=') {
-            p += 1
-            while (p < n && isWs(s.charAt(p))) p += 1
-            if (p < n && (s.charAt(p) == '"' || s.charAt(p) == '\'')) {
-              val q = s.charAt(p)
-              val st = p + 1
-              var e = st
-              while (e < n && s.charAt(e) != q) e += 1
-              href = s.substring(st, e)
-              k = math.min(e + 1, n)
-            } else {
-              val st = p
-              var e = st
-              while (e < n && !isWs(s.charAt(e)) && s.charAt(e) != '>') e += 1
-              href = s.substring(st, e)
-              k = e
-            }
-          } else k += 1
-        } else k += 1
-      }
-      (href, if (k < n) k + 1 else n)
-    }
     var i = 0
     while (i < n) {
-      if (isAnchorOpen(i)) {
-        val (href, bodyStart) = scanTag(i + 2)
+      if (AnchorTag.isOpen(s, i)) {
+        val (href, bodyStart) = AnchorTag.scan(s, i + 2)
         // collect visible text to </a>, EOF, or an implicit-close `<a`
         val sb = new java.lang.StringBuilder(32)
         var lastWs = true // leading ws is dropped (trim-left as we go)
@@ -502,19 +480,10 @@ case class Anchors(child: Expression)
               var e = j + 3
               while (e < n && s.charAt(e) != '>') e += 1
               resume = if (e < n) e + 1 else n
-            } else if (isAnchorOpen(j)) {
+            } else if (AnchorTag.isOpen(s, j)) {
               resume = j // implicit close — re-scan as the next anchor
             } else { // strip the nested tag, quote-aware
-              var e = j + 1
-              while (e < n && s.charAt(e) != '>') {
-                val q = s.charAt(e)
-                if (q == '"' || q == '\'') {
-                  e += 1
-                  while (e < n && s.charAt(e) != q) e += 1
-                  if (e < n) e += 1
-                } else e += 1
-              }
-              j = if (e < n) e + 1 else n
+              j = math.min(HtmlText.tagEnd(s, j + 1) + 1, n)
             }
           } else {
             if (isWs(c)) {
@@ -666,18 +635,8 @@ case class MetaTags(child: Expression)
                 canonical == null)
               canonical = attrs.get("href").orNull
             i = after
-          case _ =>
-            // skip any other tag quote-aware
-            var e = k
-            while (e < n && s.charAt(e) != '>') {
-              val q = s.charAt(e)
-              if (q == '"' || q == '\'') {
-                e += 1
-                while (e < n && s.charAt(e) != q) e += 1
-                if (e < n) e += 1
-              } else e += 1
-            }
-            i = if (e < n) e + 1 else n
+          case _ => // skip any other tag quote-aware
+            i = math.min(HtmlText.tagEnd(s, k) + 1, n)
         }
       } else i += 1
     }

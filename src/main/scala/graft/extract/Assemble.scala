@@ -1,6 +1,6 @@
 package graft.extract
 
-import graft.html.BlockSegmenter
+import graft.html.HtmlText
 import graft.html.FusedSegmenter.RawBlocks
 
 /** Span offsets into the assembled extracted text.
@@ -84,9 +84,9 @@ object Assemble {
   private def finish(
       raw: String,
       spans: scala.collection.mutable.ArrayBuffer[(Int, Int, String)]): (String, Seq[Span]) = {
-    val trimmed = BlockSegmenter.unicodeTrim(raw)
+    val trimmed = HtmlText.unicodeTrim(raw)
     var shift = 0 // leading-trim offset (0 whenever a header is present)
-    while (shift < raw.length && BlockSegmenter.isWs(raw.charAt(shift))) shift += 1
+    while (shift < raw.length && HtmlText.isWs(raw.charAt(shift))) shift += 1
     val adjusted = spans.toSeq.collect {
       case (s, e, k) if e - shift > 0 && s - shift < trimmed.length =>
         Span(math.max(0, s - shift), math.min(trimmed.length, e - shift), k)

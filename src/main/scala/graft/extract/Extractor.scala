@@ -4,7 +4,7 @@ import java.nio.charset.{CharacterCodingException, StandardCharsets}
 import java.nio.charset.CodingErrorAction
 import java.nio.ByteBuffer
 
-import graft.html.{BlockSegmenter, Boilerplate, FusedSegmenter}
+import graft.html.{Boilerplate, FusedSegmenter, HtmlText}
 import graft.html.FusedSegmenter.RawBlocks
 import graft.pdf.PdfSpans
 
@@ -88,8 +88,8 @@ object Extractor {
     } else {
       val rb = new RawBlocks
       ParagraphBreak.split(s, -1).foreach { para =>
-        val txt = BlockSegmenter.normalize(para)
-        if (txt.nonEmpty) rb.addText(1, 0, txt, BlockSegmenter.countWords(txt))
+        val txt = HtmlText.normalize(para)
+        if (txt.nonEmpty) rb.addText(1, 0, txt, HtmlText.countWords(txt))
       }
       keepAll(rb)
     }
@@ -99,8 +99,8 @@ object Extractor {
     val rb = new RawBlocks
     PdfSpans.parsePages(bytes).zipWithIndex.foreach { case (lines, i) =>
       if (lines.exists(_.nonEmpty)) {
-        val txt = lines.map(BlockSegmenter.normalize).mkString("\n")
-        rb.addText(i + 1, 0, txt, BlockSegmenter.countWords(txt))
+        val txt = lines.map(HtmlText.normalize).mkString("\n")
+        rb.addText(i + 1, 0, txt, HtmlText.countWords(txt))
       }
     }
     rb

@@ -113,8 +113,6 @@ object Boilerplate {
     * when the split is meaningful: both classes non-empty and the low
     * class mean ≤ `maxNoiseMean`.
     */
-  def otsu(hist: Array[Long]): Option[Int] = otsu(hist, Default.maxNoiseMean)
-
   def otsu(hist: Array[Long], maxNoiseMean: Int): Option[Int] = {
     val n = hist.length
     var total = 0L

@@ -1,6 +1,6 @@
 package graft.html
 
-import BlockSegmenter.isWs
+import HtmlText.{decodeEntityAt, indexOfCloseTag, isWs, tagEnd}
 
 /** Fused tokenizer+segmenter: one pass over the decoded HTML string,
   * zero intermediate token objects, text appended straight into one
@@ -11,10 +11,11 @@ import BlockSegmenter.isWs
   * keep per block, `Assemble.fromRaw` builds the text, and
   * `graft_explode_blocks` emits the blocks as rows. Block-for-block
   * identical to `BlockSegmenter.segment(HtmlTokenizer.tokenize(s))`,
-  * the readable reference pair — asserted by `FusedEquivalenceSpec`
-  * over generated corpora and by the frozen golden digests. Fused
-  * because the extraction hot loop is allocation-bound at high core
-  * counts (SURVEY.md §4.2: "hot loop must avoid overhead").
+  * the readable reference pair in test scope — asserted by
+  * `FusedEquivalenceSpec` over generated corpora and by the frozen
+  * golden digests. Fused because the extraction hot loop is
+  * allocation-bound at high core counts (SURVEY.md §4.2: "hot loop
+  * must avoid overhead").
   */
 object FusedSegmenter {
 
@@ -81,7 +82,7 @@ object FusedSegmenter {
   private final val T_RAWTEXT = 8    // script/style
 
   /** Classify a lowercase tag name located at s[from,until) without
-    * allocating. Mirrors BlockSegmenter's tag sets exactly. */
+    * allocating. Mirrors the reference BlockSegmenter's tag sets exactly. */
   private def tagId(s: String, from: Int, until: Int): Int = {
     val len = until - from
     @inline def is(t: String): Boolean = {
@@ -184,38 +185,15 @@ object FusedSegmenter {
       blockBoiler = boilerDepth > 0
     }
 
-    // append one decoded character of text content
-    @inline private def emitChar(c: Char): Unit = {
-      if (isWs(c)) {
-        if (norm.length > blockStart) pendingSpace = true
-        inWord = false
-      } else {
-        if (pendingSpace) { norm.append(' '); pendingSpace = false }
-        norm.append(c)
-        if (!inWord) {
-          inWord = true
-          words += 1
-          if (aDepth > 0) linkWords += 1
-          if (boilerDepth > 0) blockBoiler = true
-        }
-      }
-    }
-    @inline private def emitString(t: String): Unit = {
-      var k = 0
-      while (k < t.length) { emitChar(t.charAt(k)); k += 1 }
-    }
-
-    /** Emit a text run html[from,until) known to contain no '<'/'&':
-      * whitespace-delimited word segments are appended in BULK
-      * (StringBuilder.append(seq, start, end) — one capacity check and
-      * one array copy per segment instead of per char), with the exact
-      * per-char state transitions of emitChar at the segment
-      * boundaries. The emitChar fold and this run loop are
-      * step-equivalent: each ws char performs the same
+    /** Emit decoded text content s[from,until) — a raw text run, an
+      * entity's replacement or a literal '<'. Whitespace-delimited word
+      * segments are appended in BULK (StringBuilder.append(seq, start,
+      * end) — one capacity check and one array copy per segment instead
+      * of per char); this is step-equivalent to the per-char fold
+      * of normalize/countWords: each ws char performs the same
       * pendingSpace/inWord updates, and a maximal non-ws segment is
-      * emitChar's "first char starts the word, rest append". */
-    private def emitRun(from: Int, until: Int): Unit = {
-      val s = html
+      * "first char starts the word, rest append". */
+    private def emitRun(s: String, from: Int, until: Int): Unit = {
       var k = from
       while (k < until) {
         val c = s.charAt(k)
@@ -244,21 +222,17 @@ object FusedSegmenter {
     while (i < n) {
       val c = html.charAt(i)
       if (c == '&') {
-        if (dropDepth == 0) {
-          val (rep, next) = HtmlTokenizer.decodeEntityAtPublic(html, i)
-          emitString(rep); i = next
-        } else {
-          val (_, next) = HtmlTokenizer.decodeEntityAtPublic(html, i)
-          i = next
-        }
+        val (rep, next) = decodeEntityAt(html, i)
+        if (dropDepth == 0) emitRun(rep, 0, rep.length)
+        i = next
       } else if (c != '<') {
         // bulk text run: consume to the next markup/entity character
         var e = i + 1
         while (e < n && { val ch = html.charAt(e); ch != '<' && ch != '&' }) e += 1
-        if (dropDepth == 0) emitRun(i, e)
+        if (dropDepth == 0) emitRun(html, i, e)
         i = e
       } else if (i + 1 >= n) {
-        if (dropDepth == 0) emitChar(c)
+        if (dropDepth == 0) emitRun(html, i, n)
         i += 1
       } else {
         val c1 = html.charAt(i + 1)
@@ -302,20 +276,9 @@ object FusedSegmenter {
           val ns = j
           while (j < n && isNameChar(html.charAt(j))) j += 1
           val ne = j
-          // skip attrs honoring quotes
-          var selfClose = false
-          var done = false
-          while (j < n && !done) {
-            val a = html.charAt(j)
-            if (a == '"' || a == '\'') {
-              val q = html.indexOf(a, j + 1)
-              j = if (q < 0) n else q + 1
-            } else if (a == '>') {
-              selfClose = j > 0 && html.charAt(j - 1) == '/'
-              j += 1; done = true
-            } else j += 1
-          }
-          i = j
+          val end = tagEnd(html, j)
+          val selfClose = end < n && html.charAt(end - 1) == '/'
+          i = math.min(end + 1, n)
           val id = tagId(html, ns, ne)
           if (isBlockBoundary(id)) flush()
           if (!selfClose) {
@@ -331,7 +294,7 @@ object FusedSegmenter {
               case T_RAWTEXT =>
                 // raw-text element: skip to matching close tag
                 val name = html.substring(ns, ne).toLowerCase
-                val closeAt = HtmlTokenizer.indexOfCloseTagPublic(html, i, name)
+                val closeAt = indexOfCloseTag(html, i, name)
                 if (closeAt < 0) i = n
                 else {
                   val end2 = html.indexOf('>', closeAt)
@@ -341,7 +304,7 @@ object FusedSegmenter {
             }
           }
         } else {
-          if (dropDepth == 0) emitChar(c)
+          if (dropDepth == 0) emitRun(html, i, i + 1)
           i += 1
         }
       }

@@ -277,9 +277,14 @@ final class IceTable(val root: String, spark: SparkSession) {
     * the data files and every group's lineage rows, read from the
     * markers: a group finished by an earlier run keeps the lineage of
     * the data it wrote. With `abortAfterGroup` = g ≥ 0 only groups
-    * 0..g run, then it throws (the simulated crash of the test hook). */
+    * 0..g run, then it throws (the simulated crash of the test hook).
+    * The commit id names the data directory, which the read path globs,
+    * so an empty id, a path or glob character, or non-ASCII (the JVM's
+    * file-name encoding follows the locale) is refused up front. */
   private def writeGroups(df: DataFrame, commitId: String, groups: Int,
                           abortAfterGroup: Int): (Seq[DataFileEntry], Seq[Seq[Long]]) = {
+    require(commitId.nonEmpty && commitId.forall(c => c < 128 && "/\\[]{}*?".indexOf(c) < 0),
+      s"commit id '$commitId' cannot be a directory name: use non-empty ASCII without / \\ [ ] { } * ?")
     require(groups >= 1, s"groups must be >= 1, got $groups")
     val dataDir = new Path(root, s"data/commit-$commitId")
     val progressDir = new Path(metaDir, s"progress/$commitId")

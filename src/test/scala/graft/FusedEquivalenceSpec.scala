@@ -42,7 +42,12 @@ class FusedEquivalenceSpec extends AnyFunSuite {
       "<h1>h<h2>g</h2></h1><p>body body body</p>", "</>", "< p>not a tag</ p>",
       "<ul><li>a</li>between<li>b</li></ul>", "<title>t</title>x",
       "<p>&#1605;&#1585;&#1581;&#1576;&#1575;</p>", "a<br/>b<br />c",
-      "text &hellip", "&;x", "<div class='q\">'>z</div>")
+      "text &hellip", "&;x", "<div class='q\">'>z</div>",
+      // quote-aware tag ends: unterminated quote, self-close forms
+      "<p class=\"x>y", "<br/>a", "<div a='>'/>b", "<p x=\">\"/ >c",
+      "<nav/>x<script src='>'/>y",
+      // entity replacements inside and between words
+      "a&amp;b c&#32;d", "x&nbsp;y")
     nasty.foreach { s =>
       assert(segment(s) == unfused(s), s"input: $s")
     }

@@ -130,6 +130,24 @@ class IceTableSpec extends AnyFunSuite {
     assert(table.currentSnapshotId.isEmpty)
   }
 
+  test("a commit id that cannot be a directory name is refused before anything is written") {
+    import org.apache.spark.sql.functions._
+    val root = tmpRoot("badid")
+    val table = new IceTable(root, spark)
+    val df = spark.range(0, 10).select(col("id"),
+      pmod(col("id"), lit(2)).cast("int").as("bucket"),
+      lit("t").as("text"), lit(null).cast("string").as("error"))
+    // non-ASCII fails every write task; `[`/`{`/`*` are globbed on
+    // read; `/` nests the data directory
+    Seq("ع", "a[1]", "a*", "a/b").foreach { id =>
+      val e = intercept[IllegalArgumentException] { table.commit(df, id, groups = 2) }
+      assert(e.getMessage.contains(s"commit id '$id' cannot be a directory name"), e.getMessage)
+    }
+    val data = new java.io.File(root, "data")
+    assert(Option(data.list()).getOrElse(Array.empty[String]).forall(!_.startsWith("commit-")))
+    assert(table.currentSnapshotId.isEmpty)
+  }
+
   test("a format-1 manifest (lineage stored as a path) fails by name") {
     val root = tmpRoot("v1")
     val meta = new java.io.File(root, "metadata")

@@ -383,6 +383,9 @@ class OpsSpec extends AnyFunSuite {
       .collect().head.getSeq[String](0)
     assert(bin == Seq("/ب"))
     assert(links("<p>no anchors</p>") == Seq())
+    // an `<a` inside a nested tag's quoted attribute is still an
+    // outlink (graft_anchors strips that nested tag whole)
+    assert(links("<a href=\"x\">t<b title=\"<a href=y>\">u</b></a>") == Seq("x", "y"))
   }
 
   test("integer pagerank: sinks accumulate, determinism, driver recompute") {
@@ -849,6 +852,10 @@ class OpsSpec extends AnyFunSuite {
     // nested tag with quoted '>' inside is stripped whole
     assert(anchors("<a href=\"/z\">x <img alt=\"y>z\"> w</a>") ==
       Seq("/z" -> "x w"))
+    // an `<a` inside a nested tag's quoted attribute is stripped with
+    // the tag (graft_outlinks still reports it)
+    assert(anchors("<a href=\"x\">t<b title=\"<a href=y>\">u</b></a>") ==
+      Seq("x" -> "tu"))
   }
 
   test("t19 length quantiles: histogram rule equals sorted-order percentiles") {

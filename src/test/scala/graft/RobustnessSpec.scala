@@ -85,7 +85,7 @@ class RobustnessSpec extends AnyFunSuite {
           flate = true)))
       val r = Extractor.extract(pdf, "en")
       assert(r.error == null, s"body='$body': ${r.error}")
-      val normBody = graft.html.BlockSegmenter.normalize(body)
+      val normBody = graft.html.HtmlText.normalize(body)
       val expected =
         "--- صفحة 1 ---\nL1\n" + normBody + "\n\n--- صفحة 2 ---\nP2\nhex ok"
       assert(r.text == expected, s"body='$body': got '${r.text}'")
@@ -140,7 +140,7 @@ class RobustnessSpec extends AnyFunSuite {
       val r = Extractor.extract(pdf, "en")
       assert(r.error == null, s"seed=$i body='${body.take(60)}': ${r.error}")
       val expected = "--- صفحة 1 ---\nL1\n" +
-        graft.html.BlockSegmenter.normalize(body) + "\n\n--- صفحة 2 ---\nP2"
+        graft.html.HtmlText.normalize(body) + "\n\n--- صفحة 2 ---\nP2"
       assert(r.text == expected, s"seed=$i body='${body.take(60)}'")
     }
   }
@@ -165,7 +165,7 @@ class RobustnessSpec extends AnyFunSuite {
   test("PDF and plain payloads: engine-invariant, block view matches the spans") {
     import graft.extract.Engine
     import graft.expr.ExplodeBlocks
-    import graft.html.BlockSegmenter.countWords
+    import graft.html.HtmlText.countWords
     import graft.pdf.PdfGen
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions.BoundReference
@@ -200,7 +200,7 @@ class RobustnessSpec extends AnyFunSuite {
   }
 
   test("unicode trim handles NBSP like Python str.strip") {
-    import graft.html.BlockSegmenter.unicodeTrim
+    import graft.html.HtmlText.unicodeTrim
     assert(unicodeTrim(" \u00A0x\u00A0 \t\n") == "x")
     assert(unicodeTrim(" a ") == "a")
     assert(unicodeTrim("") == "")

@@ -2,6 +2,8 @@ package graft.html
 
 import scala.collection.mutable.ArrayBuffer
 
+import HtmlText.{countWords, normalize}
+
 /** Tag-driven block segmentation over the token stream.
   *
   * Mirrors the reference's page/block model (reference:
@@ -17,8 +19,9 @@ import scala.collection.mutable.ArrayBuffer
   * crop (main_window.py:355-359: only the selected region is OCR'd).
   *
   * With `HtmlTokenizer.tokenize` this is the readable reference
-  * implementation that `FusedSegmenter.segmentRaw` (the path extraction
-  * runs on) must match block for block — `FusedEquivalenceSpec`.
+  * implementation, kept in test scope, that `FusedSegmenter.segmentRaw`
+  * (the path extraction runs on) must match block for block —
+  * `FusedEquivalenceSpec`. Both share main's `HtmlText` primitives.
   */
 object BlockSegmenter {
 
@@ -106,49 +109,5 @@ object BlockSegmenter {
     }
     flush()
     out.toIndexedSeq
-  }
-
-  /** Whitespace set: Java whitespace plus NBSP (Python str.strip strips
-    * Unicode spaces — reference F8 byte-identity note, SURVEY.md §2.8). */
-  @inline def isWs(c: Char): Boolean =
-    Character.isWhitespace(c) || c == '\u00A0'
-
-  /** Collapse whitespace runs to single spaces and trim (Unicode-aware,
-    * matching Python str.strip semantics — main_window.py:370,385). */
-  def normalize(s: String): String = {
-    val n = s.length
-    val b = new java.lang.StringBuilder(n)
-    var i = 0
-    var pendingSpace = false
-    while (i < n) {
-      val c = s.charAt(i)
-      if (isWs(c)) { if (b.length > 0) pendingSpace = true }
-      else {
-        if (pendingSpace) { b.append(' '); pendingSpace = false }
-        b.append(c)
-      }
-      i += 1
-    }
-    b.toString
-  }
-
-  def countWords(s: String): Int = {
-    var i = 0; val n = s.length
-    var w = 0; var inWord = false
-    while (i < n) {
-      val ws = isWs(s.charAt(i))
-      if (!ws && !inWord) { w += 1; inWord = true }
-      else if (ws) inWord = false
-      i += 1
-    }
-    w
-  }
-
-  /** Unicode-aware trim matching Python str.strip (reference F8). */
-  def unicodeTrim(s: String): String = {
-    var a = 0; var b = s.length
-    while (a < b && isWs(s.charAt(a))) a += 1
-    while (b > a && isWs(s.charAt(b - 1))) b -= 1
-    if (a == 0 && b == s.length) s else s.substring(a, b)
   }
 }

@@ -2,6 +2,8 @@ package graft.html
 
 import scala.collection.mutable.ArrayBuffer
 
+import HtmlText.{decodeEntityAt, indexOfCloseTag}
+
 /** Streaming HTML tokenizer — no DOM tree materialization.
   *
   * Domain analogue of the reference's raster preprocess chain
@@ -23,19 +25,6 @@ object HtmlTokenizer {
   final case class Close(name: String) extends Tok
 
   private val RAW_TEXT_TAGS = Set("script", "style")
-
-  /** Fixed, versioned entity table (byte-identity relevant — see
-    * SURVEY.md §7.7). Unknown entities are left verbatim. */
-  private val ENTITIES: Map[String, String] = Map(
-    "amp" -> "&", "lt" -> "<", "gt" -> ">", "quot" -> "\"",
-    "apos" -> "'", "nbsp" -> " ", "copy" -> "©",
-    "reg" -> "®", "trade" -> "™", "hellip" -> "…",
-    "mdash" -> "—", "ndash" -> "–", "ldquo" -> "“",
-    "rdquo" -> "”", "lsquo" -> "‘", "rsquo" -> "’",
-    "laquo" -> "«", "raquo" -> "»", "times" -> "×",
-    "bull" -> "•", "middot" -> "·", "deg" -> "°",
-    "euro" -> "€", "pound" -> "£", "cent" -> "¢",
-    "sect" -> "§", "para" -> "¶", "shy" -> "")
 
   def tokenize(html: String): IndexedSeq[Tok] = {
     val out = new ArrayBuffer[Tok](64)
@@ -120,67 +109,4 @@ object HtmlTokenizer {
     (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z')
   private def isNameChar(c: Char): Boolean =
     isNameStart(c) || (c >= '0' && c <= '9') || c == '-' || c == ':'
-
-  /** Shared with FusedSegmenter (same semantics, fused hot path). */
-  def decodeEntityAtPublic(html: String, i: Int): (String, Int) = decodeEntityAt(html, i)
-  def indexOfCloseTagPublic(html: String, from: Int, name: String): Int =
-    indexOfCloseTag(html, from, name)
-
-  /** Case-insensitive search for "</name" followed by '>' or whitespace. */
-  private def indexOfCloseTag(html: String, from: Int, name: String): Int = {
-    val needle = "</" + name
-    var i = from
-    val n = html.length
-    while (i >= 0 && i < n) {
-      i = indexOfIgnoreCase(html, needle, i)
-      if (i >= 0) {
-        val after = i + needle.length
-        if (after >= n || html.charAt(after) == '>' ||
-            Character.isWhitespace(html.charAt(after))) return i
-        i += 1
-      }
-    }
-    -1
-  }
-
-  private def indexOfIgnoreCase(h: String, needle: String, from: Int): Int = {
-    val n = h.length; val m = needle.length
-    var i = from
-    while (i + m <= n) {
-      var k = 0
-      while (k < m && Character.toLowerCase(h.charAt(i + k)) == needle.charAt(k)) k += 1
-      if (k == m) return i
-      i += 1
-    }
-    -1
-  }
-
-  /** Decode one entity starting at `i` (html(i) == '&').
-    * Returns (replacement, nextIndex); unknown → ("&", i+1) literal. */
-  private def decodeEntityAt(html: String, i: Int): (String, Int) = {
-    val n = html.length
-    val semi = {
-      var j = i + 1
-      val lim = math.min(n, i + 12)
-      while (j < lim && html.charAt(j) != ';') j += 1
-      if (j < lim && j < n && html.charAt(j) == ';') j else -1
-    }
-    if (semi < 0 || semi == i + 1) return ("&", i + 1)
-    val body = html.substring(i + 1, semi)
-    if (body.charAt(0) == '#') {
-      val num = body.substring(1)
-      val cp =
-        try {
-          if (num.nonEmpty && (num.charAt(0) == 'x' || num.charAt(0) == 'X'))
-            Integer.parseInt(num.substring(1), 16)
-          else Integer.parseInt(num)
-        } catch { case _: NumberFormatException => -1 }
-      if (cp >= 0 && cp <= 0x10ffff && Character.isValidCodePoint(cp))
-        (new String(Character.toChars(cp)), semi + 1)
-      else ("&", i + 1)
-    } else ENTITIES.get(body) match {
-      case Some(rep) => (rep, semi + 1)
-      case None      => ("&", i + 1)
-    }
-  }
 }
