@@ -1,13 +1,14 @@
 package graft.expr
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.extract.Extractor
+import graft.html.FusedSegmenter.RawBlocks
 
 /** `graft_extract(html BINARY, lang STRING) ->
   *   STRUCT<text:STRING, spans:ARRAY<STRUCT<start:INT,end:INT,kind:STRING>>, error:STRING>`
@@ -35,20 +36,25 @@ case class ExtractMainText(left: Expression, right: Expression,
 
   override def nullable: Boolean = false
 
-  // html=null behaves like an empty payload; lang=null like "en".
+  // html=null behaves like an empty payload. The text is encoded
+  // straight from the assembled buffer, and the spans are built from
+  // its int arrays; `lang` does not change extraction.
   override def eval(input: InternalRow): Any = {
-    val htmlAny = left.eval(input)
-    val langAny = right.eval(input)
-    val html = if (htmlAny == null) Array.emptyByteArray else htmlAny.asInstanceOf[Array[Byte]]
-    val lang = if (langAny == null) "en" else langAny.toString
-    val r = Extractor.extract(html, lang, engine)
-    val spans = new GenericArrayData(r.spans.map { s =>
-      InternalRow(s.start, s.end, UTF8String.fromString(s.kind))
-    }.toArray[Any])
-    InternalRow(
-      if (r.text == null) null else UTF8String.fromString(r.text),
-      spans,
-      if (r.error == null) null else UTF8String.fromString(r.error))
+    val html = left.eval(input).asInstanceOf[Array[Byte]]
+    Extractor.extractAssembled(html, engine) match {
+      case Right(a) =>
+        val spans = new Array[Any](a.n)
+        var k = 0
+        while (k < a.n) {
+          spans(k) = new GenericInternalRow(
+            Array[Any](a.starts(k), a.ends(k), ExtractMainText.KindNames(a.kindIds(k))))
+          k += 1
+        }
+        new GenericInternalRow(Array[Any](
+          ExtractMainText.utf8(a.buf, a.from, a.until), new GenericArrayData(spans), null))
+      case Left(error) =>
+        InternalRow(null, new GenericArrayData(Array.empty[Any]), UTF8String.fromString(error))
+    }
   }
 
   override protected def withNewChildrenInternal(
@@ -66,4 +72,55 @@ object ExtractMainText {
     StructField("text", StringType, nullable = true),
     StructField("spans", ArrayType(spanType, containsNull = false), nullable = false),
     StructField("error", StringType, nullable = true)))
+
+  /** Span kind names by kind id (`RawBlocks.KindNames`), prebuilt once
+    * for every span and block row. */
+  val KindNames: Array[UTF8String] = RawBlocks.KindNames.map(UTF8String.fromString)
+
+  /** UTF-8 of `buf[from, until)`, as `UTF8String.fromString` gives for
+    * the same chars: a surrogate pair is one 4-byte sequence and a lone
+    * surrogate is '?', as `String.getBytes` writes it. */
+  def utf8(buf: Array[Char], from: Int, until: Int): UTF8String = {
+    var size = until - from
+    var i = from
+    while (i < until) {
+      val c = buf(i)
+      if (c >= 0x80) { // one byte counted; a lone surrogate stays one
+        if (c < 0x800) size += 1
+        else if (!Character.isSurrogate(c)) size += 2
+        else if (pairAt(buf, i, until)) { size += 2; i += 1 }
+      }
+      i += 1
+    }
+    val out = new Array[Byte](size)
+    var o = 0
+    i = from
+    while (i < until) {
+      val c = buf(i)
+      if (c < 0x80) { out(o) = c.toByte; o += 1 }
+      else if (c < 0x800) {
+        out(o) = (0xC0 | c >> 6).toByte
+        out(o + 1) = (0x80 | c & 0x3F).toByte
+        o += 2
+      } else if (!Character.isSurrogate(c)) {
+        out(o) = (0xE0 | c >> 12).toByte
+        out(o + 1) = (0x80 | c >> 6 & 0x3F).toByte
+        out(o + 2) = (0x80 | c & 0x3F).toByte
+        o += 3
+      } else if (pairAt(buf, i, until)) {
+        val cp = Character.toCodePoint(c, buf(i + 1))
+        out(o) = (0xF0 | cp >> 18).toByte
+        out(o + 1) = (0x80 | cp >> 12 & 0x3F).toByte
+        out(o + 2) = (0x80 | cp >> 6 & 0x3F).toByte
+        out(o + 3) = (0x80 | cp & 0x3F).toByte
+        o += 4
+        i += 1
+      } else { out(o) = '?'; o += 1 }
+      i += 1
+    }
+    UTF8String.fromBytes(out)
+  }
+
+  @inline private def pairAt(buf: Array[Char], i: Int, until: Int): Boolean =
+    Character.isHighSurrogate(buf(i)) && i + 1 < until && Character.isLowSurrogate(buf(i + 1))
 }

@@ -30,24 +30,50 @@ object Assemble {
 
   def header(idx: Int): String = s"--- صفحة $idx ---"
 
+  /** One assembled document: its text is `buf[from, until)`, and span
+    * `k` (of `n`) is `[starts(k), ends(k))` in that text with kind id
+    * `kindIds(k)` (0=content 1=heading 2=list); offsets are Java chars. */
+  final class Assembled(val buf: Array[Char], val from: Int, val until: Int,
+      val n: Int, val starts: Array[Int], val ends: Array[Int], val kindIds: Array[Int]) {
+    def text: String = new String(buf, from, until - from)
+    def spans: List[Span] =
+      List.tabulate(n)(k => Span(starts(k), ends(k), RawBlocks.KindNames(kindIds(k))))
+  }
+
+  /** The blank document (no text, no spans). */
+  val Empty = new Assembled(Array.emptyCharArray, 0, 0, 0,
+    Array.emptyIntArray, Array.emptyIntArray, Array.emptyIntArray)
+
   /** Assemble the kept blocks into the final text plus spans
     * addressing each block inside that text. */
   def fromRaw(rb: RawBlocks, keep: Array[Boolean]): (String, Seq[Span]) =
     fromRawDual(rb, keep, null)
 
-  /** Dual-engine assembly ("كلاهما" = both): per part, engine A's kept
-    * blocks then engine B's, where B's first block follows A's last
-    * with NO separator — the reference concatenates the two engines'
-    * page text directly (`text_block += tess.strip(); text_block +=
-    * easy.strip()`, main_window.py:363-374) — while blocks WITHIN one
-    * engine's output stay "\n"-joined. A part appears iff either
-    * engine kept a block in it. `keepB == null` assembles engine A
-    * alone (`fromRaw`). One pass per part: the header opens at the
-    * part's first kept block. */
+  /** `assemble` as a `String` and its `Span`s. */
   def fromRawDual(rb: RawBlocks, keepA: Array[Boolean],
                   keepB: Array[Boolean]): (String, Seq[Span]) = {
-    val sb = new java.lang.StringBuilder(512)
-    val spans = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, String)]
+    val a = assemble(rb, keepA, keepB)
+    (a.text, a.spans)
+  }
+
+  /** The one assembler loop. Dual-engine assembly ("كلاهما" = both):
+    * per part, engine A's kept blocks then engine B's, where B's first
+    * block follows A's last with NO separator — the reference
+    * concatenates the two engines' page text directly (`text_block +=
+    * tess.strip(); text_block += easy.strip()`, main_window.py:363-374)
+    * — while blocks WITHIN one engine's output stay "\n"-joined. A part
+    * appears iff either engine kept a block in it. `keepB == null`
+    * assembles engine A alone (`fromRaw`). One pass per part: the
+    * header opens at the part's first kept block. The final Unicode
+    * trim is a range of the buffer, with the spans shifted and clipped
+    * to it. */
+  def assemble(rb: RawBlocks, keepA: Array[Boolean], keepB: Array[Boolean]): Assembled = {
+    val out = new Out(rb.len + 64)
+    var n = 0
+    val maxSpans = if (keepB == null) rb.n else 2 * rb.n
+    val starts = new Array[Int](maxSpans)
+    val ends = new Array[Int](maxSpans)
+    val kindIds = new Array[Int](maxSpans)
     var from = 0
     while (from < rb.n) {
       val part = rb.parts(from)
@@ -62,14 +88,15 @@ object Assemble {
         while (keep != null && i < until) {
           if (keep(i)) {
             if (!open) {
-              if (sb.length > 0) sb.append("\n\n")
-              sb.append(header(part)).append('\n')
+              if (out.len > 0) out.put("\n\n")
+              out.put(header(part)); out.put("\n")
               open = true
-            } else if (!firstBlock) sb.append('\n')
+            } else if (!firstBlock) out.put("\n")
             firstBlock = false
-            val start = sb.length
-            sb.append(rb.buf, rb.starts(i), rb.ends(i))
-            spans += ((start, sb.length, rb.kindName(i)))
+            starts(n) = out.len
+            out.put(rb.buf, rb.starts(i), rb.ends(i))
+            ends(n) = out.len; kindIds(n) = rb.kindIds(i)
+            n += 1
           }
           i += 1
         }
@@ -77,20 +104,37 @@ object Assemble {
       }
       from = until
     }
-    finish(sb.toString, spans)
+    // Unicode trim (Python str.strip, SURVEY.md §2.8 F8); the leading
+    // trim is 0 whenever a header is present
+    val buf = out.buf
+    var a = 0; var b = out.len
+    while (a < b && HtmlText.isWs(buf(a))) a += 1
+    while (b > a && HtmlText.isWs(buf(b - 1))) b -= 1
+    var kept = 0
+    var k = 0
+    while (k < n) {
+      if (ends(k) > a && starts(k) < b) {
+        starts(kept) = math.max(starts(k), a) - a
+        ends(kept) = math.min(ends(k), b) - a
+        kindIds(kept) = kindIds(k)
+        kept += 1
+      }
+      k += 1
+    }
+    new Assembled(buf, a, b, kept, starts, ends, kindIds)
   }
 
-  /** Final Unicode trim, with the spans shifted and clipped to it. */
-  private def finish(
-      raw: String,
-      spans: scala.collection.mutable.ArrayBuffer[(Int, Int, String)]): (String, Seq[Span]) = {
-    val trimmed = HtmlText.unicodeTrim(raw)
-    var shift = 0 // leading-trim offset (0 whenever a header is present)
-    while (shift < raw.length && HtmlText.isWs(raw.charAt(shift))) shift += 1
-    val adjusted = spans.toSeq.collect {
-      case (s, e, k) if e - shift > 0 && s - shift < trimmed.length =>
-        Span(math.max(0, s - shift), math.min(trimmed.length, e - shift), k)
+  /** The growable output buffer of `assemble`. */
+  private final class Out(capacity: Int) {
+    var buf = new Array[Char](capacity)
+    var len = 0
+    private def ensure(k: Int): Unit =
+      if (len + k > buf.length) buf = java.util.Arrays.copyOf(buf, math.max(len + k, 2 * buf.length))
+    def put(s: String): Unit = {
+      ensure(s.length); s.getChars(0, s.length, buf, len); len += s.length
     }
-    (trimmed, adjusted)
+    def put(src: Array[Char], from: Int, until: Int): Unit = {
+      ensure(until - from); System.arraycopy(src, from, buf, len, until - from); len += until - from
+    }
   }
 }

@@ -112,21 +112,27 @@ object Extractor {
   def extract(payload: Array[Byte], lang: String): ExtractResult =
     extract(payload, lang, Engine.Default)
 
-  def extract(payload: Array[Byte], lang: String, engine: Engine): ExtractResult = {
-    if (payload == null || payload.isEmpty)
-      return ExtractResult("", Nil, null) // blank input contract (FIXTURES.md §3)
+  def extract(payload: Array[Byte], lang: String, engine: Engine): ExtractResult =
+    extractAssembled(payload, engine) match {
+      case Right(a) => ExtractResult(a.text, a.spans, null)
+      case Left(error) => ExtractResult(null, Nil, error)
+    }
+
+  /** One payload through `recognize` and `Assemble.assemble`: `Right`
+    * the assembled document (`Assemble.Empty` for a null or empty
+    * payload — the blank input contract, FIXTURES.md §3), `Left` the
+    * error-row message of a payload that fails. The one error-row
+    * mapping; `extract` and `graft_extract` both read it. */
+  def extractAssembled(payload: Array[Byte], engine: Engine): Either[String, Assemble.Assembled] = {
+    if (payload == null || payload.isEmpty) return Right(Assemble.Empty)
     try {
       val r = recognize(payload, engine)
-      val (text, spans) = Assemble.fromRawDual(r.blocks, r.keep, r.keepAlt)
-      ExtractResult(text, spans, null)
+      Right(Assemble.assemble(r.blocks, r.keep, r.keepAlt))
     } catch {
-      case InvalidUtf8 =>
-        ExtractResult(null, Nil, ErrorPrefix + InvalidUtf8.getMessage)
-      case e: PdfSpans.PdfParseException =>
-        ExtractResult(null, Nil, ErrorPrefix + "pdf: " + e.getMessage)
-      case e: Exception =>
-        // never fail the task (error-as-row policy); deterministic message
-        ExtractResult(null, Nil, ErrorPrefix + e.getClass.getSimpleName)
+      case InvalidUtf8 => Left(ErrorPrefix + InvalidUtf8.getMessage)
+      case e: PdfSpans.PdfParseException => Left(ErrorPrefix + "pdf: " + e.getMessage)
+      // never fail the task (error-as-row policy); deterministic message
+      case e: Exception => Left(ErrorPrefix + e.getClass.getSimpleName)
     }
   }
 

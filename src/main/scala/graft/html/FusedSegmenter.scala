@@ -1,10 +1,10 @@
 package graft.html
 
-import HtmlText.{decodeEntityAt, indexOfCloseTag, isWs, tagEnd}
+import HtmlText.{entityAt, entityCodePoint, entityNext, indexOfCloseTag, isWs, tagEnd, NoChar}
 
 /** Fused tokenizer+segmenter: one pass over the decoded HTML string,
-  * zero intermediate token objects, text appended straight into one
-  * shared per-document buffer with entities decoded inline.
+  * zero intermediate token objects, text folded straight into one
+  * shared per-document `char[]` with entities decoded in place.
   *
   * Its `RawBlocks` are the one in-memory segmentation representation
   * between a payload and its output: `Boilerplate.classifyRaw` decides
@@ -20,14 +20,17 @@ import HtmlText.{decodeEntityAt, indexOfCloseTag, isWs, tagEnd}
 object FusedSegmenter {
 
   /** Range-based segmentation result — the allocation-light hot-path
-    * representation: ALL block text lives in ONE shared buffer per
-    * document; a block is (part, kindId, start, end, words, linkWords,
-    * boiler) where [start,end) indexes `buf`. Compared to one String +
-    * one Block object per block this removes the dominant per-block
-    * allocations (the extraction loop is memory-bandwidth-bound at
-    * high core counts — BASELINE.md). kindId: 0=content 1=heading
-    * 2=list. */
-  final class RawBlocks {
+    * representation: ALL block text lives in ONE shared `char[]` per
+    * document, `buf[0, len)`; a block is (part, kindId, start, end,
+    * words, linkWords, boiler) where [start,end) indexes `buf`.
+    * Compared to one String + one Block object per block this removes
+    * the dominant per-block allocations (the extraction loop is
+    * memory-bandwidth-bound at high core counts — BASELINE.md).
+    * kindId: 0=content 1=heading 2=list. `capacity` presizes `buf`:
+    * `segmentRaw` fills it with the source and folds the block text in
+    * place (see `Seg`), so its buffer never regrows. */
+  final class RawBlocks(capacity: Int) {
+    def this() = this(512)
     var n = 0
     var parts = new Array[Int](32)
     var kindIds = new Array[Int](32)
@@ -36,7 +39,8 @@ object FusedSegmenter {
     var words = new Array[Int](32)
     var linkWords = new Array[Int](32)
     var boiler = new Array[Boolean](32)
-    val buf = new java.lang.StringBuilder(512)
+    var buf = new Array[Char](capacity)
+    var len = 0
 
     def add(part: Int, kindId: Int, start: Int, end: Int,
             w: Int, lw: Int, b: Boolean): Unit = {
@@ -58,13 +62,16 @@ object FusedSegmenter {
     /** Append `text` verbatim as one non-boilerplate block with no link
       * words (PDF pages, plain-text paragraphs, generator ground truth). */
     def addText(part: Int, kindId: Int, text: String, w: Int): Unit = {
-      val start = buf.length
-      buf.append(text)
-      add(part, kindId, start, buf.length, w, 0, false)
+      val start = len
+      if (len + text.length > buf.length)
+        buf = java.util.Arrays.copyOf(buf, math.max(len + text.length, 2 * buf.length))
+      text.getChars(0, text.length, buf, len)
+      len += text.length
+      add(part, kindId, start, len, w, 0, false)
     }
 
     def kindName(i: Int): String = RawBlocks.KindNames(kindIds(i))
-    def text(i: Int): String = buf.substring(starts(i), ends(i))
+    def text(i: Int): String = new String(buf, starts(i), ends(i) - starts(i))
   }
   object RawBlocks {
     val KindNames: Array[String] = Array("content", "heading", "list")
@@ -148,8 +155,13 @@ object FusedSegmenter {
     * char-for-char identical (FusedEquivalenceSpec + the frozen golden
     * digest attest). */
   private final class Seg(html: String) {
-    private[this] val rb = new RawBlocks
     private[this] val n = html.length
+    // the source chars fill the block buffer, and text is folded into
+    // it in place: the block text so far is never longer than the
+    // source so far (a char, an entity or a whitespace run gives at most
+    // as many chars as it spans), so no write reaches a char not yet read
+    private[this] val rb = new RawBlocks(n)
+    html.getChars(0, n, rb.buf, 0)
 
     // segmentation state (mirrors BlockSegmenter.segment)
     private[this] var part = 1
@@ -162,8 +174,7 @@ object FusedSegmenter {
     // block accumulation: normalized text appended straight into the
     // shared doc buffer (the unfused path normalizes at flush; direct
     // normalization is equivalent because normalize() is a streaming
-    // fold); the current block is buf[blockStart, buf.length)
-    private[this] val norm = rb.buf
+    // fold); the current block is rb.buf[blockStart, rb.len)
     private[this] var blockStart = 0
     private[this] var pendingSpace = false
     private[this] var words = 0
@@ -172,67 +183,89 @@ object FusedSegmenter {
     private[this] var blockBoiler = false
 
     private def flush(): Unit = {
-      if (norm.length > blockStart) {
+      if (rb.len > blockStart) {
         val kindId =
           if (headingDepth > 0) 1
           else if (liDepth > 0) 2
           else 0
-        rb.add(part, kindId, blockStart, norm.length, words, linkWords, blockBoiler)
+        rb.add(part, kindId, blockStart, rb.len, words, linkWords, blockBoiler)
       }
-      blockStart = norm.length
+      blockStart = rb.len
       pendingSpace = false
       words = 0; linkWords = 0; inWord = false
       blockBoiler = boilerDepth > 0
     }
 
-    /** Emit decoded text content s[from,until) — a raw text run, an
-      * entity's replacement or a literal '<'. Whitespace-delimited word
-      * segments are appended in BULK (StringBuilder.append(seq, start,
-      * end) — one capacity check and one array copy per segment instead
-      * of per char); this is step-equivalent to the per-char fold
-      * of normalize/countWords: each ws char performs the same
-      * pendingSpace/inWord updates, and a maximal non-ws segment is
-      * "first char starts the word, rest append". */
-    private def emitRun(s: String, from: Int, until: Int): Unit = {
+    @inline private def startWord(): Unit = {
+      inWord = true
+      words += 1
+      if (aDepth > 0) linkWords += 1
+      if (boilerDepth > 0) blockBoiler = true
+    }
+
+    /** Fold the text run at `from` into the block, up to the next '<'
+      * or '&'; returns where it stopped. This is the per-char fold of
+      * normalize/countWords: a whitespace char sets pendingSpace (once
+      * the block has text) and ends the word; a non-whitespace char
+      * first writes any pending space, and starts a word if none is
+      * open. The rest of a word is copied in a tight inner loop. Reads
+      * and writes the one buffer (see `rb`). */
+    private def text(from: Int): Int = {
+      val buf = rb.buf
+      var len = rb.len
       var k = from
-      while (k < until) {
-        val c = s.charAt(k)
+      var c = '\u0000'
+      while (k < n && { c = buf(k); c != '<' && c != '&' }) {
+        k += 1
         if (isWs(c)) {
-          if (norm.length > blockStart) pendingSpace = true
+          if (len > blockStart) pendingSpace = true
           inWord = false
-          k += 1
         } else {
-          var j = k + 1
-          while (j < until && !isWs(s.charAt(j))) j += 1
-          if (pendingSpace) { norm.append(' '); pendingSpace = false }
-          norm.append(s, k, j)
-          if (!inWord) {
-            inWord = true
-            words += 1
-            if (aDepth > 0) linkWords += 1
-            if (boilerDepth > 0) blockBoiler = true
+          if (pendingSpace) { buf(len) = ' '; len += 1; pendingSpace = false }
+          if (!inWord) startWord()
+          buf(len) = c; len += 1
+          while (k < n && { c = buf(k); !endsWord(c) }) {
+            buf(len) = c; len += 1; k += 1
           }
-          k = j
         }
       }
+      rb.len = len
+      k
     }
+
+    /** Fold one decoded char (an entity's replacement or a literal '&'
+      * or '<') into the block, as `text` folds a source char. */
+    private def emit(c: Char): Unit =
+      if (isWs(c)) {
+        if (rb.len > blockStart) pendingSpace = true
+        inWord = false
+      } else {
+        if (pendingSpace) { rb.buf(rb.len) = ' '; rb.len += 1; pendingSpace = false }
+        if (!inWord) startWord()
+        rb.buf(rb.len) = c; rb.len += 1
+      }
 
     def run(): RawBlocks = {
     var i = 0
     while (i < n) {
       val c = html.charAt(i)
       if (c == '&') {
-        val (rep, next) = decodeEntityAt(html, i)
-        if (dropDepth == 0) emitRun(rep, 0, rep.length)
-        i = next
+        val r = entityAt(html, i)
+        val cp = entityCodePoint(r)
+        if (dropDepth == 0 && cp != NoChar) {
+          if (cp < Character.MIN_SUPPLEMENTARY_CODE_POINT) emit(cp.toChar)
+          else { emit(Character.highSurrogate(cp)); emit(Character.lowSurrogate(cp)) }
+        }
+        i = entityNext(r)
       } else if (c != '<') {
-        // bulk text run: consume to the next markup/entity character
-        var e = i + 1
-        while (e < n && { val ch = html.charAt(e); ch != '<' && ch != '&' }) e += 1
-        if (dropDepth == 0) emitRun(html, i, e)
-        i = e
+        if (dropDepth == 0) i = text(i)
+        else {
+          // dropped text: skip to the next markup/entity character
+          i += 1
+          while (i < n && { val ch = html.charAt(i); ch != '<' && ch != '&' }) i += 1
+        }
       } else if (i + 1 >= n) {
-        if (dropDepth == 0) emitRun(html, i, n)
+        if (dropDepth == 0) emit('<')
         i += 1
       } else {
         val c1 = html.charAt(i + 1)
@@ -293,8 +326,8 @@ object FusedSegmenter {
                 seenArticle = true
               case T_RAWTEXT =>
                 // raw-text element: skip to matching close tag
-                val name = html.substring(ns, ne).toLowerCase
-                val closeAt = indexOfCloseTag(html, i, name)
+                val closeAt = indexOfCloseTag(html, i,
+                  if (ne - ns == 6) "script" else "style")
                 if (closeAt < 0) i = n
                 else {
                   val end2 = html.indexOf('>', closeAt)
@@ -304,7 +337,7 @@ object FusedSegmenter {
             }
           }
         } else {
-          if (dropDepth == 0) emitRun(html, i, i + 1)
+          if (dropDepth == 0) emit('<')
           i += 1
         }
       }
@@ -313,6 +346,13 @@ object FusedSegmenter {
     rb
     }
   }
+
+  /** Bit `c` is set for each char `c` below '@' that ends a word in a
+    * text run: whitespace, '<' and '&'. */
+  private final val WordEnds = HtmlText.AsciiWs | 1L << '<' | 1L << '&'
+
+  @inline private def endsWord(c: Char): Boolean =
+    if (c < '@') (WordEnds >>> c & 1L) != 0 else isWs(c)
 
   @inline private def isNameStart(c: Char): Boolean =
     (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z')

@@ -9,46 +9,66 @@ package graft.html
 object HtmlText {
 
   /** Fixed, versioned entity table (byte-identity relevant — see
-    * SURVEY.md §7.7). Unknown entities are left verbatim. */
-  private val ENTITIES: Map[String, String] = Map(
-    "amp" -> "&", "lt" -> "<", "gt" -> ">", "quot" -> "\"",
-    "apos" -> "'", "nbsp" -> " ", "copy" -> "©",
-    "reg" -> "®", "trade" -> "™", "hellip" -> "…",
-    "mdash" -> "—", "ndash" -> "–", "ldquo" -> "“",
-    "rdquo" -> "”", "lsquo" -> "‘", "rsquo" -> "’",
-    "laquo" -> "«", "raquo" -> "»", "times" -> "×",
-    "bull" -> "•", "middot" -> "·", "deg" -> "°",
-    "euro" -> "€", "pound" -> "£", "cent" -> "¢",
-    "sect" -> "§", "para" -> "¶", "shy" -> "")
+    * SURVEY.md §7.7): `EntityNames(k)` decodes to `EntityChars(k)`,
+    * except `shy`, which decodes to nothing. Unknown entities are left
+    * verbatim. */
+  private val EntityNames: Array[String] = Array(
+    "amp", "lt", "gt", "quot", "apos", "nbsp", "copy", "reg", "trade",
+    "hellip", "mdash", "ndash", "ldquo", "rdquo", "lsquo", "rsquo",
+    "laquo", "raquo", "times", "bull", "middot", "deg", "euro", "pound",
+    "cent", "sect", "para", "shy")
+  private val EntityChars = "&<>\"'\u00A0©®™…—–“”‘’«»×•·°€£¢§¶"
 
-  /** Decode one entity starting at `i` (html(i) == '&').
-    * Returns (replacement, nextIndex); unknown → ("&", i+1) literal. */
-  def decodeEntityAt(html: String, i: Int): (String, Int) = {
-    val n = html.length
-    val semi = {
-      var j = i + 1
-      val lim = math.min(n, i + 12)
-      while (j < lim && html.charAt(j) != ';') j += 1
-      if (j < lim && j < n && html.charAt(j) == ';') j else -1
-    }
-    if (semi < 0 || semi == i + 1) return ("&", i + 1)
-    val body = html.substring(i + 1, semi)
-    if (body.charAt(0) == '#') {
-      val num = body.substring(1)
-      val cp =
-        try {
-          if (num.nonEmpty && (num.charAt(0) == 'x' || num.charAt(0) == 'X'))
-            Integer.parseInt(num.substring(1), 16)
-          else Integer.parseInt(num)
-        } catch { case _: NumberFormatException => -1 }
-      if (cp >= 0 && cp <= 0x10ffff && Character.isValidCodePoint(cp))
-        (new String(Character.toChars(cp)), semi + 1)
-      else ("&", i + 1)
-    } else ENTITIES.get(body) match {
-      case Some(rep) => (rep, semi + 1)
-      case None      => ("&", i + 1)
-    }
+  /** Code point of `entityAt` for an entity that decodes to nothing. */
+  final val NoChar = -1
+  private final val Malformed = -2
+
+  /** Decode the entity at `i` (s(i) == '&') in place; nothing is
+    * allocated except the exception of a malformed numeric body. Returns `(next << 32) | (codePoint & 0xffffffffL)`;
+    * read it with `entityNext` and `entityCodePoint`. The code point is
+    * `NoChar` for an entity that decodes to nothing, and an unknown or
+    * malformed entity is a literal '&' with `next == i + 1`.
+    *
+    * The body is what lies between the '&' and the first ';' within
+    * the next 11 chars. A named body matches the fixed table exactly; a
+    * numeric body (`#` digits, or `#x`/`#X` hex digits) parses as
+    * `Integer.parseInt` parses it — an optional sign, `Character.digit`
+    * digits, overflow is malformed — and must be a valid code point. */
+  def entityAt(s: String, i: Int): Long = {
+    val lim = math.min(s.length, i + 12)
+    var semi = i + 1
+    while (semi < lim && s.charAt(semi) != ';') semi += 1
+    val cp =
+      if (semi >= lim || semi == i + 1) Malformed
+      else if (s.charAt(i + 1) == '#') {
+        val hex = semi > i + 2 && (s.charAt(i + 2) == 'x' || s.charAt(i + 2) == 'X')
+        val v = if (hex) parseInt(s, i + 3, semi, 16) else parseInt(s, i + 2, semi, 10)
+        if (v >= 0 && v <= Character.MAX_CODE_POINT) v else Malformed
+      } else namedEntity(s, i + 1, semi)
+    if (cp == Malformed) (i + 1).toLong << 32 | '&'
+    else (semi + 1).toLong << 32 | (cp & 0xffffffffL)
   }
+
+  @inline def entityNext(r: Long): Int = (r >>> 32).toInt
+  @inline def entityCodePoint(r: Long): Int = r.toInt
+
+  private def namedEntity(s: String, from: Int, until: Int): Int = {
+    var k = 0
+    while (k < EntityNames.length) {
+      val name = EntityNames(k)
+      if (name.length == until - from && name.charAt(0) == s.charAt(from) &&
+          s.regionMatches(from, name, 0, name.length))
+        return if (k < EntityChars.length) EntityChars.charAt(k).toInt else NoChar
+      k += 1
+    }
+    Malformed
+  }
+
+  /** `Integer.parseInt` of `s[from, until)`, read in place; -1 where it
+    * throws. */
+  private def parseInt(s: String, from: Int, until: Int, radix: Int): Int =
+    try Integer.parseInt(s, from, until, radix)
+    catch { case _: NumberFormatException => -1 }
 
   /** Case-insensitive search for "</name" followed by '>' or whitespace. */
   def indexOfCloseTag(html: String, from: Int, name: String): Int = {
@@ -67,14 +87,16 @@ object HtmlText {
     -1
   }
 
+  /** `needle` starts with '<', which has no other case: only the
+    * positions of a '<' are candidates. */
   private def indexOfIgnoreCase(h: String, needle: String, from: Int): Int = {
     val n = h.length; val m = needle.length
-    var i = from
-    while (i + m <= n) {
-      var k = 0
+    var i = h.indexOf('<', from)
+    while (i >= 0 && i + m <= n) {
+      var k = 1
       while (k < m && Character.toLowerCase(h.charAt(i + k)) == needle.charAt(k)) k += 1
       if (k == m) return i
-      i += 1
+      i = h.indexOf('<', i + 1)
     }
     -1
   }
@@ -97,9 +119,17 @@ object HtmlText {
   }
 
   /** Whitespace set: Java whitespace plus NBSP (Python str.strip strips
-    * Unicode spaces — reference F8 byte-identity note, SURVEY.md §2.8). */
+    * Unicode spaces — reference F8 byte-identity note, SURVEY.md §2.8).
+    * Below U+1680 (the first non-ASCII Java whitespace) the set is
+    * spelled out — one mask test below '@', NBSP above it — so the hot
+    * loops skip the Unicode table there. */
   @inline def isWs(c: Char): Boolean =
-    Character.isWhitespace(c) || c == '\u00A0'
+    if (c < '@') (AsciiWs >>> c & 1L) != 0
+    else c == '\u00A0' || c >= '\u1680' && Character.isWhitespace(c)
+
+  /** Bit `c` is set for each whitespace char `c` below '@':
+    * '\t'..'\r' (bits 9-13) and '\u001C'..' ' (bits 28-32). */
+  final val AsciiWs = 0x1F0003E00L
 
   /** Collapse whitespace runs to single spaces and trim (Unicode-aware,
     * matching Python str.strip semantics — main_window.py:370,385). */

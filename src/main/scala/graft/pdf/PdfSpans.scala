@@ -28,6 +28,10 @@ object PdfSpans {
 
   final class PdfParseException(msg: String) extends Exception(msg)
 
+  /** Cap on the inflated bytes of one flate stream: a small flate bomb
+    * becomes an error row instead of taking the executor heap. */
+  final val MaxInflatedBytes = 64 << 20
+
   /** Parse PDF bytes → ordered pages, each a Seq of text lines. */
   def parsePages(bytes: Array[Byte]): Seq[Seq[String]] = {
     if (bytes.length < 5 || !startsWith(bytes, "%PDF"))
@@ -122,6 +126,8 @@ object PdfSpans {
           throw new PdfParseException("flate stream needs a preset dictionary")
         if (k == 0 && inf.needsInput())
           throw new PdfParseException("truncated flate stream")
+        if (buf.size > MaxInflatedBytes - k)
+          throw new PdfParseException(s"flate stream inflates past $MaxInflatedBytes bytes")
         buf.write(chunk, 0, k)
       }
       buf.toByteArray

@@ -47,7 +47,15 @@ class FusedEquivalenceSpec extends AnyFunSuite {
       "<p class=\"x>y", "<br/>a", "<div a='>'/>b", "<p x=\">\"/ >c",
       "<nav/>x<script src='>'/>y",
       // entity replacements inside and between words
-      "a&amp;b c&#32;d", "x&nbsp;y")
+      "a&amp;b c&#32;d", "x&nbsp;y",
+      // numeric entities by Integer.parseInt's rules, surrogates,
+      // malformed bodies, case, a missing ';', the 12-char window
+      "&#+65;", "&#-0;", "&#x+41;", "&#\u0661\u0662;", "&#2147483648;", "&#xD800;",
+      "&#x1F600;", "&#;", "&#x;", "&AMP;", "&hellip", "&abcdefghijk;",
+      // every name in the entity table
+      "&amp;&lt;&gt;&quot;&apos;&nbsp;&copy;&reg;&trade;&hellip;&mdash;" +
+        "&ndash;&ldquo;&rdquo;&lsquo;&rsquo;&laquo;&raquo;&times;&bull;" +
+        "&middot;&deg;&euro;&pound;&cent;&sect;&para;&shy;x")
     nasty.foreach { s =>
       assert(segment(s) == unfused(s), s"input: $s")
     }

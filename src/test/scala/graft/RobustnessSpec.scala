@@ -206,4 +206,93 @@ class RobustnessSpec extends AnyFunSuite {
     assert(unicodeTrim("") == "")
     assert(unicodeTrim(" ") == "")
   }
+
+  /** Extract on a daemon thread under a fixed time limit (a loop that
+    * ignores interrupts cannot hold the test); the result and seconds. */
+  private def extractWithin(seconds: Int)(payload: Array[Byte]): (graft.extract.ExtractResult, Double) = {
+    import org.scalatest.concurrent.{Signaler, ThreadSignaler}
+    import org.scalatest.concurrent.TimeLimits.failAfter
+    import org.scalatest.time.SpanSugar._
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
+    implicit val signaler: Signaler = ThreadSignaler
+    val t0 = System.nanoTime()
+    val run = Future(Extractor.extract(payload, "en"))(ExecutionContext.global)
+    val r = failAfter(seconds.seconds)(Await.result(run, Duration.Inf))
+    (r, (System.nanoTime() - t0) / 1e9)
+  }
+
+  test("pdf: a flate bomb is an error row, not an exhausted heap") {
+    val zeros = new Array[Byte](1 << 20)
+    val d = new java.util.zip.Deflater()
+    val body = new java.io.ByteArrayOutputStream()
+    val buf = new Array[Byte](1 << 16)
+    (0 until 256).foreach { _ => // 256 MiB of zeros
+      d.setInput(zeros)
+      while (!d.needsInput()) body.write(buf, 0, d.deflate(buf))
+    }
+    d.finish()
+    while (!d.finished()) body.write(buf, 0, d.deflate(buf))
+    d.end()
+    val pdf = ("%PDF-1.4\n1 0 obj\n<< /Length " + body.size +
+      " /Filter /FlateDecode >>\nstream\n").getBytes("UTF-8") ++ body.toByteArray ++
+      "\nendstream\nendobj\ntrailer\n%%EOF\n".getBytes("UTF-8")
+    val (r, _) = extractWithin(60)(pdf)
+    assert(r.text == null, r)
+    assert(r.error == Extractor.ErrorPrefix +
+      s"pdf: flate stream inflates past ${PdfSpans.MaxInflatedBytes} bytes")
+  }
+
+  test("html: a 64 MiB page and a page nested 100k tags deep extract in bounded time") {
+    val para = "<p>lorem ipsum &amp; dolor sit amet, consectetur adipiscing elit " +
+      "sed do eiusmod tempor incididunt ut labore et dolore magna aliqua</p>\n"
+    val page = new java.io.ByteArrayOutputStream(64 << 20)
+    page.write("<html><body><article>".getBytes("UTF-8"))
+    val p = para.getBytes("UTF-8")
+    while (page.size + p.length <= (64 << 20) - 64) page.write(p)
+    page.write("</article></body></html>".getBytes("UTF-8"))
+    val (big, bigS) = extractWithin(120)(page.toByteArray)
+    assert(big.error == null && big.text.startsWith("--- صفحة 1 ---\nlorem ipsum & dolor"))
+    info(f"64 MiB page: ${bigS}%.2f s, ${big.text.length} chars, ${big.spans.length} spans")
+
+    val words = (1 to 30).map(i => s"deep$i").mkString(" ")
+    val nested = ("<div>" * 100000 + words + "</div>" * 100000).getBytes("UTF-8")
+    val (deep, deepS) = extractWithin(60)(nested)
+    assert(deep.text == "--- صفحة 1 ---\n" + words, deep)
+    info(f"100k-deep page: ${deepS}%.2f s")
+  }
+
+  test("isWs fast path: Java whitespace plus NBSP on every char") {
+    (0 until 65536).foreach { i =>
+      val c = i.toChar
+      assert(graft.html.HtmlText.isWs(c) == (Character.isWhitespace(c) || c == '\u00A0'), f"U+$i%04X")
+    }
+  }
+
+  test("graft_extract row: surrogates and spans as the String path gives them") {
+    import graft.expr.ExtractMainText
+    import graft.extract.Span
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.types.{BinaryType, StringType}
+    import org.apache.spark.unsafe.types.UTF8String
+    val words = (1 to 30).map(i => s"word$i").mkString(" ")
+    val html = s"<html><body><h1>title</h1><p>$words &#xD800; &#x1F600; &#xD800;&#x1F600; " +
+      s"x&#xDC00;y &#55296;</p><ul><li>$words</li></ul><p>$words &#xD800;</p></body></html>"
+    val payload = html.getBytes("UTF-8")
+    val r = Extractor.extract(payload, "en")
+    assert(r.error == null && r.text.contains("\uD800 \uD83D\uDE00 \uD800\uD83D\uDE00") &&
+      r.text.endsWith("\uD800"), r)
+    val expr = ExtractMainText(BoundReference(0, BinaryType, nullable = true),
+      BoundReference(1, StringType, nullable = true))
+    val row = expr.eval(InternalRow(payload, UTF8String.fromString("en"))).asInstanceOf[InternalRow]
+    assert(row.getUTF8String(0).getBytes.toSeq == UTF8String.fromString(r.text).getBytes.toSeq)
+    val spans = row.getArray(1)
+    val rowSpans = (0 until spans.numElements()).map { k =>
+      val s = spans.getStruct(k, 3)
+      Span(s.getInt(0), s.getInt(1), s.getUTF8String(2).toString)
+    }
+    assert(rowSpans == r.spans && rowSpans.map(_.kind).toSet == Set("heading", "content", "list"))
+    assert(row.isNullAt(2))
+  }
 }

@@ -2,7 +2,7 @@ package graft.html
 
 import scala.collection.mutable.ArrayBuffer
 
-import HtmlText.{decodeEntityAt, indexOfCloseTag}
+import HtmlText.indexOfCloseTag
 
 /** Streaming HTML tokenizer — no DOM tree materialization.
   *
@@ -25,6 +25,51 @@ object HtmlTokenizer {
   final case class Close(name: String) extends Tok
 
   private val RAW_TEXT_TAGS = Set("script", "style")
+
+  /** Fixed, versioned entity table (byte-identity relevant — see
+    * SURVEY.md §7.7). Unknown entities are left verbatim. */
+  private val ENTITIES: Map[String, String] = Map(
+    "amp" -> "&", "lt" -> "<", "gt" -> ">", "quot" -> "\"",
+    "apos" -> "'", "nbsp" -> " ", "copy" -> "©",
+    "reg" -> "®", "trade" -> "™", "hellip" -> "…",
+    "mdash" -> "—", "ndash" -> "–", "ldquo" -> "“",
+    "rdquo" -> "”", "lsquo" -> "‘", "rsquo" -> "’",
+    "laquo" -> "«", "raquo" -> "»", "times" -> "×",
+    "bull" -> "•", "middot" -> "·", "deg" -> "°",
+    "euro" -> "€", "pound" -> "£", "cent" -> "¢",
+    "sect" -> "§", "para" -> "¶", "shy" -> "")
+
+  /** Decode one entity starting at `i` (html(i) == '&').
+    * Returns (replacement, nextIndex); unknown → ("&", i+1) literal.
+    * The reference tokenizer's own decoder, with its own copy of the
+    * table: `FusedEquivalenceSpec` checks main's allocation-free
+    * `HtmlText.entityAt` against it. */
+  private[html] def decodeEntityAt(html: String, i: Int): (String, Int) = {
+    val n = html.length
+    val semi = {
+      var j = i + 1
+      val lim = math.min(n, i + 12)
+      while (j < lim && html.charAt(j) != ';') j += 1
+      if (j < lim && j < n && html.charAt(j) == ';') j else -1
+    }
+    if (semi < 0 || semi == i + 1) return ("&", i + 1)
+    val body = html.substring(i + 1, semi)
+    if (body.charAt(0) == '#') {
+      val num = body.substring(1)
+      val cp =
+        try {
+          if (num.nonEmpty && (num.charAt(0) == 'x' || num.charAt(0) == 'X'))
+            Integer.parseInt(num.substring(1), 16)
+          else Integer.parseInt(num)
+        } catch { case _: NumberFormatException => -1 }
+      if (cp >= 0 && cp <= 0x10ffff && Character.isValidCodePoint(cp))
+        (new String(Character.toChars(cp)), semi + 1)
+      else ("&", i + 1)
+    } else ENTITIES.get(body) match {
+      case Some(rep) => (rep, semi + 1)
+      case None      => ("&", i + 1)
+    }
+  }
 
   def tokenize(html: String): IndexedSeq[Tok] = {
     val out = new ArrayBuffer[Tok](64)
