@@ -4,6 +4,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{CollectionGenerator, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.extract.{Engine, Extractor}
 
@@ -51,7 +52,7 @@ case class ExplodeBlocks(child: Expression)
     val rb = r.blocks
     (0 until rb.n).map { i =>
       InternalRow(rb.parts(i), i, ExtractMainText.KindNames(rb.kindIds(i)),
-        ExtractMainText.utf8(rb.buf, rb.starts(i), rb.ends(i)), rb.words(i), rb.linkWords(i), r.keep(i))
+        UTF8String.fromString(rb.text(i)), rb.words(i), rb.linkWords(i), r.keep(i))
     }
   }
 

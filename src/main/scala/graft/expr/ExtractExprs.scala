@@ -36,9 +36,9 @@ case class ExtractMainText(left: Expression, right: Expression,
 
   override def nullable: Boolean = false
 
-  // html=null behaves like an empty payload. The text is encoded
-  // straight from the assembled buffer, and the spans are built from
-  // its int arrays; `lang` does not change extraction.
+  // html=null behaves like an empty payload. The spans are built
+  // straight from the assembled int arrays; `lang` does not change
+  // extraction.
   override def eval(input: InternalRow): Any = {
     val html = left.eval(input).asInstanceOf[Array[Byte]]
     Extractor.extractAssembled(html, engine) match {
@@ -51,7 +51,7 @@ case class ExtractMainText(left: Expression, right: Expression,
           k += 1
         }
         new GenericInternalRow(Array[Any](
-          ExtractMainText.utf8(a.buf, a.from, a.until), new GenericArrayData(spans), null))
+          UTF8String.fromString(a.text), new GenericArrayData(spans), null))
       case Left(error) =>
         InternalRow(null, new GenericArrayData(Array.empty[Any]), UTF8String.fromString(error))
     }
@@ -76,51 +76,4 @@ object ExtractMainText {
   /** Span kind names by kind id (`RawBlocks.KindNames`), prebuilt once
     * for every span and block row. */
   val KindNames: Array[UTF8String] = RawBlocks.KindNames.map(UTF8String.fromString)
-
-  /** UTF-8 of `buf[from, until)`, as `UTF8String.fromString` gives for
-    * the same chars: a surrogate pair is one 4-byte sequence and a lone
-    * surrogate is '?', as `String.getBytes` writes it. */
-  def utf8(buf: Array[Char], from: Int, until: Int): UTF8String = {
-    var size = until - from
-    var i = from
-    while (i < until) {
-      val c = buf(i)
-      if (c >= 0x80) { // one byte counted; a lone surrogate stays one
-        if (c < 0x800) size += 1
-        else if (!Character.isSurrogate(c)) size += 2
-        else if (pairAt(buf, i, until)) { size += 2; i += 1 }
-      }
-      i += 1
-    }
-    val out = new Array[Byte](size)
-    var o = 0
-    i = from
-    while (i < until) {
-      val c = buf(i)
-      if (c < 0x80) { out(o) = c.toByte; o += 1 }
-      else if (c < 0x800) {
-        out(o) = (0xC0 | c >> 6).toByte
-        out(o + 1) = (0x80 | c & 0x3F).toByte
-        o += 2
-      } else if (!Character.isSurrogate(c)) {
-        out(o) = (0xE0 | c >> 12).toByte
-        out(o + 1) = (0x80 | c >> 6 & 0x3F).toByte
-        out(o + 2) = (0x80 | c & 0x3F).toByte
-        o += 3
-      } else if (pairAt(buf, i, until)) {
-        val cp = Character.toCodePoint(c, buf(i + 1))
-        out(o) = (0xF0 | cp >> 18).toByte
-        out(o + 1) = (0x80 | cp >> 12 & 0x3F).toByte
-        out(o + 2) = (0x80 | cp >> 6 & 0x3F).toByte
-        out(o + 3) = (0x80 | cp & 0x3F).toByte
-        o += 4
-        i += 1
-      } else { out(o) = '?'; o += 1 }
-      i += 1
-    }
-    UTF8String.fromBytes(out)
-  }
-
-  @inline private def pairAt(buf: Array[Char], i: Int, until: Int): Boolean =
-    Character.isHighSurrogate(buf(i)) && i + 1 < until && Character.isLowSurrogate(buf(i + 1))
 }

@@ -1,6 +1,6 @@
 package graft.extract
 
-import graft.html.HtmlText
+import graft.html.{CharBuf, HtmlText}
 import graft.html.FusedSegmenter.RawBlocks
 
 /** Span offsets into the assembled extracted text.
@@ -68,7 +68,7 @@ object Assemble {
     * trim is a range of the buffer, with the spans shifted and clipped
     * to it. */
   def assemble(rb: RawBlocks, keepA: Array[Boolean], keepB: Array[Boolean]): Assembled = {
-    val out = new Out(rb.len + 64)
+    val out = new CharBuf(rb.len + 64)
     var n = 0
     val maxSpans = if (keepB == null) rb.n else 2 * rb.n
     val starts = new Array[Int](maxSpans)
@@ -122,19 +122,5 @@ object Assemble {
       k += 1
     }
     new Assembled(buf, a, b, kept, starts, ends, kindIds)
-  }
-
-  /** The growable output buffer of `assemble`. */
-  private final class Out(capacity: Int) {
-    var buf = new Array[Char](capacity)
-    var len = 0
-    private def ensure(k: Int): Unit =
-      if (len + k > buf.length) buf = java.util.Arrays.copyOf(buf, math.max(len + k, 2 * buf.length))
-    def put(s: String): Unit = {
-      ensure(s.length); s.getChars(0, s.length, buf, len); len += s.length
-    }
-    def put(src: Array[Char], from: Int, until: Int): Unit = {
-      ensure(until - from); System.arraycopy(src, from, buf, len, until - from); len += until - from
-    }
   }
 }

@@ -26,11 +26,9 @@ object FusedSegmenter {
     * Compared to one String + one Block object per block this removes
     * the dominant per-block allocations (the extraction loop is
     * memory-bandwidth-bound at high core counts — BASELINE.md).
-    * kindId: 0=content 1=heading 2=list. `capacity` presizes `buf`:
-    * `segmentRaw` fills it with the source and folds the block text in
-    * place (see `Seg`), so its buffer never regrows. */
-  final class RawBlocks(capacity: Int) {
-    def this() = this(512)
+    * kindId: 0=content 1=heading 2=list. `buf` starts at 512 chars and
+    * grows with the block text, not with the page. */
+  final class RawBlocks extends CharBuf(512) {
     var n = 0
     var parts = new Array[Int](32)
     var kindIds = new Array[Int](32)
@@ -39,8 +37,6 @@ object FusedSegmenter {
     var words = new Array[Int](32)
     var linkWords = new Array[Int](32)
     var boiler = new Array[Boolean](32)
-    var buf = new Array[Char](capacity)
-    var len = 0
 
     def add(part: Int, kindId: Int, start: Int, end: Int,
             w: Int, lw: Int, b: Boolean): Unit = {
@@ -63,14 +59,10 @@ object FusedSegmenter {
       * words (PDF pages, plain-text paragraphs, generator ground truth). */
     def addText(part: Int, kindId: Int, text: String, w: Int): Unit = {
       val start = len
-      if (len + text.length > buf.length)
-        buf = java.util.Arrays.copyOf(buf, math.max(len + text.length, 2 * buf.length))
-      text.getChars(0, text.length, buf, len)
-      len += text.length
+      put(text)
       add(part, kindId, start, len, w, 0, false)
     }
 
-    def kindName(i: Int): String = RawBlocks.KindNames(kindIds(i))
     def text(i: Int): String = new String(buf, starts(i), ends(i) - starts(i))
   }
   object RawBlocks {
@@ -156,12 +148,7 @@ object FusedSegmenter {
     * digest attest). */
   private final class Seg(html: String) {
     private[this] val n = html.length
-    // the source chars fill the block buffer, and text is folded into
-    // it in place: the block text so far is never longer than the
-    // source so far (a char, an entity or a whitespace run gives at most
-    // as many chars as it spans), so no write reaches a char not yet read
-    private[this] val rb = new RawBlocks(n)
-    html.getChars(0, n, rb.buf, 0)
+    private[this] val rb = new RawBlocks
 
     // segmentation state (mirrors BlockSegmenter.segment)
     private[this] var part = 1
@@ -208,28 +195,27 @@ object FusedSegmenter {
       * normalize/countWords: a whitespace char sets pendingSpace (once
       * the block has text) and ends the word; a non-whitespace char
       * first writes any pending space, and starts a word if none is
-      * open. The rest of a word is copied in a tight inner loop. Reads
-      * and writes the one buffer (see `rb`). */
+      * open. A word is found to its end first and then copied from the
+      * source in bulk. */
     private def text(from: Int): Int = {
-      val buf = rb.buf
-      var len = rb.len
       var k = from
       var c = '\u0000'
-      while (k < n && { c = buf(k); c != '<' && c != '&' }) {
-        k += 1
+      while (k < n && { c = html.charAt(k); c != '<' && c != '&' }) {
         if (isWs(c)) {
-          if (len > blockStart) pendingSpace = true
+          k += 1
+          if (rb.len > blockStart) pendingSpace = true
           inWord = false
         } else {
-          if (pendingSpace) { buf(len) = ' '; len += 1; pendingSpace = false }
+          var e = k + 1
+          while (e < n && !endsWord(html.charAt(e))) e += 1
+          rb.ensure(e - k + 1)
+          if (pendingSpace) { rb.buf(rb.len) = ' '; rb.len += 1; pendingSpace = false }
           if (!inWord) startWord()
-          buf(len) = c; len += 1
-          while (k < n && { c = buf(k); !endsWord(c) }) {
-            buf(len) = c; len += 1; k += 1
-          }
+          html.getChars(k, e, rb.buf, rb.len)
+          rb.len += e - k
+          k = e
         }
       }
-      rb.len = len
       k
     }
 
@@ -240,9 +226,9 @@ object FusedSegmenter {
         if (rb.len > blockStart) pendingSpace = true
         inWord = false
       } else {
-        if (pendingSpace) { rb.buf(rb.len) = ' '; rb.len += 1; pendingSpace = false }
+        if (pendingSpace) { rb.put(' '); pendingSpace = false }
         if (!inWord) startWord()
-        rb.buf(rb.len) = c; rb.len += 1
+        rb.put(c)
       }
 
     def run(): RawBlocks = {

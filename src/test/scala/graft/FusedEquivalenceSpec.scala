@@ -7,6 +7,7 @@ import org.scalacheck.rng.Seed
 import graft.gen.PageGen
 import graft.html.{BlockSegmenter, FusedSegmenter, HtmlTokenizer}
 import graft.html.BlockSegmenter.Block
+import graft.html.FusedSegmenter.RawBlocks
 
 /** The fused hot-path segmenter must be block-for-block identical to
   * the readable reference pair (tokenize → segment). */
@@ -18,7 +19,7 @@ class FusedEquivalenceSpec extends AnyFunSuite {
   private def segment(html: String): IndexedSeq[Block] = {
     val rb = FusedSegmenter.segmentRaw(html)
     (0 until rb.n).map { i =>
-      Block(rb.parts(i), rb.kindName(i), rb.text(i),
+      Block(rb.parts(i), RawBlocks.KindNames(rb.kindIds(i)), rb.text(i),
         rb.words(i), rb.linkWords(i), rb.boiler(i))
     }
   }
