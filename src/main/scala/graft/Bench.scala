@@ -7,10 +7,13 @@ import graft.pipeline.{ExtractJob, ExtractPipeline}
 
 /** Benchmark main — one JSON line on stdout.
   *
-  * Env knobs: SPARK_GRAFT_SF_DIR (testdata dir), SPARK_GRAFT_CPUS
-  * (local[N] parallelism — the sandbox stand-in for executor count:
-  * run at 8 and 32 for the N vs 4N scaling pair, BASELINE.md),
-  * SPARK_GRAFT_BENCH_DOCS (extraction corpus size, default 60000).
+  * Env settings: SPARK_GRAFT_SF_DIR (testdata dir), SPARK_GRAFT_CPUS
+  * (local[N] parallelism, default the JVM's available processors),
+  * SPARK_GRAFT_BENCH_DOCS (extraction corpus size, default 480000),
+  * SPARK_GRAFT_SCALE (0 skips the scaling pairs), SPARK_GRAFT_BENCH_OUT
+  * (where the JSON line is also written) and SPARK_GRAFT_HISTORY (the
+  * scaling record, see ScalePair). The scaling pairs size themselves
+  * from the host (`ScalePair.shape`).
   *
   * Headline metric (BASELINE.json): documents/sec extraction
   * throughput — measured on the synthesized Common-Crawl-style table,
@@ -21,7 +24,8 @@ import graft.pipeline.{ExtractJob, ExtractPipeline}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors())
     val nDocs = sys.env.getOrElse("SPARK_GRAFT_BENCH_DOCS", "480000").toLong
     val spark = GraftSession.local(cpus, "graft-bench")
 
@@ -53,7 +57,7 @@ object Bench {
     // wait as the scaling pairs — r5): the r5 first capture ran its
     // extract reps through a 12% steal burst and read 1.7× low
     val preCalm = ScalePair.awaitCalm()
-    if (preCalm > 0.3) System.err.println(
+    if (preCalm > ScalePair.CalmStealPct) System.err.println(
       f"[bench] extract phase starting despite steal $preCalm%.2f%% (wait budget spent)")
 
     // extraction throughput: median of 5 (this host shows bursty CPU
@@ -108,55 +112,43 @@ object Bench {
     // runs (valid = efficiency in (0, 1.05] and checksums match — >1
     // means the alone leg was steal-hit, i.e. the measurement is
     // invalid, never "superlinear scaling"; VERDICT r2 "What's wrong"
-    // #1); pairs run until THREE valid measurements exist (capped), so
-    // an invalidated run tops the sample back up instead of shrinking
-    // the median to a fragile two-point pick, and a median-of-3
-    // survives one steal-poisoned pair in either direction (observed:
-    // a burst hitting only one run's 4N window drags that pair to 0.48
-    // while its neighbors read 0.86-0.97). Every raw value plus
-    // per-phase steal windows is reported AND appended to
-    // scaling_history.jsonl, so the ≥0.8 claim rests on a cumulative
-    // machine-readable record. The checksum gate is unaffected either
-    // way. SPARK_GRAFT_SCALE=0 skips.
+    // #1). One stopping rule: pairs run until THREE valid measurements
+    // exist, at most 8 attempts, within a 25-minute wall budget (the
+    // record keeps whatever landed), so an invalidated run tops the
+    // sample back up instead of shrinking the median to a fragile
+    // two-point pick, and a median-of-3 survives one steal-poisoned
+    // pair in either direction (observed: a burst hitting only one
+    // run's 4N window drags that pair to 0.48 while its neighbors read
+    // 0.86-0.97). Every raw value plus per-phase steal windows is
+    // reported AND appended to scaling_history.jsonl, so the ≥0.8
+    // claim rests on a cumulative machine-readable record.
+    // SPARK_GRAFT_SCALE=0 skips.
     //
-    // The in-process Spark session must be STOPPED first: its 32
-    // executor threads + GC otherwise compete with the pinned leg JVMs
-    // (measured: t_full 11.5 s with the session alive vs 5.5 s
-    // standalone — enough to push weak pairs from ~0.86 to ~0.72).
-    // Everything below here only reads local vars.
+    // The in-process Spark session must be STOPPED first: its executor
+    // threads + GC otherwise compete with the pinned leg JVMs
+    // (measured on 32 CPUs: t_full 11.5 s with the session alive vs
+    // 5.5 s standalone — enough to push weak pairs from ~0.86 to
+    // ~0.72). Everything below here only reads local vars.
     spark.stop()
-    // adaptive sample size: a run the validity rule rejects (steal-hit
-    // alone leg → efficiency >1.05, or checksum mismatch) reduces the
-    // sample, so keep measuring until `nPairs` WEAK-valid runs AND
-    // `nStrong` STRONG-valid runs exist (VERDICT r4 #6 — the strong
-    // headline rested on a single run), up to `maxPairs` attempts —
-    // a median over <3 points is fragile. Strong validity is the
-    // rarer event (GC superlinearity alone pushes strong past 1.05 on
-    // a clean host), hence the larger attempt headroom.
-    val nPairs = sys.env.getOrElse("SPARK_GRAFT_SCALE_PAIRS", "3").toInt
-    val nStrong = sys.env.getOrElse("SPARK_GRAFT_STRONG_PAIRS", nPairs.toString).toInt
-    val maxPairs = nPairs + 5
     val scaleRuns = scala.collection.mutable.ArrayBuffer.empty[ScalePair.Result]
     if (sys.env.getOrElse("SPARK_GRAFT_SCALE", "1") == "1") {
-      var i = 0
-      // wall-clock budget for the whole pair phase: 8 attempts with
-      // worst-case pre-flight waits could otherwise stretch past any
-      // reasonable driver timeout; the record keeps whatever landed
-      val phaseBudgetMs =
-        sys.env.getOrElse("SPARK_GRAFT_SCALE_BUDGET_MS", "1500000").toLong
       val phaseT0 = System.nanoTime()
-      while (i < maxPairs && (scaleRuns.count(_.valid) < nPairs ||
-          scaleRuns.count(_.strongValid) < nStrong) &&
-          (System.nanoTime() - phaseT0) / 1e6 < phaseBudgetMs) {
+      var i = 0
+      while (i < 8 && scaleRuns.count(_.valid) < 3 &&
+          (System.nanoTime() - phaseT0) / 1e6 < 1500000) {
         i += 1
         // pre-flight steal gate (VERDICT r4 #7): wait out a storm
         // (bounded) so pairs land in clean windows more often; a pair
         // that runs anyway still self-identifies via its steal markers
         val calm = ScalePair.awaitCalm()
-        if (calm > 0.3) System.err.println(
+        if (calm > ScalePair.CalmStealPct) System.err.println(
           f"[bench] pair $i starting despite steal $calm%.2f%% (wait budget spent)")
-        try scaleRuns += ScalePair.run(stage, cores = 8, reps = 3)
-        catch { case e: Throwable =>
+        // one cumulative-record row per landed pair, valid or not, with
+        // its steal windows and host shape (VERDICT r2 #7)
+        try {
+          scaleRuns += ScalePair.run(stage)
+          ScalePair.appendHistory(Seq(ScalePair.historyLine(scaleRuns.last, nDocs)))
+        } catch { case e: Throwable =>
           System.err.println(s"[bench] scale pair $i failed: ${e.getMessage}")
         }
       }
@@ -170,15 +162,11 @@ object Bench {
       Some(if (s.size % 2 == 1) s(s.size / 2)
       else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0)
     }
+    def num(x: Option[Double]): String = x.map(v => f"$v%.3f").getOrElse("null")
     val headlineEff = median(validRuns.map(_.efficiency))
     // representative run for the docs/sec fields: closest to the headline
     val headline = headlineEff.map(h =>
       validRuns.minBy(r => math.abs(r.efficiency - h)))
-
-    // cumulative scaling record (VERDICT r2 #7): one JSONL line per
-    // pair run, valid or not, with its steal window
-    ScalePair.appendHistory(
-      scaleRuns.toSeq.map(r => ScalePair.historyLine(r, nDocs, cores = 8)))
 
     val qs = results.map { case (k, v) => "\"" + k + f"\":$v%.3f" }
       .mkString("{", ",", "}")
@@ -188,25 +176,19 @@ object Bench {
     val docsPerSec = nDocs / tExtract
     val docsPerSecBest = nDocs / tExtractMin
     val commitDocsPerSec = nDocs / tCommit
-    val scaleJson = headline.map { r =>
-      val all = scaleRuns.map(x => f"${x.efficiency}%.3f").mkString("[", ",", "]")
-      val steals = scaleRuns.map(x => f"${x.stealPct}%.3f").mkString("[", ",", "]")
-      // ADVISORY headline (ScalePair.Result scaladoc): strong > 1.05
-      // means the full leg was GC- or steal-penalized (it pushes 4×
-      // the data through the same heap), not superlinear scaling —
-      // median only the physically meaningful subset, null if none
-      val strongVals = validRuns.map(_.strongEfficiency)
-        .filter(x => x > 0.0 && x <= 1.05)
-      val strongHeadline = median(strongVals)
-        .map(x => f"$x%.3f").getOrElse("null")
-      f""","scale_n_docs_per_sec":${r.nDocsPerSec}%.1f,"scale_4n_docs_per_sec":${r.n4DocsPerSec}%.1f,"scaling_efficiency":${headlineEff.get}%.3f,"scaling_efficiency_strong":$strongHeadline,"scaling_strong_advisory":true,"scaling_strong_runs":${strongVals.size},"scaling_efficiency_runs":$all,"scale_steal_pcts":$steals,"scaling_valid_runs":${validRuns.size},"scale_checksum_match":${scaleRuns.forall(_.checksumMatch)}"""
-    }.getOrElse(
+    // ADVISORY strong headline (ScalePair.Result scaladoc): strong >
+    // 1.05 means the full leg was GC- or steal-penalized (it pushes 4×
+    // the data through the same heap), not superlinear scaling —
+    // median only the physically meaningful subset, null if none
+    val strongVals = validRuns.map(_.strongEfficiency).filter(x => x > 0.0 && x <= 1.05)
+    val scaleJson =
       if (scaleRuns.isEmpty) ""
       else {
         val all = scaleRuns.map(x => f"${x.efficiency}%.3f").mkString("[", ",", "]")
         val steals = scaleRuns.map(x => f"${x.stealPct}%.3f").mkString("[", ",", "]")
-        s""","scaling_efficiency":null,"scaling_efficiency_runs":$all,"scale_steal_pcts":$steals,"scaling_valid_runs":0,"scale_checksum_match":${scaleRuns.forall(_.checksumMatch)}"""
-      })
+        val shape = scaleRuns.head.shape.fold("")("," + _.json)
+        s""","scale_n_docs_per_sec":${num(headline.map(_.nDocsPerSec))},"scale_4n_docs_per_sec":${num(headline.map(_.n4DocsPerSec))},"scaling_efficiency":${num(headlineEff)},"scaling_efficiency_strong":${num(median(strongVals))},"scaling_strong_advisory":true,"scaling_strong_runs":${strongVals.size},"scaling_efficiency_runs":$all,"scale_steal_pcts":$steals,"scaling_valid_runs":${validRuns.size},"scale_checksum_match":${scaleRuns.forall(_.checksumMatch)}$shape"""
+      }
     val line =
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"query_steal_pcts":$qSteals,"sf":"$sfDir","cpus":$cpus,"bench_docs":$nDocs,"extract_docs_per_sec":$docsPerSec%.1f,"extract_docs_per_sec_best":$docsPerSecBest%.1f,"commit_docs_per_sec":$commitDocsPerSec%.1f,"steal_pct_extract":$stealExtract%.3f,"steal_pct_commit":$stealCommit%.3f,"steal_pct_queries":$stealQueries%.3f$scaleJson}"""
     println(line)

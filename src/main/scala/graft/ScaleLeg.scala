@@ -10,14 +10,16 @@ import graft.pipeline.ExtractPipeline
   * `local[cores]` threads — the honest sandbox analogue of a cluster
   * executor (a single shared-heap JVM at local[32] under-reports
   * scaling because all "executors" contend for one young gen — see
-  * BASELINE.md round-1 measurement notes).
+  * BASELINE.md round-1 measurement notes). `cores` is this JVM's
+  * `availableProcessors`, which the parent sets with
+  * `-XX:ActiveProcessorCount`.
   *
   * Protocol (file-based, parent = ScalePair):
-  *   args = stageDir fileListFile cores readyFile startFile resultFile reps
-  *   1. build session, read assigned parquet files, run one warmup rep
+  *   args = fileListFile readyFile startFile resultFile
+  *   1. build session, read assigned parquet files, run two warmup passes
   *   2. touch readyFile; busy-wait for startFile (parent flips it when
   *      every leg is warm → all legs measure the same wall window)
-  *   3. run `reps` timed extraction passes; median
+  *   3. run `ScalePair.Reps` timed extraction passes; median
   *   4. write "docs seconds checksum" to resultFile
   * The checksum (sum of xxhash64(url, text) as decimal) makes the
   * byte-identity claim checkable ACROSS parallelism levels: the 4-leg
@@ -25,11 +27,9 @@ import graft.pipeline.ExtractPipeline
   */
 object ScaleLeg {
   def main(args: Array[String]): Unit = {
-    val Array(fileListFile, coresS, readyFile, startFile, resultFile, repsS) = args
-    val cores = coresS.toInt
-    val reps = repsS.toInt
+    val Array(fileListFile, readyFile, startFile, resultFile) = args
     val files = scala.io.Source.fromFile(fileListFile, "UTF-8").getLines().toSeq
-    val spark = GraftSession.local(cores, s"graft-scale-leg")
+    val spark = GraftSession.local(Runtime.getRuntime.availableProcessors(), "graft-scale-leg")
 
     def pass(): (Long, java.math.BigDecimal) = {
       val row = ExtractPipeline.extracted(spark.read.parquet(files: _*))
@@ -47,7 +47,7 @@ object ScaleLeg {
     val start = new java.io.File(startFile)
     while (!start.exists()) Thread.sleep(5)
 
-    val timings = (1 to reps).map { _ =>
+    val timings = (1 to ScalePair.Reps).map { _ =>
       val t0 = System.nanoTime()
       val (docs, sum) = pass()
       ((System.nanoTime() - t0) / 1e9, docs, sum)

@@ -11,13 +11,14 @@ package graft
   * burn scales at 0.93 on the same host — BASELINE.md round 1).
   *
   * This harness emulates executors the way a cluster actually runs
-  * them: N = one 8-core JVM with its own heap; 4N = FOUR 8-core JVMs,
+  * them: N = one executor JVM with its own heap; 4N = FOUR such JVMs,
   * each with its own heap and GC, processing disjoint file slices of
-  * the same staged input concurrently. Efficiency =
-  * T_N / (4 × T_4N), with T_4N = the slowest leg (all legs start on a
-  * shared barrier after warmup). Byte-identity across parallelism
-  * levels is asserted by exact checksum: the four legs' partial
-  * xxhash64 sums must add to the single leg's total.
+  * the same staged input concurrently. The leg shape (cores and heap
+  * per JVM, CPU pinning) comes from the host, see [[shape]].
+  * Efficiency = T_N / (4 × T_4N), with T_4N = the slowest leg (all legs
+  * start on a shared barrier after warmup). Byte-identity across
+  * parallelism levels is asserted by exact checksum: the four legs'
+  * partial xxhash64 sums must add to the single leg's total.
   *
   * Standalone: `sbt "runMain graft.ScalePair <stagedParquetDir>"`.
   * Bench calls `run(...)` and folds the numbers into its JSON line.
@@ -59,6 +60,63 @@ object ScalePair {
     (r, pct)
   }
 
+  /** A pair that cannot be measured on this host or whose leg failed. */
+  final class ScaleError(msg: String) extends IllegalStateException(msg)
+
+  /** Executor stand-ins on the 4N side: the 4 that "4N" names. */
+  final val Legs = 4
+  /** Timed passes per leg (after two warmups); the leg reports the median. */
+  final val Reps = 3
+  /** Heap per leg where memory allows (a 32-CPU, 8-core-executor shape). */
+  final val MaxHeapMb = 6144L
+  /** Upper bound on each leg of a phase, from fork to exit. */
+  private final val LegTimeoutSec = 1800L
+
+  /** The pair's shape: `legs` JVMs of `coresPerLeg` CPUs and `heapMb`
+    * of heap each, leg i pinned to `cpuRanges(i)` (a `taskset` list). */
+  final case class Shape(allowedCpus: Int, memMb: Long, legs: Int,
+                         coresPerLeg: Int, heapMb: Long, cpuRanges: Seq[String]) {
+    def json: String =
+      s""""allowed_cpus":$allowedCpus,"mem_mb":$memMb,"legs":$legs,"cores_per_executor":$coresPerLeg,"heap_mb":$heapMb"""
+  }
+
+  /** The shape rule: the allowed CPUs split into `Legs` disjoint runs
+    * in mask order, and a heap of `MaxHeapMb` capped so that all legs
+    * together take at most half of physical memory. */
+  def shape(allowed: Seq[Int], memBytes: Long): Shape = {
+    if (allowed.size < Legs) throw new ScaleError(
+      s"scale pair needs at least $Legs allowed CPUs (one per leg), this process may use ${allowed.size}")
+    val cores = allowed.size / Legs
+    val heapMb = math.min(MaxHeapMb, memBytes / 2 / Legs / (1L << 20))
+    Shape(allowed.size, memBytes >> 20, Legs, cores, heapMb,
+      allowed.grouped(cores).take(Legs).map(cpuList).toSeq)
+  }
+
+  /** `shape` of this process: its CPU mask and the physical memory. */
+  def hostShape(): Shape = {
+    val mask = scala.util.Using(scala.io.Source.fromFile("/proc/self/status", "UTF-8"))(
+      _.getLines().collectFirst { case l if l.startsWith("Cpus_allowed_list:") =>
+        parseCpuList(l.stripPrefix("Cpus_allowed_list:")) }).toOption.flatten
+    val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
+    shape(mask.getOrElse(0 until Runtime.getRuntime.availableProcessors()),
+      os.getTotalMemorySize)
+  }
+
+  /** A kernel CPU list ("0-3,8,10-11") → CPU ids in order. */
+  def parseCpuList(s: String): Seq[Int] =
+    s.trim.split(",").toSeq.filter(_.nonEmpty).flatMap { part =>
+      val ends = part.split("-").map(_.trim.toInt)
+      ends.head to ends.last
+    }
+
+  /** CPU ids → a kernel CPU list of "a-b" runs ("0-0" for one CPU). */
+  private def cpuList(cpus: Seq[Int]): String =
+    cpus.foldLeft(List.empty[(Int, Int)]) {
+      case ((a, b) :: runs, c) if c == b + 1 => (a, c) :: runs
+      case (runs, c) => (c, c) :: runs
+    }.reverse.map { case (a, b) => s"$a-$b" }.mkString(",")
+
   final case class Leg(docs: Long, seconds: Double, checksum: java.math.BigDecimal)
 
   /** @param efficiency   weak-scaling: one executor's time on its slice
@@ -85,13 +143,15 @@ object ScalePair {
     * @param stealPct host steal (% of cpu ticks) over the whole pair
     *   window — a high value marks the RUN as untrustworthy, not the
     *   engine (see stealTicks); per-leg windows in stealAlonePct /
-    *   steal4nPct / stealFullPct. */
+    *   steal4nPct / stealFullPct.
+    * @param shape the host-derived leg shape the pair ran with (None
+    *   for a Result not measured by `run`). */
   final case class Result(
       nDocsPerSec: Double, n4DocsPerSec: Double, efficiency: Double,
       strongEfficiency: Double, checksumMatch: Boolean,
       tAlone: Double, t4N: Double, tFull: Double, stealPct: Double = -1.0,
       stealAlonePct: Double = -1.0, steal4nPct: Double = -1.0,
-      stealFullPct: Double = -1.0) {
+      stealFullPct: Double = -1.0, shape: Option[Shape] = None) {
     /** A physically meaningful weak-scaling measurement: >1.05 means
       * the alone leg was steal-hit (the measurement is invalid, not
       * that scaling is superlinear); ≤0 is a degenerate capture; and a
@@ -110,22 +170,8 @@ object ScalePair {
     def valid: Boolean =
       efficiency > 0.0 && efficiency <= 1.05 && checksumMatch &&
         t4N <= tFull * 1.1
-
-    /** The strong-shape number is physically meaningful under the same
-      * rule (see strongEfficiency scaladoc: GC superlinearity or a
-      * full-leg steal burst pushes it past 1); Bench tops pairs up
-      * until enough of THESE exist too (VERDICT r4 #6). */
-    def strongValid: Boolean =
-      valid && strongEfficiency > 0.0 && strongEfficiency <= 1.05
   }
 
-  /** Pre-flight steal gate (VERDICT r4 #7): probe host steal over
-    * short windows and delay the measurement while the host is
-    * storming, bounded by `maxWaitMs`. Returns the last probe's
-    * steal%, so the caller can record whether it gave up waiting.
-    * This raises the fraction of pairs that land in clean windows —
-    * it never edits the record (poisoned pairs that slip through are
-    * still appended and self-identify via their steal markers). */
   @volatile private var spinSink: Long = 0L // defeats loop elision
 
   /** Burn every core for `ms` — the probe load for [[awaitCalm]].
@@ -138,37 +184,35 @@ object ScalePair {
     * the measurement will experience. */
   private def busySpin(ms: Long): Unit = {
     val deadline = System.nanoTime() + ms * 1000000L
-    val n = Runtime.getRuntime.availableProcessors()
-    val ts = (1 until n).map { _ =>
+    val ts = (1 to Runtime.getRuntime.availableProcessors()).map { _ =>
       val t = new Thread(() => {
         var x = 0L
         while (System.nanoTime() < deadline) x += 1
         spinSink = x
       })
-      t.setDaemon(true); t.start(); t
+      t.start(); t
     }
-    var x = 0L
-    while (System.nanoTime() < deadline) x += 1
-    spinSink = x
     ts.foreach(_.join())
   }
 
-  def awaitCalm(thresholdPct: Double = 0.3, probeMs: Long = 2000,
-                backoffMs: Long = 15000, maxWaitMs: Long = 120000,
-                loaded: Boolean = true): Double = {
+  /** Steal% at or below which the host counts as calm. */
+  final val CalmStealPct = 0.3
+
+  /** Pre-flight steal gate (VERDICT r4 #7): probe host steal under full
+    * load for 2 s and, while it is above `CalmStealPct`, back off 15 s
+    * and probe again, for at most 120 s. Returns the last probe's
+    * steal%, so the caller can record whether it gave up waiting.
+    * This raises the fraction of pairs that land in clean windows —
+    * it never edits the record (poisoned pairs that slip through are
+    * still appended and self-identify via their steal markers). */
+  def awaitCalm(): Double = {
     val t0 = System.nanoTime()
-    var last = -1.0
-    var first = true
-    while (first || (last > thresholdPct &&
-        (System.nanoTime() - t0) / 1e6 < maxWaitMs)) {
-      if (!first) Thread.sleep(backoffMs)
-      first = false
-      val (_, pct) = withSteal(
-        if (loaded) busySpin(probeMs) else Thread.sleep(probeMs))
-      last = pct
-      if (last < 0) return last // /proc/stat unreadable — nothing to wait on
+    var last = withSteal(busySpin(2000))._2
+    while (last > CalmStealPct && (System.nanoTime() - t0) / 1e6 < 120000) {
+      Thread.sleep(15000)
+      last = withSteal(busySpin(2000))._2
     }
-    last
+    last // -1 when /proc/stat is unreadable: nothing to wait on
   }
 
   private val addOpens = Seq(
@@ -182,106 +226,100 @@ object ScalePair {
   ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
 
   /** Fork one ScaleLeg JVM over `files`; returns the running process.
-    * Every leg gets the same per-executor heap + GC flags AND an
-    * 8-CPU view of the machine (`taskset` pinning to a disjoint core
-    * range + `-XX:ActiveProcessorCount`), exactly like a cluster
+    * Every leg gets the same per-executor heap + GC flags AND a
+    * `coresPerLeg`-CPU view of the machine (`taskset` pinning to its
+    * own CPU run + `-XX:ActiveProcessorCount`), exactly like a cluster
     * executor in a cpu-limited container — without this each JVM sizes
-    * its GC/JIT/common pools for all 32 host CPUs and four legs thrash
-    * each other (measured: leg medians 3–14.5 s for identical slices). */
-  private def fork(files: Seq[String], cores: Int, tag: String,
-                   dir: java.io.File, reps: Int, heap: String,
-                   cpuRange: Option[String]): (Process, java.io.File, java.io.File) = {
+    * its GC/JIT/common pools for all host CPUs and four legs thrash
+    * each other (measured on 32 CPUs: leg medians 3–14.5 s for
+    * identical slices). */
+  private def fork(files: Seq[String], tag: String, dir: java.io.File,
+                   shape: Shape, cpuRange: String): Process = {
     val fileList = new java.io.File(dir, s"$tag.files")
     val w = new java.io.PrintWriter(fileList, "UTF-8")
     files.foreach(w.println); w.close()
-    val ready = new java.io.File(dir, s"$tag.ready")
-    val start = new java.io.File(dir, s"$tag.start")
-    val result = new java.io.File(dir, s"$tag.result")
     val javaBin = new java.io.File(
       new java.io.File(System.getProperty("java.home"), "bin"), "java").getPath
-    val pin = cpuRange.toSeq
-      .filter(_ => new java.io.File("/usr/bin/taskset").exists())
-      .flatMap(r => Seq("/usr/bin/taskset", "-c", r))
+    val pin =
+      if (new java.io.File("/usr/bin/taskset").exists()) Seq("/usr/bin/taskset", "-c", cpuRange)
+      else Nil
     // -Xms=-Xmx + AlwaysPreTouch: commit and zero the whole heap at
     // startup (Spark sets executor Xms=Xmx for the same reason) —
     // otherwise the first measured reps pay heap-growth page faults
     // (observed: leg rep sequences like 44s→9s→3s without this)
     val cmd = pin ++ Seq(javaBin) ++ addOpens ++ Seq(
-      s"-Xmx$heap", s"-Xms$heap", "-XX:+AlwaysPreTouch",
+      s"-Xmx${shape.heapMb}m", s"-Xms${shape.heapMb}m", "-XX:+AlwaysPreTouch",
       "-XX:MaxGCPauseMillis=1000", "-XX:G1HeapRegionSize=16m",
-      s"-XX:ActiveProcessorCount=$cores",
+      s"-XX:ActiveProcessorCount=${shape.coresPerLeg}",
       "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
       "-cp", System.getProperty("java.class.path"),
-      "graft.ScaleLeg", fileList.getPath, cores.toString,
-      ready.getPath, start.getPath, result.getPath, reps.toString)
+      "graft.ScaleLeg", fileList.getPath, s"$dir/$tag.ready",
+      s"$dir/$tag.start", s"$dir/$tag.result")
     val pb = new ProcessBuilder(cmd: _*)
     pb.redirectErrorStream(true)
     pb.redirectOutput(new java.io.File(dir, s"$tag.log"))
-    (pb.start(), ready, start)
+    pb.start()
   }
 
-  private def awaitLeg(p: Process, result: java.io.File, timeoutSec: Long): Leg = {
-    if (!p.waitFor(timeoutSec, java.util.concurrent.TimeUnit.SECONDS)) {
-      p.destroyForcibly()
-      throw new IllegalStateException(s"scale leg timed out: ${result.getName}")
+  /** Wait until leg `p` has touched `ready`. Fails by name as soon as
+    * the process has exited without it, or at `deadlineNs`. */
+  private[graft] def awaitReady(p: Process, ready: java.io.File, deadlineNs: Long): Unit =
+    while (!ready.exists()) {
+      if (!p.isAlive)
+        throw new ScaleError(s"scale leg exited rc=${p.exitValue()} before ready: ${ready.getName}")
+      if (System.nanoTime() > deadlineNs)
+        throw new ScaleError(s"scale leg not ready within $LegTimeoutSec s: ${ready.getName}")
+      Thread.sleep(20)
     }
-    require(p.exitValue() == 0, s"scale leg failed rc=${p.exitValue()}: ${result.getName}")
-    val Array(docs, secs, sum) =
-      scala.io.Source.fromFile(result, "UTF-8").mkString.trim.split(" ")
-    Leg(docs.toLong, secs.toDouble, new java.math.BigDecimal(sum))
+
+  /** Run one leg per slice concurrently, leg i pinned to the shape's
+    * i-th CPU run: fork all, wait until all are warm, release them on
+    * one barrier, collect their results. A leg that fails or outlives
+    * the timeout fails the call; no leg process outlives it. */
+  private def runLegs(slices: Seq[Seq[String]], tag: String, work: java.io.File,
+                      shape: Shape): Seq[Leg] = {
+    val deadline = System.nanoTime() + LegTimeoutSec * 1000000000L
+    val tags = slices.indices.map(i => s"$tag$i")
+    val procs = slices.indices.map(i => fork(slices(i), tags(i), work, shape, shape.cpuRanges(i)))
+    try {
+      procs.zip(tags).foreach { case (p, t) => awaitReady(p, new java.io.File(work, s"$t.ready"), deadline) }
+      tags.foreach(t => new java.io.File(work, s"$t.start").createNewFile()) // barrier release
+      procs.zip(tags).map { case (p, t) =>
+        val left = math.max(0L, deadline - System.nanoTime())
+        if (!p.waitFor(left, java.util.concurrent.TimeUnit.NANOSECONDS))
+          throw new ScaleError(s"scale leg timed out after $LegTimeoutSec s: $t")
+        if (p.exitValue() != 0) throw new ScaleError(s"scale leg failed rc=${p.exitValue()}: $t")
+        val Array(docs, secs, sum) =
+          java.nio.file.Files.readString(new java.io.File(work, s"$t.result").toPath).trim.split(" ")
+        Leg(docs.toLong, secs.toDouble, new java.math.BigDecimal(sum))
+      }
+    } finally procs.foreach(_.destroyForcibly())
   }
 
   /** Run the pair over an already-staged parquet directory. */
-  def run(stageDir: String, cores: Int = 8, legs: Int = 4,
-          reps: Int = 3, heap: String = "6g"): Result = {
-    val (r, steal) = withSteal(runInner(stageDir, cores, legs, reps, heap))
-    r.copy(stealPct = steal)
+  def run(stageDir: String): Result = {
+    val shape = hostShape()
+    val (r, steal) = withSteal(runInner(stageDir, shape))
+    r.copy(stealPct = steal, shape = Some(shape))
   }
 
-  private def runInner(stageDir: String, cores: Int, legs: Int,
-                       reps: Int, heap: String): Result = {
+  private def runInner(stageDir: String, shape: Shape): Result = {
     val files = new java.io.File(stageDir).listFiles()
       .filter(_.getName.endsWith(".parquet")).map(_.getPath).sorted.toSeq
-    require(files.size >= legs, s"need ≥$legs staged files, found ${files.size}")
+    require(files.size >= Legs, s"need ≥$Legs staged files, found ${files.size}")
     val work = java.nio.file.Files.createTempDirectory("graft-scale").toFile
-
-    val slices = files.zipWithIndex.groupBy(_._2 % legs).toSeq.sortBy(_._1)
+    val slices = files.zipWithIndex.groupBy(_._2 % Legs).toSeq.sortBy(_._1)
       .map(_._2.map(_._1))
 
-    // ---- N side (weak scaling): ONE executor-JVM over slice 0, alone ----
     // per-phase steal windows: a burst that hits only the 4N window
     // (observed: efficiency 0.48 with the pair-average steal at 0.4%)
-    // is identifiable from the record without replaying the run
-    val (alone, stealAlone) = withSteal {
-      val (pa, readyA, startA) =
-        fork(slices.head, cores, "alone", work, reps, heap, Some(s"0-${cores - 1}"))
-      while (!readyA.exists()) Thread.sleep(20)
-      startA.createNewFile()
-      awaitLeg(pa, new java.io.File(work, "alone.result"), 1800)
-    }
-
-    // ---- 4N side: `legs` executor-JVMs over the disjoint slices,
-    // each pinned to its own core range (= one executor per "node slot") ----
-    val (legsR, steal4n) = withSteal {
-      val procs = slices.zipWithIndex.map { case (slice, i) =>
-        fork(slice, cores, s"m$i", work, reps, heap,
-          Some(s"${i * cores}-${(i + 1) * cores - 1}"))
-      }
-      procs.foreach { case (_, ready, _) => while (!ready.exists()) Thread.sleep(20) }
-      procs.foreach { case (_, _, start) => start.createNewFile() } // barrier release
-      procs.zipWithIndex.map { case ((p, _, _), i) =>
-        awaitLeg(p, new java.io.File(work, s"m$i.result"), 1800)
-      }
-    }
-
-    // ---- full-input leg: strong-shape baseline + global checksum ----
-    val (full, stealFull) = withSteal {
-      val (pf, readyF, startF) =
-        fork(files, cores, "full", work, reps, heap, Some(s"0-${cores - 1}"))
-      while (!readyF.exists()) Thread.sleep(20)
-      startF.createNewFile()
-      awaitLeg(pf, new java.io.File(work, "full.result"), 1800)
-    }
+    // is identifiable from the record without replaying the run.
+    // N side (weak scaling): ONE executor-JVM over slice 0, alone;
+    // 4N side: one executor-JVM per slice, each on its own CPU run;
+    // full-input leg: strong-shape baseline + global checksum
+    val (alone, stealAlone) = withSteal(runLegs(Seq(slices.head), "alone", work, shape).head)
+    val (legsR, steal4n) = withSteal(runLegs(slices, "m", work, shape))
+    val (full, stealFull) = withSteal(runLegs(Seq(files), "full", work, shape).head)
 
     val t4 = legsR.map(_.seconds).max // wall = slowest executor
     val docs = full.docs
@@ -290,7 +328,7 @@ object ScalePair {
       nDocsPerSec = alone.docs / alone.seconds,
       n4DocsPerSec = docs / t4,
       efficiency = alone.seconds / t4, // same slice 0: alone vs concurrent
-      strongEfficiency = (docs / t4) / (legs * (docs / full.seconds)),
+      strongEfficiency = (docs / t4) / (Legs * (docs / full.seconds)),
       checksumMatch = sum4.compareTo(full.checksum) == 0 &&
         legsR.map(_.docs).sum == docs,
       tAlone = alone.seconds, t4N = t4, tFull = full.seconds,
@@ -298,14 +336,16 @@ object ScalePair {
   }
 
   /** One cumulative-record JSONL line per pair run — shared by Bench's
-    * in-capture appends and the standalone `main` below, so a
-    * calm-window standalone run reaches the committed history instead
-    * of evaporating on stdout (the r5 gap: six standalone runs printed
-    * and were lost until hand-appended). The two per-leg doc rates
-    * ride along for the turbo-skew diagnosis BASELINE.md describes
-    * (the honest summary is the pair of rates, not the ratio alone). */
-  def historyLine(r: Result, benchDocs: Long, cores: Int): String =
-    f"""{"ts_ms":${System.currentTimeMillis()},"cores_per_executor":$cores,"bench_docs":$benchDocs,"efficiency":${r.efficiency}%.4f,"strong_efficiency":${r.strongEfficiency}%.4f,"n_docs_per_sec":${r.nDocsPerSec}%.1f,"n4_docs_per_sec":${r.n4DocsPerSec}%.1f,"t_alone":${r.tAlone}%.3f,"t_4n":${r.t4N}%.3f,"t_full":${r.tFull}%.3f,"checksum_match":${r.checksumMatch},"steal_pct":${r.stealPct}%.3f,"steal_alone_pct":${r.stealAlonePct}%.3f,"steal_4n_pct":${r.steal4nPct}%.3f,"steal_full_pct":${r.stealFullPct}%.3f,"valid":${r.valid}}"""
+    * in-capture appends and the standalone `main` below (which prints
+    * it too), so a standalone run reaches the committed history
+    * instead of evaporating on stdout. Carries the host shape the pair
+    * ran with; the two per-leg doc rates ride along for the turbo-skew
+    * diagnosis BASELINE.md describes (the honest summary is the pair
+    * of rates, not the ratio alone). */
+  def historyLine(r: Result, benchDocs: Long): String = {
+    val shape = r.shape.fold("")(_.json + ",")
+    f"""{"ts_ms":${System.currentTimeMillis()},$shape"bench_docs":$benchDocs,"efficiency":${r.efficiency}%.4f,"strong_efficiency":${r.strongEfficiency}%.4f,"n_docs_per_sec":${r.nDocsPerSec}%.1f,"n4_docs_per_sec":${r.n4DocsPerSec}%.1f,"t_alone":${r.tAlone}%.3f,"t_4n":${r.t4N}%.3f,"t_full":${r.tFull}%.3f,"checksum_match":${r.checksumMatch},"steal_pct":${r.stealPct}%.3f,"steal_alone_pct":${r.stealAlonePct}%.3f,"steal_4n_pct":${r.steal4nPct}%.3f,"steal_full_pct":${r.stealFullPct}%.3f,"valid":${r.valid}}"""
+  }
 
   /** Append lines to the cumulative record (best-effort — a read-only
     * checkout must not fail the measurement that produced the data). */
@@ -322,15 +362,14 @@ object ScalePair {
 
   def main(args: Array[String]): Unit = {
     val stage = args.headOption.getOrElse("/tmp/graft-bench-pages-480000")
-    val cores = args.lift(1).map(_.toInt).getOrElse(8)
-    val reps = args.lift(2).map(_.toInt).getOrElse(3)
     // same loaded-probe pre-flight Bench uses before its pairs
     val pre = awaitCalm()
     System.err.println(f"[scalepair] pre-flight loaded-steal $pre%.3f%%")
-    val r = run(stage, cores = cores, reps = reps)
+    val r = run(stage)
     // the staged dir is named .../graft-bench-pages-<nDocs> by Bench
     val nDocs = "([0-9]+)$".r.findFirstIn(stage).map(_.toLong).getOrElse(480000L)
-    appendHistory(Seq(historyLine(r, benchDocs = nDocs, cores = cores)))
-    println(f"""{"metric":"scaling","cores_per_executor":$cores,"n_docs_per_sec":${r.nDocsPerSec}%.1f,"n4_docs_per_sec":${r.n4DocsPerSec}%.1f,"efficiency":${r.efficiency}%.3f,"strong_efficiency":${r.strongEfficiency}%.3f,"checksum_match":${r.checksumMatch},"t_alone":${r.tAlone}%.2f,"t_4n":${r.t4N}%.2f,"t_full":${r.tFull}%.2f,"steal_pct":${r.stealPct}%.3f,"steal_alone_pct":${r.stealAlonePct}%.3f,"steal_4n_pct":${r.steal4nPct}%.3f,"steal_full_pct":${r.stealFullPct}%.3f,"valid":${r.valid}}""")
+    val line = historyLine(r, benchDocs = nDocs)
+    appendHistory(Seq(line))
+    println(line)
   }
 }

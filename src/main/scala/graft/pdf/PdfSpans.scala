@@ -28,8 +28,10 @@ object PdfSpans {
 
   final class PdfParseException(msg: String) extends Exception(msg)
 
-  /** Cap on the inflated bytes of one flate stream: a small flate bomb
-    * becomes an error row instead of taking the executor heap. */
+  /** Cap on the inflated bytes of all flate streams of one document
+    * together (they are all held at once): a small flate bomb, or many
+    * streams each just under the cap, becomes an error row instead of
+    * taking the executor heap. */
   final val MaxInflatedBytes = 64 << 20
 
   /** Parse PDF bytes → ordered pages, each a Seq of text lines. */
@@ -52,6 +54,7 @@ object PdfSpans {
     * object dictionary names the filter, else raw bytes. */
   private def findStreams(bytes: Array[Byte]): Seq[Array[Byte]] = {
     val out = ArrayBuffer.empty[Array[Byte]]
+    var inflated = 0 // bytes inflated so far, against MaxInflatedBytes
     val n = bytes.length
     var i = 0
     while (i < n) {
@@ -86,7 +89,9 @@ object PdfSpans {
             d
           }
         val raw = java.util.Arrays.copyOfRange(bytes, ds, de)
-        out += (if (flate) inflate(raw) else raw)
+        val data = if (flate) inflate(raw, MaxInflatedBytes - inflated) else raw
+        if (flate) inflated += data.length
+        out += data
         val after = indexOf(bytes, "endstream", de)
         i = (if (after >= 0) after else de) + "endstream".length
       }
@@ -112,7 +117,8 @@ object PdfSpans {
     if (any && !indirect) v else -1
   }
 
-  private def inflate(raw: Array[Byte]): Array[Byte] = {
+  /** Inflate `raw`; more than `budget` bytes fails the document. */
+  private def inflate(raw: Array[Byte], budget: Int): Array[Byte] = {
     val inf = new Inflater()
     try {
       inf.setInput(raw)
@@ -126,7 +132,7 @@ object PdfSpans {
           throw new PdfParseException("flate stream needs a preset dictionary")
         if (k == 0 && inf.needsInput())
           throw new PdfParseException("truncated flate stream")
-        if (buf.size > MaxInflatedBytes - k)
+        if (buf.size > budget - k)
           throw new PdfParseException(s"flate stream inflates past $MaxInflatedBytes bytes")
         buf.write(chunk, 0, k)
       }

@@ -10,8 +10,8 @@ package graft
 object QueryProbe {
   def main(args: Array[String]): Unit = {
     val (name, sfDir, outDir) = (args(0), args(1), args(2))
-    val spark = GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt, "graft-query-probe")
+    val spark = GraftSession.local(sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors()), "graft-query-probe")
     SparkEntry.queries(name)(spark, sfDir)
       .write.mode("overwrite").parquet(s"$outDir/$name")
     SparkEntry.oracleSql.get(name).foreach { sql =>

@@ -243,6 +243,25 @@ class RobustnessSpec extends AnyFunSuite {
       s"pdf: flate stream inflates past ${PdfSpans.MaxInflatedBytes} bytes")
   }
 
+  test("pdf: flate streams share one inflate budget per document") {
+    // two streams of 40 MiB of zeros: each under the cap, together past it
+    val d = new java.util.zip.Deflater()
+    d.setInput(new Array[Byte](40 << 20))
+    d.finish()
+    val body = new java.io.ByteArrayOutputStream()
+    val buf = new Array[Byte](1 << 16)
+    while (!d.finished()) body.write(buf, 0, d.deflate(buf))
+    d.end()
+    val stream = ("<< /Length " + body.size + " /Filter /FlateDecode >>\nstream\n")
+      .getBytes("UTF-8") ++ body.toByteArray ++ "\nendstream\nendobj\n".getBytes("UTF-8")
+    val pdf = "%PDF-1.4\n1 0 obj\n".getBytes("UTF-8") ++ stream ++
+      "2 0 obj\n".getBytes("UTF-8") ++ stream ++ "trailer\n%%EOF\n".getBytes("UTF-8")
+    val (r, _) = extractWithin(60)(pdf)
+    assert(r.text == null, r)
+    assert(r.error == Extractor.ErrorPrefix +
+      s"pdf: flate stream inflates past ${PdfSpans.MaxInflatedBytes} bytes")
+  }
+
   test("html: a 64 MiB page and a page nested 100k tags deep extract in bounded time") {
     val para = "<p>lorem ipsum &amp; dolor sit amet, consectetur adipiscing elit " +
       "sed do eiusmod tempor incididunt ut labore et dolore magna aliqua</p>\n"
