@@ -72,13 +72,14 @@ object Bench {
     val tExtractMin = reps.min
 
     // full pipeline: extract + bucket/salt + IceTable commit w/ lineage
-    val benchRoot = java.nio.file.Files.createTempDirectory("graft-bench-table").toString
-    val (tCommit, stealCommit) = ScalePair.withSteal {
-      timed {
-        ExtractJob.run(spark, benchRoot, nDocs, buckets = 32,
-          groups = 4, commitId = s"bench-$cpus")
-      }
-    }
+    val benchRoot = java.nio.file.Files.createTempDirectory("graft-bench-table").toFile
+    val (tCommit, stealCommit) =
+      try ScalePair.withSteal {
+        timed {
+          ExtractJob.run(spark, benchRoot.toString, nDocs, buckets = 32,
+            groups = 4, commitId = s"bench-$cpus")
+        }
+      } finally org.apache.commons.io.FileUtils.deleteQuietly(benchRoot)
 
     val results = scala.collection.mutable.LinkedHashMap[String, Double](
       "x_extract" -> tExtract,

@@ -317,9 +317,19 @@ object ScalePair {
     // N side (weak scaling): ONE executor-JVM over slice 0, alone;
     // 4N side: one executor-JVM per slice, each on its own CPU run;
     // full-input leg: strong-shape baseline + global checksum
-    val (alone, stealAlone) = withSteal(runLegs(Seq(slices.head), "alone", work, shape).head)
-    val (legsR, steal4n) = withSteal(runLegs(slices, "m", work, shape))
-    val (full, stealFull) = withSteal(runLegs(Seq(files), "full", work, shape).head)
+    val ((alone, stealAlone), (legsR, steal4n), (full, stealFull)) =
+      try (withSteal(runLegs(Seq(slices.head), "alone", work, shape).head),
+        withSteal(runLegs(slices, "m", work, shape)),
+        withSteal(runLegs(Seq(files), "full", work, shape).head))
+      finally {
+        // each leg's per-rep times go to stderr before the work dir goes
+        work.listFiles().filter(_.getName.endsWith(".log")).sortBy(_.getName).foreach { log =>
+          new String(java.nio.file.Files.readAllBytes(log.toPath), "UTF-8").linesIterator
+            .filter(_.startsWith("[scale-leg] reps:"))
+            .foreach(l => System.err.println(s"${log.getName.stripSuffix(".log")} $l"))
+        }
+        org.apache.commons.io.FileUtils.deleteQuietly(work)
+      }
 
     val t4 = legsR.map(_.seconds).max // wall = slowest executor
     val docs = full.docs

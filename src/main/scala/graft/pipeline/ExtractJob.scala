@@ -47,8 +47,9 @@ object ExtractJob {
     val bucketed = ExtractPipeline.extracted(pages)
       .withColumn("bucket", ExtractPipeline.bucketOf(buckets))
     val table = new IceTable(root, spark)
-    val metrics = new JobMetrics(spark, s"extract-$commitId")
-    metrics.logEvent(root, s"job_start docs=$nDocs buckets=$buckets groups=$groups")
+    // the table logs the commit's own events (staged counts, groups,
+    // completion or failure) from its lineage
+    table.logEvent(commitId, s"job_start docs=$nDocs buckets=$buckets groups=$groups")
     // all commit jobs run under a cancellable group (ST2): cancel(…)
     // interrupts in-flight tasks; finished groups' markers survive, so
     // the same commitId resumes from the checkpoint
@@ -56,20 +57,10 @@ object ExtractJob {
       s"graft commit $commitId", interruptOnCancel = true)
     val snap =
       try table.commit(bucketed, commitId, groups, abortAfterGroup)
-      catch {
-        case e: Throwable =>
-          metrics.logEvent(root, s"job_failed error=${e.getClass.getSimpleName}")
-          metrics.close()
-          throw e
-      } finally spark.sparkContext.clearJobGroup()
+      finally spark.sparkContext.clearJobGroup()
     // the counts come from the committed manifest: no Spark job
     val lineage = table.readSnapshot(snap).lineage
     def total(c: String): Long = IceTable.lineageSum(lineage, c)
-    metrics.rowsProcessed.add(total("rows"))
-    metrics.errorRows.add(total("error_rows"))
-    metrics.oversizeDocs.add(total("oversize_docs"))
-    metrics.logEvent(root, s"commit_complete snapshot=$snap")
-    metrics.close()
     Result(snap, total("rows"), total("error_rows"))
   }
 }

@@ -25,6 +25,7 @@ import scala.jdk.CollectionConverters._
   *   root/metadata/snap-<n>.json           — file list + lineage rows + metrics
   *   root/metadata/progress/<id>/group-G.done — resume checkpoint marker
   *                                            carrying group G's lineage rows
+  *   root/metadata/events/ev-<ms>-<seq>-<jvm>.log — one event-log line
   * }}}
   *
   * Commit protocol: data files land under a commit-unique directory
@@ -41,8 +42,31 @@ final class IceTable(val root: String, spark: SparkSession) {
 
   private def metaDir = new Path(root, "metadata")
   private def snapPath(n: Long) = new Path(metaDir, s"snap-$n.json")
+  private def eventsDir = new Path(metaDir, "events")
 
-  import IceTable.{DataFileEntry, Json, LineageCols, Snapshot, lineageSum}
+  import IceTable.{DataFileEntry, EventSeq, JvmId, Json, LineageCols, Snapshot, lineageSum}
+
+  // ---- event log -------------------------------------------------------
+
+  /** Append one line `ISO-timestamp [commitId] event` to the table's
+    * event log (the reference's event_log.py format). Each line is its
+    * own immutable file, since file append is not portable; the name
+    * (epoch ms, this JVM's event sequence, a per-JVM id) sorts in
+    * append order and never collides with another committer's. */
+  def logEvent(commitId: String, event: String): Unit = {
+    val now = java.time.Instant.now()
+    val out = fs.create(new Path(eventsDir,
+      f"ev-${now.toEpochMilli}%013d-${EventSeq.getAndIncrement()}%010d-$JvmId.log"), false)
+    try out.write(s"$now [$commitId] $event\n".getBytes("UTF-8")) finally out.close()
+  }
+
+  /** Every event line of the table, in append order. */
+  def eventLog: Seq[String] =
+    if (!fs.exists(eventsDir)) Nil
+    else fs.listStatus(eventsDir).toSeq.map(_.getPath).sortBy(_.getName).map { p =>
+      val in = fs.open(p)
+      try new String(in.readAllBytes(), "UTF-8").trim finally in.close()
+    }
 
   // ---- snapshot log ---------------------------------------------------
 
@@ -134,7 +158,7 @@ final class IceTable(val root: String, spark: SparkSession) {
     // re-reference the target's lineage too: lineage(asOf=new) must
     // describe the data the new snapshot actually reads
     flipSnapshot(s"rollback-to-$toSnapshot", target.files, target.rows,
-      target.schemaFields.getOrElse(Nil), parent, target.lineage)
+      target.schemaFields, parent, target.lineage)
   }
 
   private def assemble(snap: Snapshot, files: Seq[DataFileEntry]): DataFrame = {
@@ -158,18 +182,15 @@ final class IceTable(val root: String, spark: SparkSession) {
         .option("basePath", s"$root/data/commit-$c")
         .parquet(fsOfC.map(_.path): _*)
     }.reduce(_.unionByName(_, allowMissingColumns = true)).drop("grp")
-    snap.schemaFields.foreach { recorded =>
-      val have = df.columns.toSet
-      val missing = recorded.filterNot(have)
-      if (missing.nonEmpty)
-        throw new IllegalStateException(
-          s"snapshot $id schema drift: recorded fields missing from data: ${missing.mkString(",")}")
-    }
+    val missing = snap.schemaFields.filterNot(df.columns.toSet)
+    if (missing.nonEmpty)
+      throw new IllegalStateException(
+        s"snapshot $id schema drift: recorded fields missing from data: ${missing.mkString(",")}")
     df
   }
 
-  /** Field names recorded with a snapshot (None for pre-v1 snapshots). */
-  def schemaOf(snapshotId: Long): Option[Seq[String]] =
+  /** Field names recorded with a snapshot. */
+  def schemaOf(snapshotId: Long): Seq[String] =
     readSnapshot(snapshotId).schemaFields
 
   /** Per-bucket lineage + metrics rows of a snapshot, built from its
@@ -217,8 +238,7 @@ final class IceTable(val root: String, spark: SparkSession) {
     // 16.5 s, no persist (recompute per group) 25.0 s — deserialized
     // rows blow the young gen, recompute pays 4× generation+extract.
     val staged = df.repartition(col("bucket")).persist(StorageLevel.MEMORY_AND_DISK_SER)
-    try {
-      val (files, lineage) = writeGroups(staged, commitId, groups, abortAfterGroup)
+    try commitGroups(staged, commitId, groups, abortAfterGroup) { (files, lineage) =>
       // an overwrite manifest is parent-independent, so the freshest
       // parent read is correct; a racing flip still collides on the
       // snapshot id and raises ConcurrentCommitException
@@ -256,108 +276,128 @@ final class IceTable(val root: String, spark: SparkSession) {
     // per-file stats pruning readRange depends on. Small-file growth is
     // the compact() job's concern (Iceberg's same split of duties).
     requireBucket(df)
-    val (files, lineage) = writeGroups(df, commitId, 1, -1)
-    val mergedRows = parent.map(_.rows).getOrElse(0L) +
-      (if (parentHadThis) 0L else lineageSum(lineage, "rows"))
-    // CAS against the parent this manifest was BUILT from: a racing
-    // commit that landed after our parent read must make THIS flip
-    // fail (the merged file list would silently drop its files if we
-    // re-read the current snapshot here) — caller retries, re-reading
-    // the new parent. Parent files keep the stats they already carry;
-    // only THIS commit's fresh files are scanned for theirs.
-    flipSnapshot(commitId, (parentFiles ++ withStats(files, statsCol)).sortBy(_.path),
-      mergedRows, df.columns.toSeq, parentId.getOrElse(-1L), lineage)
+    commitGroups(df, commitId, 1, -1) { (files, lineage) =>
+      val mergedRows = parent.map(_.rows).getOrElse(0L) +
+        (if (parentHadThis) 0L else lineageSum(lineage, "rows"))
+      // CAS against the parent this manifest was BUILT from: a racing
+      // commit that landed after our parent read must make THIS flip
+      // fail (the merged file list would silently drop its files if we
+      // re-read the current snapshot here) — caller retries, re-reading
+      // the new parent. Parent files keep the stats they already carry;
+      // only THIS commit's fresh files are scanned for theirs.
+      flipSnapshot(commitId, (parentFiles ++ withStats(files, statsCol)).sortBy(_.path),
+        mergedRows, df.columns.toSeq, parentId.getOrElse(-1L), lineage)
+    }
   }
 
   private def requireBucket(df: DataFrame): Unit =
     require(df.columns.contains("bucket"), "df must carry a bucket column")
 
-  /** Lineage aggregate, then the group writes, of `df` in its own
-    * layout, as overlapped jobs from a pool of up to 3 threads. Returns
-    * the data files and every group's lineage rows, read from the
-    * markers: a group finished by an earlier run keeps the lineage of
-    * the data it wrote. With `abortAfterGroup` = g ≥ 0 only groups
-    * 0..g run, then it throws (the simulated crash of the test hook).
+  /** The one commit body under `commit` and `commitAppend`: the lineage
+    * aggregate, then the group writes of `df` in its own layout as
+    * overlapped jobs from a pool of up to 3 threads, then `flip` with the
+    * data files and every group's lineage rows, read from the markers: a
+    * group finished by an earlier run keeps the lineage of the data it
+    * wrote. With `abortAfterGroup` = g ≥ 0 only groups 0..g run, then it
+    * throws (the simulated crash of the test hook).
+    *
+    * The event log gets the aggregate's counts (`staged`) before any
+    * write, one `group` line per group (`resumed` if its marker was
+    * there), then `commit_complete` from the flip or `commit_failed`.
     * The commit id names the data directory, which the read path globs,
     * so an empty id, a path or glob character, or non-ASCII (the JVM's
-    * file-name encoding follows the locale) is refused up front. */
-  private def writeGroups(df: DataFrame, commitId: String, groups: Int,
-                          abortAfterGroup: Int): (Seq[DataFileEntry], Seq[Seq[Long]]) = {
+    * file-name encoding follows the locale) is refused up front, before
+    * anything is written or logged. */
+  private def commitGroups(df: DataFrame, commitId: String, groups: Int, abortAfterGroup: Int)
+                          (flip: (Seq[DataFileEntry], Seq[Seq[Long]]) => Long): Long = {
     require(commitId.nonEmpty && commitId.forall(c => c < 128 && "/\\[]{}*?".indexOf(c) < 0),
       s"commit id '$commitId' cannot be a directory name: use non-empty ASCII without / \\ [ ] { } * ?")
     require(groups >= 1, s"groups must be >= 1, got $groups")
     val dataDir = new Path(root, s"data/commit-$commitId")
     val progressDir = new Path(metaDir, s"progress/$commitId")
     def marker(g: Int) = new Path(progressDir, s"group-$g.done")
-    fs.mkdirs(progressDir)
+    try {
+      fs.mkdirs(progressDir)
+      val grouped = df.withColumn("grp", pmod(col("bucket"), lit(groups)))
+      // lineage: one row per logical bucket (SURVEY.md §7.7), aggregated
+      // ONCE up front — at most `buckets` rows, collected to the driver.
+      // commit's persisted input fills its cache with this action before
+      // the concurrent group jobs race for it; an append's input is
+      // column-pruned here and pays one cheap pass instead of one per group.
+      val t0 = System.nanoTime()
+      val lineage = grouped.groupBy(col("bucket"), col("grp"))
+        .agg(
+          count(lit(1)).as("rows"),
+          sum(when(col("error").isNotNull, 1L).otherwise(0L)).as("error_rows"),
+          // P6 analogue: blank extractions counted at the sink
+          // (main_window.py:784-786 refuses empty saves; we record)
+          sum(when(col("error").isNull && length(coalesce(col("text"), lit(""))) === 0, 1L)
+            .otherwise(0L)).as("empty_rows"),
+          // O4 analogue: >20-part documents warn-counted, not dropped
+          // (main_window.py:342-344)
+          sum(when(size(split(coalesce(col("text"), lit("")), "--- صفحة ", -1)) - 1 > 20, 1L)
+            .otherwise(0L)).as("oversize_docs"),
+          sum(length(coalesce(col("text"), lit("")))).as("text_chars"))
+        .collect().toSeq
+        // in LineageCols order; each group write fills in its elapsed_ms
+        .map(r => r.getInt(0).toLong +: (2 to 6).map(r.getLong) :+ 0L :+ r.getInt(1).toLong)
+      def total(c: String) = lineageSum(lineage, c)
+      logEvent(commitId, s"staged rows=${total("rows")} errors=${total("error_rows")} " +
+        s"empty=${total("empty_rows")} oversize=${total("oversize_docs")} " +
+        s"ms=${(System.nanoTime() - t0) / 1000000}")
 
-    val grouped = df.withColumn("grp", pmod(col("bucket"), lit(groups)))
-    // lineage: one row per logical bucket (SURVEY.md §7.7), aggregated
-    // ONCE up front — at most `buckets` rows, collected to the driver.
-    // commit's persisted input fills its cache with this action before
-    // the concurrent group jobs race for it; an append's input is
-    // column-pruned here and pays one cheap pass instead of one per group.
-    val lineage = grouped.groupBy(col("bucket"), col("grp"))
-      .agg(
-        count(lit(1)).as("rows"),
-        sum(when(col("error").isNotNull, 1L).otherwise(0L)).as("error_rows"),
-        // P6 analogue: blank extractions counted at the sink
-        // (main_window.py:784-786 refuses empty saves; we record)
-        sum(when(col("error").isNull && length(coalesce(col("text"), lit(""))) === 0, 1L)
-          .otherwise(0L)).as("empty_rows"),
-        // O4 analogue: >20-part documents warn-counted, not dropped
-        // (main_window.py:342-344)
-        sum(when(size(split(coalesce(col("text"), lit("")), "--- صفحة ", -1)) - 1 > 20, 1L)
-          .otherwise(0L)).as("oversize_docs"),
-        sum(length(coalesce(col("text"), lit("")))).as("text_chars"))
-    val lineageRows = lineage.collect()
+      def doGroup(g: Int): Unit =
+        if (fs.exists(marker(g))) logEvent(commitId, s"group $g resumed")
+        else {
+          val t0 = System.nanoTime()
+          // grp/bucket as real partition dirs: a consistent two-level
+          // layout for partition discovery AND bucket-level pruning.
+          // Dynamic overwrite clears ONLY this group's partitions — a
+          // group job that died mid-write is cleanly replaced on resume,
+          // never duplicated.
+          grouped.filter(col("grp") === g).write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("grp", "bucket").parquet(dataDir.toString)
+          val elapsedMs = (System.nanoTime() - t0) / 1000000
+          val mine = lineage.filter(_.last == g)
+            .map(_.updated(LineageCols.indexOf("elapsed_ms"), elapsedMs))
+          // one file certifies data + lineage: written under a temp name
+          // and renamed, so it is complete or absent, and a group that
+          // died before the rename re-runs
+          val tmp = new Path(progressDir, s".group-$g.done.tmp")
+          val out = fs.create(tmp, true)
+          out.write(Json.writeValueAsBytes(mine.map(_.toArray).toArray)); out.close()
+          if (!fs.rename(tmp, marker(g)))
+            throw new java.io.IOException(s"could not publish ${marker(g)}")
+          logEvent(commitId, s"group $g rows=${lineageSum(mine, "rows")} ms=$elapsedMs")
+        }
 
-    def doGroup(g: Int): Unit =
-      if (!fs.exists(marker(g))) {
-        val t0 = System.nanoTime()
-        // grp/bucket as real partition dirs: a consistent two-level
-        // layout for partition discovery AND bucket-level pruning.
-        // Dynamic overwrite clears ONLY this group's partitions — a
-        // group job that died mid-write is cleanly replaced on resume,
-        // never duplicated.
-        grouped.filter(col("grp") === g).write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("grp", "bucket").parquet(dataDir.toString)
-        val elapsedMs = (System.nanoTime() - t0) / 1000000
-        // the group's lineage rows, in LineageCols order
-        val mine = lineageRows.filter(_.getInt(1) == g)
-          .map(r => r.getInt(0).toLong +: (2 to 6).map(r.getLong) :+ elapsedMs :+ g.toLong)
-        // one file certifies data + lineage: written under a temp name
-        // and renamed, so it is complete or absent, and a group that
-        // died before the rename re-runs
-        val tmp = new Path(progressDir, s".group-$g.done.tmp")
-        val out = fs.create(tmp, true)
-        out.write(Json.writeValueAsBytes(mine.map(_.toArray))); out.close()
-        if (!fs.rename(tmp, marker(g)))
-          throw new java.io.IOException(s"could not publish ${marker(g)}")
-      }
+      // OVERLAPPED group jobs (r6, guide §2.6): group writes are
+      // independent (disjoint grp= partition dirs, one marker each,
+      // per-job staging dirs), and running them from a small pool lets
+      // the next group's tasks back-fill executors freed by the current
+      // group's write tail. Resume and cancel semantics hold: markers
+      // land only after a group's data landed, unfinished groups are
+      // cleanly re-written by the dynamic overwrite on re-run, and the
+      // pool threads inherit the caller's cancellable job group
+      // (thread-locals are inheritable at thread creation).
+      val todo =
+        if (abortAfterGroup >= 0) 0 to math.min(abortAfterGroup, groups - 1) else 0 until groups
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(todo.size, 3))
+      // propagate the first failure in group order, unwrapped
+      try todo.map(g => pool.submit[Unit](() => doGroup(g))).foreach { f =>
+        try f.get() catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+      } finally pool.shutdownNow()
+      if (abortAfterGroup >= 0)
+        throw new IllegalStateException(s"simulated crash after group ${todo.last}")
 
-    // OVERLAPPED group jobs (r6, guide §2.6): group writes are
-    // independent (disjoint grp= partition dirs, one marker each,
-    // per-job staging dirs), and running them from a small pool lets
-    // the next group's tasks back-fill executors freed by the current
-    // group's write tail. Resume and cancel semantics hold: markers
-    // land only after a group's data landed, unfinished groups are
-    // cleanly re-written by the dynamic overwrite on re-run, and the
-    // pool threads inherit the caller's cancellable job group
-    // (thread-locals are inheritable at thread creation).
-    val todo =
-      if (abortAfterGroup >= 0) 0 to math.min(abortAfterGroup, groups - 1) else 0 until groups
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(todo.size, 3))
-    // propagate the first failure in group order, unwrapped
-    try todo.map(g => pool.submit[Unit](() => doGroup(g))).foreach { f =>
-      try f.get() catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-    } finally pool.shutdownNow()
-    if (abortAfterGroup >= 0)
-      throw new IllegalStateException(s"simulated crash after group ${todo.last}")
-
-    (listParquet(dataDir),
-      (0 until groups).flatMap(g => rowsOf(readJson(marker(g)))).sortBy(_.head))
+      flip(listParquet(dataDir),
+        (0 until groups).flatMap(g => rowsOf(readJson(marker(g)))).sortBy(_.head))
+    } catch {
+      case e: Throwable =>
+        logEvent(commitId, s"commit_failed error=${e.getClass.getSimpleName}")
+        throw e
+    }
   }
 
   /** Atomic snapshot flip: write the manifest to a committer-unique
@@ -378,12 +418,14 @@ final class IceTable(val root: String, spark: SparkSession) {
                                    lineage: Seq[Seq[Long]] = Nil): Long = {
     val next = parent + 1
     val json = renderSnapshot(Snapshot(next, parent, commitId, files, rows, lineage,
-      Some(schemaFields)))
+      schemaFields))
     fs.mkdirs(metaDir)
     val tmp = new Path(metaDir, s".snap-$next.json.$commitId.tmp")
     val o = fs.create(tmp, true); o.write(json); o.close()
     if (!publishNew(tmp, snapPath(next)))
       throw new IceTable.ConcurrentCommitException(next, commitId)
+    logEvent(commitId, s"commit_complete snapshot=$next rows=${lineageSum(lineage, "rows")} " +
+      s"errors=${lineageSum(lineage, "error_rows")} oversize=${lineageSum(lineage, "oversize_docs")}")
     next
   }
 
@@ -545,7 +587,7 @@ final class IceTable(val root: String, spark: SparkSession) {
       .put("snapshot_id", s.id).put("parent_id", s.parentId)
       .put("commit_id", s.commitId).put("rows", s.rows)
     o.set[JsonNode]("lineage", Json.valueToTree[JsonNode](s.lineage.map(_.toArray).toArray))
-    s.schemaFields.foreach(_.foldLeft(o.putArray("schema"))(_.add(_)))
+    s.schemaFields.foldLeft(o.putArray("schema"))(_.add(_))
     val files = o.putArray("files")
     s.files.foreach { f =>
       val e = files.addObject().put("path", f.path).put("bytes", f.bytes)
@@ -562,13 +604,13 @@ final class IceTable(val root: String, spark: SparkSession) {
       throw new IllegalStateException(s"snapshot format_version $version is unreadable: " +
         "this reader supports only 2 (format 1 and older store lineage as a path)")
     def field(k: String): JsonNode =
-      Option(j.get(k)).getOrElse(throw new IllegalStateException(s"bad snapshot json: $k"))
+      Option(j.get(k)).getOrElse(throw new IllegalStateException(s"bad snapshot json: no $k"))
     val files = j.path("files").asScala.map(f => DataFileEntry(
       f.get("path").asText, f.get("bytes").asLong,
       Option(f.get("min")).map(_.asLong), Option(f.get("max")).map(_.asLong))).toSeq
     Snapshot(field("snapshot_id").asLong, field("parent_id").asLong,
       field("commit_id").asText, files, field("rows").asLong, rowsOf(field("lineage")),
-      Option(j.get("schema")).map(_.asScala.map(_.asText).toSeq))
+      field("schema").asScala.map(_.asText).toSeq)
   }
 }
 
@@ -608,5 +650,10 @@ object IceTable {
       files: Seq[DataFileEntry],
       rows: Long,
       lineage: Seq[Seq[Long]],
-      schemaFields: Option[Seq[String]] = None)
+      schemaFields: Seq[String])
+
+  /** The event-log file name's sequence and JVM id: unique across
+    * tables and threads in one JVM and across committer JVMs. */
+  private val EventSeq = new java.util.concurrent.atomic.AtomicLong()
+  private val JvmId = java.util.UUID.randomUUID().toString.take(8)
 }

@@ -15,7 +15,7 @@ object BarrierSpec {
     * suites share one JVM and the later ones must keep running the
     * local path. */
   def withCheckpointDir[T](spark: SparkSession)(body: => T): T = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val dir = TempDirs.untilExit("graft-ckpt").toString
     spark.sparkContext.setCheckpointDir(dir)
     try body
     finally spark.sparkContext.setCheckpointDir(null)

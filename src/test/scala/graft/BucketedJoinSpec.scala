@@ -19,7 +19,7 @@ class BucketedJoinSpec extends AnyFunSuite {
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-    val wh = java.nio.file.Files.createTempDirectory("graft-warehouse").toString
+    val wh = TempDirs.untilExit("graft-warehouse").toString
     spark.sql("DROP TABLE IF EXISTS li_b")
     spark.sql("DROP TABLE IF EXISTS o_b")
     spark.read.parquet(s"$sf/lineitem.parquet")

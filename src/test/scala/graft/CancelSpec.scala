@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import scala.concurrent.{Await, Future}
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration._
@@ -20,12 +18,12 @@ import graft.tables.IceTable
   * in-flight group jobs, completed groups keep their checkpoint
   * markers, and a re-run with the same commitId resumes to an
   * identical final table. */
-class CancelSpec extends AnyFunSuite {
+class CancelSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = GraftSession.local(8, "graft-cancel-test")
 
   test("cancelJobGroup mid-commit, then resume completes the table") {
-    val root = Files.createTempDirectory("graft-cancel").toString
+    val root = tempDir("graft-cancel").toString
     val table = new IceTable(root, spark)
     // rows made artificially slow (~3ms each) so groups 1-3 are
     // reliably still pending when group 0's marker appears

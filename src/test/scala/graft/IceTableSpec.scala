@@ -8,15 +8,11 @@ import graft.tables.IceTable
 
 /** Snapshot/commit/lineage/resume semantics (SURVEY.md §7.2, north
   * rule: resumable from checkpoint, per-partition lineage+metrics). */
-class IceTableSpec extends AnyFunSuite {
+class IceTableSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = GraftSession.local(8, "graft-ice-test")
 
-  private def tmpRoot(tag: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(s"icetable-$tag").toFile
-    d.deleteOnExit()
-    d.getAbsolutePath
-  }
+  private def tmpRoot(tag: String): String = tempDir(s"icetable-$tag").getAbsolutePath
 
   val N = 600L
 
@@ -44,9 +40,7 @@ class IceTableSpec extends AnyFunSuite {
     assert(lin.head.schema.fieldNames.contains("empty_rows"))
     assert(lin.head.schema.fieldNames.contains("oversize_docs"))
     // event-log audit rows (S9/ST4 analogues): start + completion
-    val m = new graft.pipeline.JobMetrics(spark, "probe")
-    val events = m.readEventLog(root)
-    m.close()
+    val events = table.eventLog
     assert(events.exists(_.contains("job_start")), events.mkString("\n"))
     assert(events.exists(_.contains("commit_complete snapshot=0")), events.mkString("\n"))
     assert(events.forall(_.matches("^\\d{4}-\\d{2}-\\d{2}T.*")), "ISO-timestamped lines")
@@ -57,6 +51,62 @@ class IceTableSpec extends AnyFunSuite {
     assert(counter("rows") == linSum("rows"), done)
     assert(counter("errors") == linSum("error_rows"), done)
     assert(counter("oversize") == linSum("oversize_docs"), done)
+  }
+
+  /** The `k=v` counts of the one event line containing `event`. */
+  private def eventCounts(lines: Seq[String], event: String): Map[String, Long] = {
+    val hits = lines.filter(_.contains(s"] $event "))
+    assert(hits.length == 1, s"one '$event' line in:\n${lines.mkString("\n")}")
+    "(\\w+)=(\\d+)".r.findAllMatchIn(hits.head).map(m => m.group(1) -> m.group(2).toLong).toMap
+  }
+
+  /** `rows`/`errors`/`oversize` of a snapshot's manifest lineage. */
+  private def manifestCounts(table: IceTable, snap: Long): Map[String, Long] = {
+    val lin = table.readSnapshot(snap).lineage
+    Map("rows" -> "rows", "errors" -> "error_rows", "oversize" -> "oversize_docs")
+      .map { case (k, c) => k -> IceTable.lineageSum(lin, c) }
+  }
+
+  test("event log: a fresh commit's staged and completion counts equal the manifest's lineage") {
+    val root = tmpRoot("events-fresh")
+    val r = ExtractJob.run(spark, root, N, buckets = 16, groups = 4, commitId = "c0")
+    val table = new IceTable(root, spark)
+    val events = table.eventLog
+    val want = manifestCounts(table, r.snapshotId)
+    val staged = eventCounts(events, "staged")
+    assert(want.forall { case (k, v) => staged(k) == v }, s"$staged vs $want")
+    val lineage = table.readSnapshot(r.snapshotId).lineage
+    assert(staged("empty") == IceTable.lineageSum(lineage, "empty_rows"))
+    val done = eventCounts(events, "commit_complete")
+    assert(done("snapshot") == r.snapshotId && want.forall { case (k, v) => done(k) == v },
+      s"$done vs $want")
+    // job_start, staged, one line per group, completion: in append order
+    assert(events.map(_.split(" ")(2)) ==
+      Seq("job_start", "staged", "group", "group", "group", "group", "commit_complete"),
+      events.mkString("\n"))
+    assert(events.forall(_.contains(" [c0] ")), events.mkString("\n"))
+  }
+
+  test("event log: a resumed commit logs its finished groups as resumed and the manifest's counts") {
+    val root = tmpRoot("events-resume")
+    intercept[IllegalStateException] {
+      ExtractJob.run(spark, root, N, buckets = 16, groups = 4,
+        commitId = "c0", abortAfterGroup = 1)
+    }
+    val table = new IceTable(root, spark)
+    val failed = table.eventLog
+    assert(failed.last.endsWith("commit_failed error=IllegalStateException"), failed.mkString("\n"))
+    val r = ExtractJob.run(spark, root, N, buckets = 16, groups = 4, commitId = "c0")
+    val rerun = table.eventLog.drop(failed.length)
+    val groupLines = rerun.filter(_.contains("] group "))
+    assert(groupLines.filter(_.endsWith(" resumed")).map(_.split(" ")(3)).sorted == Seq("0", "1"),
+      rerun.mkString("\n"))
+    assert(groupLines.filter(_.contains(" ms=")).map(_.split(" ")(3)).sorted == Seq("2", "3"),
+      rerun.mkString("\n"))
+    val done = eventCounts(rerun, "commit_complete")
+    val want = manifestCounts(table, r.snapshotId)
+    assert(want.forall { case (k, v) => done(k) == v }, s"$done vs $want")
+    assert(want("rows") == N)
   }
 
   /** Lineage/layout guard: every lineage row equals the five aggregates
@@ -157,6 +207,17 @@ class IceTableSpec extends AnyFunSuite {
          |"rows":0,"lineage":"$root/metadata/lineage/c0","files":[]}""".stripMargin)
     val e = intercept[IllegalStateException] { new IceTable(root, spark).read() }
     assert(e.getMessage.contains("format_version 1 is unreadable"), e.getMessage)
+  }
+
+  test("a format-2 manifest without a schema fails by name") {
+    val root = tmpRoot("noschema")
+    val meta = new java.io.File(root, "metadata")
+    meta.mkdirs()
+    java.nio.file.Files.writeString(new java.io.File(meta, "snap-0.json").toPath,
+      """{"format_version":2,"snapshot_id":0,"parent_id":-1,"commit_id":"c0",
+        |"rows":0,"lineage":[],"files":[]}""".stripMargin)
+    val e = intercept[IllegalStateException] { new IceTable(root, spark).read() }
+    assert(e.getMessage.contains("no schema"), e.getMessage)
   }
 
   test("lineage guard: error, empty and oversize rows are counted per bucket") {
@@ -283,7 +344,7 @@ class IceTableSpec extends AnyFunSuite {
       lit("نص").as("text"), lit(null).cast("string").as("error"))
     val snap = table.readSnapshot(table.commitAppend(df, id))
     assert(snap.commitId == id && snap.rows == 20L)
-    assert(snap.schemaFields.contains(Seq(name, "bucket", "text", "error")))
+    assert(snap.schemaFields == Seq(name, "bucket", "text", "error"))
     assert(snap.files.nonEmpty && snap.files.forall(_.path.contains("codec\"\u0001")),
       snap.files.map(_.path))
     assert(snap.files.forall(_.path.contains(s"/commit-$id/")), snap.files.map(_.path))
@@ -464,8 +525,8 @@ class IceTableSpec extends AnyFunSuite {
     // a later commit ADDS a column — snapshots keep their own schema
     // (per-commit data dirs), so time travel returns the old shape
     val s2 = table.commit(df1.withColumn("lang", lit("en")), "schema-2", groups = 2)
-    assert(table.schemaOf(s1).get.toSet == Set("id", "bucket", "error", "text"))
-    assert(table.schemaOf(s2).get.contains("lang"))
+    assert(table.schemaOf(s1).toSet == Set("id", "bucket", "error", "text"))
+    assert(table.schemaOf(s2).contains("lang"))
     assert(!table.read(Some(s1)).columns.contains("lang"))
     assert(table.read(Some(s2)).columns.contains("lang"))
     assert(table.read(Some(s2)).count() == 100)

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Physical-plan shape checks — the scale contract (builder brief:
   * "is the filter pushed down? is this join broadcast-able, and did I
   * broadcast it? is there a shuffle that becomes the bottleneck?"). */
-class PlanChecksSpec extends AnyFunSuite {
+class PlanChecksSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = GraftSession.local(8, "graft-plan-test")
   val sf = "/root/testdata/sf0.001"
@@ -30,7 +30,7 @@ class PlanChecksSpec extends AnyFunSuite {
   }
 
   test("extraction over a table scan prunes unused columns") {
-    val stage = java.nio.file.Files.createTempDirectory("plancheck").toString + "/pages"
+    val stage = tempDir("plancheck").toString + "/pages"
     graft.pipeline.ExtractPipeline.pages(spark, 50).toDF()
       .write.mode("overwrite").parquet(stage)
     val p = graft.pipeline.ExtractPipeline.extracted(spark.read.parquet(stage))

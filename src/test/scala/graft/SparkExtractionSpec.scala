@@ -11,7 +11,7 @@ import graft.pipeline.ExtractPipeline
 /** Byte-identity of the PARALLEL Spark pipeline against the
   * single-threaded oracle (north rule: "byte-identical extracted text
   * per url" — the whole game, SURVEY.md §7.7). */
-class SparkExtractionSpec extends AnyFunSuite {
+class SparkExtractionSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = GraftSession.local(8, "graft-test")
 
@@ -89,7 +89,7 @@ class SparkExtractionSpec extends AnyFunSuite {
   }
 
   test("IceTable read prunes partitions on the bucket filter") {
-    val root = java.nio.file.Files.createTempDirectory("icetable-prune").toString
+    val root = tempDir("icetable-prune").toString
     graft.pipeline.ExtractJob.run(spark, root, 500L, buckets = 16, groups = 2)
     val table = new graft.tables.IceTable(root, spark)
     val plan = table.read().filter(col("bucket") === 3)

@@ -9,12 +9,12 @@ import graft.streaming.StreamingExtract
 
 /** Structured-Streaming slice: incremental extraction equals the batch
   * result byte-for-byte; windowed/stateful ops behave. */
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = GraftSession.local(8, "graft-streaming-test")
 
   private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"stream-$tag").toString
+    tempDir(s"stream-$tag").toString
 
   test("streaming extraction == batch extraction (incremental arrival)") {
     import spark.implicits._

@@ -7,7 +7,7 @@ import graft.warc.Warc
 /** WARC source semantics: spec-layout writer/parser roundtrip (plain +
   * per-record gzip members), header-trap payloads, hand-built fixture
   * independence, and the error-as-row Spark read path. */
-class WarcSpec extends AnyFunSuite {
+class WarcSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark = GraftSession.local(8, "graft-warc-test")
 
@@ -61,7 +61,7 @@ class WarcSpec extends AnyFunSuite {
   test("stageShards via file: URI — all shards + _SUCCESS, no tmp litter, roundtrip") {
     import spark.implicits._
     val stage = new java.io.File(
-      java.nio.file.Files.createTempDirectory("graft-warc-stage").toFile, "shards")
+      tempDir("graft-warc-stage"), "shards")
     val df = (0L until 40L)
       .map(i => (i, s"<html><body>doc $i</body></html>".getBytes("UTF-8"), "en"))
       .toDF("doc_id", "html", "lang")
@@ -79,7 +79,7 @@ class WarcSpec extends AnyFunSuite {
   }
 
   test("salvage: records before a truncated tail survive + one error row") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-warc-salvage").toFile
+    val dir = tempDir("graft-warc-salvage")
     val f = new java.io.File(dir, "tail.warc.gz")
     val out = new java.io.FileOutputStream(f)
     out.write(Warc.gzipMember(Warc.warcinfo(f.getName, Ts)))
@@ -101,7 +101,7 @@ class WarcSpec extends AnyFunSuite {
   }
 
   test("salvage fuzz: any truncation point yields a prefix of good records + ≤1 error row") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-warc-fuzz").toFile
+    val dir = tempDir("graft-warc-fuzz")
     val recs = (0 until 6).map { i =>
       Warc.gzipMember(Warc.record(i.toLong, s"http://f/$i", Ts, "en",
         s"<html><body>fuzz $i</body></html>".getBytes("UTF-8")))
@@ -123,7 +123,7 @@ class WarcSpec extends AnyFunSuite {
   }
 
   test("spark read path: valid shards parse, a malformed file is one error row") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-warc").toFile
+    val dir = tempDir("graft-warc")
     val good = new java.io.File(dir, "good.warc.gz")
     val out = new java.io.FileOutputStream(good)
     out.write(Warc.gzipMember(Warc.warcinfo("good.warc.gz", Ts)))

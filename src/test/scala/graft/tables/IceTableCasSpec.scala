@@ -3,6 +3,8 @@ package graft.tables
 import org.apache.hadoop.fs.Path
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs
+
 /** Deterministic test of the snapshot-publish CAS primitive.
   *
   * POSIX rename(2) silently OVERWRITES an existing destination, so a
@@ -14,12 +16,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * contract: second publish to the same destination must return false
   * and leave the first content intact.
   */
-class IceTableCasSpec extends AnyFunSuite {
+class IceTableCasSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark = graft.GraftSession.local(2, "graft-cas-test")
 
   test("publishNew: first wins, second fails, winner's content intact") {
-    val root = java.nio.file.Files.createTempDirectory("icetable-cas").toString
+    val root = tempDir("icetable-cas").toString
     val table = new IceTable(root, spark)
     val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(new Path(root))
@@ -47,7 +49,7 @@ class IceTableCasSpec extends AnyFunSuite {
     // silently drop A's files from the chain — B must instead fail
     // with ConcurrentCommitException and retry from the new parent.
     import org.apache.spark.sql.functions._
-    val root = java.nio.file.Files.createTempDirectory("icetable-cas-parent").toString
+    val root = tempDir("icetable-cas-parent").toString
     val table = new IceTable(root, spark)
     val df = spark.range(0, 10).select(col("id"),
       pmod(col("id"), lit(2)).cast("int").as("bucket"),
