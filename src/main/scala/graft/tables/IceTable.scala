@@ -293,111 +293,118 @@ final class IceTable(val root: String, spark: SparkSession) {
   private def requireBucket(df: DataFrame): Unit =
     require(df.columns.contains("bucket"), "df must carry a bucket column")
 
-  /** The one commit body under `commit` and `commitAppend`: the lineage
-    * aggregate, then the group writes of `df` in its own layout as
-    * overlapped jobs from a pool of up to 3 threads, then `flip` with the
-    * data files and every group's lineage rows, read from the markers: a
-    * group finished by an earlier run keeps the lineage of the data it
-    * wrote. With `abortAfterGroup` = g ≥ 0 only groups 0..g run, then it
-    * throws (the simulated crash of the test hook).
-    *
-    * The event log gets the aggregate's counts (`staged`) before any
-    * write, one `group` line per group (`resumed` if its marker was
-    * there), then `commit_complete` from the flip or `commit_failed`.
-    * The commit id names the data directory, which the read path globs,
-    * so an empty id, a path or glob character, or non-ASCII (the JVM's
-    * file-name encoding follows the locale) is refused up front, before
-    * anything is written or logged. */
+  /** The one commit path under `commit` and `commitAppend`: the group
+    * writes, then `flip` with their data files and lineage. A failure
+    * logs `commit_failed` and rethrows. The commit id names the data
+    * directory, which the read path globs, so an empty id, a path or
+    * glob character, or non-ASCII (the JVM's file-name encoding follows
+    * the locale) is refused up front, before anything is written or
+    * logged. */
   private def commitGroups(df: DataFrame, commitId: String, groups: Int, abortAfterGroup: Int)
                           (flip: (Seq[DataFileEntry], Seq[Seq[Long]]) => Long): Long = {
     require(commitId.nonEmpty && commitId.forall(c => c < 128 && "/\\[]{}*?".indexOf(c) < 0),
       s"commit id '$commitId' cannot be a directory name: use non-empty ASCII without / \\ [ ] { } * ?")
     require(groups >= 1, s"groups must be >= 1, got $groups")
+    try flip.tupled(writeGroups(df, commitId, groups, abortAfterGroup))
+    catch {
+      case e: Throwable =>
+        // the commit's own error surfaces even if the log write fails
+        try logEvent(commitId, s"commit_failed error=${e.getClass.getSimpleName}")
+        catch { case l: Throwable => e.addSuppressed(l) }
+        throw e
+    }
+  }
+
+  /** Lineage aggregate, then the group writes, of `df` in its own
+    * layout, as overlapped jobs from a pool of up to 3 threads. Returns
+    * the data files and every group's lineage rows, read from the
+    * markers: a group finished by an earlier run keeps the lineage of
+    * the data it wrote. With `abortAfterGroup` = g ≥ 0 only groups
+    * 0..g run, then it throws (the simulated crash of the test hook).
+    * Logs the aggregate's counts (`staged`) before any write, then one
+    * `group` line per group (`resumed` if its marker was there). */
+  private def writeGroups(df: DataFrame, commitId: String, groups: Int,
+                          abortAfterGroup: Int): (Seq[DataFileEntry], Seq[Seq[Long]]) = {
     val dataDir = new Path(root, s"data/commit-$commitId")
     val progressDir = new Path(metaDir, s"progress/$commitId")
     def marker(g: Int) = new Path(progressDir, s"group-$g.done")
-    try {
-      fs.mkdirs(progressDir)
-      val grouped = df.withColumn("grp", pmod(col("bucket"), lit(groups)))
-      // lineage: one row per logical bucket (SURVEY.md §7.7), aggregated
-      // ONCE up front — at most `buckets` rows, collected to the driver.
-      // commit's persisted input fills its cache with this action before
-      // the concurrent group jobs race for it; an append's input is
-      // column-pruned here and pays one cheap pass instead of one per group.
-      val t0 = System.nanoTime()
-      val lineage = grouped.groupBy(col("bucket"), col("grp"))
-        .agg(
-          count(lit(1)).as("rows"),
-          sum(when(col("error").isNotNull, 1L).otherwise(0L)).as("error_rows"),
-          // P6 analogue: blank extractions counted at the sink
-          // (main_window.py:784-786 refuses empty saves; we record)
-          sum(when(col("error").isNull && length(coalesce(col("text"), lit(""))) === 0, 1L)
-            .otherwise(0L)).as("empty_rows"),
-          // O4 analogue: >20-part documents warn-counted, not dropped
-          // (main_window.py:342-344)
-          sum(when(size(split(coalesce(col("text"), lit("")), "--- صفحة ", -1)) - 1 > 20, 1L)
-            .otherwise(0L)).as("oversize_docs"),
-          sum(length(coalesce(col("text"), lit("")))).as("text_chars"))
-        .collect().toSeq
-        // in LineageCols order; each group write fills in its elapsed_ms
-        .map(r => r.getInt(0).toLong +: (2 to 6).map(r.getLong) :+ 0L :+ r.getInt(1).toLong)
-      def total(c: String) = lineageSum(lineage, c)
-      logEvent(commitId, s"staged rows=${total("rows")} errors=${total("error_rows")} " +
-        s"empty=${total("empty_rows")} oversize=${total("oversize_docs")} " +
-        s"ms=${(System.nanoTime() - t0) / 1000000}")
+    fs.mkdirs(progressDir)
 
-      def doGroup(g: Int): Unit =
-        if (fs.exists(marker(g))) logEvent(commitId, s"group $g resumed")
-        else {
-          val t0 = System.nanoTime()
-          // grp/bucket as real partition dirs: a consistent two-level
-          // layout for partition discovery AND bucket-level pruning.
-          // Dynamic overwrite clears ONLY this group's partitions — a
-          // group job that died mid-write is cleanly replaced on resume,
-          // never duplicated.
-          grouped.filter(col("grp") === g).write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("grp", "bucket").parquet(dataDir.toString)
-          val elapsedMs = (System.nanoTime() - t0) / 1000000
-          val mine = lineage.filter(_.last == g)
-            .map(_.updated(LineageCols.indexOf("elapsed_ms"), elapsedMs))
-          // one file certifies data + lineage: written under a temp name
-          // and renamed, so it is complete or absent, and a group that
-          // died before the rename re-runs
-          val tmp = new Path(progressDir, s".group-$g.done.tmp")
-          val out = fs.create(tmp, true)
-          out.write(Json.writeValueAsBytes(mine.map(_.toArray).toArray)); out.close()
-          if (!fs.rename(tmp, marker(g)))
-            throw new java.io.IOException(s"could not publish ${marker(g)}")
-          logEvent(commitId, s"group $g rows=${lineageSum(mine, "rows")} ms=$elapsedMs")
-        }
+    val grouped = df.withColumn("grp", pmod(col("bucket"), lit(groups)))
+    // lineage: one row per logical bucket (SURVEY.md §7.7), aggregated
+    // ONCE up front — at most `buckets` rows, collected to the driver.
+    // commit's persisted input fills its cache with this action before
+    // the concurrent group jobs race for it; an append's input is
+    // column-pruned here and pays one cheap pass instead of one per group.
+    val t0 = System.nanoTime()
+    val lineage = grouped.groupBy(col("bucket"), col("grp"))
+      .agg(
+        count(lit(1)).as("rows"),
+        sum(when(col("error").isNotNull, 1L).otherwise(0L)).as("error_rows"),
+        // P6 analogue: blank extractions counted at the sink
+        // (main_window.py:784-786 refuses empty saves; we record)
+        sum(when(col("error").isNull && length(coalesce(col("text"), lit(""))) === 0, 1L)
+          .otherwise(0L)).as("empty_rows"),
+        // O4 analogue: >20-part documents warn-counted, not dropped
+        // (main_window.py:342-344)
+        sum(when(size(split(coalesce(col("text"), lit("")), "--- صفحة ", -1)) - 1 > 20, 1L)
+          .otherwise(0L)).as("oversize_docs"),
+        sum(length(coalesce(col("text"), lit("")))).as("text_chars"))
+      .collect().toSeq
+      // in LineageCols order; each group write fills in its elapsed_ms
+      .map(r => r.getInt(0).toLong +: (2 to 6).map(r.getLong) :+ 0L :+ r.getInt(1).toLong)
+    def total(c: String) = lineageSum(lineage, c)
+    logEvent(commitId, s"staged rows=${total("rows")} errors=${total("error_rows")} " +
+      s"empty=${total("empty_rows")} oversize=${total("oversize_docs")} " +
+      s"ms=${(System.nanoTime() - t0) / 1000000}")
 
-      // OVERLAPPED group jobs (r6, guide §2.6): group writes are
-      // independent (disjoint grp= partition dirs, one marker each,
-      // per-job staging dirs), and running them from a small pool lets
-      // the next group's tasks back-fill executors freed by the current
-      // group's write tail. Resume and cancel semantics hold: markers
-      // land only after a group's data landed, unfinished groups are
-      // cleanly re-written by the dynamic overwrite on re-run, and the
-      // pool threads inherit the caller's cancellable job group
-      // (thread-locals are inheritable at thread creation).
-      val todo =
-        if (abortAfterGroup >= 0) 0 to math.min(abortAfterGroup, groups - 1) else 0 until groups
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(todo.size, 3))
-      // propagate the first failure in group order, unwrapped
-      try todo.map(g => pool.submit[Unit](() => doGroup(g))).foreach { f =>
-        try f.get() catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-      } finally pool.shutdownNow()
-      if (abortAfterGroup >= 0)
-        throw new IllegalStateException(s"simulated crash after group ${todo.last}")
+    def doGroup(g: Int): Unit =
+      if (fs.exists(marker(g))) logEvent(commitId, s"group $g resumed")
+      else {
+        val t0 = System.nanoTime()
+        // grp/bucket as real partition dirs: a consistent two-level
+        // layout for partition discovery AND bucket-level pruning.
+        // Dynamic overwrite clears ONLY this group's partitions — a
+        // group job that died mid-write is cleanly replaced on resume,
+        // never duplicated.
+        grouped.filter(col("grp") === g).write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy("grp", "bucket").parquet(dataDir.toString)
+        val elapsedMs = (System.nanoTime() - t0) / 1000000
+        val mine = lineage.filter(_.last == g)
+          .map(_.updated(LineageCols.indexOf("elapsed_ms"), elapsedMs))
+        // one file certifies data + lineage: written under a temp name
+        // and renamed, so it is complete or absent, and a group that
+        // died before the rename re-runs
+        val tmp = new Path(progressDir, s".group-$g.done.tmp")
+        val out = fs.create(tmp, true)
+        out.write(Json.writeValueAsBytes(mine.map(_.toArray).toArray)); out.close()
+        if (!fs.rename(tmp, marker(g)))
+          throw new java.io.IOException(s"could not publish ${marker(g)}")
+        logEvent(commitId, s"group $g rows=${lineageSum(mine, "rows")} ms=$elapsedMs")
+      }
 
-      flip(listParquet(dataDir),
-        (0 until groups).flatMap(g => rowsOf(readJson(marker(g)))).sortBy(_.head))
-    } catch {
-      case e: Throwable =>
-        logEvent(commitId, s"commit_failed error=${e.getClass.getSimpleName}")
-        throw e
-    }
+    // OVERLAPPED group jobs (r6, guide §2.6): group writes are
+    // independent (disjoint grp= partition dirs, one marker each,
+    // per-job staging dirs), and running them from a small pool lets
+    // the next group's tasks back-fill executors freed by the current
+    // group's write tail. Resume and cancel semantics hold: markers
+    // land only after a group's data landed, unfinished groups are
+    // cleanly re-written by the dynamic overwrite on re-run, and the
+    // pool threads inherit the caller's cancellable job group
+    // (thread-locals are inheritable at thread creation).
+    val todo =
+      if (abortAfterGroup >= 0) 0 to math.min(abortAfterGroup, groups - 1) else 0 until groups
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(todo.size, 3))
+    // propagate the first failure in group order, unwrapped
+    try todo.map(g => pool.submit[Unit](() => doGroup(g))).foreach { f =>
+      try f.get() catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+    } finally pool.shutdownNow()
+    if (abortAfterGroup >= 0)
+      throw new IllegalStateException(s"simulated crash after group ${todo.last}")
+
+    (listParquet(dataDir),
+      (0 until groups).flatMap(g => rowsOf(readJson(marker(g)))).sortBy(_.head))
   }
 
   /** Atomic snapshot flip: write the manifest to a committer-unique
