@@ -56,7 +56,21 @@ class FusedEquivalenceSpec extends AnyFunSuite {
       // every name in the entity table
       "&amp;&lt;&gt;&quot;&apos;&nbsp;&copy;&reg;&trade;&hellip;&mdash;" +
         "&ndash;&ldquo;&rdquo;&lsquo;&rsquo;&laquo;&raquo;&times;&bull;" +
-        "&middot;&deg;&euro;&pound;&cent;&sect;&para;&shy;x")
+        "&middot;&deg;&euro;&pound;&cent;&sect;&para;&shy;x",
+      // close-tag search: Character.toLowerCase maps U+0130 to 'i', and
+      // a space may follow the close name
+      "</scr\u0130pt><p>x</p>", "<script>a</scr\u0130pt><p>x</p>",
+      "<script>a</script ><p>x</p>", "<style>a</style\u2003><p>x</p>",
+      // numeric bodies read as Integer.parseInt reads UTF-16 chars:
+      // fullwidth digits parse, a supplementary digit is two surrogates
+      "&#\uFF11\uFF12;", "&#x\uFF21;", "&#\uD835\uDFCE;",
+      // the entity window counts chars, not bytes
+      "&" + "\u00E9" * 10 + ";", "&" + "\u00E9" * 11 + ";",
+      // non-ASCII whitespace and near misses (U+2007, U+202F are not)
+      "a\u00A0b", "a\u1680b", "a\u2007b", "a\u202Fb", "a\u205Fb", "a\u3000b",
+      // a 4-byte char in text, in an attribute value and in a comment
+      "<p>a\uD83D\uDE00b</p>", "<p title=\"\uD83D\uDE00>\">x</p>",
+      "<!-- \uD83D\uDE00 --><p>y</p>")
     nasty.foreach { s =>
       assert(segment(s) == unfused(s), s"input: $s")
     }

@@ -290,28 +290,49 @@ class RobustnessSpec extends AnyFunSuite {
 
   test("graft_extract row: surrogates and spans as the String path gives them") {
     import graft.expr.ExtractMainText
-    import graft.extract.Span
+    import graft.extract.{Engine, Span}
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions.BoundReference
     import org.apache.spark.sql.types.{BinaryType, StringType}
     import org.apache.spark.unsafe.types.UTF8String
     val words = (1 to 30).map(i => s"word$i").mkString(" ")
+    /** The row of `payload` under `engine` holds the String path's text
+      * as `UTF8String.fromString` writes it, and the same spans. */
+    def sameRow(payload: Array[Byte], engine: Engine): Unit = {
+      val r = Extractor.extract(payload, "en", engine)
+      assert(r.error == null, r)
+      val expr = ExtractMainText(BoundReference(0, BinaryType, nullable = true),
+        BoundReference(1, StringType, nullable = true), engine)
+      val row = expr.eval(InternalRow(payload, UTF8String.fromString("en"))).asInstanceOf[InternalRow]
+      assert(row.getUTF8String(0).getBytes.toSeq == UTF8String.fromString(r.text).getBytes.toSeq,
+        s"$engine: ${r.text}")
+      val spans = row.getArray(1)
+      val rowSpans = (0 until spans.numElements()).map { k =>
+        val s = spans.getStruct(k, 3)
+        Span(s.getInt(0), s.getInt(1), s.getUTF8String(2).toString)
+      }
+      assert(rowSpans == r.spans, s"$engine")
+      assert(row.isNullAt(2))
+    }
     val html = s"<html><body><h1>title</h1><p>$words &#xD800; &#x1F600; &#xD800;&#x1F600; " +
       s"x&#xDC00;y &#55296;</p><ul><li>$words</li></ul><p>$words &#xD800;</p></body></html>"
     val payload = html.getBytes("UTF-8")
     val r = Extractor.extract(payload, "en")
     assert(r.error == null && r.text.contains("\uD800 \uD83D\uDE00 \uD800\uD83D\uDE00") &&
       r.text.endsWith("\uD800"), r)
-    val expr = ExtractMainText(BoundReference(0, BinaryType, nullable = true),
-      BoundReference(1, StringType, nullable = true))
-    val row = expr.eval(InternalRow(payload, UTF8String.fromString("en"))).asInstanceOf[InternalRow]
-    assert(row.getUTF8String(0).getBytes.toSeq == UTF8String.fromString(r.text).getBytes.toSeq)
-    val spans = row.getArray(1)
-    val rowSpans = (0 until spans.numElements()).map { k =>
-      val s = spans.getStruct(k, 3)
-      Span(s.getInt(0), s.getInt(1), s.getUTF8String(2).toString)
+    assert(r.spans.map(_.kind).toSet == Set("heading", "content", "list"))
+    sameRow(payload, Engine.Default)
+    // two entities that form one emoji, a lone high surrogate before a
+    // literal emoji, and a block that starts with a low surrogate and
+    // ends with a high one: Both joins the two engines' copies of it
+    // into one emoji at the junction
+    val pair = s"<p>$words &#xD83D;&#xDE00; a&#xD83D;<b>&#xDE00;</b>b</p>".getBytes("UTF-8")
+    val lone = s"<p>$words &#xD83D;\uD83D\uDE00 &#xD83D;&#x1F600;</p>".getBytes("UTF-8")
+    val junction = s"<p>&#xDE00;$words&#xD83D;</p>".getBytes("UTF-8")
+    assert(Extractor.extract(pair, "en").text.contains("\uD83D\uDE00 a\uD83D\uDE00b"))
+    assert(Extractor.extract(junction, "en", Engine.Both).text.contains("\uD83D\uDE00"))
+    Seq(payload, pair, lone, junction).foreach { p =>
+      Seq(Engine.Default, Engine.Alt, Engine.Both).foreach(e => sameRow(p, e))
     }
-    assert(rowSpans == r.spans && rowSpans.map(_.kind).toSet == Set("heading", "content", "list"))
-    assert(row.isNullAt(2))
   }
 }
