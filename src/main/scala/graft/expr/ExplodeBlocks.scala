@@ -4,7 +4,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{CollectionGenerator, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 import graft.extract.{Engine, Extractor}
 
@@ -52,7 +51,8 @@ case class ExplodeBlocks(child: Expression)
     val rb = r.blocks
     (0 until rb.n).map { i =>
       InternalRow(rb.parts(i), i, ExtractMainText.KindNames(rb.kindIds(i)),
-        UTF8String.fromString(rb.text(i)), rb.words(i), rb.linkWords(i), r.keep(i))
+        ExtractMainText.utf8(rb.buf, rb.starts(i), rb.ends(i), rb.surrogates),
+        rb.words(i), rb.linkWords(i), r.keep(i))
     }
   }
 

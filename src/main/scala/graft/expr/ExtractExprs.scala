@@ -8,6 +8,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.extract.Extractor
+import graft.html.Utf8
 import graft.html.FusedSegmenter.RawBlocks
 
 /** `graft_extract(html BINARY, lang STRING) ->
@@ -36,9 +37,9 @@ case class ExtractMainText(left: Expression, right: Expression,
 
   override def nullable: Boolean = false
 
-  // html=null behaves like an empty payload. The spans are built
-  // straight from the assembled int arrays; `lang` does not change
-  // extraction.
+  // html=null behaves like an empty payload. The text is the assembled
+  // bytes and the spans are built straight from the assembled int
+  // arrays; `lang` does not change extraction.
   override def eval(input: InternalRow): Any = {
     val html = left.eval(input).asInstanceOf[Array[Byte]]
     Extractor.extractAssembled(html, engine) match {
@@ -51,7 +52,8 @@ case class ExtractMainText(left: Expression, right: Expression,
           k += 1
         }
         new GenericInternalRow(Array[Any](
-          UTF8String.fromString(a.text), new GenericArrayData(spans), null))
+          ExtractMainText.utf8(a.buf, a.from, a.until, a.surrogates),
+          new GenericArrayData(spans), null))
       case Left(error) =>
         InternalRow(null, new GenericArrayData(Array.empty[Any]), UTF8String.fromString(error))
     }
@@ -76,4 +78,11 @@ object ExtractMainText {
   /** Span kind names by kind id (`RawBlocks.KindNames`), prebuilt once
     * for every span and block row. */
   val KindNames: Array[UTF8String] = RawBlocks.KindNames.map(UTF8String.fromString)
+
+  /** `buf[from, until)` (WTF-8) as a row string: a view of those bytes,
+    * or, when they may hold a surrogate, `Utf8.toUtf8` of them — what
+    * `UTF8String.fromString` writes for the decoded text. */
+  def utf8(buf: Array[Byte], from: Int, until: Int, surrogates: Boolean): UTF8String =
+    if (surrogates) UTF8String.fromBytes(Utf8.toUtf8(buf, from, until))
+    else UTF8String.fromBytes(buf, from, until - from)
 }

@@ -354,6 +354,25 @@ case class LangId(child: Expression)
 private[expr] object AnchorTag {
   @inline private def isWs(c: Char) = Character.isWhitespace(c)
 
+  /** Index of the '>' that closes the tag whose attributes start at
+    * `from`, or `s.length` if none: a '>' inside a quoted attribute
+    * value does not end the tag, and an unterminated quote runs to EOF.
+    * The nested-tag skip of graft_anchors and graft_meta, which read
+    * their column as a `String`. */
+  def tagEnd(s: String, from: Int): Int = {
+    val n = s.length
+    var j = from
+    while (j < n) {
+      val a = s.charAt(j)
+      if (a == '"' || a == '\'') {
+        val q = s.indexOf(a, j + 1)
+        j = if (q < 0) n else q + 1
+      } else if (a == '>') return j
+      else j += 1
+    }
+    n
+  }
+
   /** Is s(i) the start of an `<a …>` tag? */
   def isOpen(s: String, i: Int): Boolean = {
     val n = s.length
@@ -483,7 +502,7 @@ case class Anchors(child: Expression)
             } else if (AnchorTag.isOpen(s, j)) {
               resume = j // implicit close — re-scan as the next anchor
             } else { // strip the nested tag, quote-aware
-              j = math.min(HtmlText.tagEnd(s, j + 1) + 1, n)
+              j = math.min(AnchorTag.tagEnd(s, j + 1) + 1, n)
             }
           } else {
             if (isWs(c)) {
@@ -636,7 +655,7 @@ case class MetaTags(child: Expression)
               canonical = attrs.get("href").orNull
             i = after
           case _ => // skip any other tag quote-aware
-            i = math.min(HtmlText.tagEnd(s, k) + 1, n)
+            i = math.min(AnchorTag.tagEnd(s, k) + 1, n)
         }
       } else i += 1
     }

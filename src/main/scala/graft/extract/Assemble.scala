@@ -1,6 +1,6 @@
 package graft.extract
 
-import graft.html.{CharBuf, HtmlText}
+import graft.html.{ByteBuf, HtmlText, Utf8}
 import graft.html.FusedSegmenter.RawBlocks
 
 /** Span offsets into the assembled extracted text.
@@ -21,7 +21,8 @@ final case class Span(start: Int, end: Int, kind: String)
   *
   * Input is the one segmentation representation (`RawBlocks`, blocks
   * in document order with non-decreasing part ids) plus keep flags;
-  * block text is copied buffer→buffer with no per-block String. Shared
+  * block text is copied as byte ranges buffer→buffer with no per-block
+  * String, and span offsets add up the blocks' Java char lengths. Shared
   * by the extractor AND the page generator's ground truth so the
   * format has a single source of truth; the *selection* of blocks is
   * what the pipeline must independently get right.
@@ -30,18 +31,20 @@ object Assemble {
 
   def header(idx: Int): String = s"--- صفحة $idx ---"
 
-  /** One assembled document: its text is `buf[from, until)`, and span
+  /** One assembled document: its text is `buf[from, until)` (WTF-8,
+    * see `Utf8`; `surrogates` when it may hold a surrogate), and span
     * `k` (of `n`) is `[starts(k), ends(k))` in that text with kind id
     * `kindIds(k)` (0=content 1=heading 2=list); offsets are Java chars. */
-  final class Assembled(val buf: Array[Char], val from: Int, val until: Int,
-      val n: Int, val starts: Array[Int], val ends: Array[Int], val kindIds: Array[Int]) {
-    def text: String = new String(buf, from, until - from)
+  final class Assembled(val buf: Array[Byte], val from: Int, val until: Int,
+      val surrogates: Boolean, val n: Int, val starts: Array[Int], val ends: Array[Int],
+      val kindIds: Array[Int]) {
+    def text: String = Utf8.decode(buf, from, until, surrogates)
     def spans: List[Span] =
       List.tabulate(n)(k => Span(starts(k), ends(k), RawBlocks.KindNames(kindIds(k))))
   }
 
   /** The blank document (no text, no spans). */
-  val Empty = new Assembled(Array.emptyCharArray, 0, 0, 0,
+  val Empty = new Assembled(Array.emptyByteArray, 0, 0, false, 0,
     Array.emptyIntArray, Array.emptyIntArray, Array.emptyIntArray)
 
   /** Assemble the kept blocks into the final text plus spans
@@ -68,7 +71,8 @@ object Assemble {
     * trim is a range of the buffer, with the spans shifted and clipped
     * to it. */
   def assemble(rb: RawBlocks, keepA: Array[Boolean], keepB: Array[Boolean]): Assembled = {
-    val out = new CharBuf(rb.len + 64)
+    val out = new ByteBuf(rb.len + 64)
+    var chars = 0 // Java chars in out
     var n = 0
     val maxSpans = if (keepB == null) rb.n else 2 * rb.n
     val starts = new Array[Int](maxSpans)
@@ -88,14 +92,16 @@ object Assemble {
         while (keep != null && i < until) {
           if (keep(i)) {
             if (!open) {
-              if (out.len > 0) out.put("\n\n")
-              out.put(header(part)); out.put("\n")
+              if (out.len > 0) { out.put('\n'.toByte); out.put('\n'.toByte); chars += 2 }
+              val h = header(part)
+              out.put(h); out.put('\n'.toByte); chars += h.length + 1
               open = true
-            } else if (!firstBlock) out.put("\n")
+            } else if (!firstBlock) { out.put('\n'.toByte); chars += 1 }
             firstBlock = false
-            starts(n) = out.len
+            starts(n) = chars
             out.put(rb.buf, rb.starts(i), rb.ends(i))
-            ends(n) = out.len; kindIds(n) = rb.kindIds(i)
+            chars += rb.chars(i)
+            ends(n) = chars; kindIds(n) = rb.kindIds(i)
             n += 1
           }
           i += 1
@@ -104,23 +110,32 @@ object Assemble {
       }
       from = until
     }
-    // Unicode trim (Python str.strip, SURVEY.md §2.8 F8); the leading
-    // trim is 0 whenever a header is present
+    // Unicode trim (Python str.strip, SURVEY.md §2.8 F8) as byte and
+    // char ranges; every whitespace char is one Java char. The leading
+    // trim is 0 whenever a header is present.
     val buf = out.buf
     var a = 0; var b = out.len
-    while (a < b && HtmlText.isWs(buf(a))) a += 1
-    while (b > a && HtmlText.isWs(buf(b - 1))) b -= 1
+    var ca = 0; var cb = chars
+    while (a < b && HtmlText.isWs(buf, a)) {
+      a += (if (buf(a) >= 0) 1 else Utf8.length(Utf8.at(buf, a))); ca += 1
+    }
+    var trimming = true
+    while (trimming && b > a) {
+      var lead = b - 1 // step back over continuation bytes to the last char's lead
+      while ((buf(lead) & 0xC0) == 0x80) lead -= 1
+      if (HtmlText.isWs(buf, lead)) { b = lead; cb -= 1 } else trimming = false
+    }
     var kept = 0
     var k = 0
     while (k < n) {
-      if (ends(k) > a && starts(k) < b) {
-        starts(kept) = math.max(starts(k), a) - a
-        ends(kept) = math.min(ends(k), b) - a
+      if (ends(k) > ca && starts(k) < cb) {
+        starts(kept) = math.max(starts(k), ca) - ca
+        ends(kept) = math.min(ends(k), cb) - ca
         kindIds(kept) = kindIds(k)
         kept += 1
       }
       k += 1
     }
-    new Assembled(buf, a, b, kept, starts, ends, kindIds)
+    new Assembled(buf, a, b, rb.surrogates, kept, starts, ends, kindIds)
   }
 }

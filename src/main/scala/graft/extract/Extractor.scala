@@ -4,7 +4,7 @@ import java.nio.charset.{CharacterCodingException, StandardCharsets}
 import java.nio.charset.CodingErrorAction
 import java.nio.ByteBuffer
 
-import graft.html.{Boilerplate, FusedSegmenter, HtmlText}
+import graft.html.{Boilerplate, FusedSegmenter, HtmlText, Utf8}
 import graft.html.FusedSegmenter.RawBlocks
 import graft.pdf.PdfSpans
 
@@ -63,29 +63,27 @@ object Extractor {
   final class Recognized(val blocks: RawBlocks, val keep: Array[Boolean],
                          val keepAlt: Array[Boolean])
 
-  /** Thrown by `recognize` for a payload that is not valid UTF-8. */
-  object InvalidUtf8 extends Exception("invalid utf-8 payload", null, false, false)
-
   private val ParagraphBreak = java.util.regex.Pattern.compile("\n[ \t\r]*\n")
 
   /** The one payload step. `%PDF` → one content block per page with
     * any non-empty line (lines normalized and "\n"-joined, part = page
-    * number); valid UTF-8 with markup → `segmentRaw` classified with
-    * the engine's `Params`; other valid UTF-8 → one content block per
-    * non-empty blank-line-separated paragraph, all in part 1. PDF and
-    * paragraph blocks carry `countWords` words and no link words.
-    * Throws `InvalidUtf8` or `PdfSpans.PdfParseException` on a
-    * malformed payload. */
+    * number); markup (a '<' and a '>' byte) → `segment` of the payload
+    * bytes, which validates them as UTF-8, classified with the engine's
+    * `Params`; other valid UTF-8 → one content block per non-empty
+    * blank-line-separated paragraph, all in part 1. PDF and paragraph
+    * blocks carry `countWords` words and no link words. Throws
+    * `Utf8.Invalid` or `PdfSpans.PdfParseException` on a malformed
+    * payload. */
   def recognize(payload: Array[Byte], engine: Engine): Recognized = {
     if (isPdf(payload)) return keepAll(pdfBlocks(payload))
-    val s = decodeUtf8(payload).getOrElse(throw InvalidUtf8)
-    if (looksHtml(s)) {
-      val rb = FusedSegmenter.segmentRaw(s)
+    if (looksHtml(payload)) {
+      val rb = FusedSegmenter.segment(payload)
       val keep = Boilerplate.classifyRaw(rb,
         if (engine == Engine.Alt) Boilerplate.Alt else Boilerplate.Default)
       new Recognized(rb, keep,
         if (engine == Engine.Both) Boilerplate.classifyRaw(rb, Boilerplate.Alt) else null)
     } else {
+      val s = decodeUtf8(payload).getOrElse(throw Utf8.Invalid)
       val rb = new RawBlocks
       ParagraphBreak.split(s, -1).foreach { para =>
         val txt = HtmlText.normalize(para)
@@ -129,7 +127,7 @@ object Extractor {
       val r = recognize(payload, engine)
       Right(Assemble.assemble(r.blocks, r.keep, r.keepAlt))
     } catch {
-      case InvalidUtf8 => Left(ErrorPrefix + InvalidUtf8.getMessage)
+      case Utf8.Invalid => Left(ErrorPrefix + Utf8.Invalid.getMessage)
       case e: PdfSpans.PdfParseException => Left(ErrorPrefix + "pdf: " + e.getMessage)
       // never fail the task (error-as-row policy); deterministic message
       case e: Exception => Left(ErrorPrefix + e.getClass.getSimpleName)
@@ -147,12 +145,21 @@ object Extractor {
     b.length >= 4 && b(0) == '%' && b(1) == 'P' && b(2) == 'D' && b(3) == 'F'
 
   /** Markup-dispatch predicate: both '<' and '>' must appear, else the
-    * payload routes to the plain-text path. */
-  @inline private def looksHtml(s: String): Boolean =
-    s.indexOf('<') >= 0 && s.indexOf('>') >= 0
+    * payload routes to the plain-text path. Both are ASCII, so a byte
+    * search gives what a search of the decoded text gives. */
+  @inline private def looksHtml(b: Array[Byte]): Boolean =
+    hasByte(b, '<') && hasByte(b, '>')
+
+  private def hasByte(b: Array[Byte], x: Byte): Boolean = {
+    var i = 0
+    while (i < b.length && b(i) != x) i += 1
+    i < b.length
+  }
 
   /** Strict UTF-8 decode — malformed bytes are a detectable error, not
-    * mojibake (byte-identity discipline, SURVEY.md §7.7).
+    * mojibake (byte-identity discipline, SURVEY.md §7.7). The plain-text
+    * path's decode; HTML payloads are validated by the segmenter's own
+    * scan instead.
     *
     * Fast path: `new String(bytes, UTF_8)` (intrinsified, one copy),
     * which substitutes U+FFFD on malformed input — so a U+FFFD in the

@@ -1,14 +1,20 @@
 package graft.html
 
-import HtmlText.{entityAt, entityCodePoint, entityNext, indexOfCloseTag, isWs, tagEnd, NoChar}
+import java.nio.charset.StandardCharsets
 
-/** Fused tokenizer+segmenter: one pass over the decoded HTML string,
-  * zero intermediate token objects, text folded straight into one
-  * shared per-document `char[]` with entities decoded in place.
+import HtmlText.{entityAt, entityCodePoint, entityNext, indexOfCloseTag, isWs, isWsLead, tagEnd, NoChar}
+
+/** Fused tokenizer+segmenter: one pass over a UTF-8 payload's bytes,
+  * zero intermediate token objects, text runs copied as byte ranges
+  * into one shared per-document buffer with entities decoded in place.
+  * Markup, entity syntax and tag names are ASCII; every byte ≥ 0x80 is
+  * validated where the scan meets it (text, tags, attributes, comments,
+  * dropped and skipped text), so `segment` throws `Utf8.Invalid`
+  * exactly when the payload is not valid UTF-8.
   *
   * Its `RawBlocks` are the one in-memory segmentation representation
   * between a payload and its output: `Boilerplate.classifyRaw` decides
-  * keep per block, `Assemble.fromRaw` builds the text, and
+  * keep per block, `Assemble.assemble` builds the text, and
   * `graft_explode_blocks` emits the blocks as rows. Block-for-block
   * identical to `BlockSegmenter.segment(HtmlTokenizer.tokenize(s))`,
   * the readable reference pair in test scope — asserted by
@@ -20,25 +26,29 @@ import HtmlText.{entityAt, entityCodePoint, entityNext, indexOfCloseTag, isWs, t
 object FusedSegmenter {
 
   /** Range-based segmentation result — the allocation-light hot-path
-    * representation: ALL block text lives in ONE shared `char[]` per
-    * document, `buf[0, len)`; a block is (part, kindId, start, end,
-    * words, linkWords, boiler) where [start,end) indexes `buf`.
-    * Compared to one String + one Block object per block this removes
-    * the dominant per-block allocations (the extraction loop is
-    * memory-bandwidth-bound at high core counts — BASELINE.md).
-    * kindId: 0=content 1=heading 2=list. `buf` starts at 512 chars and
-    * grows with the block text, not with the page. */
-  final class RawBlocks extends CharBuf(512) {
+    * representation: ALL block text lives in ONE shared WTF-8 buffer
+    * per document, `buf[0, len)` (see `Utf8`); a block is (part,
+    * kindId, start, end, chars, words, linkWords, boiler) where
+    * [start,end) indexes `buf` and `chars` is the block's length in
+    * Java chars, which span offsets count. Compared to one String + one
+    * Block object per block this removes the dominant per-block
+    * allocations (the extraction loop is memory-bandwidth-bound at high
+    * core counts — BASELINE.md). kindId: 0=content 1=heading 2=list.
+    * `buf` starts at 512 bytes and grows with the block text, not with
+    * the page. `surrogates` is set once an entity wrote a surrogate. */
+  final class RawBlocks extends ByteBuf(512) {
     var n = 0
     var parts = new Array[Int](32)
     var kindIds = new Array[Int](32)
     var starts = new Array[Int](32)
     var ends = new Array[Int](32)
+    var chars = new Array[Int](32)
     var words = new Array[Int](32)
     var linkWords = new Array[Int](32)
     var boiler = new Array[Boolean](32)
+    var surrogates = false
 
-    def add(part: Int, kindId: Int, start: Int, end: Int,
+    def add(part: Int, kindId: Int, start: Int, end: Int, nChars: Int,
             w: Int, lw: Int, b: Boolean): Unit = {
       if (n == parts.length) {
         val m = n * 2
@@ -46,24 +56,27 @@ object FusedSegmenter {
         kindIds = java.util.Arrays.copyOf(kindIds, m)
         starts = java.util.Arrays.copyOf(starts, m)
         ends = java.util.Arrays.copyOf(ends, m)
+        chars = java.util.Arrays.copyOf(chars, m)
         words = java.util.Arrays.copyOf(words, m)
         linkWords = java.util.Arrays.copyOf(linkWords, m)
         boiler = java.util.Arrays.copyOf(boiler, m)
       }
       parts(n) = part; kindIds(n) = kindId; starts(n) = start; ends(n) = end
-      words(n) = w; linkWords(n) = lw; boiler(n) = b
+      chars(n) = nChars; words(n) = w; linkWords(n) = lw; boiler(n) = b
       n += 1
     }
 
-    /** Append `text` verbatim as one non-boilerplate block with no link
-      * words (PDF pages, plain-text paragraphs, generator ground truth). */
+    /** Append `text` as one non-boilerplate block with no link words
+      * (PDF pages, plain-text paragraphs, generator ground truth),
+      * encoded as `String.getBytes(UTF_8)` encodes it. */
     def addText(part: Int, kindId: Int, text: String, w: Int): Unit = {
       val start = len
       put(text)
-      add(part, kindId, start, len, w, 0, false)
+      add(part, kindId, start, len, text.length, w, 0, false)
     }
 
-    def text(i: Int): String = new String(buf, starts(i), ends(i) - starts(i))
+    /** Block `i`'s text as a `String`. */
+    def text(i: Int): String = Utf8.decode(buf, starts(i), ends(i), surrogates)
   }
   object RawBlocks {
     val KindNames: Array[String] = Array("content", "heading", "list")
@@ -80,20 +93,21 @@ object FusedSegmenter {
   private final val T_ARTICLE = 7
   private final val T_RAWTEXT = 8    // script/style
 
-  /** Classify a lowercase tag name located at s[from,until) without
-    * allocating. Mirrors the reference BlockSegmenter's tag sets exactly. */
-  private def tagId(s: String, from: Int, until: Int): Int = {
+  /** Classify the tag name at b[from,until) (ASCII name chars) without
+    * allocating, case-insensitively. Mirrors the reference
+    * BlockSegmenter's tag sets exactly. */
+  private def tagId(b: Array[Byte], from: Int, until: Int): Int = {
     val len = until - from
     @inline def is(t: String): Boolean = {
       if (t.length != len) return false
       var i = 0
       while (i < len) {
-        if (Character.toLowerCase(s.charAt(from + i)) != t.charAt(i)) return false
+        if (lower(b(from + i)) != t.charAt(i)) return false
         i += 1
       }
       true
     }
-    val c0 = Character.toLowerCase(s.charAt(from))
+    val c0 = lower(b(from))
     c0 match {
       case 'a' =>
         if (len == 1) T_A
@@ -108,7 +122,7 @@ object FusedSegmenter {
         else if (is("figure") || is("figcaption") || is("form") || is("fieldset")) T_BLOCK
         else T_OTHER
       case 'h' =>
-        if (len == 2 && s.charAt(from + 1) >= '1' && s.charAt(from + 1) <= '6') T_HEADING
+        if (len == 2 && b(from + 1) >= '1' && b(from + 1) <= '6') T_HEADING
         else if (is("header")) T_BOILER
         else if (is("head")) T_DROP
         else if (is("hr") || is("html")) T_BLOCK
@@ -138,16 +152,22 @@ object FusedSegmenter {
     id == T_BLOCK || id == T_HEADING || id == T_LI || id == T_BOILER ||
       id == T_DROP || id == T_ARTICLE
 
-  def segmentRaw(html: String): RawBlocks = new Seg(html).run()
+  /** Segment a UTF-8 payload; throws `Utf8.Invalid` if it is not
+    * valid UTF-8. */
+  def segment(payload: Array[Byte]): RawBlocks = new Seg(payload).run()
+
+  /** `segment` of `html` encoded as `String.getBytes(UTF_8)` encodes
+    * it (a lone surrogate becomes '?'). */
+  def segmentRaw(html: String): RawBlocks = segment(html.getBytes(StandardCharsets.UTF_8))
 
   /** Segmentation state as PLAIN FIELDS (r6): the previous spelling
     * held the state in local `var`s captured by nested defs, which
     * scalac compiles to heap-allocated runtime Ref boxes — a double
-    * indirection on every character of every document. Logic is
-    * char-for-char identical (FusedEquivalenceSpec + the frozen golden
-    * digest attest). */
-  private final class Seg(html: String) {
-    private[this] val n = html.length
+    * indirection on every byte of every document. Logic is
+    * char-for-char identical to the reference pair
+    * (FusedEquivalenceSpec + the frozen golden digests attest). */
+  private final class Seg(b: Array[Byte]) {
+    private[this] val n = b.length
     private[this] val rb = new RawBlocks
 
     // segmentation state (mirrors BlockSegmenter.segment)
@@ -161,8 +181,10 @@ object FusedSegmenter {
     // block accumulation: normalized text appended straight into the
     // shared doc buffer (the unfused path normalizes at flush; direct
     // normalization is equivalent because normalize() is a streaming
-    // fold); the current block is rb.buf[blockStart, rb.len)
+    // fold); the current block is rb.buf[blockStart, rb.len), blockChars
+    // Java chars long
     private[this] var blockStart = 0
+    private[this] var blockChars = 0
     private[this] var pendingSpace = false
     private[this] var words = 0
     private[this] var linkWords = 0
@@ -175,9 +197,10 @@ object FusedSegmenter {
           if (headingDepth > 0) 1
           else if (liDepth > 0) 2
           else 0
-        rb.add(part, kindId, blockStart, rb.len, words, linkWords, blockBoiler)
+        rb.add(part, kindId, blockStart, rb.len, blockChars, words, linkWords, blockBoiler)
       }
       blockStart = rb.len
+      blockChars = 0
       pendingSpace = false
       words = 0; linkWords = 0; inWord = false
       blockBoiler = boilerDepth > 0
@@ -195,87 +218,119 @@ object FusedSegmenter {
       * normalize/countWords: a whitespace char sets pendingSpace (once
       * the block has text) and ends the word; a non-whitespace char
       * first writes any pending space, and starts a word if none is
-      * open. A word is found to its end first and then copied from the
-      * source in bulk. */
+      * open. A word is found to its end first (validating and counting
+      * its chars) and then copied from the payload in bulk. */
     private def text(from: Int): Int = {
       var k = from
-      var c = '\u0000'
-      while (k < n && { c = html.charAt(k); c != '<' && c != '&' }) {
-        if (isWs(c)) {
-          k += 1
+      while (k < n) {
+        val x = b(k)
+        var len = 1
+        var ws = false
+        if (x >= 0) {
+          if (x == '<' || x == '&') return k
+          ws = x < '@' && (HtmlText.AsciiWs >>> x & 1L) != 0
+        } else {
+          val r = Utf8.at(b, k)
+          len = Utf8.length(r)
+          ws = isWsLead(x) && isWs(Utf8.codePoint(r).toChar)
+        }
+        if (ws) {
+          k += len
           if (rb.len > blockStart) pendingSpace = true
           inWord = false
         } else {
-          var e = k + 1
-          while (e < n && !endsWord(html.charAt(e))) e += 1
+          var e = k + len
+          var chars = Utf8.chars(len)
+          var open = true
+          while (open && e < n) {
+            val y = b(e)
+            if (y >= 0) {
+              if (y < '@' && (WordEnds >>> y & 1L) != 0) open = false
+              else { e += 1; chars += 1 }
+            } else {
+              val r = Utf8.at(b, e)
+              if (isWsLead(y) && isWs(Utf8.codePoint(r).toChar)) open = false
+              else { e += Utf8.length(r); chars += Utf8.chars(Utf8.length(r)) }
+            }
+          }
           rb.ensure(e - k + 1)
-          if (pendingSpace) { rb.buf(rb.len) = ' '; rb.len += 1; pendingSpace = false }
+          if (pendingSpace) {
+            rb.buf(rb.len) = ' '; rb.len += 1; blockChars += 1; pendingSpace = false
+          }
           if (!inWord) startWord()
-          html.getChars(k, e, rb.buf, rb.len)
+          System.arraycopy(b, k, rb.buf, rb.len, e - k)
           rb.len += e - k
+          blockChars += chars
           k = e
         }
       }
       k
     }
 
-    /** Fold one decoded char (an entity's replacement or a literal '&'
-      * or '<') into the block, as `text` folds a source char. */
-    private def emit(c: Char): Unit =
-      if (isWs(c)) {
+    /** Fold one decoded code point (an entity's replacement or a
+      * literal '&' or '<') into the block, as `text` folds a payload
+      * char. */
+    private def emit(cp: Int): Unit =
+      if (cp < Character.MIN_SUPPLEMENTARY_CODE_POINT && isWs(cp.toChar)) {
         if (rb.len > blockStart) pendingSpace = true
         inWord = false
       } else {
-        if (pendingSpace) { rb.put(' '); pendingSpace = false }
+        if (pendingSpace) { rb.put(' '.toByte); blockChars += 1; pendingSpace = false }
         if (!inWord) startWord()
-        rb.put(c)
+        if (Utf8.put(rb, cp)) rb.surrogates = true
+        blockChars += (if (cp < Character.MIN_SUPPLEMENTARY_CODE_POINT) 1 else 2)
       }
+
+    /** Index of the next "-->" at or after `from`, or -1. */
+    private def commentEnd(from: Int): Int = {
+      var j = Utf8.indexOf(b, from, '-')
+      while (j >= 0 && !(j + 2 < n && b(j + 1) == '-' && b(j + 2) == '>'))
+        j = Utf8.indexOf(b, j + 1, '-')
+      j
+    }
 
     def run(): RawBlocks = {
     var i = 0
     while (i < n) {
-      val c = html.charAt(i)
+      val c = b(i)
       if (c == '&') {
-        val r = entityAt(html, i)
+        val r = entityAt(b, i)
         val cp = entityCodePoint(r)
-        if (dropDepth == 0 && cp != NoChar) {
-          if (cp < Character.MIN_SUPPLEMENTARY_CODE_POINT) emit(cp.toChar)
-          else { emit(Character.highSurrogate(cp)); emit(Character.lowSurrogate(cp)) }
-        }
+        if (dropDepth == 0 && cp != NoChar) emit(cp)
         i = entityNext(r)
       } else if (c != '<') {
         if (dropDepth == 0) i = text(i)
         else {
           // dropped text: skip to the next markup/entity character
-          i += 1
-          while (i < n && { val ch = html.charAt(i); ch != '<' && ch != '&' }) i += 1
+          while (i < n && { val x = b(i); x != '<' && x != '&' })
+            i += (if (b(i) >= 0) 1 else Utf8.length(Utf8.at(b, i)))
         }
       } else if (i + 1 >= n) {
         if (dropDepth == 0) emit('<')
         i += 1
       } else {
-        val c1 = html.charAt(i + 1)
+        val c1 = b(i + 1)
         // any tag/comment construct ends the current text run — word
         // counting is per-run in the unfused reference implementation
         // (adjacent runs never merge into one word)
         if (c1 == '!' || c1 == '?' || c1 == '/' || isNameStart(c1)) inWord = false
         if (c1 == '!' || c1 == '?') {
-          if (html.startsWith("<!--", i)) {
-            val end = html.indexOf("-->", i + 4)
+          if (c1 == '!' && i + 3 < n && b(i + 2) == '-' && b(i + 3) == '-') {
+            val end = commentEnd(i + 4)
             i = if (end < 0) n else end + 3
           } else {
-            val end = html.indexOf('>', i + 2)
+            val end = Utf8.indexOf(b, i + 2, '>')
             i = if (end < 0) n else end + 1
           }
         } else if (c1 == '/') {
           var j = i + 2
           val ns = j
-          while (j < n && isNameChar(html.charAt(j))) j += 1
+          while (j < n && isNameChar(b(j))) j += 1
           val ne = j
-          val end = html.indexOf('>', j)
+          val end = Utf8.indexOf(b, j, '>')
           i = if (end < 0) n else end + 1
           if (ne > ns) {
-            val id = tagId(html, ns, ne)
+            val id = tagId(b, ns, ne)
             if (isBlockBoundary(id)) flush()
             id match {
               case T_A => if (aDepth > 0) aDepth -= 1
@@ -293,12 +348,12 @@ object FusedSegmenter {
         } else if (isNameStart(c1)) {
           var j = i + 1
           val ns = j
-          while (j < n && isNameChar(html.charAt(j))) j += 1
+          while (j < n && isNameChar(b(j))) j += 1
           val ne = j
-          val end = tagEnd(html, j)
-          val selfClose = end < n && html.charAt(end - 1) == '/'
+          val end = tagEnd(b, j)
+          val selfClose = end < n && b(end - 1) == '/'
           i = math.min(end + 1, n)
-          val id = tagId(html, ns, ne)
+          val id = tagId(b, ns, ne)
           if (isBlockBoundary(id)) flush()
           if (!selfClose) {
             id match {
@@ -312,11 +367,11 @@ object FusedSegmenter {
                 seenArticle = true
               case T_RAWTEXT =>
                 // raw-text element: skip to matching close tag
-                val closeAt = indexOfCloseTag(html, i,
+                val closeAt = indexOfCloseTag(b, i,
                   if (ne - ns == 6) "script" else "style")
                 if (closeAt < 0) i = n
                 else {
-                  val end2 = html.indexOf('>', closeAt)
+                  val end2 = Utf8.indexOf(b, closeAt, '>')
                   i = if (end2 < 0) n else end2 + 1
                 }
               case _ => ()
@@ -337,11 +392,12 @@ object FusedSegmenter {
     * text run: whitespace, '<' and '&'. */
   private final val WordEnds = HtmlText.AsciiWs | 1L << '<' | 1L << '&'
 
-  @inline private def endsWord(c: Char): Boolean =
-    if (c < '@') (WordEnds >>> c & 1L) != 0 else isWs(c)
+  /** An ASCII name char lowercased: setting bit 5 lowercases a letter
+    * and leaves digits, '-' and ':' as they are. */
+  @inline private def lower(c: Byte): Char = (c | 0x20).toChar
 
-  @inline private def isNameStart(c: Char): Boolean =
+  @inline private def isNameStart(c: Byte): Boolean =
     (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z')
-  @inline private def isNameChar(c: Char): Boolean =
+  @inline private def isNameChar(c: Byte): Boolean =
     isNameStart(c) || (c >= '0' && c <= '9') || c == '-' || c == ':'
 }

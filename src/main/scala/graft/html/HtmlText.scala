@@ -1,8 +1,9 @@
 package graft.html
 
 /** The markup and text primitives every scanner in main shares:
-  * entity decoding, raw-text close-tag search, the quote-aware tag end,
-  * and the whitespace rules of block text. Byte-identity relevant —
+  * entity decoding, raw-text close-tag search and the quote-aware tag
+  * end over a UTF-8 payload's bytes, and the whitespace rules of block
+  * text on chars and on bytes. Byte-identity relevant —
   * `FusedSegmenter`, `Assemble`, `Extractor` and the expression layer
   * all read these one definitions (SURVEY.md §7.7).
   */
@@ -12,39 +13,49 @@ object HtmlText {
     * SURVEY.md §7.7): `EntityNames(k)` decodes to `EntityChars(k)`,
     * except `shy`, which decodes to nothing. Unknown entities are left
     * verbatim. */
-  private val EntityNames: Array[String] = Array(
+  private[html] val EntityNames: Array[String] = Array(
     "amp", "lt", "gt", "quot", "apos", "nbsp", "copy", "reg", "trade",
     "hellip", "mdash", "ndash", "ldquo", "rdquo", "lsquo", "rsquo",
     "laquo", "raquo", "times", "bull", "middot", "deg", "euro", "pound",
     "cent", "sect", "para", "shy")
-  private val EntityChars = "&<>\"'\u00A0©®™…—–“”‘’«»×•·°€£¢§¶"
+  private[html] val EntityChars = "&<>\"'\u00A0©®™…—–“”‘’«»×•·°€£¢§¶"
 
   /** Code point of `entityAt` for an entity that decodes to nothing. */
   final val NoChar = -1
-  private final val Malformed = -2
+  private[html] final val Malformed = -2
 
-  /** Decode the entity at `i` (s(i) == '&') in place; nothing is
-    * allocated except the exception of a malformed numeric body. Returns `(next << 32) | (codePoint & 0xffffffffL)`;
-    * read it with `entityNext` and `entityCodePoint`. The code point is
-    * `NoChar` for an entity that decodes to nothing, and an unknown or
-    * malformed entity is a literal '&' with `next == i + 1`.
+  /** Decode the entity at `i` (b(i) == '&') of a UTF-8 payload in
+    * place; nothing is allocated. Returns `(next << 32) | (codePoint &
+    * 0xffffffffL)`; read it with `entityNext` and `entityCodePoint`. The
+    * code point is `NoChar` for an entity that decodes to nothing, and
+    * an unknown or malformed entity is a literal '&' with
+    * `next == i + 1`. Every byte ≥ 0x80 read is validated (`Utf8.at`).
     *
     * The body is what lies between the '&' and the first ';' within
-    * the next 11 chars. A named body matches the fixed table exactly; a
-    * numeric body (`#` digits, or `#x`/`#X` hex digits) parses as
-    * `Integer.parseInt` parses it — an optional sign, `Character.digit`
-    * digits, overflow is malformed — and must be a valid code point. */
-  def entityAt(s: String, i: Int): Long = {
-    val lim = math.min(s.length, i + 12)
+    * the next 11 Java chars (a 4-byte char counts two). A named body
+    * matches the fixed table exactly; a numeric body (`#` digits, or
+    * `#x`/`#X` hex digits) parses as `Integer.parseInt` parses its
+    * UTF-16 chars — an optional sign, `Character.digit` digits (a
+    * supplementary char is two surrogates, never a digit), overflow is
+    * malformed — and must be a valid code point. */
+  def entityAt(b: Array[Byte], i: Int): Long = {
+    val n = b.length
     var semi = i + 1
-    while (semi < lim && s.charAt(semi) != ';') semi += 1
+    var pos = 1 // chars from the '&' to b(semi)
+    while (semi < n && pos <= 11 && b(semi) != ';') {
+      if (b(semi) >= 0) { semi += 1; pos += 1 }
+      else {
+        val len = Utf8.length(Utf8.at(b, semi))
+        semi += len; pos += Utf8.chars(len)
+      }
+    }
     val cp =
-      if (semi >= lim || semi == i + 1) Malformed
-      else if (s.charAt(i + 1) == '#') {
-        val hex = semi > i + 2 && (s.charAt(i + 2) == 'x' || s.charAt(i + 2) == 'X')
-        val v = if (hex) parseInt(s, i + 3, semi, 16) else parseInt(s, i + 2, semi, 10)
+      if (semi >= n || pos > 11 || semi == i + 1) Malformed
+      else if (b(i + 1) == '#') {
+        val hex = semi > i + 2 && (b(i + 2) == 'x' || b(i + 2) == 'X')
+        val v = if (hex) parseInt(b, i + 3, semi, 16) else parseInt(b, i + 2, semi, 10)
         if (v >= 0 && v <= Character.MAX_CODE_POINT) v else Malformed
-      } else namedEntity(s, i + 1, semi)
+      } else namedEntity(b, i + 1, semi)
     if (cp == Malformed) (i + 1).toLong << 32 | '&'
     else (semi + 1).toLong << 32 | (cp & 0xffffffffL)
   }
@@ -52,71 +63,128 @@ object HtmlText {
   @inline def entityNext(r: Long): Int = (r >>> 32).toInt
   @inline def entityCodePoint(r: Long): Int = r.toInt
 
-  private def namedEntity(s: String, from: Int, until: Int): Int = {
+  private def namedEntity(b: Array[Byte], from: Int, until: Int): Int = {
     var k = 0
     while (k < EntityNames.length) {
       val name = EntityNames(k)
-      if (name.length == until - from && name.charAt(0) == s.charAt(from) &&
-          s.regionMatches(from, name, 0, name.length))
-        return if (k < EntityChars.length) EntityChars.charAt(k).toInt else NoChar
+      if (name.length == until - from) {
+        var j = 0
+        while (j < name.length && b(from + j) == name.charAt(j)) j += 1
+        if (j == name.length)
+          return if (k < EntityChars.length) EntityChars.charAt(k).toInt else NoChar
+      }
       k += 1
     }
     Malformed
   }
 
-  /** `Integer.parseInt` of `s[from, until)`, read in place; -1 where it
-    * throws. */
-  private def parseInt(s: String, from: Int, until: Int, radix: Int): Int =
-    try Integer.parseInt(s, from, until, radix)
-    catch { case _: NumberFormatException => -1 }
-
-  /** Case-insensitive search for "</name" followed by '>' or whitespace. */
-  def indexOfCloseTag(html: String, from: Int, name: String): Int = {
-    val needle = "</" + name
-    var i = from
-    val n = html.length
-    while (i >= 0 && i < n) {
-      i = indexOfIgnoreCase(html, needle, i)
-      if (i >= 0) {
-        val after = i + needle.length
-        if (after >= n || html.charAt(after) == '>' ||
-            Character.isWhitespace(html.charAt(after))) return i
-        i += 1
+  /** `Integer.parseInt` of the UTF-16 chars of `b[from, until)`, read
+    * in place; -1 where it throws. */
+  private def parseInt(b: Array[Byte], from: Int, until: Int, radix: Int): Int = {
+    if (from == until) return -1
+    var k = from
+    var negative = false
+    var limit = -Integer.MAX_VALUE
+    val first = b(k)
+    if (first >= 0 && first < '0') { // a sign; every non-ASCII char is above '0'
+      if (first == '-') { negative = true; limit = Integer.MIN_VALUE }
+      else if (first != '+') return -1
+      k += 1
+      if (k == until) return -1
+    }
+    val multmin = limit / radix
+    var result = 0
+    while (k < until) {
+      val x = b(k)
+      var digit = -1
+      if (x >= 0) { digit = Character.digit(x.toInt, radix); k += 1 }
+      else {
+        val r = Utf8.at(b, k)
+        if (Utf8.codePoint(r) < Character.MIN_SUPPLEMENTARY_CODE_POINT)
+          digit = Character.digit(Utf8.codePoint(r), radix)
+        k += Utf8.length(r)
       }
+      if (digit < 0 || result < multmin) return -1
+      result *= radix
+      if (result < limit + digit) return -1
+      result -= digit
+    }
+    if (negative) result else -result
+  }
+
+  /** Index of the first "</name" (`name` lowercase ASCII) at or after
+    * `from` whose chars lowercase (`Character.toLowerCase`, so U+0130
+    * is 'i') to it and that is followed by '>', a Java whitespace char
+    * or the end; -1 if none. Every sequence before it is validated. */
+  def indexOfCloseTag(b: Array[Byte], from: Int, name: String): Int = {
+    var i = Utf8.indexOf(b, from, '<')
+    while (i >= 0) {
+      if (closesAt(b, i, name)) return i
+      i = Utf8.indexOf(b, i + 1, '<')
     }
     -1
   }
 
-  /** `needle` starts with '<', which has no other case: only the
-    * positions of a '<' are candidates. */
-  private def indexOfIgnoreCase(h: String, needle: String, from: Int): Int = {
-    val n = h.length; val m = needle.length
-    var i = h.indexOf('<', from)
-    while (i >= 0 && i + m <= n) {
-      var k = 1
-      while (k < m && Character.toLowerCase(h.charAt(i + k)) == needle.charAt(k)) k += 1
-      if (k == m) return i
-      i = h.indexOf('<', i + 1)
+  private def closesAt(b: Array[Byte], i: Int, name: String): Boolean = {
+    val n = b.length
+    if (i + 1 >= n || b(i + 1) != '/') return false
+    var p = i + 2
+    var k = 0
+    while (k < name.length) {
+      if (p >= n) return false
+      val x = b(p)
+      if (x >= 0) {
+        if (Character.toLowerCase(x.toChar) != name.charAt(k)) return false
+        p += 1
+      } else {
+        val r = Utf8.at(b, p)
+        val cp = Utf8.codePoint(r)
+        // a supplementary char's first UTF-16 char is a surrogate: no match
+        if (cp >= Character.MIN_SUPPLEMENTARY_CODE_POINT ||
+            Character.toLowerCase(cp.toChar) != name.charAt(k)) return false
+        p += Utf8.length(r)
+      }
+      k += 1
     }
-    -1
+    if (p >= n || b(p) == '>') true
+    else if (b(p) >= 0) Character.isWhitespace(b(p).toChar)
+    else {
+      val cp = Utf8.codePoint(Utf8.at(b, p))
+      cp < Character.MIN_SUPPLEMENTARY_CODE_POINT && Character.isWhitespace(cp.toChar)
+    }
   }
 
   /** Index of the '>' that closes the tag whose attributes start at
-    * `from`, or `s.length` if none: a '>' inside a quoted attribute
-    * value does not end the tag, and an unterminated quote runs to EOF. */
-  def tagEnd(s: String, from: Int): Int = {
-    val n = s.length
+    * `from`, or `b.length` if none: a '>' inside a quoted attribute
+    * value does not end the tag, and an unterminated quote runs to EOF.
+    * Every sequence before it is validated. */
+  def tagEnd(b: Array[Byte], from: Int): Int = {
+    val n = b.length
     var j = from
     while (j < n) {
-      val a = s.charAt(j)
+      val a = b(j)
       if (a == '"' || a == '\'') {
-        val q = s.indexOf(a, j + 1)
+        val q = Utf8.indexOf(b, j + 1, a)
         j = if (q < 0) n else q + 1
       } else if (a == '>') return j
-      else j += 1
+      else j += (if (a >= 0) 1 else Utf8.length(Utf8.at(b, j)))
     }
     n
   }
+
+  /** `isWs` of the char whose UTF-8 form starts at `b(k)`. Only the
+    * lead bytes of the set's non-ASCII members are decoded: C2 (NBSP),
+    * E1 (U+1680), E2 (U+2000–U+200A but U+2007, U+2028/9, U+205F) and
+    * E3 (U+3000). */
+  def isWs(b: Array[Byte], k: Int): Boolean = {
+    val x = b(k)
+    if (x >= 0) x < '@' && (AsciiWs >>> x & 1L) != 0
+    else isWsLead(x) && isWs(Utf8.codePoint(Utf8.at(b, k)).toChar)
+  }
+
+  /** Is `x` the lead byte of a non-ASCII whitespace char? */
+  @inline def isWsLead(x: Byte): Boolean =
+    x == 0xC2.toByte || x == 0xE1.toByte || x == 0xE2.toByte || x == 0xE3.toByte
 
   /** Whitespace set: Java whitespace plus NBSP (Python str.strip strips
     * Unicode spaces — reference F8 byte-identity note, SURVEY.md §2.8).

@@ -2,7 +2,7 @@ package graft.html
 
 import scala.collection.mutable.ArrayBuffer
 
-import HtmlText.indexOfCloseTag
+import StringMarkup.indexOfCloseTag
 
 /** Streaming HTML tokenizer — no DOM tree materialization.
   *
