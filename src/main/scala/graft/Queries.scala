@@ -237,14 +237,17 @@ object Queries {
       // stage dir keyed by the INPUT's content fingerprint (path +
       // size + mtime), not the path alone: a regenerated fixture at
       // the same path gets fresh shards instead of silently reusing
-      // stale ones. Shard contents are deterministic functions of the
-      // input, so concurrent stagers converge on identical bytes; each
-      // file is still written tmp-then-rename for atomicity.
+      // stale ones. It lives in the session's own files dir
+      // (SparkFiles root), which stopping the session deletes, so the
+      // shards are reused within a session and never outlive it. Shard
+      // contents are deterministic functions of the input, so
+      // concurrent stagers converge on identical bytes; each file is
+      // still written tmp-then-rename for atomicity.
       val docsFile = new java.io.File(dir, "documents.parquet")
       val key = java.lang.Long.toHexString(graft.expr.Hash64.mix(
         dir.hashCode.toLong ^ (docsFile.length() * 1000003L) ^
           docsFile.lastModified()))
-      val stage = new java.io.File(s"/tmp/graft-warc-$key")
+      val stage = new java.io.File(org.apache.spark.SparkFiles.getRootDirectory(), s"graft-warc-$key")
       if (!new java.io.File(stage, "_SUCCESS").exists()) {
         // Hadoop-FS staging (file: URI on local[N], shared FS on a
         // cluster): attempt-unique tmp, rename-or-fail, _SUCCESS only

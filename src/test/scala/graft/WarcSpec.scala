@@ -156,4 +156,18 @@ class WarcSpec extends AnyFunSuite with TempDirs {
     assert(eErr.length == 1 && eErr.head.getAs[String]("error").contains("warc"))
     assert(eErr.head.getAs[String]("text") == null)
   }
+
+  test("x12 stages its shards in the session's files dir and leaves no /tmp/graft-warc-* entry") {
+    // the fixed dir x12 staged into before its shards moved
+    def tmpEntries: Set[String] = Option(new java.io.File("/tmp").list())
+      .fold(Set.empty[String])(_.filter(_.startsWith("graft-warc-")).toSet)
+    val before = tmpEntries
+    val rows = SparkEntry.queries("x12_warc_roundtrip")(spark, "/root/testdata/sf0.001").collect()
+    assert(rows.nonEmpty)
+    assert((tmpEntries -- before).isEmpty, tmpEntries -- before)
+    val staged = new java.io.File(org.apache.spark.SparkFiles.getRootDirectory()).listFiles()
+      .filter(_.getName.startsWith("graft-warc-"))
+    assert(staged.nonEmpty && staged.forall(d => new java.io.File(d, "_SUCCESS").exists()),
+      staged.toSeq)
+  }
 }
