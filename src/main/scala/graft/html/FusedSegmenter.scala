@@ -34,9 +34,10 @@ object FusedSegmenter {
     * Block object per block this removes the dominant per-block
     * allocations (the extraction loop is memory-bandwidth-bound at high
     * core counts — BASELINE.md). kindId: 0=content 1=heading 2=list.
-    * `buf` starts at 512 bytes and grows with the block text, not with
-    * the page. `surrogates` is set once an entity wrote a surrogate. */
-  final class RawBlocks extends ByteBuf(512) {
+    * `buf` starts at `capacity` bytes and grows with the block text, not
+    * with the page. `surrogates` is set once an entity wrote a
+    * surrogate. */
+  final class RawBlocks(capacity: Int = 512) extends ByteBuf(capacity) {
     var n = 0
     var parts = new Array[Int](32)
     var kindIds = new Array[Int](32)
@@ -168,7 +169,9 @@ object FusedSegmenter {
     * (FusedEquivalenceSpec + the frozen golden digests attest). */
   private final class Seg(b: Array[Byte]) {
     private[this] val n = b.length
-    private[this] val rb = new RawBlocks
+    // block text is never longer than the payload (an entity is longer
+    // than its replacement), so a small page's text never regrows
+    private[this] val rb = new RawBlocks(math.min(n, 4096))
 
     // segmentation state (mirrors BlockSegmenter.segment)
     private[this] var part = 1

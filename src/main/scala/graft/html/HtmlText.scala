@@ -67,7 +67,7 @@ object HtmlText {
     var k = 0
     while (k < EntityNames.length) {
       val name = EntityNames(k)
-      if (name.length == until - from) {
+      if (name.length == until - from && b(from) == name.charAt(0)) {
         var j = 0
         while (j < name.length && b(from + j) == name.charAt(j)) j += 1
         if (j == name.length)

@@ -2,11 +2,11 @@ package graft.html
 
 import HtmlText.{EntityChars, EntityNames, Malformed, NoChar}
 
-/** The markup primitives on a decoded `String`, as main read them
-  * before its scanner moved to bytes: the reference for their byte
-  * versions in `HtmlText`. `HtmlTokenizer` searches raw-text close tags
-  * with `indexOfCloseTag`, and `Utf8Spec` checks `HtmlText.entityAt`,
-  * `indexOfCloseTag` and `tagEnd` against these at every position. */
+/** The markup primitives on a decoded `String`: the reference for
+  * their byte versions in `HtmlText`. `HtmlTokenizer` searches raw-text
+  * close tags with `indexOfCloseTag`, and `Utf8Spec` checks
+  * `HtmlText.entityAt`, `indexOfCloseTag` and `tagEnd` against these at
+  * every position. */
 object StringMarkup {
 
   /** Decode the entity at `i` (s(i) == '&') in place; nothing is
