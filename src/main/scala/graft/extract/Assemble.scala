@@ -1,5 +1,7 @@
 package graft.extract
 
+import java.nio.charset.StandardCharsets
+
 import graft.html.{ByteBuf, HtmlText, Utf8}
 import graft.html.FusedSegmenter.RawBlocks
 
@@ -29,7 +31,23 @@ final case class Span(start: Int, end: Int, kind: String)
   */
 object Assemble {
 
-  def header(idx: Int): String = s"--- صفحة $idx ---"
+  private val HeaderHead = "--- صفحة "
+  private val HeaderTail = " ---"
+  private val HeaderHeadBytes = HeaderHead.getBytes(StandardCharsets.UTF_8)
+  private val HeaderTailBytes = HeaderTail.getBytes(StandardCharsets.UTF_8)
+
+  def header(idx: Int): String = HeaderHead + idx + HeaderTail
+
+  /** `header(idx)` appended to `out` as UTF-8; returns its length in
+    * Java chars. */
+  private def putHeader(out: ByteBuf, idx: Int): Int = {
+    val digits = Integer.toString(idx)
+    out.put(HeaderHeadBytes, 0, HeaderHeadBytes.length)
+    var k = 0
+    while (k < digits.length) { out.put(digits.charAt(k).toByte); k += 1 }
+    out.put(HeaderTailBytes, 0, HeaderTailBytes.length)
+    HeaderHead.length + digits.length + HeaderTail.length
+  }
 
   /** One assembled document: its text is `buf[from, until)` (WTF-8,
     * see `Utf8`; `surrogates` when it may hold a surrogate), and span
@@ -93,8 +111,8 @@ object Assemble {
           if (keep(i)) {
             if (!open) {
               if (out.len > 0) { out.put('\n'.toByte); out.put('\n'.toByte); chars += 2 }
-              val h = header(part)
-              out.put(h); out.put('\n'.toByte); chars += h.length + 1
+              chars += putHeader(out, part) + 1
+              out.put('\n'.toByte)
               open = true
             } else if (!firstBlock) { out.put('\n'.toByte); chars += 1 }
             firstBlock = false
