@@ -222,7 +222,9 @@ object FusedSegmenter {
       * the block has text) and ends the word; a non-whitespace char
       * first writes any pending space, and starts a word if none is
       * open. A word is found to its end first (validating and counting
-      * its chars) and then copied from the payload in bulk. */
+      * its chars) and then copied from the payload in bulk, together
+      * with the words that follow it after a single ' ' each: that space
+      * is the pending space the fold would write. */
     private def text(from: Int): Int = {
       var k = from
       while (k < n) {
@@ -244,16 +246,23 @@ object FusedSegmenter {
         } else {
           var e = k + len
           var chars = Utf8.chars(len)
+          var more = 0 // words after the first
           var open = true
           while (open && e < n) {
-            val y = b(e)
-            if (y >= 0) {
-              if (y < '@' && (WordEnds >>> y & 1L) != 0) open = false
-              else { e += 1; chars += 1 }
-            } else {
-              val r = Utf8.at(b, e)
-              if (isWsLead(y) && isWs(Utf8.codePoint(r).toChar)) open = false
-              else { e += Utf8.length(r); chars += Utf8.chars(Utf8.length(r)) }
+            val ascii = e
+            while (e < n && inWordAscii(b(e))) e += 1
+            chars += e - ascii
+            if (e < n) {
+              val y = b(e)
+              if (y >= 0) {
+                if (y == ' ' && e + 1 < n && inWordAscii(b(e + 1))) {
+                  e += 2; chars += 2; more += 1
+                } else open = false
+              } else {
+                val r = Utf8.at(b, e)
+                if (isWsLead(y) && isWs(Utf8.codePoint(r).toChar)) open = false
+                else { e += Utf8.length(r); chars += Utf8.chars(Utf8.length(r)) }
+              }
             }
           }
           rb.ensure(e - k + 1)
@@ -261,6 +270,8 @@ object FusedSegmenter {
             rb.buf(rb.len) = ' '; rb.len += 1; blockChars += 1; pendingSpace = false
           }
           if (!inWord) startWord()
+          words += more
+          if (aDepth > 0) linkWords += more
           System.arraycopy(b, k, rb.buf, rb.len, e - k)
           rb.len += e - k
           blockChars += chars
@@ -398,6 +409,10 @@ object FusedSegmenter {
   /** An ASCII name char lowercased: setting bit 5 lowercases a letter
     * and leaves digits, '-' and ':' as they are. */
   @inline private def lower(c: Byte): Char = (c | 0x20).toChar
+
+  /** Is `c` an ASCII byte of a word (not whitespace, '<' or '&')? */
+  @inline private def inWordAscii(c: Byte): Boolean =
+    c >= '@' || (c >= 0 && (WordEnds >>> c & 1L) == 0)
 
   @inline private def isNameStart(c: Byte): Boolean =
     (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z')

@@ -1,5 +1,7 @@
 package graft.html
 
+import java.nio.charset.StandardCharsets
+
 /** The markup and text primitives every scanner in main shares:
   * entity decoding, raw-text close-tag search and the quote-aware tag
   * end over a UTF-8 payload's bytes, and the whitespace rules of block
@@ -63,16 +65,26 @@ object HtmlText {
   @inline def entityNext(r: Long): Int = (r >>> 32).toInt
   @inline def entityCodePoint(r: Long): Int = r.toInt
 
+  private val MaxNameLength = EntityNames.map(_.length).max
+
+  /** A body of at most `MaxNameLength` (< 8) bytes as a Long: its
+    * length above its bytes, so distinct bodies never share a key. */
+  private def nameKey(b: Array[Byte], from: Int, until: Int): Long = {
+    var key = (until - from).toLong
+    var i = from
+    while (i < until) { key = key << 8 | (b(i) & 0xFF); i += 1 }
+    key
+  }
+  private val NameKeys: Array[Long] =
+    EntityNames.map(n => nameKey(n.getBytes(StandardCharsets.US_ASCII), 0, n.length))
+
   private def namedEntity(b: Array[Byte], from: Int, until: Int): Int = {
+    if (until - from > MaxNameLength) return Malformed
+    val key = nameKey(b, from, until)
     var k = 0
-    while (k < EntityNames.length) {
-      val name = EntityNames(k)
-      if (name.length == until - from && b(from) == name.charAt(0)) {
-        var j = 0
-        while (j < name.length && b(from + j) == name.charAt(j)) j += 1
-        if (j == name.length)
-          return if (k < EntityChars.length) EntityChars.charAt(k).toInt else NoChar
-      }
+    while (k < NameKeys.length) {
+      if (NameKeys(k) == key)
+        return if (k < EntityChars.length) EntityChars.charAt(k).toInt else NoChar
       k += 1
     }
     Malformed
