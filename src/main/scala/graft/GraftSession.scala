@@ -143,7 +143,11 @@ object GraftSession {
 
   /** Local session with the defaults every graft entry point uses:
     * shuffle partitions sized to cores (not 200), AQE + skew-join on,
-    * UTC (byte-identity: no timezone leakage, SURVEY.md §7.7). */
+    * UTC (byte-identity: no timezone leakage, SURVEY.md §7.7), and
+    * `file://` on [[graft.tables.LocalFs]] (file modes without a
+    * `chmod` process). Hadoop caches one `file://` instance per JVM and
+    * the first `FileSystem.get` picks its class, so the setting holds
+    * when this session is the JVM's first user of `file://`. */
   def local(cores: Int, appName: String = "graft"): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cores]")
@@ -153,6 +157,7 @@ object GraftSession {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[graft.tables.LocalFs].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     register(spark)

@@ -6,7 +6,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
 /** Iceberg-style table: partitioned parquet + a JSON snapshot/manifest
@@ -61,11 +60,14 @@ final class IceTable(val root: String, spark: SparkSession) {
   }
 
   /** Every event line of the table, in append order. */
-  def eventLog: Seq[String] =
+  def eventLog: Seq[String] = events.map(_._2)
+
+  /** Each event file with its line, in append order. */
+  private def events: Seq[(Path, String)] =
     if (!fs.exists(eventsDir)) Nil
     else fs.listStatus(eventsDir).toSeq.map(_.getPath).sortBy(_.getName).map { p =>
       val in = fs.open(p)
-      try new String(in.readAllBytes(), "UTF-8").trim finally in.close()
+      try p -> new String(in.readAllBytes(), "UTF-8").trim finally in.close()
     }
 
   // ---- snapshot log ---------------------------------------------------
@@ -238,12 +240,12 @@ final class IceTable(val root: String, spark: SparkSession) {
     // 16.5 s, no persist (recompute per group) 25.0 s — deserialized
     // rows blow the young gen, recompute pays 4× generation+extract.
     val staged = df.repartition(col("bucket")).persist(StorageLevel.MEMORY_AND_DISK_SER)
-    try commitGroups(staged, commitId, groups, abortAfterGroup) { (files, lineage) =>
+    try commitGroups(staged, commitId, groups, abortAfterGroup) { (files, lineage, since) =>
       // an overwrite manifest is parent-independent, so the freshest
       // parent read is correct; a racing flip still collides on the
       // snapshot id and raises ConcurrentCommitException
       flipSnapshot(commitId, files, lineageSum(lineage, "rows"),
-        df.columns.toSeq, currentSnapshotId.getOrElse(-1L), lineage)
+        df.columns.toSeq, currentSnapshotId.getOrElse(-1L), lineage, since)
     } finally staged.unpersist()
   }
 
@@ -276,7 +278,7 @@ final class IceTable(val root: String, spark: SparkSession) {
     // per-file stats pruning readRange depends on. Small-file growth is
     // the compact() job's concern (Iceberg's same split of duties).
     requireBucket(df)
-    commitGroups(df, commitId, 1, -1) { (files, lineage) =>
+    commitGroups(df, commitId, 1, -1) { (files, lineage, since) =>
       val mergedRows = parent.map(_.rows).getOrElse(0L) +
         (if (parentHadThis) 0L else lineageSum(lineage, "rows"))
       // CAS against the parent this manifest was BUILT from: a racing
@@ -286,7 +288,7 @@ final class IceTable(val root: String, spark: SparkSession) {
       // the new parent. Parent files keep the stats they already carry;
       // only THIS commit's fresh files are scanned for theirs.
       flipSnapshot(commitId, (parentFiles ++ withStats(files, statsCol)).sortBy(_.path),
-        mergedRows, df.columns.toSeq, parentId.getOrElse(-1L), lineage)
+        mergedRows, df.columns.toSeq, parentId.getOrElse(-1L), lineage, since)
     }
   }
 
@@ -294,14 +296,15 @@ final class IceTable(val root: String, spark: SparkSession) {
     require(df.columns.contains("bucket"), "df must carry a bucket column")
 
   /** The one commit path under `commit` and `commitAppend`: the group
-    * writes, then `flip` with their data files and lineage. A failure
+    * writes, then `flip` with their data files, their lineage and the
+    * `System.nanoTime` at which the last group write ended. A failure
     * logs `commit_failed` and rethrows. The commit id names the data
     * directory, which the read path globs, so an empty id, a path or
     * glob character, or non-ASCII (the JVM's file-name encoding follows
     * the locale) is refused up front, before anything is written or
     * logged. */
   private def commitGroups(df: DataFrame, commitId: String, groups: Int, abortAfterGroup: Int)
-                          (flip: (Seq[DataFileEntry], Seq[Seq[Long]]) => Long): Long = {
+                          (flip: (Seq[DataFileEntry], Seq[Seq[Long]], Long) => Long): Long = {
     require(commitId.nonEmpty && commitId.forall(c => c < 128 && "/\\[]{}*?".indexOf(c) < 0),
       s"commit id '$commitId' cannot be a directory name: use non-empty ASCII without / \\ [ ] { } * ?")
     require(groups >= 1, s"groups must be >= 1, got $groups")
@@ -317,14 +320,14 @@ final class IceTable(val root: String, spark: SparkSession) {
 
   /** Lineage aggregate, then the group writes, of `df` in its own
     * layout, as overlapped jobs from a pool of up to 3 threads. Returns
-    * the data files and every group's lineage rows, read from the
-    * markers: a group finished by an earlier run keeps the lineage of
-    * the data it wrote. With `abortAfterGroup` = g ≥ 0 only groups
+    * the data files, every group's lineage rows, read from the markers
+    * (a group finished by an earlier run keeps the lineage of the data
+    * it wrote), and the `System.nanoTime` at which the writes ended. With `abortAfterGroup` = g ≥ 0 only groups
     * 0..g run, then it throws (the simulated crash of the test hook).
     * Logs the aggregate's counts (`staged`) before any write, then one
     * `group` line per group (`resumed` if its marker was there). */
   private def writeGroups(df: DataFrame, commitId: String, groups: Int,
-                          abortAfterGroup: Int): (Seq[DataFileEntry], Seq[Seq[Long]]) = {
+                          abortAfterGroup: Int): (Seq[DataFileEntry], Seq[Seq[Long]], Long) = {
     val dataDir = new Path(root, s"data/commit-$commitId")
     val progressDir = new Path(metaDir, s"progress/$commitId")
     def marker(g: Int) = new Path(progressDir, s"group-$g.done")
@@ -403,8 +406,9 @@ final class IceTable(val root: String, spark: SparkSession) {
     if (abortAfterGroup >= 0)
       throw new IllegalStateException(s"simulated crash after group ${todo.last}")
 
+    val written = System.nanoTime()
     (listParquet(dataDir),
-      (0 until groups).flatMap(g => rowsOf(readJson(marker(g)))).sortBy(_.head))
+      (0 until groups).flatMap(g => rowsOf(readJson(marker(g)))).sortBy(_.head), written)
   }
 
   /** Atomic snapshot flip: write the manifest to a committer-unique
@@ -418,11 +422,16 @@ final class IceTable(val root: String, spark: SparkSession) {
     * data dir is unreferenced by any snapshot (safe to delete), and a
     * retry of the same commit is cheap: finished-group markers skip
     * the data rewrite and carry its lineage, so only the manifest flip
-    * re-runs against the new parent. */
+    * re-runs against the new parent.
+    *
+    * `commit_complete`'s `ms` runs from `since` (a commit passes the end
+    * of its last group write, so it covers the file listing, the marker
+    * reads, an append's stats and the flip) to the published manifest. */
   private[tables] def flipSnapshot(commitId: String, files: Seq[DataFileEntry],
                                    rows: Long, schemaFields: Seq[String],
                                    parent: Long,
-                                   lineage: Seq[Seq[Long]] = Nil): Long = {
+                                   lineage: Seq[Seq[Long]] = Nil,
+                                   since: Long = System.nanoTime()): Long = {
     val next = parent + 1
     val json = renderSnapshot(Snapshot(next, parent, commitId, files, rows, lineage,
       schemaFields))
@@ -432,7 +441,8 @@ final class IceTable(val root: String, spark: SparkSession) {
     if (!publishNew(tmp, snapPath(next)))
       throw new IceTable.ConcurrentCommitException(next, commitId)
     logEvent(commitId, s"commit_complete snapshot=$next rows=${lineageSum(lineage, "rows")} " +
-      s"errors=${lineageSum(lineage, "error_rows")} oversize=${lineageSum(lineage, "oversize_docs")}")
+      s"errors=${lineageSum(lineage, "error_rows")} oversize=${lineageSum(lineage, "oversize_docs")} " +
+      s"ms=${(System.nanoTime() - since) / 1000000}")
     next
   }
 
@@ -495,7 +505,9 @@ final class IceTable(val root: String, spark: SparkSession) {
     * expire_snapshots). References are tracked per FILE, not per
     * snapshot commitId — append snapshots carry files from many commit
     * dirs, all of which must survive. The current snapshot is never
-    * expired. */
+    * expired. The event lines of a dropped snapshot's commit go too,
+    * unless a kept snapshot has the same commit id; lines of a commit
+    * with no snapshot (in flight, or failed) stay. */
   def expireSnapshots(keep: Int): Seq[Long] = {
     require(keep >= 1)
     val all = snapshots
@@ -504,7 +516,7 @@ final class IceTable(val root: String, spark: SparkSession) {
     val keptSnaps = keepIds.map(readSnapshot)
     val referenced = (keptSnaps.map(_.commitId) ++
       keptSnaps.flatMap(_.files.flatMap(f => commitDirOf(f.path)))).toSet
-    val dropped = drop.filter { id =>
+    val droppedCommits = drop.map { id =>
       val snap = readSnapshot(id)
       fs.delete(snapPath(id), false)
       val dirs = (snap.files.flatMap(f => commitDirOf(f.path)) :+ snap.commitId).distinct
@@ -512,9 +524,14 @@ final class IceTable(val root: String, spark: SparkSession) {
         fs.delete(new Path(root, s"data/commit-$c"), true)
         fs.delete(new Path(metaDir, s"progress/$c"), true)
       }
-      true
+      snap.commitId
+    }.toSet -- keptSnaps.map(_.commitId)
+    // a line is `instant [commitId] event`
+    events.foreach { case (p, line) =>
+      val tagged = line.drop(line.indexOf(' ') + 1)
+      if (droppedCommits.exists(c => tagged.startsWith(s"[$c] "))) fs.delete(p, false)
     }
-    dropped
+    drop
   }
 
   /** Completed resume groups for a commit (test/ops introspection). */
@@ -565,16 +582,17 @@ final class IceTable(val root: String, spark: SparkSession) {
     }
   }
 
+  /** The `.parquet` files under `dir`, by a `listStatus` walk. Not
+    * `listFiles`: its `LocatedFileStatus` loads each file's permission,
+    * which on the local FS without the native hadoop library is an
+    * `ls -ld` process per file. */
   private def listParquet(dir: Path): Seq[DataFileEntry] = {
-    val out = ArrayBuffer.empty[DataFileEntry]
-    if (!fs.exists(dir)) return out.toSeq
-    val it = fs.listFiles(dir, true)
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.getPath.getName.endsWith(".parquet"))
-        out += DataFileEntry(f.getPath.toString, f.getLen)
+    def walk(d: Path): Seq[DataFileEntry] = fs.listStatus(d).toSeq.flatMap { s =>
+      if (s.isDirectory) walk(s.getPath)
+      else if (s.getPath.getName.endsWith(".parquet")) Seq(DataFileEntry(s.getPath.toString, s.getLen))
+      else Nil
     }
-    out.sortBy(_.path).toSeq
+    if (fs.exists(dir)) walk(dir).sortBy(_.path) else Nil
   }
 
   // ---- JSON metadata (driver-side; Jackson tree API) -------------------

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.jdk.CollectionConverters._
+
 import graft.pipeline.ExtractJob
 import graft.tables.IceTable
 
@@ -80,6 +82,8 @@ class IceTableSpec extends AnyFunSuite with TempDirs {
     val done = eventCounts(events, "commit_complete")
     assert(done("snapshot") == r.snapshotId && want.forall { case (k, v) => done(k) == v },
       s"$done vs $want")
+    // the listing, marker reads and flip after the last group write
+    assert(done.contains("ms"), s"$done")
     // job_start, staged, one line per group, completion: in append order
     assert(events.map(_.split(" ")(2)) ==
       Seq("job_start", "staged", "group", "group", "group", "group", "commit_complete"),
@@ -312,6 +316,37 @@ class IceTableSpec extends AnyFunSuite with TempDirs {
     assert(table.snapshots == Seq(1L))
     assert(table.read().count() == 400L)
     intercept[Exception] { table.readSnapshot(0L) }
+  }
+
+  test("manifest file list: a fresh commit's files are the .parquet files under its data dir") {
+    val root = tmpRoot("manifest-files")
+    val r = ExtractJob.run(spark, root, N, buckets = 16, groups = 4, commitId = "c0")
+    val listed = new IceTable(root, spark).readSnapshot(r.snapshotId).files
+      .map(f => new org.apache.hadoop.fs.Path(f.path).toUri.getPath -> f.bytes)
+    val dir = java.nio.file.Paths.get(root, "data", "commit-c0")
+    val walk = java.nio.file.Files.walk(dir)
+    val onDisk = try walk.iterator().asScala
+      .filter(p => java.nio.file.Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet"))
+      .map(p => p.toString -> java.nio.file.Files.size(p)).toSeq.sorted
+      finally walk.close()
+    assert(onDisk.length >= 4 && listed.sorted == onDisk, s"$listed\nvs\n$onDisk")
+  }
+
+  test("expireSnapshots drops the event lines of expired commits, not of uncommitted ones") {
+    import org.apache.spark.sql.functions._
+    val root = tmpRoot("expire-events")
+    val table = new IceTable(root, spark)
+    val df = spark.range(0, 40).select(col("id"),
+      pmod(col("id"), lit(4)).cast("int").as("bucket"),
+      lit(null).cast("string").as("error"), lit("t").as("text"))
+    Seq("a0", "a1", "a2").foreach(table.commitAppend(df, _))
+    table.logEvent("a3", "job_start docs=40 buckets=4 groups=1")
+    assert(table.expireSnapshots(keep = 1) == Seq(0L, 1L))
+    val log = table.eventLog
+    assert(log.map(_.split(" ").slice(1, 3).mkString(" ")) ==
+      Seq("[a2] staged", "[a2] group", "[a2] commit_complete", "[a3] job_start"),
+      log.mkString("\n"))
+    assert(table.read().count() == 120)
   }
 
   test("text sink writes UTF-8 lines and refuses an all-blank save") {
