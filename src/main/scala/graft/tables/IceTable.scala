@@ -322,8 +322,9 @@ final class IceTable(val root: String, spark: SparkSession) {
     * layout, as overlapped jobs from a pool of up to 3 threads. Returns
     * the data files, every group's lineage rows, read from the markers
     * (a group finished by an earlier run keeps the lineage of the data
-    * it wrote), and the `System.nanoTime` at which the writes ended. With `abortAfterGroup` = g ≥ 0 only groups
-    * 0..g run, then it throws (the simulated crash of the test hook).
+    * it wrote), and the `System.nanoTime` at which the writes ended.
+    * With `abortAfterGroup` = g ≥ 0 only groups 0..g run, then it
+    * throws (the simulated crash of the test hook).
     * Logs the aggregate's counts (`staged`) before any write, then one
     * `group` line per group (`resumed` if its marker was there). */
   private def writeGroups(df: DataFrame, commitId: String, groups: Int,
