@@ -59,8 +59,8 @@ object GraftSession {
       ExtractMainText(exprs.head, exprs(1), engine)
     },
     "graft_simhash" -> (exprs => SimHash64(exprs.head)),
-    "graft_minhash" -> (exprs => MinHashSig(exprs.head, 64)),
-    "graft_fingerprint" -> (exprs => Winnow(exprs.head, 16)),
+    "graft_minhash" -> (exprs => MinHashSig(exprs.head)),
+    "graft_fingerprint" -> (exprs => Winnow(exprs.head)),
     "graft_langid" -> (exprs => LangId(exprs.head)),
     // analysis-time Cast (same treatment as graft_topk): a wrong-typed
     // argument fails analysis or coerces cleanly instead of surfacing

@@ -1,9 +1,11 @@
 package graft.expr
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.functions.{array_min, lit}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -82,21 +84,22 @@ case class SimHash64(child: Expression)
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
 
-/** `graft_minhash(text, k) -> ARRAY<BIGINT>` — k-permutation MinHash
+/** `graft_minhash(text) -> ARRAY<BIGINT>` — K-permutation MinHash
   * signature over word 3-gram shingles (Broder 1997). Permutation i is
-  * splitmix64(shingleHash ^ mix(i)); the signature element is the
-  * minimum over shingles. Banding for LSH happens in plain column math
-  * downstream (`xxhash64(slice(sig, …))`). */
-case class MinHashSig(child: Expression, k: Int)
+  * splitmix64(shingleHash ^ mix(SeedBase + i)); the signature element
+  * is the minimum over shingles. Banding for LSH happens in plain
+  * column math downstream (`xxhash64(slice(sig, …))`). */
+case class MinHashSig(child: Expression)
     extends UnaryExpression with CodegenFallback {
+  import MinHashSig._
   override def prettyName: String = "graft_minhash"
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   @transient private lazy val seeds: Array[Long] =
-    Array.tabulate(k)(i => Hash64.mix(0x5eed0000L + i))
+    Array.tabulate(K)(i => Hash64.mix(SeedBase + i))
 
   override def nullSafeEval(v: Any): Any = {
     val s = v.asInstanceOf[UTF8String].toString
-    val sig = Array.fill(k)(Long.MaxValue)
+    val sig = Array.fill(K)(Long.MaxValue)
     // rolling word-3-gram shingles without materializing the token list
     var w0 = 0L; var w1 = 0L // previous two word hashes
     var seen = 0 // words consumed so far
@@ -112,7 +115,7 @@ case class MinHashSig(child: Expression, k: Int)
         if (seen >= 3) { // shingle emitted from the 3rd word on
           val shingle = Hash64.mix(w0 ^ Hash64.mix(w1) ^ Hash64.mix(Hash64.mix(w2)))
           var j = 0
-          while (j < k) {
+          while (j < K) {
             val h = Hash64.mix(shingle ^ seeds(j))
             if (h < sig(j)) sig(j) = h
             j += 1
@@ -124,6 +127,26 @@ case class MinHashSig(child: Expression, k: Int)
     new GenericArrayData(sig.map(l => l: Any))
   }
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
+/** The one MinHash definition: signature length, LSH banding,
+  * near-dup threshold, seeds and the no-shingle sentinel. Dedup's
+  * batch ops, the streaming twin and the d3/d6/d9/d12 oracle builder
+  * all read it. */
+object MinHashSig {
+  /** Permutations (signature positions). */
+  val K = 64
+  /** LSH bands of `Rows` positions each; Bands × Rows = K. */
+  val Bands = 16
+  val Rows: Int = K / Bands
+  /** A pair is a near-dup when matching positions / K reach this. */
+  val Threshold = 0.5
+  /** Permutation i is seeded with splitmix64(SeedBase + i). */
+  val SeedBase = 0x5eed0000L
+  /** False for a text of fewer than 3 words: it has no shingle, so
+    * every position keeps the Long.MaxValue sentinel, and two such
+    * texts would match in every band with estimate 1.0. */
+  def hasShingles(sig: Column): Column = array_min(sig) =!= lit(Long.MaxValue)
 }
 
 /** The SINGLE word-boundary scan shared by [[Shingles]] and
@@ -222,16 +245,17 @@ case class TokenWindowHashes(child: Expression, k: Int)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
-/** `graft_fingerprint(text, window) -> ARRAY<BIGINT>` — winnowing
-  * document fingerprint (Schleimer et al., SIGMOD 2003): rolling hash
-  * over character 8-grams, minimum per sliding window, deduplicated,
-  * sorted. Robust to small edits; used for containment-style overlap
-  * detection. */
-case class Winnow(child: Expression, window: Int)
+/** `graft_fingerprint(text) -> ARRAY<BIGINT>` — winnowing document
+  * fingerprint (Schleimer et al., SIGMOD 2003): rolling hash over
+  * character 8-grams, minimum per non-overlapping 16-hash window,
+  * deduplicated, sorted. Robust to small edits; used for
+  * containment-style overlap detection. */
+case class Winnow(child: Expression)
     extends UnaryExpression with CodegenFallback {
   override def prettyName: String = "graft_fingerprint"
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   private val Gram = 8
+  private val Window = 16 // t4's oracle groups `pos // 16`
 
   override def nullSafeEval(v: Any): Any = {
     val s = v.asInstanceOf[UTF8String].toString
@@ -243,12 +267,12 @@ case class Winnow(child: Expression, window: Int)
     while (i < m) { hs(i) = Hash64.mix(Hash64.fnv1a(s, i, i + Gram)); i += 1 }
     val out = scala.collection.mutable.TreeSet.empty[Long]
     var w = 0
-    while (w + window <= m) {
+    while (w + Window <= m) {
       var best = Long.MaxValue
       var j = w
-      while (j < w + window) { if (hs(j) < best) best = hs(j); j += 1 }
+      while (j < w + Window) { if (hs(j) < best) best = hs(j); j += 1 }
       out += best
-      w += window // non-overlapping windows: fixed deterministic scheme
+      w += Window // non-overlapping windows: fixed deterministic scheme
     }
     if (w < m) { // tail window
       var best = Long.MaxValue

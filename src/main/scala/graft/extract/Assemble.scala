@@ -66,14 +66,10 @@ object Assemble {
     Array.emptyIntArray, Array.emptyIntArray, Array.emptyIntArray)
 
   /** Assemble the kept blocks into the final text plus spans
-    * addressing each block inside that text. */
-  def fromRaw(rb: RawBlocks, keep: Array[Boolean]): (String, Seq[Span]) =
-    fromRawDual(rb, keep, null)
-
-  /** `assemble` as a `String` and its `Span`s. */
-  def fromRawDual(rb: RawBlocks, keepA: Array[Boolean],
-                  keepB: Array[Boolean]): (String, Seq[Span]) = {
-    val a = assemble(rb, keepA, keepB)
+    * addressing each block inside that text: `assemble` as a `String`
+    * and its `Span`s. */
+  def fromRaw(rb: RawBlocks, keep: Array[Boolean]): (String, Seq[Span]) = {
+    val a = assemble(rb, keep, null)
     (a.text, a.spans)
   }
 

@@ -1,8 +1,6 @@
 package graft.extract
 
-import java.nio.charset.{CharacterCodingException, StandardCharsets}
-import java.nio.charset.CodingErrorAction
-import java.nio.ByteBuffer
+import java.nio.charset.StandardCharsets
 
 import graft.html.{Boilerplate, FusedSegmenter, HtmlText, Utf8}
 import graft.html.FusedSegmenter.RawBlocks
@@ -159,21 +157,14 @@ object Extractor {
   /** Strict UTF-8 decode — malformed bytes are a detectable error, not
     * mojibake (byte-identity discipline, SURVEY.md §7.7). The plain-text
     * path's decode; HTML payloads are validated by the segmenter's own
-    * scan instead.
-    *
-    * Fast path: `new String(bytes, UTF_8)` (intrinsified, one copy),
-    * which substitutes U+FFFD on malformed input — so a U+FFFD in the
-    * result (genuinely rare in valid documents) routes to the strict
-    * CharsetDecoder to distinguish "malformed payload" from "document
-    * that really contains U+FFFD". Identical classification to the
-    * always-strict decoder at a fraction of the allocation. */
+    * scan. Both decide validity with `Utf8.at`, which rejects what the
+    * JDK's strict (REPORT) decoder rejects; a valid payload is then
+    * decoded once by `new String`. */
   def decodeUtf8(b: Array[Byte]): Option[String] = {
-    val fast = new String(b, StandardCharsets.UTF_8)
-    if (fast.indexOf('\uFFFD') < 0) return Some(fast)
-    val dec = StandardCharsets.UTF_8.newDecoder()
-      .onMalformedInput(CodingErrorAction.REPORT)
-      .onUnmappableCharacter(CodingErrorAction.REPORT)
-    try Some(dec.decode(ByteBuffer.wrap(b)).toString)
-    catch { case _: CharacterCodingException => None }
+    var i = 0
+    try {
+      while (i < b.length) i += (if (b(i) >= 0) 1 else Utf8.length(Utf8.at(b, i)))
+    } catch { case Utf8.Invalid => return None }
+    Some(new String(b, StandardCharsets.UTF_8))
   }
 }

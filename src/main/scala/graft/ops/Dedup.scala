@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.expr.MinHashSig
+
 /** Large-scale deduplication operators for training-data pipelines.
   *
   * All shapes are shuffle-conscious: candidate generation goes through
@@ -10,6 +12,14 @@ import org.apache.spark.sql.functions._
   * all-pairs cross join — at 10^12 docs the only feasible topology.
   */
 object Dedup {
+
+  /** False-positive rate of the Bloom pre-filters of `decontaminate`
+    * and `incrementalIngest` (exactness never depends on it). */
+  val BloomFpp = 0.01
+
+  /** Window length, in tokens, of `substringDupStats` (d8's oracle
+    * slices 8 words). */
+  val SubstringTokens = 8
 
   /** Exact dedup: group by content hash (sha2-256 — collision-safe at
     * any scale, unlike 64-bit), keep the minimum id. One shuffle on
@@ -94,9 +104,10 @@ object Dedup {
     * hashed (graft_token_windows, one pass per doc), the FIRST
     * occurrence of each distinct window across the corpus — min
     * (doc_id, pos) — stays canonical, and every other occurrence
-    * counts as duplicated. Output per doc: `n_windows`,
-    * `n_dup_windows`, `dup_ratio` (share of the doc's windows that
-    * duplicate earlier text; cut or down-weight above a threshold).
+    * counts as duplicated (windows of `SubstringTokens` tokens). Output
+    * per doc: `n_windows`, `n_dup_windows`, `dup_ratio` (share of the
+    * doc's windows that duplicate earlier text; cut or down-weight
+    * above a threshold).
     *
     * Scale shape: no doc×doc comparison anywhere — one shuffle keyed
     * by window hash for the min-occurrence aggregate (combiner-
@@ -105,8 +116,7 @@ object Dedup {
     * appearing in millions of docs costs rows linear in its
     * occurrences, never quadratic (unlike pairwise candidate joins —
     * this op needs no stop-gram cap). */
-  def substringDupStats(docs: DataFrame, idCol: String, textCol: String,
-                        k: Int = 8): DataFrame = {
+  def substringDupStats(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     // materialized once (Barrier): the window table feeds both
     // the min-occurrence aggregate and the join-back probe — without
     // the barrier each side re-runs the tokenize+hash generate over
@@ -114,7 +124,7 @@ object Dedup {
     // documented Exchange reuse). 8-byte hashes per window, the same
     // rows the whash exchanges already carry.
     val wins = Barrier(docs.select(col(idCol).cast("long").as("doc_id"),
-        posexplode(call_function("graft_token_windows", col(textCol), lit(k))))
+        posexplode(call_function("graft_token_windows", col(textCol), lit(SubstringTokens))))
       .toDF("doc_id", "pos", "whash"))
     val firsts = wins.groupBy("whash")
       .agg(min(struct(col("doc_id"), col("pos"))).as("first"))
@@ -150,16 +160,16 @@ object Dedup {
     * the d8 window hashes) — and the oracle recomputes the identical
     * hash, collisions included.
     *
-    * Output: (doc_id, n_paras, n_kept, text_dedup) with paragraphs
-    * rejoined by `sep` ("" when nothing survives). */
-  def paragraphDedup(docs: DataFrame, idCol: String, textCol: String,
-                     sep: String = "\n"): DataFrame = {
+    * Paragraphs are the "\n"-separated lines (d10's oracle splits on
+    * chr(10)). Output: (doc_id, n_paras, n_kept, text_dedup) with
+    * paragraphs rejoined by "\n" ("" when nothing survives). */
+  def paragraphDedup(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     // materialized once (Barrier), same rationale as
     // substringDupStats: the paragraph table feeds both the keeper
     // aggregate and the join-back probe, and without the barrier each
     // side re-splits and re-hashes the corpus.
     val paras = Barrier(docs.select(col(idCol).cast("long").as("doc_id"),
-        posexplode(split(col(textCol), java.util.regex.Pattern.quote(sep))))
+        posexplode(split(col(textCol), "\n")))
       .toDF("doc_id", "idx", "para")
       .withColumn("ph", call_function("graft_fnv64", col("para"))))
     val firsts = paras.groupBy("ph")
@@ -170,7 +180,7 @@ object Dedup {
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_paras"),
         sum(when(col("keep"), 1L).otherwise(0L)).as("n_kept"),
-        concat_ws(sep, transform(
+        concat_ws("\n", transform(
           sort_array(collect_list(when(col("keep"),
             struct(col("idx"), col("para"))))),
           e => e.getField("para"))).as("text_dedup"))
@@ -194,7 +204,7 @@ object Dedup {
     * Above the broadcast guard there is a second, much wider band
     * before brute shuffle becomes the only option: an eval set whose
     * HASH RELATION cannot broadcast often still fits as a BLOOM
-    * (~9.6 bits per distinct shingle at `bloomFpp`=1% ⇒ ~120 MB per
+    * (~9.6 bits per distinct shingle at `BloomFpp`=1% ⇒ ~120 MB per
     * 10^8 shingles, vs gigabytes for the hash relation). In that band
     * the corpus's shingle stream is pre-filtered MAP-SIDE with
     * `graft_bloom_contains` before the exact merge join — at a low
@@ -210,7 +220,6 @@ object Dedup {
   def decontaminate(corpus: DataFrame, evalSet: DataFrame,
                     idCol: String, textCol: String, minOverlap: Int,
                     maxEvalShingles: Long = 5000000L,
-                    bloomFpp: Double = 0.01,
                     maxBloomItems: Long = 2000000000L): DataFrame = {
     // MATERIALIZED once (Barrier — r6): the eval shingle set is
     // read up to three times (the guard count, the Bloom build, the
@@ -231,7 +240,7 @@ object Dedup {
       else {
         // driver-side aggregate of partial filters; memory bounded by
         // the bits (sized from the exact count just taken), not rows
-        val bf = evalSh.stat.bloomFilter("shingle", math.max(nEval, 1L), bloomFpp)
+        val bf = evalSh.stat.bloomFilter("shingle", math.max(nEval, 1L), BloomFpp)
         val os = new java.io.ByteArrayOutputStream()
         bf.writeTo(os)
         inv.filter(call_function("graft_bloom_contains",
@@ -247,18 +256,11 @@ object Dedup {
 
   /** MinHash+LSH near-dup pairs: signature (graft_minhash expression)
     * → band hashes → equi-join on (band, bandHash) → estimated
-    * Jaccard = matching signature positions / k. Candidates explode
-    * only where bands collide, so the join stays sparse at scale. */
-  def minhashPairs(docs: DataFrame, idCol: String, textCol: String,
-                   k: Int = 64, bands: Int = 16, minEstJaccard: Double = 0.5): DataFrame = {
-    require(k % bands == 0, "k must divide into bands")
-    val r = k / bands
-    // Docs with <3 words emit no shingles, leaving the all-sentinel
-    // signature [Long.MaxValue, …] — every such pair would collide in
-    // every band with est_jaccard 1.0 even for unrelated texts. Drop
-    // them: array_min(sig) == MaxValue ⇔ every element is the sentinel
-    // (a real shingle minimum below MaxValue in all k permutations).
-    //
+    * Jaccard = matching signature positions / K, kept from
+    * `MinHashSig.Threshold` up (the shape is `MinHashSig`'s).
+    * Candidates explode only where bands collide, so the join stays
+    * sparse at scale. */
+  def minhashPairs(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     // The signature table is MATERIALIZED (Barrier) before the
     // sentinel filter and the band self-join: without the barrier the
     // pushed-down sentinel filter re-evaluates graft_minhash per row
@@ -266,18 +268,15 @@ object Dedup {
     // recomputes the whole scan+minhash subtree for each side — ~4
     // signature passes where one suffices (r6 plan audit: zero
     // ReusedExchange in the executed plan). The cached table is
-    // id + k longs per doc — strictly smaller than what the band join
+    // id + K longs per doc — strictly smaller than what the band join
     // already ships through its exchanges (each banded row carries the
     // full sig), so the guide-§8 "decide on small rows" trade holds at
     // any corpus size; MEMORY_AND_DISK spills rather than OOMs.
     val sig = Barrier(docs.select(
         col(idCol).as("id"),
         call_function("graft_minhash", col(textCol)).as("sig")))
-      .filter(array_min(col("sig")) =!= lit(Long.MaxValue))
-    val banded = sig.select(
-      col("id"), col("sig"),
-      posexplode(transform(sequence(lit(0), lit(bands - 1)),
-        b => xxhash64(b, slice(col("sig"), b * lit(r) + 1, lit(r))))).as(Seq("band", "band_hash")))
+      .filter(MinHashSig.hasShingles(col("sig")))
+    val banded = sig.select(col("id"), col("sig"), bandHashes(col("sig")))
     val cand = banded.as("a").join(banded.as("b"),
         col("a.band") === col("b.band") &&
           col("a.band_hash") === col("b.band_hash") &&
@@ -285,23 +284,19 @@ object Dedup {
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
         col("a.sig").as("sig_a"), col("b.sig").as("sig_b"))
       .dropDuplicates("id_a", "id_b")
-    cand
-      .withColumn("est_jaccard",
-        size(filter(zip_with(col("sig_a"), col("sig_b"), (x, y) => x === y),
-          b => b)).cast("double") / lit(k.toDouble))
-      .filter(col("est_jaccard") >= minEstJaccard)
+    nearDups(cand, col("sig_a"), col("sig_b"))
       .select("id_a", "id_b", "est_jaccard")
   }
 
   /** FUZZY decontamination: flag corpus docs whose MinHash-estimated
-    * Jaccard against any eval doc reaches `minEstJaccard` — the
+    * Jaccard against any eval doc reaches `MinHashSig.Threshold` — the
     * hygiene step exact-shingle overlap (`decontaminate`) misses when
     * the leaked eval text was paraphrased, re-wrapped, or lightly
     * edited before landing in the crawl.
     *
     * Scale shape (the decon asymmetry, NOT d3's all-pairs self-join):
     * the corpus side is linear — one `graft_minhash` pass plus a
-    * `bands`-way posexplode — and streams MAP-SIDE against the eval
+    * band-way posexplode — and streams MAP-SIDE against the eval
     * side's banded signatures. The eval side is bounded by
     * construction (benchmark suites), so its bands broadcast behind
     * the same guard discipline as `decontaminate`: count first, and
@@ -310,16 +305,13 @@ object Dedup {
     * cost is |corpus| + |collisions|, not |corpus|² band traffic.
     *
     * Determinism: signatures and band hashes are pure functions of the
-    * text; the estimate is matching positions / k — so the result is
-    * bit-identical at any parallelism and SQL-mirrorable (the d12
-    * oracle replays the full pipeline via d3's CTE machinery). */
+    * text and the estimate is `minhashPairs`' — so the result is the
+    * corpus×eval crossing pairs of `minhashPairs(corpus ∪ eval)`,
+    * bit-identical at any parallelism (the d12 oracle replays d3's
+    * pipeline over that union). */
   def fuzzyDecontaminate(corpus: DataFrame, evalSet: DataFrame,
                          idCol: String, textCol: String, evalIdCol: String,
-                         k: Int = 64, bands: Int = 16,
-                         minEstJaccard: Double = 0.5,
                          maxEvalDocs: Long = 10000000L): DataFrame = {
-    require(k % bands == 0, "k must divide into bands")
-    val r = k / bands
     // same <3-word sentinel discipline as minhashPairs. The signature
     // is computed through an explode(array(…)) Generate — the x14
     // single-evaluation fence: without it the pushed-down sentinel
@@ -329,11 +321,8 @@ object Dedup {
     def banded(df: DataFrame, id: String, outId: String, sigName: String) =
       df.select(col(id).as(outId),
           explode(array(call_function("graft_minhash", col(textCol)))).as(sigName))
-        .filter(array_min(col(sigName)) =!= lit(Long.MaxValue))
-        .select(col(outId), col(sigName),
-          posexplode(transform(sequence(lit(0), lit(bands - 1)),
-            b => xxhash64(b, slice(col(sigName), b * lit(r) + 1, lit(r)))))
-            .as(Seq("band", "band_hash")))
+        .filter(MinHashSig.hasShingles(col(sigName)))
+        .select(col(outId), col(sigName), bandHashes(col(sigName)))
     val corpusB = banded(corpus, idCol, "id", "sig")
     val evalB = banded(evalSet, evalIdCol, "eval_id", "eval_sig")
     val evalSide =
@@ -341,14 +330,25 @@ object Dedup {
             .limit(math.min(maxEvalDocs + 1, Int.MaxValue.toLong).toInt)
             .count() <= maxEvalDocs) broadcast(evalB)
       else evalB.hint("merge")
-    corpusB.join(evalSide, Seq("band", "band_hash"))
-      .dropDuplicates("id", "eval_id")
-      .withColumn("est_jaccard",
-        size(filter(zip_with(col("sig"), col("eval_sig"), (x, y) => x === y),
-          b => b)).cast("double") / lit(k.toDouble))
-      .filter(col("est_jaccard") >= minEstJaccard)
+    nearDups(corpusB.join(evalSide, Seq("band", "band_hash"))
+        .dropDuplicates("id", "eval_id"), col("sig"), col("eval_sig"))
       .select(col("id").as(idCol), col("eval_id"), col("est_jaccard"))
   }
+
+  /** A signature's LSH band hashes, posexploded to (band, band_hash):
+    * band b hashes positions [b·Rows, (b+1)·Rows). */
+  private def bandHashes(sig: Column): Column =
+    posexplode(transform(sequence(lit(0), lit(MinHashSig.Bands - 1)),
+      b => xxhash64(b, slice(sig, b * lit(MinHashSig.Rows) + 1, lit(MinHashSig.Rows)))))
+      .as(Seq("band", "band_hash"))
+
+  /** Candidate pairs with `est_jaccard` = matching positions / K,
+    * kept from the threshold up. */
+  private def nearDups(cand: DataFrame, a: Column, b: Column): DataFrame =
+    cand.withColumn("est_jaccard",
+        size(filter(zip_with(a, b, (x, y) => x === y), m => m)).cast("double") /
+          lit(MinHashSig.K.toDouble))
+      .filter(col("est_jaccard") >= MinHashSig.Threshold)
 
   /** SimHash near-dup pairs: 64-bit fingerprints banded into `chunks`
     * equal bit-slices (pigeonhole: hamming ≤ chunks−1 ⇒ at least one
@@ -387,7 +387,8 @@ object Dedup {
   }
 
   /** Duplicate-cluster resolution: connected components over an
-    * undirected near-dup pair list → `(id, component)` where
+    * undirected near-dup pair list (`id_a`, `id_b`, the pair ops'
+    * columns) → `(id, component)` where
     * `component` is the minimum id reachable from `id` (the canonical
     * doc of its duplicate cluster). This is the step every dedup
     * pipeline needs AFTER pair generation: LSH emits pairs, but
@@ -418,15 +419,14 @@ object Dedup {
     *
     * Output covers only ids that appear in `pairs` (docs with no
     * duplicates are their own cluster by definition). */
-  def connectedComponents(pairs: DataFrame, aCol: String = "id_a",
-                          bCol: String = "id_b", maxRounds: Int = 50): DataFrame = {
+  def connectedComponents(pairs: DataFrame, maxRounds: Int = 50): DataFrame = {
     // convergence sums ride each round's barrier job as OBSERVED
     // metrics (no aggregate action per round); a decimal accumulator,
     // so 10^12 ids cannot overflow
     val labelSum = coalesce(sum(col("component").cast("decimal(38,0)")), lit(0))
     val sym = pairs
-      .select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
-      .union(pairs.select(col(bCol).cast("long").as("src"), col(aCol).cast("long").as("dst")))
+      .select(col("id_a").cast("long").as("src"), col("id_b").cast("long").as("dst"))
+      .union(pairs.select(col("id_b").cast("long").as("src"), col("id_a").cast("long").as("dst")))
     // the edge count rides the edges barrier the same way
     val (edges, nEdges) = Barrier.observed(sym
       .union(sym.select(col("src"), col("src").as("dst"))) // self-loops
@@ -495,7 +495,7 @@ object Dedup {
     * over the BATCH's hashes (bounded by the increment, the cheap
     * side) and the corpus sha stream is pre-filtered map-side before
     * the exact joins: only corpus rows whose hash MIGHT be in the
-    * batch ship bytes (~fpp of the corpus for a disjoint batch).
+    * batch ship bytes (~`BloomFpp` of the corpus for a disjoint batch).
     * False positives die in the exact semi/anti joins, so the
     * classification is provably identical to the unfiltered plan —
     * and 32-byte sha256 keys shuffle, never text. Batches larger than
@@ -503,7 +503,6 @@ object Dedup {
     * and fall back to the plain hash joins. */
   def incrementalIngest(corpus: DataFrame, batch: DataFrame,
                         idCol: String, textCol: String,
-                        bloomFpp: Double = 0.01,
                         maxBloomItems: Long = 2000000000L): DataFrame = {
     // batch shas materialized once (Barrier — r6): the batch
     // side is read four times (guard count, Bloom build, semi probe,
@@ -514,7 +513,7 @@ object Dedup {
     val nBatch = bsha.count() // bounded: the increment, not the corpus
     val csha =
       (if (nBatch <= maxBloomItems) {
-        val bf = bsha.stat.bloomFilter("sha", math.max(nBatch, 1L), bloomFpp)
+        val bf = bsha.stat.bloomFilter("sha", math.max(nBatch, 1L), BloomFpp)
         val os = new java.io.ByteArrayOutputStream()
         bf.writeTo(os)
         cshaAll.filter(call_function("graft_bloom_contains",
@@ -531,17 +530,17 @@ object Dedup {
     corpusDup.unionAll(restStatus)
   }
 
-  /** Embedding cosine near-dup pairs via LSH bucketing (see
-    * Similarity.lshBucket): only same-bucket pairs are compared —
+  /** Embedding cosine near-dup pairs via LSH bucketing
+    * (`Similarity.LshPlanes` planes): only same-bucket pairs are compared —
     * the 10^12-scale path; brute force stays in the test oracle. */
   def embeddingNearDupPairs(emb: DataFrame, idCol: String, vecCol: String,
-                            minCosine: Double, planes: Int = 12): DataFrame = {
+                            minCosine: Double): DataFrame = {
     // NOT materialized (r6: measured — a checkpoint here regressed
     // 0.75→0.88 s; the plane projection is too cheap to out-cost the
     // barrier on a small embedding table, unlike the minhash/simhash
     // signature tables)
     val b = emb.select(col(idCol).as("id"), col(vecCol).as("v"),
-      call_function("graft_lsh_bucket", col(vecCol), lit(planes)).as("bucket"))
+      call_function("graft_lsh_bucket", col(vecCol), lit(Similarity.LshPlanes)).as("bucket"))
     b.as("a").join(b.as("b"),
         col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
       .withColumn("cosine", Similarity.cosine(col("a.v"), col("b.v")))

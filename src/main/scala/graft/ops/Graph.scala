@@ -7,10 +7,14 @@ import org.apache.spark.sql.functions._
   * host graph → rank). */
 object Graph {
 
+  /** Fixed-point unit of the integer ranks of `pageRank` and `hits`:
+    * 2^20 (the g1/g1b/g5 oracles spell it 1048576). */
+  val Scale: Long = 1L << 20
+
   /** INTEGER-EXACT PageRank, damping 0.85, `iters` rounds.
     *
-    * All arithmetic is 64-bit integer with ranks scaled by `scale`
-    * (default 2^20): each edge's contribution is floored INDIVIDUALLY
+    * All arithmetic is 64-bit integer with ranks scaled by `Scale`:
+    * each edge's contribution is floored INDIVIDUALLY
     * (`(85·r) div (100·outdeg)`), so the per-node sum is
     * permutation-invariant and the result is bit-identical at any
     * parallelism — and a SQL oracle recomputes it exactly (float
@@ -40,9 +44,8 @@ object Graph {
     * one row per edge. outdeg and N are computed once. Multigraph
     * semantics: parallel edges each contribute. */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
-               iters: Int = 3, scale: Long = 1L << 20,
-               redistributeDangling: Boolean = false): DataFrame = {
-    require(iters >= 1 && scale > 0)
+               iters: Int = 3, redistributeDangling: Boolean = false): DataFrame = {
+    require(iters >= 1)
     // persist the loop-invariant frames: every iteration's plan would
     // otherwise re-embed (and re-execute) the edge scan, the
     // union+distinct node shuffle, and the outdeg aggregate
@@ -58,8 +61,8 @@ object Graph {
       else None
     val n = nodes.count() // one small agg job, like IVF's k×partitions
     require(n > 0, "pageRank: empty graph")
-    val base = (15L * scale) / (100L * n)
-    var ranks = nodes.withColumn("rank", lit(scale / n))
+    val base = (15L * Scale) / (100L * n)
+    var ranks = nodes.withColumn("rank", lit(Scale / n))
     // previous round's barrier — released as soon as the next one
     // is materialized (the connectedComponents discipline)
     var prevCp: Option[DataFrame] = None
@@ -202,18 +205,18 @@ object Graph {
     * Update per round, in the standard order: a'(v) = Σ_{u→v} h(u)
     * from the CURRENT hubs, then h'(u) = Σ_{u→v} a'(v) from the NEW
     * authorities. After each half-step, scores re-normalize to
-    * max = `scale` with ONE floored division per node
-    * (`(s·scale) div max` — max is one small agg job): the integer
+    * max = `Scale` with ONE floored division per node
+    * (`(s·Scale) div max` — max is one small agg job): the integer
     * stand-in for normalization (textbook L2 needs sqrt — float, not
     * oracle-mirrorable). Same fixed-point discipline as [[pageRank]]:
     * bit-identical at any parallelism, SQL-replayable.
     *
-    * Overflow headroom: scores are ≤ `scale` after normalization, so
-    * a raw half-step sum is ≤ indeg·scale and the rescale multiply is
-    * ≤ indeg·scale² — with the default 2^20 scale that caps safe
-    * in-degree at ~2^23 per node. For hub-heavy graphs (a CC-scale
-    * host graph can exceed that) pass a smaller `scale` (2^10 →
-    * indeg 2^43); precision cost is bounded by 1/scale per round.
+    * Overflow headroom: scores are ≤ `Scale` after normalization, so
+    * a raw half-step sum is ≤ indeg·Scale and the rescale multiply is
+    * ≤ indeg·Scale² — at 2^20 that caps safe in-degree at ~2^23 per
+    * node. A hub-heavy graph (a CC-scale host graph can exceed that)
+    * needs a smaller unit (2^10 → indeg 2^43, precision cost bounded
+    * by 1/Scale per round), and the g5 oracle with it.
     *
     * Scale shape per round: two equi-joins of edges against the
     * nodes-sized score table + combiner sums — edges never self-join.
@@ -221,8 +224,8 @@ object Graph {
     * [[Barrier]], loop frames are unpersisted on exit. Returns
     * (host, hub, auth). */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
-           iters: Int = 2, scale: Long = 1L << 20): DataFrame = {
-    require(iters >= 1 && scale > 0)
+           iters: Int = 2): DataFrame = {
+    require(iters >= 1)
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).persist()
     val nodes = e.select(col("src").as("host"))
       .union(e.select(col("dst").as("host"))).distinct().persist()
@@ -236,11 +239,11 @@ object Graph {
       loopFrames += f
       val mx = m.getLong(0)
       // mx > 0 always: every edge endpoint is a node, so some node
-      // received a positive sum from the scale-initialized other side
-      f.select(col("host"), expr(s"($c * $scale) div $mx").as(c))
+      // received a positive sum from the Scale-initialized other side
+      f.select(col("host"), expr(s"($c * $Scale) div $mx").as(c))
     }
-    var hubs = nodes.withColumn("hub", lit(scale))
-    var auths = nodes.withColumn("auth", lit(scale))
+    var hubs = nodes.withColumn("hub", lit(Scale))
+    var auths = nodes.withColumn("auth", lit(Scale))
     (1 to iters).foreach { i =>
       val araw = nodes.join(
           e.join(hubs.select(col("host").as("src"), col("hub")), "src")

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.expr.MinHashSig
 import graft.pipeline.ExtractPipeline
 
 /** Training-data pipeline operators as driver-checkable queries.
@@ -69,8 +70,7 @@ object OpsQueries {
     }),
     // MinHash+LSH banding (estimated jaccard)
     "d3_minhash_lsh" -> ((s, dir) => {
-      Dedup.minhashPairs(docsWithNearDups(s, dir), "doc_id", "text",
-          k = 64, bands = 16, minEstJaccard = 0.5)
+      Dedup.minhashPairs(docsWithNearDups(s, dir), "doc_id", "text")
         .orderBy("id_a", "id_b")
     }),
     // duplicate clusters: the step after pair generation — connected
@@ -78,8 +78,7 @@ object OpsQueries {
     // doc = least id in the cluster; oracle recomputes the closure
     // over the same bit-exact pair list with a recursive CTE
     "d6_dup_clusters" -> ((s, dir) => {
-      val pairs = Dedup.minhashPairs(docsWithNearDups(s, dir), "doc_id", "text",
-        k = 64, bands = 16, minEstJaccard = 0.5)
+      val pairs = Dedup.minhashPairs(docsWithNearDups(s, dir), "doc_id", "text")
       val cc = Dedup.connectedComponents(pairs)
       val sizes = cc.groupBy("component").agg(count(lit(1)).as("cluster_size"))
       cc.join(sizes, "component")
@@ -162,15 +161,14 @@ object OpsQueries {
         .select((col("doc_id") + 300000).as("doc_id"),
           concat(lit("fresh prefix words precede the spliced tail "), col("text"))
             .as("text")))
-      Dedup.substringDupStats(corpus, "doc_id", "text", k = 8)
+      Dedup.substringDupStats(corpus, "doc_id", "text")
         .orderBy("doc_id")
     }),
     // deduped-corpus materialization: pair generation → cluster
     // resolution → keep canonical docs only, end to end
     "d9_dedup_corpus" -> ((s, dir) => {
       val corpus = docsWithNearDups(s, dir)
-      val pairs = Dedup.minhashPairs(corpus, "doc_id", "text",
-        k = 64, bands = 16, minEstJaccard = 0.5)
+      val pairs = Dedup.minhashPairs(corpus, "doc_id", "text")
       Dedup.dedupedCorpus(corpus, "doc_id", pairs)
         .select(col("doc_id"), length(col("text")).as("n_chars"))
         .orderBy("doc_id")
@@ -203,7 +201,7 @@ object OpsQueries {
     // ⇒ cosine == 1.0 bit-exactly; oracle checks the full pair set)
     "d5_embed_neardup" -> ((s, dir) => {
       Dedup.embeddingNearDupPairs(embWithDups(s, dir), "vec_id", "embedding",
-          minCosine = 0.999999, planes = 8)
+          minCosine = 0.999999)
         .select(col("id_a"), col("id_b"))
         .orderBy("id_a", "id_b")
     }),
@@ -219,7 +217,7 @@ object OpsQueries {
     "s2_ann_lsh" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val queries = emb.filter(col("vec_id") < 5)
-      Similarity.lshTopK(emb, queries, 10, planes = 8)
+      Similarity.lshTopK(emb, queries, 10)
         .select(col("query_id"), col("rank"), col("neighbor_id"))
         .orderBy("query_id", "rank")
     }),
@@ -1606,16 +1604,19 @@ object OpsQueries {
       | FROM documents WHERE doc_id % 5 = 0""".stripMargin)
 
   /** Full MinHash+LSH recomputation: word FNV → rolling 3-gram shingle
-    * hashes (mix chains) → 64 seeded permutations → per-position mins
-    * (SIGNED compare, matching Java Long) → 16-band slice join →
-    * est_jaccard = equal positions / 64. Matches d3 bit-for-bit.
+    * hashes (mix chains) → K seeded permutations → per-position mins
+    * (SIGNED compare, matching Java Long) → band slice join →
+    * est_jaccard = equal positions / K, the shape read from
+    * `MinHashSig`. Matches d3 bit-for-bit.
     * The ORDER-BY-less body (`d3PairsBody`) doubles as the pair
     * source nested inside d6's connected-components closure. */
   private lazy val d3PairsBody: String = minhashPairsBodyFor(wordHashCtes)
 
   /** The minhash/band/estimate back half over any word-hash front
     * half (d3's bit-exact pipeline, reused verbatim by d12). */
-  private def minhashPairsBodyFor(wordCtes: String): String =
+  private def minhashPairsBodyFor(wordCtes: String): String = {
+    import MinHashSig.{Bands, K, Rows, SeedBase, Threshold}
+    val est = s"CAST(len(list_filter(range(1, ${K + 1}), i -> sa[i] = sb[i])) AS DOUBLE) / ${K.toDouble}"
     s"""WITH $wordCtes,
        |${mixCtes("words", "h", "m1", "mh", "doc_id, widx, h")},
        |${mixCtes("m1_out", "mh", "m2", "mmh", "doc_id, widx")},
@@ -1625,8 +1626,8 @@ object OpsQueries {
        | JOIN m1_out b ON b.doc_id = a.doc_id AND b.widx = a.widx + 1
        | JOIN m2_out c ON c.doc_id = a.doc_id AND c.widx = a.widx + 2),
        |${mixCtes("tri", "pre", "sh", "shingle", "doc_id")},
-       |seeds1 AS (SELECT j, CAST(1592590336 + j AS UBIGINT) AS s0
-       |           FROM (SELECT unnest(range(0, 64)) AS j)),
+       |seeds1 AS (SELECT j, CAST($SeedBase + j AS UBIGINT) AS s0
+       |           FROM (SELECT unnest(range(0, $K)) AS j)),
        |${mixCtes("seeds1", "s0", "sd", "seed", "j")},
        |perm0 AS (SELECT doc_id, j, xor(shingle, seed) AS x FROM sh_out, sd_out),
        |${mixCtes("perm0", "x", "pm", "pv", "doc_id, j")},
@@ -1639,16 +1640,17 @@ object OpsQueries {
        | FROM (SELECT doc_id, j, MIN(sv) AS min_sv FROM permv GROUP BY doc_id, j)
        | GROUP BY doc_id),
        |banded AS (
-       | SELECT doc_id, sg, b, sg[b*4+1 : b*4+4] AS band_key
-       | FROM sig, (SELECT unnest(range(0, 16)) AS b) bands),
+       | SELECT doc_id, sg, b, sg[b*$Rows+1 : b*$Rows+$Rows] AS band_key
+       | FROM sig, (SELECT unnest(range(0, $Bands)) AS b) bands),
        |pairs AS (
        | SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b, a.sg AS sa, b.sg AS sb
        | FROM banded a JOIN banded b
        |   ON a.b = b.b AND a.band_key = b.band_key AND a.doc_id < b.doc_id)
        |SELECT id_a, id_b,
-       | CAST(len(list_filter(range(1, 65), i -> sa[i] = sb[i])) AS DOUBLE) / 64.0 AS est_jaccard
+       | $est AS est_jaccard
        |FROM pairs
-       |WHERE CAST(len(list_filter(range(1, 65), i -> sa[i] = sb[i])) AS DOUBLE) / 64.0 >= 0.5""".stripMargin
+       |WHERE $est >= $Threshold""".stripMargin
+  }
 
   private lazy val d3OracleSql: String = d3PairsBody + "\nORDER BY id_a, id_b"
 

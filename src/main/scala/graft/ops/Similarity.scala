@@ -58,18 +58,22 @@ object Similarity {
     rankTopK(scored, col("q.vec_id"), col("c.vec_id"), col("cosine"), k)
   }
 
+  /** Random hyperplanes of the LSH buckets (`lshTopK`,
+    * `Dedup.embeddingNearDupPairs`): 2^8 buckets. */
+  val LshPlanes = 8
+
   /** LSH-bucketed ANN top-k: score only corpus rows in the query's
     * bucket or any 1-bit-flip neighbor bucket (multi-probe) — recall
-    * stays high while compared pairs drop ~2^planes-fold. */
-  def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int, planes: Int = 8): DataFrame = {
+    * stays high while compared pairs drop ~2^LshPlanes-fold. */
+  def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
     val cb = corpus.withColumn("bucket",
-      call_function("graft_lsh_bucket", col("embedding"), lit(planes)))
+      call_function("graft_lsh_bucket", col("embedding"), lit(LshPlanes)))
     // multi-probe: query probes its own bucket + all 1-bit flips
     val qb = queries.withColumn("qbucket",
-        call_function("graft_lsh_bucket", col("embedding"), lit(planes)))
+        call_function("graft_lsh_bucket", col("embedding"), lit(LshPlanes)))
       .withColumn("bucket", explode(array(
         col("qbucket") +:
-          (0 until planes).map(i => col("qbucket").bitwiseXOR(lit(1 << i))): _*)))
+          (0 until LshPlanes).map(i => col("qbucket").bitwiseXOR(lit(1 << i))): _*)))
     val scored = cb.as("c").join(broadcast(qb.as("q")), Seq("bucket"))
       .withColumn("cosine", cosine(col("q.embedding"), col("c.embedding")))
       .filter(col("q.vec_id") =!= col("c.vec_id"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
 import graft.GraftSession
+import graft.expr.MinHashSig
 import graft.pipeline.ExtractPipeline
 
 /** Structured-Streaming slice (SURVEY.md §2.9).
@@ -206,6 +207,9 @@ object StreamingExtract {
   final case class BucketState(docs: List[SigDoc], dropped: Long)
   final case class NearDupEvent(id_a: Long, id_b: Long, est_jaccard: Double)
 
+  /** Signatures one LSH bucket's state keeps (`nearDupStream`). */
+  val MaxBucketDocs = 10000
+
   /** MinHash signatures for a (id, text) frame, streaming-safe
     * (row-local expression) — the all-sentinel (<3-word) filter
     * mirrors `Dedup.minhashPairs`. Caller must have run
@@ -214,7 +218,7 @@ object StreamingExtract {
     import docs.sparkSession.implicits._
     docs.select(col(idCol).cast("long").as("doc_id"),
         call_function("graft_minhash", col(textCol)).as("sig"))
-      .filter(array_min(col("sig")) =!= lit(Long.MaxValue))
+      .filter(MinHashSig.hasShingles(col("sig")))
       .as[SigDoc]
   }
 
@@ -222,26 +226,25 @@ object StreamingExtract {
     * LSH band buckets (bucket key = band index + raw signature slice —
     * key equality ⇔ the batch op's band-hash equality), each bucket's
     * state holds the signatures seen there, and every arrival compares
-    * against them, emitting a pair event when est-Jaccard clears
-    * `minEst`. Downstream consumers dedupe events across bands
-    * (`SELECT DISTINCT`), exactly like the batch `dropDuplicates`.
+    * against them, emitting a pair event when est-Jaccard reaches
+    * `MinHashSig.Threshold` (the banding is `MinHashSig`'s too).
+    * Downstream consumers dedupe events across bands (`SELECT
+    * DISTINCT`), exactly like the batch `dropDuplicates`.
     *
     * State per bucket is its arrival history — the true cost of
     * streaming near-dup (the batch self-join sees whole buckets at
-    * once; a stream must remember them). `maxBucketDocs` bounds a
+    * once; a stream must remember them). `MaxBucketDocs` bounds a
     * pathological hot bucket: beyond it new arrivals still match
     * against the retained prefix but are not added, and the drop is
     * counted in state rather than silent (the no-silent-caps rule).
     * Within a micro-batch arrivals process in doc_id order, so
     * emission is deterministic at any partitioning. */
-  def nearDupStream(docs: Dataset[SigDoc], bands: Int = 16,
-                    minEst: Double = 0.5,
-                    maxBucketDocs: Int = 10000): Dataset[NearDupEvent] = {
+  def nearDupStream(docs: Dataset[SigDoc]): Dataset[NearDupEvent] = {
     import docs.sparkSession.implicits._
+    import MinHashSig.{Bands, K, Rows, Threshold}
     val banded = docs.flatMap { d =>
-      val r = d.sig.length / bands
-      (0 until bands).iterator.map { b =>
-        BandedDoc(b + ":" + d.sig.slice(b * r, b * r + r).mkString(","),
+      (0 until Bands).iterator.map { b =>
+        BandedDoc(b + ":" + d.sig.slice(b * Rows, b * Rows + Rows).mkString(","),
           d.doc_id, d.sig)
       }
     }
@@ -255,18 +258,17 @@ object StreamingExtract {
           arrivals.foreach { d =>
             st.docs.foreach { p =>
               if (p.doc_id != d.doc_id) {
-                val k = d.sig.length
                 var m = 0
                 var i = 0
-                while (i < k) { if (p.sig(i) == d.sig(i)) m += 1; i += 1 }
-                val est = m.toDouble / k
-                if (est >= minEst)
+                while (i < K) { if (p.sig(i) == d.sig(i)) m += 1; i += 1 }
+                val est = m.toDouble / K
+                if (est >= Threshold)
                   out += NearDupEvent(math.min(p.doc_id, d.doc_id),
                     math.max(p.doc_id, d.doc_id), est)
               }
             }
             st =
-              if (st.docs.size < maxBucketDocs)
+              if (st.docs.size < MaxBucketDocs)
                 st.copy(docs = SigDoc(d.doc_id, d.sig) :: st.docs)
               else st.copy(dropped = st.dropped + 1)
           }

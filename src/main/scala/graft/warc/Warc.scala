@@ -88,17 +88,19 @@ object Warc {
     * header or truncated body throws — the Spark read path turns that
     * into one error row per file. */
   def parse(fileBytes: Array[Byte]): Seq[WarcRow] = {
-    val raw: java.io.InputStream = new java.io.ByteArrayInputStream(fileBytes)
-    val in =
-      if (isGzip(fileBytes))
-        new java.util.zip.GZIPInputStream(raw, 64 * 1024)
-      else raw
-    parseStream(in)
+    val out = scala.collection.mutable.ArrayBuffer.empty[WarcRow]
+    walk(fileBytes, out)
+    out.toSeq
   }
 
   private val MaxHeaderBytes = 1 << 20 // spec headers are tiny; 1MB = malformed
 
-  /** STREAMING record walk: the header is read byte-wise to its
+  /** The record walk of `parse` and `read`, appending into `out` — so
+    * a caller that catches a mid-file failure KEEPS every record parsed
+    * before it (the Spark read path's salvage contract: one truncated
+    * tail record in a 1 GB shard must cost that record, not the shard).
+    *
+    * STREAMING: the (inflated) header is read byte-wise to its
     * CRLFCRLF terminator, then exactly Content-Length body bytes —
     * per-task memory is bounded by the LARGEST RECORD (one web page),
     * never the decompressed FILE. A 1 GB Common-Crawl shard that
@@ -107,19 +109,12 @@ object Warc {
     * uncatchable OutOfMemoryError and kill the task instead of
     * error-as-rowing. Individual records are bounded at 2 GB by the
     * Int body allocation — far beyond any single crawled page. */
-  def parseStream(in0: java.io.InputStream): Seq[WarcRow] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[WarcRow]
-    parseStreamInto(in0, out)
-    out.toSeq
-  }
-
-  /** The record walk itself, appending into `out` — so a caller that
-    * catches a mid-file failure KEEPS every record parsed before it
-    * (the Spark read path's salvage contract: one truncated tail
-    * record in a 1 GB shard must cost that record, not the shard). */
-  private def parseStreamInto(in0: java.io.InputStream,
+  private def walk(fileBytes: Array[Byte],
       out: scala.collection.mutable.ArrayBuffer[WarcRow]): Unit = {
-    val in = new java.io.BufferedInputStream(in0, 64 * 1024)
+    val raw: java.io.InputStream = new java.io.ByteArrayInputStream(fileBytes)
+    val in = new java.io.BufferedInputStream(
+      if (isGzip(fileBytes)) new java.util.zip.GZIPInputStream(raw, 64 * 1024) else raw,
+      64 * 1024)
     var recNo = 0
     while (true) {
       // skip inter-record CRLFs; clean EOF here ends the file
@@ -208,12 +203,8 @@ object Warc {
       .as[(String, Array[Byte])]
       .flatMap { case (path, content) =>
         val out = scala.collection.mutable.ArrayBuffer.empty[WarcRow]
-        try {
-          val raw: java.io.InputStream = new java.io.ByteArrayInputStream(content)
-          parseStreamInto(
-            if (isGzip(content)) new java.util.zip.GZIPInputStream(raw, 64 * 1024)
-            else raw, out)
-        } catch {
+        try walk(content, out)
+        catch {
           case e: Exception =>
             out += WarcRow(path, null, null, null,
               s"حدث خطأ: warc: ${e.getMessage}")

@@ -27,12 +27,12 @@ class OpsSpec extends AnyFunSuite {
       .filter(col("doc_id") % 5 === 0).select("doc_id")
       .collect().map(r => (r.getLong(0), r.getLong(0) + 100000)).toSet
     assert(planted.subsetOf(exact), "exact jaccard must find all planted copies")
-    val lsh = Dedup.minhashPairs(docsWithNearDups, "doc_id", "text", 64, 16, 0.5)
+    val lsh = Dedup.minhashPairs(docsWithNearDups, "doc_id", "text")
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = planted.count(lsh.contains).toDouble / planted.size
     assert(recall >= 0.95, s"minhash recall $recall over ${planted.size} planted pairs")
     // est jaccard within 0.2 of exact for planted pairs
-    val est = Dedup.minhashPairs(docsWithNearDups, "doc_id", "text", 64, 16, 0.5)
+    val est = Dedup.minhashPairs(docsWithNearDups, "doc_id", "text")
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     planted.filter(est.contains).foreach { p =>
       assert(est(p) > 0.6, s"planted pair $p est=${est(p)}")
@@ -76,7 +76,7 @@ class OpsSpec extends AnyFunSuite {
     }
     val bf = hits(Similarity.bruteForceTopK(corpus, queries, 10))
     assert(bf == 1.0, s"brute force must always find the perturbed original (got $bf)")
-    val ann = hits(Similarity.lshTopK(corpus, queries, 10, planes = 8))
+    val ann = hits(Similarity.lshTopK(corpus, queries, 10))
     assert(ann >= 0.8, s"ANN top-1 recall $ann (multi-probe, 8 planes)")
   }
 
@@ -1412,6 +1412,26 @@ class OpsSpec extends AnyFunSuite {
       .select("doc_id", "eval_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(gotFb == got)
+  }
+
+  test("fuzzyDecontaminate == the crossing pairs of minhashPairs over corpus ∪ eval") {
+    // the one MinHash shape: d12's oracle runs d3's all-pairs pipeline
+    // over the union and keeps corpus×eval pairs, eval ids above 900000
+    GraftSession.register(spark)
+    val docs = docsWithNearDups
+    val evalSet = docs.filter(col("doc_id") % 13 === 0)
+      .select((col("doc_id") + 900000).as("eval_id"),
+        concat(col("text"), lit(" padded for eval release")).as("text"))
+    val got = Dedup.fuzzyDecontaminate(docs, evalSet, "doc_id", "text", "eval_id")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val crossing = Dedup.minhashPairs(
+        docs.unionAll(evalSet.select(col("eval_id").as("doc_id"), col("text"))),
+        "doc_id", "text")
+      .filter(col("id_a") < 900000 && col("id_b") >= 900000)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(got.nonEmpty && got.exists(_._3 < 1.0), got.take(3))
+    assert(got == crossing,
+      s"fuzzy-only: ${(got -- crossing).take(3)}; pairs-only: ${(crossing -- got).take(3)}")
   }
 
   test("g3 ring graph: components are exactly the congruence classes mod 6") {

@@ -10,9 +10,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.extract.Extractor
 import graft.html.{HtmlText, StringMarkup}
 
-/** The HTML path validates UTF-8 inside its own byte scan: a payload is
-  * an error row exactly when the JDK's strict decoder rejects it,
-  * wherever the bad bytes sit. The byte-level markup primitives agree
+/** The HTML path validates UTF-8 inside its own byte scan, the
+  * plain-text path with the same `Utf8.at`: a payload is an error row
+  * exactly when the JDK's strict decoder rejects it, wherever the bad
+  * bytes sit. The byte-level markup primitives agree
   * with their `String` versions at every position. */
 class Utf8Spec extends AnyFunSuite {
 
@@ -29,10 +30,11 @@ class Utf8Spec extends AnyFunSuite {
 
   /** Places for a byte string in a page: text, a comment, a skipped
     * script body, an attribute value, dropped title text and an entity
-    * body. */
+    * body — and the bare string, which goes down the plain-text path
+    * unless it holds both '<' and '>'. */
   private val placements: Seq[Array[Byte] => Array[Byte]] = Seq(
     "<p>" -> "</p>", "<p>a</p><!--" -> "--><p>b</p>", "<script>" -> "</script><p>b</p>",
-    "<p title=\"" -> "\">x</p>", "<title>" -> "</title><p>b</p>", "<p>&#" -> ";</p>"
+    "<p title=\"" -> "\">x</p>", "<title>" -> "</title><p>b</p>", "<p>&#" -> ";</p>", "" -> ""
   ).map { case (pre, post) =>
     (b: Array[Byte]) => pre.getBytes(StandardCharsets.UTF_8) ++ b ++ post.getBytes(StandardCharsets.UTF_8)
   }
@@ -45,7 +47,7 @@ class Utf8Spec extends AnyFunSuite {
 
   private def hex(b: Array[Byte]): String = b.map(x => f"${x & 0xFF}%02X").mkString(" ")
 
-  test("error row exactly when the strict decoder rejects: 100k random byte strings in six places") {
+  test("error row exactly when the strict decoder rejects: 100k random byte strings in seven places") {
     // a string is 1-6 units; a unit is a well-formed char near a
     // boundary of the UTF-8 table, or one byte biased to the lead and
     // continuation bytes around those boundaries, ASCII and markup
